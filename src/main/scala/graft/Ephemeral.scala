@@ -3,9 +3,10 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 
 /** Scratch-space router for the harness's EPHEMERAL directories —
-  * streaming checkpoints, replay split files, foreachBatch partials,
-  * bucketed-table scratch. These dirs live only for one JVM (every
-  * call site registers deletion) and are pure harness state: a real
+  * streaming checkpoints, replay split files, bucketed-table scratch.
+  * These dirs live only for one JVM (the root's shutdown hook deletes
+  * everything under it; per-query checkpoints are deleted as soon as
+  * their query stops) and are pure harness state: a real
   * deployment passes a durable `checkpointLocation` on reliable
   * storage, but a bounded replay-to-memory-sink twin re-creates its
   * checkpoint from scratch every run, so its only requirement is
@@ -28,13 +29,13 @@ import java.nio.file.{Files, Path, Paths}
   * per-format document materializations) — those go through
   * [[dataDir]], which prefers `java.io.tmpdir` so a memory-backed
   * `/dev/shm` is never asked to hold a table copy at a high scale
-  * factor (ADVICE r17). Checkpoint/metadata-log/partials scratch
+  * factor (ADVICE r17). Checkpoint/metadata-log/split-file scratch
   * (KB-to-MB-sized) stays on the shm-preferring [[dir]] route.
   */
 object Ephemeral {
 
-  /** Resolved once per JVM; all scratch dirs share one base so the
-    * shutdown-hook cleanup story stays what it was (per-dir hooks).
+  /** Resolved once per JVM; all scratch dirs share this one root,
+    * whose shutdown hook deletes everything under it.
     */
   lazy val base: Path = {
     val fromEnv = sys.env.get("SPARK_GRAFT_EPHEMERAL_DIR").map(Paths.get(_))

@@ -2028,7 +2028,7 @@ object SimilarityQueries {
           sum(col("x").cast("double").cast("decimal(28,14)")).cast("double") /
             count(lit(1)), 6).as("c"))
       val rows = step.collect()
-      val cur = rows.map(x => ((x.get(0), x.get(1)), x.get(2))).toMap
+      val cur = centroidMap(rows)
       converged = prev != null && cur == prev
       prev = cur
       result = s.createDataFrame(
@@ -2038,6 +2038,17 @@ object SimilarityQueries {
     }
     result
   }
+
+  /** A Lloyd round's collected (list_id, i, c) rows as the map the
+    * fixpoint check compares. `+ 0.0` turns −0.0 into 0.0, so a
+    * coordinate that only flips the sign of zero between rounds is
+    * unchanged under boxed `equals` as well as under `==`.
+    */
+  private[graft] def centroidMap(rows: Array[org.apache.spark.sql.Row]): Map[(Any, Any), Any] =
+    rows.map(x => ((x.get(0), x.get(1)), x.get(2) match {
+      case c: Double => c + 0.0
+      case c => c
+    })).toMap
 
   /** Corpus assignment under the TRAINED centroids (the built index's
     * stored list column). private[graft] so SemanticGapSpec can measure

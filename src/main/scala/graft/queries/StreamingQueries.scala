@@ -64,42 +64,52 @@ object StreamingQueries {
           .withColumn("ts_ms", graft.tables.Tables.tsMsExpr(loaded.schema("ts").dataType))
           .select(col("event_id"), col("ts_ms"), col("user_id"),
                   col("event_type"), col("value"), col("props"))
-        // Exact quantiles (relativeError=0) of the MILLISECOND ts — the
-        // granularity every downstream operator keys on. Cutting on raw
-        // sub-ms ts could land a boundary BETWEEN two events that share
-        // an ms but differ below it (sf0.1 has such pairs), and a
-        // cross-batch stateful fold (CusumStream) would then process
-        // them in stream order instead of the batch oracle's
-        // (ts_ms, event_id) order. Cutting on ms keeps every ms cohort
-        // in exactly one split; the long comparison is exact, so
-        // equal-ms rows land in exactly one split.
-        val bounds = raw.stat
-          .approxQuantile("ts_ms", (1 until NumSplits).map(_.toDouble / NumSplits).toArray, 0.0)
-          .map(_.toLong)
-        val srcDir = graft.Ephemeral.dir("graft-stream-splits-")
-        val work = graft.Ephemeral.dir("graft-stream-splitwork-")
-        val base = System.currentTimeMillis() - 3600000L
-        (0 until NumSplits).foreach { i =>
-          val lo = if (i == 0) None else Some(bounds(i - 1))
-          val hi = if (i == NumSplits - 1) None else Some(bounds(i))
-          val slice = raw
-            .filter(lo.map(col("ts_ms") >= _).getOrElse(lit(true)) &&
-                    hi.map(col("ts_ms") < _).getOrElse(lit(true)))
-          val out = work.resolve(s"out$i")
-          slice.coalesce(1).write.parquet(out.toString)
-          val part = Files.list(out).iterator().asScala
-            .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.head
-          val dest = srcDir.resolve(f"$i%03d.parquet")
-          Files.move(part, dest)
-          // The file source processes files in (modificationTime, path)
-          // order — pin both so the replay is time-ordered.
-          Files.setLastModifiedTime(dest, FileTime.fromMillis(base + i * 1000L))
-        }
-        deleteRecursively(work)
-        sys.addShutdownHook(deleteRecursively(srcDir))
-        srcDir
+        // Cut on the MILLISECOND ts — the granularity every downstream
+        // operator keys on. Cutting on raw sub-ms ts could land a
+        // boundary BETWEEN two events that share an ms but differ below
+        // it (sf0.1 has such pairs), and a cross-batch stateful fold
+        // (CusumStream) would then process them in stream order instead
+        // of the batch oracle's (ts_ms, event_id) order. Cutting on ms
+        // keeps every ms cohort in exactly one split.
+        rangeSplitDir(raw, "ts_ms", "stream")
       })
     }
+
+  /** Range-cuts `raw` on the long column `keyCol` at its exact
+    * (relativeError = 0) [[NumSplits]]-quantiles into one parquet file
+    * per range, `000.parquet`, `001.parquet`, … in key order, under a
+    * fresh `graft-<prefix>-splits-` scratch dir. Rows with equal keys
+    * never straddle a file (the long comparison is exact). The file
+    * source processes files in (modificationTime, path) order, so both
+    * are pinned: a `maxFilesPerTrigger=1` replay reads the ranges in
+    * key order. The dir lives under [[graft.Ephemeral.base]], whose
+    * root hook deletes it at JVM exit.
+    */
+  private def rangeSplitDir(raw: DataFrame, keyCol: String, prefix: String): Path = {
+    val bounds = raw.stat
+      .approxQuantile(keyCol, (1 until NumSplits).map(_.toDouble / NumSplits).toArray, 0.0)
+      .map(_.toLong)
+    val srcDir = graft.Ephemeral.dir(s"graft-$prefix-splits-")
+    val work = graft.Ephemeral.dir(s"graft-$prefix-splitwork-")
+    val base = System.currentTimeMillis() - 3600000L
+    (0 until NumSplits).foreach { i =>
+      val lo = if (i == 0) None else Some(bounds(i - 1))
+      val hi = if (i == NumSplits - 1) None else Some(bounds(i))
+      val out = work.resolve(s"out$i")
+      raw.filter(lo.map(col(keyCol) >= _).getOrElse(lit(true)) &&
+                 hi.map(col(keyCol) < _).getOrElse(lit(true)))
+        .coalesce(1).write.parquet(out.toString)
+      val listing = Files.list(out)
+      val part = try listing.iterator().asScala
+          .find(_.getFileName.toString.endsWith(".parquet")).get
+        finally listing.close()
+      val dest = srcDir.resolve(f"$i%03d.parquet")
+      Files.move(part, dest)
+      Files.setLastModifiedTime(dest, FileTime.fromMillis(base + i * 1000L))
+    }
+    deleteRecursively(work)
+    srcDir
+  }
 
   /** events as a streaming DataFrame with (ts_ms, ts) like
     * Tables.events, replayed one time-ordered file per trigger. The
@@ -129,32 +139,8 @@ object StreamingQueries {
 
   private def docsSplitDir(s: SparkSession, dir: String): Path =
     docsSplitCache.synchronized {
-      docsSplitCache.getOrElseUpdate(dir, {
-        val raw = s.read.parquet(s"$dir/documents.parquet")
-        val bounds = raw.stat
-          .approxQuantile("doc_id", (1 until NumSplits).map(_.toDouble / NumSplits).toArray, 0.0)
-          .map(_.toLong)
-        val srcDir = graft.Ephemeral.dir("graft-docs-splits-")
-        val work = graft.Ephemeral.dir("graft-docs-splitwork-")
-        val base = System.currentTimeMillis() - 3600000L
-        (0 until NumSplits).foreach { i =>
-          val lo = if (i == 0) None else Some(bounds(i - 1))
-          val hi = if (i == NumSplits - 1) None else Some(bounds(i))
-          val slice = raw
-            .filter(lo.map(col("doc_id") >= _).getOrElse(lit(true)) &&
-                    hi.map(col("doc_id") < _).getOrElse(lit(true)))
-          val out = work.resolve(s"out$i")
-          slice.coalesce(1).write.parquet(out.toString)
-          val part = Files.list(out).iterator().asScala
-            .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.head
-          val dest = srcDir.resolve(f"$i%03d.parquet")
-          Files.move(part, dest)
-          Files.setLastModifiedTime(dest, FileTime.fromMillis(base + i * 1000L))
-        }
-        deleteRecursively(work)
-        sys.addShutdownHook(deleteRecursively(srcDir))
-        srcDir
-      })
+      docsSplitCache.getOrElseUpdate(dir,
+        rangeSplitDir(s.read.parquet(s"$dir/documents.parquet"), "doc_id", "docs"))
     }
 
   /** embeddings-dir → vec_id-range split dir (3 id-ordered files)
@@ -171,29 +157,7 @@ object StreamingQueries {
       embSplitCache.getOrElseUpdate((dir, appendOnly), {
         val raw = s.read.parquet(s"$dir/embeddings.parquet")
           .filter(if (appendOnly) col("vec_id") % 10 >= 8 else lit(true))
-        val bounds = raw.stat
-          .approxQuantile("vec_id", (1 until NumSplits).map(_.toDouble / NumSplits).toArray, 0.0)
-          .map(_.toLong)
-        val srcDir = graft.Ephemeral.dir("graft-emb-splits-")
-        val work = graft.Ephemeral.dir("graft-emb-splitwork-")
-        val base = System.currentTimeMillis() - 3600000L
-        (0 until NumSplits).foreach { i =>
-          val lo = if (i == 0) None else Some(bounds(i - 1))
-          val hi = if (i == NumSplits - 1) None else Some(bounds(i))
-          val slice = raw
-            .filter(lo.map(col("vec_id") >= _).getOrElse(lit(true)) &&
-                    hi.map(col("vec_id") < _).getOrElse(lit(true)))
-          val out = work.resolve(s"out$i")
-          slice.coalesce(1).write.parquet(out.toString)
-          val part = Files.list(out).iterator().asScala
-            .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.head
-          val dest = srcDir.resolve(f"$i%03d.parquet")
-          Files.move(part, dest)
-          Files.setLastModifiedTime(dest, FileTime.fromMillis(base + i * 1000L))
-        }
-        deleteRecursively(work)
-        sys.addShutdownHook(deleteRecursively(srcDir))
-        srcDir
+        rangeSplitDir(raw, "vec_id", "emb")
       })
     }
 
@@ -261,30 +225,7 @@ object StreamingQueries {
         val delta = RelationalQueries.cdcDeltaRows(
           graft.tables.Tables.lineitem(s, dir)
             .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity")))
-        val bounds = delta.stat
-          .approxQuantile("l_orderkey",
-            (1 until NumSplits).map(_.toDouble / NumSplits).toArray, 0.0)
-          .map(_.toLong)
-        val out = graft.Ephemeral.dir("graft-cdc-splits-")
-        val work = graft.Ephemeral.dir("graft-cdc-splitwork-")
-        val base = System.currentTimeMillis() - 3600000L
-        (0 until NumSplits).foreach { i =>
-          val lo = if (i == 0) None else Some(bounds(i - 1))
-          val hi = if (i == NumSplits - 1) None else Some(bounds(i))
-          val slice = delta
-            .filter(lo.map(col("l_orderkey") >= _).getOrElse(lit(true)) &&
-                    hi.map(col("l_orderkey") < _).getOrElse(lit(true)))
-          val o = work.resolve(s"out$i")
-          slice.coalesce(1).write.parquet(o.toString)
-          val part = Files.list(o).iterator().asScala
-            .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.head
-          val dest = out.resolve(f"$i%03d.parquet")
-          Files.move(part, dest)
-          Files.setLastModifiedTime(dest, FileTime.fromMillis(base + i * 1000L))
-        }
-        deleteRecursively(work)
-        sys.addShutdownHook(deleteRecursively(out))
-        out
+        rangeSplitDir(delta, "l_orderkey", "cdc")
       })
     }
     val schema = StructType(Seq(
@@ -311,8 +252,10 @@ object StreamingQueries {
 
   private def deleteRecursively(p: Path): Unit = {
     if (Files.exists(p)) {
-      Files.walk(p).iterator().asScala.toSeq.reverse
+      val walk = Files.walk(p)
+      try walk.iterator().asScala.toSeq.reverse
         .foreach(f => try Files.deleteIfExists(f) catch { case _: Exception => () })
+      finally walk.close()
     }
   }
 
@@ -398,63 +341,72 @@ object StreamingQueries {
     s.table(name)
   }
 
-  /** Drive `src` through one bounded foreachBatch replay that appends
-    * `build(batch)` to a fresh partials directory, then read the
-    * partials back. The directory is SEEDED with a zero-row parquet
-    * file carrying the builder's schema (the builder applied to an
-    * empty static frame with the stream's schema) BEFORE the stream
-    * starts: a source producing zero micro-batches writes no files,
-    * and a bare read of the empty dir would die on schema inference
-    * instead of degrading to an empty result (ADVICE r10). Callers
-    * apply their merge law (SUM / max / distinct) to the returned
-    * frame — the foreachBatch + parquet log is the observable model
-    * of per-key streaming-agg state.
+  /** Drive `src` through one bounded foreachBatch replay and return
+    * the union of the per-micro-batch partials `build(batch)`, in
+    * batch-id order. Callers apply their merge law (SUM / max /
+    * distinct) to the returned frame — the partials are the observable
+    * model of per-key streaming-agg state, with the sink as the state
+    * boundary.
+    *
+    * Each partial is `localCheckpoint`ed inside `foreachBatch` (eager:
+    * its blocks live in the block manager OUTSIDE the catalog cache,
+    * so `spark.catalog.clearCache()` does not evict them, and the
+    * ContextCleaner frees them once the returned frame is unreachable
+    * — the [[Artifacts]] posture). They are kept in a driver-side map
+    * keyed by batch id, so a re-run batch replaces its entry instead
+    * of adding a duplicate. Nothing is written outside the streaming
+    * checkpoint, which is deleted before returning.
+    *
+    * The union starts from a zero-row SEED carrying the builder's
+    * schema (the builder applied to an empty static frame with the
+    * stream's schema): a source producing zero micro-batches still
+    * yields an empty frame of the right shape (ADVICE r10).
     *
     * CONTRACT, ENFORCED (ADVICE r11 / VERDICT r12 item 5): the seed
-    * write exists ONLY to pin the schema, so it is truncated to zero
-    * rows in code — a GLOBAL (no-groupBy) builder emits one real row
-    * on the empty frame (e.g. `pcaMoments`' (-1,-1,0) count cell, or
-    * any `max`/`first` aggregate's identity-less sentinel), and
-    * without the truncation that row would reach the downstream merge
+    * exists ONLY to pin the schema, so it is truncated to zero rows in
+    * code — a GLOBAL (no-groupBy) builder emits one real row on the
+    * empty frame (e.g. `pcaMoments`' (-1,-1,0) count cell, or any
+    * `max`/`first` aggregate's identity-less sentinel), and without
+    * the truncation that row would reach the downstream merge
     * alongside the micro-batch partials, silently corrupting any
     * non-additive merge law. `Round13OpsSpec` ("partialsOf truncates
     * the schema seed") drives a deliberately global max-merge builder
-    * through this path and fails if the seed row ever escapes again. (`pcaMoments` loses only a zero cell that
-    * every real micro-batch re-emits — its additive merge is
-    * unchanged.)
+    * through this path and fails if the seed row ever escapes again.
+    * (`pcaMoments` loses only a zero cell that every real micro-batch
+    * re-emits — its additive merge is unchanged.)
     */
-  private[graft] def partialsOf(src: DataFrame, prefix: String)
+  private[graft] def partialsOf(src: DataFrame)
                         (build: DataFrame => DataFrame): DataFrame =
-    partialsOfIndexed(src, prefix)((batch, _) => build(batch))
+    partialsOfIndexed(src)((batch, _) => build(batch))
 
   /** [[partialsOf]] with the micro-batch id passed to the builder —
     * for twins whose downstream finish needs the per-worker (per
     * micro-batch) shard identity, e.g. `stream_quality_lr`'s
     * federated gradient merge over stored worker feature shards.
     */
-  private[graft] def partialsOfIndexed(src: DataFrame, prefix: String)
+  private[graft] def partialsOfIndexed(src: DataFrame)
                         (build: (DataFrame, Long) => DataFrame): DataFrame = {
     val s = src.sparkSession
-    val dir = graft.Ephemeral.dir(prefix)
-    sys.addShutdownHook(deleteRecursively(dir))
-    build(s.createDataFrame(
+    val seed = build(s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](), src.schema), -1L)
       .limit(0)
-      .write.mode("append").parquet(dir.toString)
+    val partials = scala.collection.mutable.TreeMap[Long, DataFrame]()
     val ckpt = graft.Ephemeral.dir("graft-ckpt-")
-    val q = withNioCkptFm(s) {
-      src.writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          build(batch, bid).write.mode("append").parquet(dir.toString)
-          ()
-        }
-        .start()
-    }
-    try q.processAllAvailable()
-    finally q.stop()
-    deleteRecursively(ckpt)
-    s.read.parquet(dir.toString)
+    try {
+      val q = withNioCkptFm(s) {
+        src.writeStream
+          .option("checkpointLocation", ckpt.toString)
+          .foreachBatch { (batch: DataFrame, bid: Long) =>
+            val part = build(batch, bid).localCheckpoint()
+            partials.synchronized(partials(bid) = part)
+            ()
+          }
+          .start()
+      }
+      try q.processAllAvailable()
+      finally q.stop()
+    } finally deleteRecursively(ckpt)
+    partials.synchronized(partials.values.toList).foldLeft(seed)(_ unionByName _)
   }
 
   private val ckptFmKey = "spark.sql.streaming.checkpointFileManagerClass"
@@ -503,8 +455,7 @@ object StreamingQueries {
   private def streamedClusterCells(s: SparkSession, dir: String): DataFrame =
     Artifacts.materialized(s, dir, "stream_cluster_cells") {
       val cents = SimilarityQueries.trainedCentArr(s, dir)
-      partialsOf(embeddingsStream(s, dir, appendOnly = false),
-        "graft-ccells-partials-") { batch =>
+      partialsOf(embeddingsStream(s, dir, appendOnly = false)) { batch =>
         val withNrm = batch.withColumn("nrm",
           sqrt(graft.functions.VectorOps.normSqDecimal(col("embedding")).cast("double")))
         SimilarityQueries.assignTo(withNrm, cents)
@@ -532,8 +483,7 @@ object StreamingQueries {
       partialsOf(
         eventsStream(s, dir)
           .filter(col("value").isNotNull)
-          .select(col("event_type"), col("event_id"), col("ts_ms"), col("value")),
-        "graft-ksgrid-partials-") {
+          .select(col("event_type"), col("event_id"), col("ts_ms"), col("value"))) {
         batch => EventQueries.ksGrid(EventQueries.psiHalved(batch, split))
       }
         .groupBy(col("event_type"), col("value"))
@@ -549,8 +499,7 @@ object StreamingQueries {
       StatTestQueries.survivalGrid(
         partialsOf(
           eventsStream(s, dir)
-            .select(col("event_type"), col("user_id"), col("ts_ms")),
-          "graft-surv-partials-")(StatTestQueries.userSpans)
+            .select(col("event_type"), col("user_id"), col("ts_ms")))(StatTestQueries.userSpans)
           .groupBy(col("event_type"), col("user_id"))
           .agg(min(col("first_ts")).as("first_ts"),
             max(col("last_ts")).as("last_ts")))
@@ -565,8 +514,7 @@ object StreamingQueries {
       partialsOf(
         eventsStream(s, dir)
           .filter(col("value").isNotNull)
-          .select(col("event_type"), dec(col("value")).as("v")),
-        "graft-anova-partials-")(StatTestQueries.anovaStats)
+          .select(col("event_type"), dec(col("value")).as("v")))(StatTestQueries.anovaStats)
         .groupBy(col("event_type"))
         .agg(sum(col("n")).as("n"), sum(col("sv")).as("sv"),
           sum(col("qv")).as("qv"))
@@ -579,8 +527,7 @@ object StreamingQueries {
     Artifacts.materialized(s, dir, "stream_kw_cells") {
       partialsOf(
         eventsStream(s, dir).filter(col("value").isNotNull)
-          .select(col("event_type"), col("value")),
-        "graft-kw-partials-")(StatTestQueries.kwCells)
+          .select(col("event_type"), col("value")))(StatTestQueries.kwCells)
         .groupBy(col("event_type"), col("value"))
         .agg(sum(col("c_tv")).as("c_tv"))
     }
@@ -591,8 +538,7 @@ object StreamingQueries {
   private def streamedCfExposures(s: SparkSession, dir: String): DataFrame =
     Artifacts.materialized(s, dir, "stream_cf_exposures") {
       partialsOf(
-        eventsStream(s, dir).select(col("user_id"), col("props")),
-        "graft-cf-partials-")(EventQueries.cfExposures)
+        eventsStream(s, dir).select(col("user_id"), col("props")))(EventQueries.cfExposures)
         .distinct()
     }
 
@@ -603,8 +549,7 @@ object StreamingQueries {
   private def streamedUserTotals(s: SparkSession, dir: String): DataFrame =
     Artifacts.materialized(s, dir, "stream_user_totals") {
       partialsOf(
-        eventsStream(s, dir).select(col("user_id"), col("value")),
-        "graft-gini-partials-")(EventQueries.giniCells)
+        eventsStream(s, dir).select(col("user_id"), col("value")))(EventQueries.giniCells)
         .groupBy(col("user_id"))
         .agg(sum(col("x")).as("x"))
     }
@@ -614,8 +559,7 @@ object StreamingQueries {
     */
   private def streamedLexdivCells(s: SparkSession, dir: String): DataFrame =
     Artifacts.materialized(s, dir, "stream_lexdiv_cells") {
-      partialsOf(documentsStream(s, dir),
-        "graft-lexdiv-partials-")(TextQueries.lexdivCells)
+      partialsOf(documentsStream(s, dir))(TextQueries.lexdivCells)
         .groupBy(col("source"), col("tok"))
         .agg(sum(col("cnt")).as("cnt"))
     }
@@ -631,32 +575,30 @@ object StreamingQueries {
     */
   private def streamedClusterGeom(s: SparkSession, dir: String) = {
     val st = Artifacts.materialized(s, dir, "stream_cluster_geom") {
-    val cents = SimilarityQueries.trainedCentArr(s, dir)
-    partialsOf(
-        embeddingsStream(s, dir, appendOnly = false),
-        "graft-cgeom-partials-") { batch =>
-      val withNrm = batch.withColumn("nrm",
-        sqrt(graft.functions.VectorOps.normSqDecimal(col("embedding"))
-          .cast("double")))
-      val assigned = SimilarityQueries.assignTo(withNrm, cents)
-      val dimsP = assigned
-        .select(col("list_id"), posexplode(col("embedding")).as(Seq("i", "x")))
+      val cents = SimilarityQueries.trainedCentArr(s, dir)
+      partialsOf(embeddingsStream(s, dir, appendOnly = false)) { batch =>
+        val withNrm = batch.withColumn("nrm",
+          sqrt(graft.functions.VectorOps.normSqDecimal(col("embedding"))
+            .cast("double")))
+        val assigned = SimilarityQueries.assignTo(withNrm, cents)
+        val dimsP = assigned
+          .select(col("list_id"), posexplode(col("embedding")).as(Seq("i", "x")))
+          .groupBy(col("list_id"), col("i"))
+          .agg(sum(col("x").cast("double").cast("decimal(28,14)"))
+            .cast("decimal(38,14)").as("sx"),
+            count(lit(1)).as("nk"))
+          .select(col("list_id"), col("i").cast("long").as("i"),
+            col("sx"), col("nk"))
+        val ssqP = assigned.groupBy(col("list_id"))
+          .agg(sum(graft.functions.VectorOps.normSqDecimal(col("embedding"))
+            .cast("decimal(38,14)")).cast("decimal(38,14)").as("sx"),
+            count(lit(1)).as("nk"))
+          .select(col("list_id"), lit(-1L).as("i"), col("sx"), col("nk"))
+        dimsP.unionByName(ssqP)
+      }
         .groupBy(col("list_id"), col("i"))
-        .agg(sum(col("x").cast("double").cast("decimal(28,14)"))
-          .cast("decimal(38,14)").as("sx"),
-          count(lit(1)).as("nk"))
-        .select(col("list_id"), col("i").cast("long").as("i"),
-          col("sx"), col("nk"))
-      val ssqP = assigned.groupBy(col("list_id"))
-        .agg(sum(graft.functions.VectorOps.normSqDecimal(col("embedding"))
-          .cast("decimal(38,14)")).cast("decimal(38,14)").as("sx"),
-          count(lit(1)).as("nk"))
-        .select(col("list_id"), lit(-1L).as("i"), col("sx"), col("nk"))
-      dimsP.unionByName(ssqP)
-    }
-      .groupBy(col("list_id"), col("i"))
-      .agg(sum(col("sx")).cast("decimal(38,14)").as("sx"),
-        sum(col("nk")).as("nk"))
+        .agg(sum(col("sx")).cast("decimal(38,14)").as("sx"),
+          sum(col("nk")).as("nk"))
     }
     val dims = st.filter(col("i") >= 0)
       .withColumn("m", round(col("sx").cast("double") / col("nk"), 9))
@@ -881,7 +823,7 @@ object StreamingQueries {
         .agg(min(col("doc_id")).as("base_rep"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val checked = partialsOf(
-          documentsStream(s, dir).filter(isNew), "graft-incr-out-") { batch =>
+          documentsStream(s, dir).filter(isNew)) { batch =>
           val fp = batch.select(col("doc_id"),
             Dedup.exactFingerprint(col("text")).as("fp"))
           val nearMin = DedupQueries.bandsOf(batch)
@@ -920,7 +862,7 @@ object StreamingQueries {
         .select(col("gram_h")).distinct()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val covered = partialsOf(
-          documentsStream(s, dir).filter(isNew), "graft-substr-incr-") { batch =>
+          documentsStream(s, dir).filter(isNew)) { batch =>
           val docs = batch.select(col("doc_id"), col("text"))
           Dedup.coverageOver(docs,
             Dedup.gramTable(docs, DedupQueries.SpanTokens)
@@ -962,7 +904,7 @@ object StreamingQueries {
         .select(col("gram_h")).distinct()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val decided = partialsOf(
-          documentsStream(s, dir), "graft-decon-") { batch =>
+          documentsStream(s, dir)) { batch =>
           val docs = batch.join(trainIds, "doc_id")
             .select(col("doc_id"), plant)
           Dedup.coverageOver(docs,
@@ -993,7 +935,7 @@ object StreamingQueries {
     // per-key; foreachBatch + parquet models it observably.
     "stream_hll_users" -> ((s, dir) => {
       val merged = partialsOf(
-          eventsStream(s, dir).select(col("user_id")), "graft-hll-regs-") {
+          eventsStream(s, dir).select(col("user_id"))) {
           batch => EventQueries.hllRegisters(batch)
             .groupBy(col("reg")).agg(max(col("rho")).as("mj"))
         }
@@ -1014,8 +956,7 @@ object StreamingQueries {
     "stream_cms_tokens" -> ((s, dir) => {
       val merged = partialsOf(
           documentsStream(s, dir)
-            .select(explode(graft.text.TextOps.tokens(col("text"))).as("token")),
-          "graft-cms-regs-") {
+            .select(explode(graft.text.TextOps.tokens(col("text"))).as("token"))) {
           batch => TextQueries.cmsBuckets(batch)
             .groupBy(col("r"), col("bucket"))
             .agg(count(lit(1)).as("counter"))
@@ -1040,8 +981,7 @@ object StreamingQueries {
     // oracle.
     "stream_topk" -> ((s, dir) => {
       partialsOf(
-          eventsStream(s, dir).select(col("user_id"), col("value")),
-          "graft-topk-partials-") {
+          eventsStream(s, dir).select(col("user_id"), col("value"))) {
           batch => batch.groupBy(col("user_id"))
             .agg(count(lit(1)).as("n_events"),
                  sum(dec(col("value"))).as("sum_dec"))
@@ -1066,8 +1006,7 @@ object StreamingQueries {
     "stream_regression" -> ((s, dir) => {
       val merged = partialsOf(
           eventsStream(s, dir)
-            .select(col("event_type"), col("ts_ms"), col("value")),
-          "graft-ols-partials-")(EventQueries.regressionMoments)
+            .select(col("event_type"), col("ts_ms"), col("value")))(EventQueries.regressionMoments)
         .groupBy(col("event_type"))
         .agg(sum(col("n")).as("n"),
              sum(col("sx_d")).as("sx_d"), sum(col("sy_d")).as("sy_d"),
@@ -1090,8 +1029,8 @@ object StreamingQueries {
       EventQueries.bootstrapFinish(EventQueries.bootstrapWideOf(
         partialsOf(
           eventsStream(s, dir)
-            .select(col("event_id"), col("event_type"), col("value")),
-          "graft-bs-partials-")(EventQueries.bootstrapPartialsLong)
+            .select(col("event_id"), col("event_type"), col("value")))(
+          EventQueries.bootstrapPartialsLong)
           .groupBy(col("event_type"), col("r"))
           .agg(sum(col("wv")).cast("decimal(38,4)").as("wv"),
                sum(col("wn")).as("wn"))))
@@ -1107,8 +1046,7 @@ object StreamingQueries {
     // `pipeline_sample_wor`'s oracle). State is K rows per batch, not
     // |docs|.
     "stream_sample_wor" -> ((s, dir) => {
-      DedupQueries.worTopK(partialsOf(
-        documentsStream(s, dir), "graft-wor-partials-") {
+      DedupQueries.worTopK(partialsOf(documentsStream(s, dir)) {
         batch => DedupQueries.worTopK(DedupQueries.worKeys(batch)).drop("rn")
       })
     }),
@@ -1172,8 +1110,7 @@ object StreamingQueries {
     "stream_chisq" -> ((s, dir) => {
       StatTestQueries.chisqFinish(
         partialsOf(
-          eventsStream(s, dir).filter(col("value").isNotNull),
-          "graft-chisq-partials-")(StatTestQueries.chisqCells)
+          eventsStream(s, dir).filter(col("value").isNotNull))(StatTestQueries.chisqCells)
           .groupBy(col("event_type"), col("bucket"))
           .agg(sum(col("o")).as("o")))
     }),
@@ -1185,8 +1122,7 @@ object StreamingQueries {
     // `pipeline_importance_weights`' oracle, hash-proven.
     "stream_importance" -> ((s, dir) => {
       DedupQueries.importanceFinish(
-        partialsOf(documentsStream(s, dir).select(col("lang")),
-          "graft-imp-partials-")(DedupQueries.langCells)
+        partialsOf(documentsStream(s, dir).select(col("lang")))(DedupQueries.langCells)
           .groupBy(col("lang"))
           .agg(sum(col("n_docs")).as("n_docs")))
     }),
@@ -1198,8 +1134,7 @@ object StreamingQueries {
     "stream_jsd_drift" -> ((s, dir) => {
       TextQueries.jsdFinish(
         partialsOf(documentsStream(s, dir)
-            .select(col("doc_id"), col("text")),
-          "graft-jsd-partials-")(TextQueries.jsdCells)
+            .select(col("doc_id"), col("text")))(TextQueries.jsdCells)
           .groupBy(col("tok"))
           .agg(sum(col("ca")).as("ca"), sum(col("cb")).as("cb")))
     }),
@@ -1212,8 +1147,7 @@ object StreamingQueries {
     "stream_benford" -> ((s, dir) => {
       StatTestQueries.benfordFinish(
         partialsOf(
-          eventsStream(s, dir).filter(col("value").isNotNull),
-          "graft-benford-partials-")(StatTestQueries.benfordCells)
+          eventsStream(s, dir).filter(col("value").isNotNull))(StatTestQueries.benfordCells)
           .groupBy(col("event_type"), col("digit"))
           .agg(sum(col("cnt")).as("cnt")))
     }),
@@ -1309,8 +1243,7 @@ object StreamingQueries {
       EventQueries.ltvFinish(
         partialsOf(
           eventsStream(s, dir)
-            .select(col("user_id"), col("ts_ms"), col("value")),
-          "graft-ltv-partials-")(EventQueries.ltvUserDays)
+            .select(col("user_id"), col("ts_ms"), col("value")))(EventQueries.ltvUserDays)
           .groupBy(col("user_id"), col("day_ms"))
           .agg(sum(col("rev")).as("rev")))
     }),
@@ -1356,8 +1289,7 @@ object StreamingQueries {
         partialsOf(
           eventsStream(s, dir)
             .select(col("event_type"), col("user_id"), col("ts_ms"),
-              col("value")),
-          "graft-mh-partials-") {
+              col("value"))) {
           batch => StatTestQueries.mhCells(
             EventQueries.psiHalved(batch, split))
         }
@@ -1373,8 +1305,7 @@ object StreamingQueries {
         partialsOf(
           eventsStream(s, dir)
             .filter(col("value").isNotNull)
-            .select(col("event_type"), col("ts_ms"), col("value")),
-          "graft-kendall-partials-")(StatTestQueries.kendallCells)
+            .select(col("event_type"), col("ts_ms"), col("value")))(StatTestQueries.kendallCells)
           .groupBy(col("event_type"), col("vb"), col("hb"))
           .agg(sum(col("o")).as("o")))),
 
@@ -1386,8 +1317,7 @@ object StreamingQueries {
       StatTestQueries.hillFinish(
         partialsOf(
           eventsStream(s, dir)
-            .select(col("event_type"), col("user_id")),
-          "graft-hill-partials-") { batch =>
+            .select(col("event_type"), col("user_id"))) { batch =>
           batch.groupBy(col("event_type"), col("user_id"))
             .agg(count(lit(1)).as("x"))
         }
@@ -1404,8 +1334,7 @@ object StreamingQueries {
       StatTestQueries.momentsFinish(
         partialsOf(
           eventsStream(s, dir)
-            .select(col("event_type"), col("value")),
-          "graft-moments-partials-")(StatTestQueries.momentCells)
+            .select(col("event_type"), col("value")))(StatTestQueries.momentCells)
           .groupBy(col("event_type"))
           .agg(sum(col("n")).as("n"), sum(col("s1")).as("s1"),
             sum(col("q2")).as("q2"), sum(col("q3")).as("q3"),
@@ -1419,8 +1348,7 @@ object StreamingQueries {
       StatTestQueries.gumbelFinish(
         partialsOf(
           eventsStream(s, dir)
-            .select(col("event_type"), col("ts_ms"), col("value")),
-          "graft-gumbel-partials-")(StatTestQueries.gumbelCells)
+            .select(col("event_type"), col("ts_ms"), col("value")))(StatTestQueries.gumbelCells)
           .groupBy(col("event_type"), col("day"))
           .agg(max(col("mx")).as("mx")))),
 
@@ -1439,8 +1367,7 @@ object StreamingQueries {
         partialsOf(
           eventsStream(s, dir)
             .filter(col("value").isNotNull)
-            .select(col("event_type"), col("ts_ms"), col("value")),
-          "graft-sign-partials-") {
+            .select(col("event_type"), col("ts_ms"), col("value"))) {
           batch => StatTestQueries.signCells(
             EventQueries.psiHalved(batch, split))
         }
@@ -1457,8 +1384,7 @@ object StreamingQueries {
       val nDocs = graft.tables.Tables.documents(s, dir)
         .agg(count(lit(1)).as("n_docs"))
       TextQueries.burstinessFinish(
-        partialsOf(documentsStream(s, dir),
-          "graft-burst-partials-") { batch =>
+        partialsOf(documentsStream(s, dir)) { batch =>
           batch.select(col("doc_id"),
               explode(graft.text.TextOps.tokens(col("text"))).as("tok"))
             .groupBy(col("tok"), col("doc_id"))
@@ -1484,8 +1410,7 @@ object StreamingQueries {
         partialsOf(
           eventsStream(s, dir)
             .filter(col("value").isNotNull)
-            .select(col("event_type"), dec(col("value")).as("v")),
-          "graft-trim-partials-") {
+            .select(col("event_type"), dec(col("value")).as("v"))) {
           batch => batch.groupBy(col("event_type"), col("v"))
             .agg(count(lit(1)).as("cnt"))
         }
@@ -1520,7 +1445,7 @@ object StreamingQueries {
       // Values bit-identical (decimal sums associative; oracle-pinned
       // at 3 SFs).
       val feats = Artifacts.materialized(s, dir, "stream_lr_worker_feats") {
-        partialsOfIndexed(documentsStream(s, dir), "graft-lr-feats-") {
+        partialsOfIndexed(documentsStream(s, dir)) {
           (batch, bid) =>
             TextQueries.lrFeaturesOf(batch).withColumn("worker", lit(bid))
         }
@@ -1553,8 +1478,7 @@ object StreamingQueries {
     // frequency (CMS) and cardinality (HLL) to information measures.
     "stream_entropy_mi" -> ((s, dir) => {
       val merged = partialsOf(
-          eventsStream(s, dir).select(col("event_type"), col("ts_ms")),
-          "graft-ent-partials-")(EventQueries.entropyCells)
+          eventsStream(s, dir).select(col("event_type"), col("ts_ms")))(EventQueries.entropyCells)
         .groupBy(col("event_type"), col("hour"))
         .agg(sum(col("nij")).as("nij"))
       EventQueries.entropyFinish(merged)
@@ -1574,8 +1498,7 @@ object StreamingQueries {
       val pairs = partialsOf(
           eventsStream(s, dir)
             .select(col("user_id"),
-                    (col("ts_ms") - col("ts_ms") % 86400000L).as("day_ms")),
-          "graft-ret-partials-")(_.distinct())
+                    (col("ts_ms") - col("ts_ms") % 86400000L).as("day_ms")))(_.distinct())
         .distinct()
       val cohort = pairs.groupBy(col("user_id"))
         .agg(min(col("day_ms")).as("cohort_day_ms"))
@@ -1597,8 +1520,7 @@ object StreamingQueries {
     "stream_rfm" -> ((s, dir) => {
       val merged = partialsOf(
           eventsStream(s, dir)
-            .select(col("user_id"), col("ts_ms"), col("value")),
-          "graft-rfm-partials-")(EventQueries.rfmPerUser)
+            .select(col("user_id"), col("ts_ms"), col("value")))(EventQueries.rfmPerUser)
         .groupBy(col("user_id"))
         .agg(max(col("last_ms")).as("last_ms"),
              sum(col("freq")).as("freq"),
@@ -1612,8 +1534,7 @@ object StreamingQueries {
     "stream_did" -> ((s, dir) => {
       val merged = partialsOf(
           eventsStream(s, dir)
-            .select(col("user_id"), col("ts_ms"), col("value")),
-          "graft-did-partials-")(EventQueries.didCells)
+            .select(col("user_id"), col("ts_ms"), col("value")))(EventQueries.didCells)
         .groupBy(col("variant"), col("period"))
         .agg(sum(col("n")).as("n"), sum(col("s")).as("s"),
              sum(col("s2")).as("s2"))
@@ -1627,8 +1548,7 @@ object StreamingQueries {
     // design current while metrics ingest.
     "stream_power_analysis" -> ((s, dir) => {
       val merged = partialsOf(
-          eventsStream(s, dir).select(col("event_type"), col("value")),
-          "graft-power-partials-")(EventQueries.powerMoments)
+          eventsStream(s, dir).select(col("event_type"), col("value")))(EventQueries.powerMoments)
         .groupBy(col("event_type"))
         .agg(sum(col("n")).as("n"), sum(col("s")).as("s"),
              sum(col("s2")).as("s2"))
@@ -1642,8 +1562,7 @@ object StreamingQueries {
     // smoothed-probability report hash-matches the batch oracle.
     "stream_kneser_ney" -> ((s, dir) => {
       val merged = partialsOf(
-          documentsStream(s, dir).select(col("text")),
-          "graft-kn-partials-")(TextQueries.knBigramCounts)
+          documentsStream(s, dir).select(col("text")))(TextQueries.knBigramCounts)
         .groupBy(col("w1"), col("w2"))
         .agg(sum(col("c12")).as("c12"))
       TextQueries.knFinish(merged)
@@ -1656,8 +1575,7 @@ object StreamingQueries {
     // deployment that watches a key's skew drift WHILE it ingests.
     "stream_skew_probe" -> ((s, dir) => {
       val merged = partialsOf(
-          eventsStream(s, dir).select(col("user_id")),
-          "graft-skew-partials-")(EventQueries.skewKeyCounts)
+          eventsStream(s, dir).select(col("user_id")))(EventQueries.skewKeyCounts)
         .groupBy(col("user_id"))
         .agg(sum(col("cnt")).as("cnt"))
       EventQueries.skewFinish(merged)
@@ -1673,8 +1591,7 @@ object StreamingQueries {
     "stream_uplift" -> ((s, dir) => {
       val merged = partialsOf(
           eventsStream(s, dir).select(col("event_type"), col("user_id"),
-            col("value")),
-          "graft-uplift-partials-")(EventQueries.upliftCells)
+            col("value")))(EventQueries.upliftCells)
         .groupBy(col("event_type"), col("variant"))
         .agg(sum(col("n")).as("n"), sum(col("s")).as("s"),
              sum(col("s2")).as("s2"))
@@ -1690,8 +1607,7 @@ object StreamingQueries {
     // state and re-plans epochs on every trigger.
     "stream_mix_epochs" -> ((s, dir) => {
       val merged = partialsOf(
-          documentsStream(s, dir).select(col("source"), col("text")),
-          "graft-mixep-partials-")(DedupQueries.sourceTokens)
+          documentsStream(s, dir).select(col("source"), col("text")))(DedupQueries.sourceTokens)
         .groupBy(col("source"))
         .agg(sum(col("t_source")).as("t_source"))
       DedupQueries.mixEpochsFinish(merged)
@@ -1707,8 +1623,7 @@ object StreamingQueries {
     "stream_acf" -> ((s, dir) => {
       val merged = partialsOf(
           eventsStream(s, dir)
-            .select(col("event_type"), col("ts_ms"), col("value")),
-          "graft-acf-partials-")(EventQueries.hourlyCells)
+            .select(col("event_type"), col("ts_ms"), col("value")))(EventQueries.hourlyCells)
         .groupBy(col("event_type"), col("hour_ms"))
         .agg(sum(col("nh")).as("nh"), sum(col("s_dec")).as("s_dec"))
       EventQueries.acfFromHourly(EventQueries.hourlyFromCells(merged))
@@ -1721,8 +1636,7 @@ object StreamingQueries {
     "stream_ljungbox" -> ((s, dir) => {
       val merged = partialsOf(
           eventsStream(s, dir)
-            .select(col("event_type"), col("ts_ms"), col("value")),
-          "graft-lb-partials-")(EventQueries.hourlyCells)
+            .select(col("event_type"), col("ts_ms"), col("value")))(EventQueries.hourlyCells)
         .groupBy(col("event_type"), col("hour_ms"))
         .agg(sum(col("nh")).as("nh"), sum(col("s_dec")).as("s_dec"))
       EventQueries.ljungboxFromHourly(EventQueries.hourlyFromCells(merged))
@@ -1734,8 +1648,7 @@ object StreamingQueries {
     "stream_runs_test" -> ((s, dir) => {
       val merged = partialsOf(
           eventsStream(s, dir)
-            .select(col("event_type"), col("ts_ms"), col("value")),
-          "graft-runs-partials-")(EventQueries.hourlyCells)
+            .select(col("event_type"), col("ts_ms"), col("value")))(EventQueries.hourlyCells)
         .groupBy(col("event_type"), col("hour_ms"))
         .agg(sum(col("nh")).as("nh"), sum(col("s_dec")).as("s_dec"))
       EventQueries.runsTestFromHourly(EventQueries.hourlyFromCells(merged))
@@ -1749,8 +1662,9 @@ object StreamingQueries {
     "stream_bloom" -> ((s, dir) => {
       val merged = partialsOf(
           eventsStream(s, dir)
-            .select(col("user_id").cast("string").as("key")),
-          "graft-bloom-bits-")(b => EventQueries.bloomBits(b.distinct()))
+            .select(col("user_id").cast("string").as("key"))) {
+          b => EventQueries.bloomBits(b.distinct())
+        }
         .distinct()
       val base = graft.tables.Tables.events(s, dir)
         .select(col("user_id").cast("string").as("key")).distinct()
@@ -1768,8 +1682,7 @@ object StreamingQueries {
     "stream_quantiles" -> ((s, dir) => {
       val merged = partialsOf(
           eventsStream(s, dir)
-            .filter(col("value").isNotNull).select(col("value")),
-          "graft-qsk-regs-") {
+            .filter(col("value").isNotNull).select(col("value"))) {
           batch => EventQueries.quantileBuckets(batch)
             .groupBy(col("bucket")).agg(count(lit(1)).as("cnt"))
         }
@@ -1790,9 +1703,7 @@ object StreamingQueries {
     // bounded regardless of history.
     "stream_kmv" -> ((s, dir) => {
       val merged = EventQueries.kmvKMin(
-        partialsOf(
-          eventsStream(s, dir).select(col("event_type"), col("user_id")),
-          "graft-kmv-parts-") {
+        partialsOf(eventsStream(s, dir).select(col("event_type"), col("user_id"))) {
           batch => EventQueries.kmvKMin(EventQueries.kmvHashes(batch), "event_type")
         }.distinct(), "event_type")
       EventQueries.kmvEstimate(merged,
@@ -1828,8 +1739,7 @@ object StreamingQueries {
       val merged = partialsOf(
           eventsStream(s, dir)
             .select(col("event_type"),
-                    (col("ts_ms") - col("ts_ms") % 3600000L).as("hour_ms")),
-          "graft-season-parts-") {
+                    (col("ts_ms") - col("ts_ms") % 3600000L).as("hour_ms"))) {
           batch => batch.groupBy(col("event_type"), col("hour_ms"))
             .agg(count(lit(1)).as("cnt"))
         }
@@ -2006,8 +1916,7 @@ object StreamingQueries {
       val merged = partialsOf(
           eventsStream(s, dir)
             .filter(col("value").isNotNull)
-            .select(col("event_type"), col("event_id"), col("ts_ms"), col("value")),
-          "graft-psi-partials-") {
+            .select(col("event_type"), col("event_id"), col("ts_ms"), col("value"))) {
           batch => EventQueries.psiBinCounts(
             EventQueries.psiHalved(batch, split), edges)
         }
@@ -2026,8 +1935,7 @@ object StreamingQueries {
     "stream_theilsen" -> ((s, dir) => {
       val merged = partialsOf(
           eventsStream(s, dir)
-            .select(col("event_type"), col("ts_ms"), col("value")),
-          "graft-ts-partials-")(EventQueries.hourlyCells)
+            .select(col("event_type"), col("ts_ms"), col("value")))(EventQueries.hourlyCells)
         .groupBy(col("event_type"), col("hour_ms"))
         .agg(sum(col("nh")).as("nh"), sum(col("s_dec")).as("s_dec"))
       EventQueries.theilsenOver(EventQueries.hourlyFromCells(merged),
@@ -2045,8 +1953,7 @@ object StreamingQueries {
     "stream_stl" -> ((s, dir) => {
       val merged = partialsOf(
           eventsStream(s, dir)
-            .select(col("event_type"), col("ts_ms"), col("value")),
-          "graft-stl-partials-")(EventQueries.hourlyCells)
+            .select(col("event_type"), col("ts_ms"), col("value")))(EventQueries.hourlyCells)
         .groupBy(col("event_type"), col("hour_ms"))
         .agg(sum(col("nh")).as("nh"), sum(col("s_dec")).as("s_dec"))
       EventQueries.stlOver(EventQueries.hourlyFromCells(merged))
@@ -2060,8 +1967,7 @@ object StreamingQueries {
     "stream_forecast_eval" -> ((s, dir) => {
       val merged = partialsOf(
           eventsStream(s, dir)
-            .select(col("event_type"), col("ts_ms"), col("value")),
-          "graft-fce-partials-")(EventQueries.hourlyCells)
+            .select(col("event_type"), col("ts_ms"), col("value")))(EventQueries.hourlyCells)
         .groupBy(col("event_type"), col("hour_ms"))
         .agg(sum(col("nh")).as("nh"), sum(col("s_dec")).as("s_dec"))
       EventQueries.forecastEvalOver(EventQueries.hourlyFromCells(merged))
@@ -2075,8 +1981,7 @@ object StreamingQueries {
     "stream_changepoint" -> ((s, dir) => {
       val merged = partialsOf(
           eventsStream(s, dir)
-            .select(col("event_type"), col("ts_ms"), col("value")),
-          "graft-cpt-partials-")(EventQueries.hourlyCells)
+            .select(col("event_type"), col("ts_ms"), col("value")))(EventQueries.hourlyCells)
         .groupBy(col("event_type"), col("hour_ms"))
         .agg(sum(col("nh")).as("nh"), sum(col("s_dec")).as("s_dec"))
       EventQueries.changepointOver(EventQueries.hourlyFromCells(merged))
@@ -2195,8 +2100,7 @@ object StreamingQueries {
     // axis bit-for-bit.
     "stream_pca" -> ((s, dir) => {
       SimilarityQueries.pcaFinish(partialsOf(
-        embeddingsStream(s, dir, appendOnly = false),
-        "graft-pca-partials-")(SimilarityQueries.pcaMoments))
+        embeddingsStream(s, dir, appendOnly = false))(SimilarityQueries.pcaMoments))
     }),
 
     // STREAMING SILHOUETTE — clustering quality maintained as vectors
@@ -2210,9 +2114,7 @@ object StreamingQueries {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       cents.count() // freeze the yardstick before the stream starts
       SimilarityQueries.silFinishOf(
-        partialsOf(
-          embeddingsStream(s, dir, appendOnly = false),
-          "graft-sil-partials-") { batch =>
+        partialsOf(embeddingsStream(s, dir, appendOnly = false)) { batch =>
           SimilarityQueries.silPartials(
             batch.withColumn("nrm",
               sqrt(graft.functions.VectorOps.normSqDecimal(col("embedding")).cast("double"))),
@@ -2225,7 +2127,7 @@ object StreamingQueries {
     "stream_ann_index_append" -> ((s, dir) => {
       val centArr = SimilarityQueries.appendCentArr(s, dir)
       val streamed = partialsOf(
-          embeddingsStream(s, dir), "graft-annstream-out-") { batch =>
+          embeddingsStream(s, dir)) { batch =>
           val withNrm = batch.withColumn("nrm",
             sqrt(graft.functions.VectorOps.normSqDecimal(col("embedding")).cast("double")))
           SimilarityQueries.assignTo(withNrm, centArr)
@@ -2251,8 +2153,8 @@ object StreamingQueries {
     // STREAMING CLUSTER PURITY (VERDICT r13 item 4) — the second
     // serving finish on the SAME streamed (cluster, label) contingency
     // cells stream_cluster_nmi maintains (the gini/HHI "one state
-    // table, N finishes" pattern; each twin drives its own replay so
-    // the merge proofs stay independent). Shares emb_cluster_purity's
+    // table, N finishes" pattern; the family shares one replayed state
+    // table through the Artifacts memo). Shares emb_cluster_purity's
     // oracle, hash-proven.
     "stream_cluster_purity" -> ((s, dir) =>
       SimilarityQueries.clusterPurityFinish(streamedClusterCells(s, dir))),
@@ -2281,8 +2183,8 @@ object StreamingQueries {
     }),
 
     // STREAMING DAVIES-BOULDIN — the second internal reading on the
-    // same geometric state class (own replay, independent merge
-    // proof). Shares emb_davies_bouldin's oracle, hash-proven.
+    // same geometric state table (shared through the Artifacts memo).
+    // Shares emb_davies_bouldin's oracle, hash-proven.
     "stream_davies_bouldin" -> ((s, dir) => {
       val (dims, wss) = streamedClusterGeom(s, dir)
       SimilarityQueries.daviesBouldinFinish(dims, wss)
@@ -2302,9 +2204,8 @@ object StreamingQueries {
 
     // STREAMING SHIFTED-PMI — same union-merged exposure state as
     // stream_item_cf, finished with events_item_pmi's PMI/SPPMI chain
-    // (one shared state table would serve both in a deployment; here
-    // each twin drives its own replay so the two merge proofs stay
-    // independent). Shares events_item_pmi's oracle, hash-proven.
+    // (one state table serves both, shared through the Artifacts
+    // memo). Shares events_item_pmi's oracle, hash-proven.
     "stream_item_pmi" -> ((s, dir) =>
       EventQueries.itemPmiFinish(EventQueries.cfCapOf(
         streamedCfExposures(s, dir)))),
@@ -2318,8 +2219,7 @@ object StreamingQueries {
       EventQueries.crFinish(
         partialsOf(
             eventsStream(s, dir)
-              .select(col("event_type"), col("user_id"), col("event_id")),
-            "graft-cr-partials-")(EventQueries.crCells)
+              .select(col("event_type"), col("user_id"), col("event_id")))(EventQueries.crCells)
           .distinct())),
 
     // STREAMING ODDS RATIO — the 2×2 effect size maintained online:
@@ -2330,8 +2230,7 @@ object StreamingQueries {
     "stream_odds_ratio" -> ((s, dir) =>
       EventQueries.orFinish(
         partialsOf(
-            eventsStream(s, dir).select(col("user_id"), col("event_type")),
-            "graft-or-partials-")(EventQueries.orCells)
+            eventsStream(s, dir).select(col("user_id"), col("event_type")))(EventQueries.orCells)
           .groupBy(col("variant"), col("user_id"))
           .agg(max(col("conv")).as("conv")))),
 
@@ -2354,9 +2253,8 @@ object StreamingQueries {
 
     // STREAMING THEIL/MLD/ATKINSON — the fourth finish on the same
     // sum-merged per-user totals as stream_gini (one state table,
-    // four concentration/inequality readings in a deployment; each
-    // twin drives its own replay so the merge proofs stay
-    // independent). Shares events_theil_index's oracle, hash-proven.
+    // four concentration/inequality readings, shared through the
+    // Artifacts memo). Shares events_theil_index's oracle, hash-proven.
     "stream_theil_index" -> ((s, dir) =>
       EventQueries.inequalityFinish(streamedUserTotals(s, dir))),
 
@@ -2383,8 +2281,7 @@ object StreamingQueries {
       StatTestQueries.moodFinish(
         partialsOf(
           eventsStream(s, dir)
-            .select(col("event_type"), col("value")),
-          "graft-mood-partials-")(StatTestQueries.moodGrid)
+            .select(col("event_type"), col("value")))(StatTestQueries.moodGrid)
           .groupBy(col("event_type"), col("value"))
           .agg(sum(col("cnt")).as("cnt")))),
 
@@ -2411,7 +2308,7 @@ object StreamingQueries {
     // time. Shares its oracle, hash-proven.
     "stream_ngram_novelty" -> ((s, dir) =>
       TextQueries.novelFinish(
-        partialsOf(documentsStream(s, dir), "graft-novel-partials-")(b =>
+        partialsOf(documentsStream(s, dir))(b =>
             TextQueries.novelBigrams(b).distinct())
           .distinct()))
   )

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import java.io.{BufferedOutputStream, FileNotFoundException}
+import java.io.{BufferedOutputStream, FileNotFoundException, UncheckedIOException}
 import java.net.URI
-import java.nio.file.{FileAlreadyExistsException => NioFileAlreadyExists, Files, Paths, StandardCopyOption}
+import java.nio.file.{FileAlreadyExistsException => NioFileAlreadyExists, Files, NoSuchFileException, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
@@ -114,11 +114,13 @@ class LocalNioCheckpointFileManager(root: Path, conf: Configuration)
       val st = fs.getFileStatus(path)
       return if (filter.accept(st.getPath)) Array(st) else Array.empty
     }
-    Files.list(dir).iterator().asScala
+    val entries = Files.list(dir)
+    try entries.iterator().asScala
       .map(p => new Path(p.toUri))
       .filter(filter.accept)
       .map(fs.getFileStatus)
       .toArray
+    finally entries.close() // the directory stream holds an fd until closed
   }
 
   override def mkdirs(path: Path): Unit = Files.createDirectories(nio(path))
@@ -128,11 +130,16 @@ class LocalNioCheckpointFileManager(root: Path, conf: Configuration)
   override def delete(path: Path): Unit = {
     val p = nio(path)
     try {
-      if (Files.isDirectory(p))
-        Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(f => Files.deleteIfExists(f))
-      else Files.deleteIfExists(p)
-    } catch { case _: FileNotFoundException => () }
+      if (Files.isDirectory(p)) {
+        val walk = Files.walk(p)
+        try walk.iterator().asScala.toSeq.reverse.foreach(f => Files.deleteIfExists(f))
+        finally walk.close()
+      } else Files.deleteIfExists(p)
+    } catch {
+      // a concurrent delete removed the path (or part of it) first
+      case _: FileNotFoundException | _: NoSuchFileException => ()
+      case e: UncheckedIOException if e.getCause.isInstanceOf[NoSuchFileException] => ()
+    }
   }
 
   override def isLocal: Boolean = true

@@ -22,20 +22,27 @@ import graft.sensor.Sensors
   */
 object SensorStream {
 
-  /** The generator pipeline on a streaming source: identical column
-    * algebra to the batch twin (Sensors.sensorPoints — same sawtooth,
-    * sine, keys, union), driven by the rate-micro-batch offset.
+  /** The generator pipeline on a streaming source: [[pointsOf]] driven
+    * by the rate-micro-batch offset.
     */
-  def sensorPointsStream(spark: SparkSession, rowsPerBatch: Int = 10): DataFrame = {
-    val ticks = spark.readStream
+  def sensorPointsStream(spark: SparkSession, rowsPerBatch: Int = 10): DataFrame =
+    pointsOf(spark.readStream
       .format("rate-micro-batch")
       .option("rowsPerBatch", rowsPerBatch)
       .option("startTimestamp", Sensors.T0Ms)
       .option("advanceMillisPerBatch", rowsPerBatch * Sensors.PeriodMs)
-      .load()
+      .load())
+
+  /** The generator's column algebra on any tick stream whose long
+    * `value` is the tick index (the rate sources' shape): identical to
+    * the batch twin (Sensors.sensorPoints — same sawtooth, sine, keys,
+    * union), with event time a pure function of the tick index.
+    */
+  def pointsOf(ticks: DataFrame): DataFrame = {
+    val base = ticks
       .select(col("value").as("i"),
               (lit(Sensors.T0Ms) + col("value") * Sensors.PeriodMs).as("ts_ms"))
-    val base = ticks.withColumn("phase", Sensors.sawtoothPhase(col("i")))
+      .withColumn("phase", Sensors.sawtoothPhase(col("i")))
     val temp = base.select(lit("temp").as("key"), col("ts_ms"), col("phase").as("value"))
     val pressure = base.select(lit("pressure").as("key"), col("ts_ms"),
       Sensors.sineWave(col("phase")).as("value"))

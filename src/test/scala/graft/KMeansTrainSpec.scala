@@ -84,4 +84,13 @@ class KMeansTrainSpec extends SparkSpec {
     assert(t5.exceptAll(t8).isEmpty && t8.exceptAll(t5).isEmpty,
       "a converged training run changed its output under a larger round budget")
   }
+
+  test("fixpoint check treats a -0.0 / 0.0 coordinate flip as unchanged") {
+    import org.apache.spark.sql.Row
+    val neg = SimilarityQueries.centroidMap(Array(Row(0, 1, -0.0), Row(0, 2, 0.5)))
+    val pos = SimilarityQueries.centroidMap(Array(Row(0, 1, 0.0), Row(0, 2, 0.5)))
+    assert(neg == pos)
+    assert(java.lang.Double.compare(neg((0, 1)).asInstanceOf[Double], 0.0) == 0,
+      "-0.0 must be stored as 0.0")
+  }
 }

@@ -12,7 +12,8 @@ import graft.streaming.LocalNioCheckpointFileManager
   * WAL/commit/state-file writes route through it): atomic
   * write-then-rename visibility, the HADOOP FileAlreadyExistsException
   * on a losing concurrent writer, cancel() leaving nothing behind,
-  * list/exists/delete semantics, and the non-local-path refusal.
+  * list/exists/delete semantics, list() closing its directory stream,
+  * and the non-local-path refusal.
   */
 class NioCkptFmSpec extends SparkSpec {
 
@@ -73,6 +74,25 @@ class NioCkptFmSpec extends SparkSpec {
     assert(!fm.exists(new Path(new Path(dir.toUri), "state")))
     // deleting a missing path is a no-op, like the FileContext manager
     fm.delete(new Path(new Path(dir.toUri), "state"))
+  }
+
+  test("list closes its directory stream: no fd growth over 200 calls") {
+    val fdDir = new java.io.File("/proc/self/fd")
+    assume(fdDir.isDirectory, "needs /proc/self/fd to count open fds")
+    val dir = Files.createTempDirectory("nio-ckpt-spec-")
+    val fm = mgr(dir)
+    val offsets = new Path(new Path(dir.toUri), "offsets")
+    Seq("0", "1").foreach { name =>
+      val o = fm.createAtomic(new Path(offsets, name), overwriteIfPossible = false)
+      o.write(name.getBytes); o.close()
+    }
+    assert(fm.list(offsets).length == 2)
+    val before = fdDir.list().length
+    (1 to 200).foreach(_ => fm.list(offsets))
+    val grown = fdDir.list().length - before
+    // a leaked directory stream costs one fd per call; allow slack for
+    // fds other threads open meanwhile
+    assert(grown < 20, s"list() leaked $grown fds over 200 calls")
   }
 
   test("refuses non-local schemes loudly") {

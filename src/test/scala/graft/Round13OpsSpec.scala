@@ -105,7 +105,7 @@ class Round13OpsSpec extends SparkSpec {
     // sentinel row that would win any max merge — the exact footgun
     // the seed truncation exists to stop (VERDICT r12 item 5)
     val partials = StreamingQueries.partialsOf(
-        StreamingQueries.eventsStream(spark, sf), "graft-seedspec-") { b =>
+        StreamingQueries.eventsStream(spark, sf)) { b =>
       b.agg(coalesce(max(col("value")), lit(9.99e9)).as("mx"))
     }
     val merged = partials.agg(max(col("mx"))).head().getDouble(0)
