@@ -5,9 +5,10 @@ import java.nio.file.{Files, Paths}
 /** Benchmark main: every SparkEntry query against
   * `SPARK_GRAFT_SF_DIR`, fully materialized through the `noop` sink
   * (computes every output column — `count()` would let Catalyst prune
-  * the projections being measured). One JSON line on stdout AND
-  * written to `bench_out.json` (sbt log prefixes made the stdout line
-  * unparseable for the round-1 driver).
+  * the projections being measured). The full per-query map is written
+  * to `bench_out.json`; stdout carries one compact JSON line
+  * ([[stdoutLine]]) — sbt log prefixes made a log-mixed stdout line
+  * unparseable for the round-1 reader.
   *
   * Failures are NOT swallowed into a fake timing: a failed query
   * reports -1 and lands in `"failed"` so a broken query can never
@@ -90,15 +91,6 @@ object Bench {
         // cached frames (persist() inside query builders) must not
         // leak into the next rep's / query's measurement
         spark.catalog.clearCache()
-        // streaming twins leave their memory-sink tables registered
-        // (full result sets held on the driver); un-dropped, a
-        // REPS=3 run accumulates ~280 of them by the time the
-        // late-alphabet stream_* section runs — GC pressure that
-        // taxed exactly the stream rows (r15 keeper: stream median
-        // 1.16 vs batch 0.77 against r14). Drop them per rep.
-        spark.sqlContext.tableNames()
-          .filter(_.startsWith("stream_out_"))
-          .foreach(spark.catalog.dropTempView)
         sec
       }
       // any failed rep fails the query — a crash must never hide
@@ -138,23 +130,37 @@ object Bench {
       // comparison (VERDICT r17 item 2) — keep a per-cpus copy too.
       Files.writeString(Paths.get(s"bench_out_c$cpus.json"), fullLine + "\n")
     }
+    println(stdoutLine(total, reps, results.size, failed.toSeq, sfDir,
+      results.collect { case (k, v, _, _) if v >= 0 => (k, v) }))
+    spark.stop()
+  }
+
+  /** The one stdout line: total, query counts, sf, the failed names
+    * and the slowest queries (3 dp, slowest first), cut to `budget`
+    * chars. Bench's stdout is read from a ~2000-char tail capture, so
+    * the full line (~10 KB at 428 queries) parsed to null; the
+    * complete per-query map is in `bench_out.json`. Failed names come
+    * first, then as many of the slowest queries as still fit;
+    * `n_failed` and `n_queries` stay exact.
+    */
+  private[graft] def stdoutLine(total: Double, reps: Int, nQueries: Int,
+                                failed: Seq[String], sf: String,
+                                timings: Seq[(String, Double)],
+                                budget: Int = 1500): String = {
     // Locale.ROOT: f"" interpolation uses the JVM default locale — a
     // comma-decimal locale (de_DE) would emit invalid JSON (ADVICE r10)
     def f3(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    // The stdout line carries the FULL per-query map (3 dp, slowest
-    // first so a tail-truncated capture still sees the queries that
-    // matter): rounds 16-17 printed only the slowest 35 (a workaround
-    // for a ~2000-char driver stdout capture observed in r9) and that
-    // truncation blinded the driver's entire per-query PERF and
-    // scaling comparison two rounds running (VERDICT r17 item 2 asks
-    // for the full map back). Timing methodology is unchanged — this
-    // is output formatting only.
-    val qmap = results.filter(_._2 >= 0).sortBy(-_._2)
-      .map { case (k, v, _, _) => "\"" + k + "\":" + f3(v) }.mkString("{", ",", "}")
-    val compact =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","reps":$reps,"n_queries":${results.size},"n_failed":${failed.size},"queries":$qmap,"sf":"$sfDir","failed":$fj,"full_results":"bench_out.json"}"""
-    println(compact)
-    spark.stop()
+    def line(fs: Seq[String], qs: Seq[(String, Double)]): String = {
+      val qmap = qs.map { case (k, v) => "\"" + k + "\":" + f3(v) }.mkString("{", ",", "}")
+      val fj = fs.map("\"" + _ + "\"").mkString("[", ",", "]")
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","reps":$reps,"n_queries":$nQueries,"n_failed":${failed.size},"queries":$qmap,"sf":"$sf","failed":$fj,"full_results":"bench_out.json"}"""
+    }
+    def fits(n: Int)(take: Int => String): Int =
+      (0 to n).takeWhile(k => take(k).length <= budget).lastOption.getOrElse(0)
+    val slowest = timings.sortBy(-_._2)
+    val nf = fits(failed.size)(k => line(failed.take(k), Nil))
+    val nq = fits(slowest.size)(k => line(failed.take(nf), slowest.take(k)))
+    line(failed.take(nf), slowest.take(nq))
   }
 }

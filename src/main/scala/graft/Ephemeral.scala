@@ -8,9 +8,9 @@ import java.nio.file.{Files, Path, Paths}
   * everything under it; per-query checkpoints are deleted as soon as
   * their query stops) and are pure harness state: a real
   * deployment passes a durable `checkpointLocation` on reliable
-  * storage, but a bounded replay-to-memory-sink twin re-creates its
-  * checkpoint from scratch every run, so its only requirement is
-  * "fast local scratch".
+  * storage, but a bounded-replay twin (`StreamingQueries.replay`)
+  * re-creates its checkpoint from scratch every run, so its only
+  * requirement is "fast local scratch".
   *
   * Resolution order (guide §6 — put ephemeral I/O on the fastest
   * local medium available):

@@ -338,12 +338,6 @@ object ScaleBench {
         .write.format("noop").mode("overwrite").save()
       val sec = (System.nanoTime() - t0) / 1e9
       spark.catalog.clearCache()
-      // streaming twins leave their memory-sink tables registered —
-      // the r15 Bench lesson (280 accumulated tables taxed the
-      // late-alphabet stream rows); drop them per rep here too.
-      spark.sqlContext.tableNames()
-        .filter(_.startsWith("stream_out_"))
-        .foreach(spark.catalog.dropTempView)
       sec
     }
 
@@ -444,6 +438,19 @@ object ScaleBench {
     spark.stop()
   }
 
+  /** Symlinks every entry of `sfDir` whose name `skip` rejects into
+    * `tmp`, by ABSOLUTE target — a relative `sfDir` would otherwise
+    * give links that resolve against `tmp` and dangle. `tmp` is a
+    * [[graft.Ephemeral.dataDir]], deleted by that root's hook.
+    */
+  private def linkFixtures(sfDir: String, tmp: Path, skip: String => Boolean): Unit = {
+    val listing = Files.list(Paths.get(sfDir))
+    try listing.iterator().asScala
+      .filterNot(p => skip(p.getFileName.toString))
+      .foreach(p => Files.createSymbolicLink(tmp.resolve(p.getFileName), p.toAbsolutePath.normalize))
+    finally listing.close()
+  }
+
   /** A temp table dir: every fixture table symlinked except documents /
     * embeddings (written as `factor`-way self-unions with id offsets —
     * labels and content preserved → N× denser LSH buckets) and events
@@ -455,15 +462,7 @@ object ScaleBench {
                                     tables: Set[String] = Set("documents", "embeddings", "events",
                                       "orders", "lineitem", "customer")): Path = {
     val tmp = graft.Ephemeral.dataDir("graft-scale-")
-    sys.addShutdownHook {
-      if (Files.exists(tmp)) {
-        Files.walk(tmp).iterator().asScala.toSeq.reverse
-          .foreach(p => try Files.deleteIfExists(p) catch { case _: Exception => () })
-      }
-    }
-    Files.list(Paths.get(sfDir)).iterator().asScala
-      .filterNot(p => tables.exists(t => p.getFileName.toString.startsWith(t)))
-      .foreach(p => Files.createSymbolicLink(tmp.resolve(p.getFileName), p))
+    linkFixtures(sfDir, tmp, name => tables.exists(name.startsWith))
 
     if (tables("events")) {
       // events: normalize the fixture's ts to epoch-ms (adaptive to its
@@ -548,15 +547,7 @@ object ScaleBench {
   private[graft] def buildSeriesScaledDir(spark: SparkSession, sfDir: String,
                                           factor: Int): Path = {
     val tmp = graft.Ephemeral.dataDir("graft-series-")
-    sys.addShutdownHook {
-      if (Files.exists(tmp)) {
-        Files.walk(tmp).iterator().asScala.toSeq.reverse
-          .foreach(p => try Files.deleteIfExists(p) catch { case _: Exception => () })
-      }
-    }
-    Files.list(Paths.get(sfDir)).iterator().asScala
-      .filterNot(_.getFileName.toString.startsWith("events"))
-      .foreach(p => Files.createSymbolicLink(tmp.resolve(p.getFileName), p))
+    linkFixtures(sfDir, tmp, _.startsWith("events"))
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val ev = spark.read.parquet(s"$sfDir/events.parquet")
     val eOff = ev.agg(max("event_id")).head.getLong(0) + 1

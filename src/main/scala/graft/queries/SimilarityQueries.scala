@@ -2011,9 +2011,9 @@ object SimilarityQueries {
     // driver-side map compare on the collected (list, i, c) triples —
     // same null-free exact-double equality the <=> join tested — and
     // the next round's input is a LocalRelation of the identical
-    // values. BuildProbe: ann_index_append warm build 8.2 → (see
-    // OPTIMIZATION_r18.md) with identical output (KMeansTrainSpec +
-    // the unrolled-N oracle pin the trajectory).
+    // values. The measured build-time effect is in OPTIMIZATION_r18.md;
+    // the output is identical (KMeansTrainSpec + the unrolled-N oracle
+    // pin the trajectory).
     val s = emb.sparkSession
     var centArr = initCents
     var prev: Map[(Any, Any), Any] = null

@@ -2,7 +2,6 @@ package graft.queries
 
 import java.nio.file.{Files, Path}
 import java.nio.file.attribute.FileTime
-import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -12,7 +11,7 @@ import graft.streaming.{CusumStream, EwmaStream, FunnelStream, GapFillStream, Ps
 /** Streaming operators run end-to-end as bounded MULTI-BATCH queries:
   * the events table is split into [[NumSplits]] time-ordered files and
   * replayed through a file streaming source with `maxFilesPerTrigger=1`
-  * → watermark → stateful operator → memory sink, compared against the
+  * → watermark → stateful operator → [[replay]], compared against the
   * same computation in DuckDB. Every stateful operator therefore
   * accumulates state across ≥4 data-carrying micro-batches with the
   * watermark advancing between them — the oracle hash-match IS the
@@ -32,8 +31,6 @@ import graft.streaming.{CusumStream, EwmaStream, FunnelStream, GapFillStream, Ps
   * (the oracle contract here is the no-late replay).
   */
 object StreamingQueries {
-
-  private val runId = new AtomicInteger(0)
 
   /** Number of time-ordered source files (= data-carrying micro-batches
     * per single-source query; join queries consume one file per side
@@ -193,7 +190,7 @@ object StreamingQueries {
       .select(col("user_id").as("userId"), col("event_id").as("eventId"),
               col("ts_ms").as("tsMs"), col("event_type").as("eventType"))
       .as[FunnelStream.In]
-    val emitted = runToMemory(s, FunnelStream.track(in, windowMs).toDF())
+    val emitted = partialsOf(FunnelStream.track(in, windowMs).toDF())(identity)
     emitted.groupBy(col("user_id"))
       .agg(min(col("t_view")).as("t_view"),
            min(col("t_click")).as("t_click"),
@@ -259,11 +256,13 @@ object StreamingQueries {
     }
   }
 
-  /** Run a streaming DataFrame to completion into a memory sink and
-    * return the accumulated result table. Each call owns its OWN
-    * checkpoint dir and deletes it afterwards — the memory sink holds
-    * the rows, so nothing references it once the query stops (and
-    * concurrent runs can never delete each other's dirs).
+  /** The one bounded-replay runner: drive `src` to completion through
+    * `foreachBatch`, calling `onBatch(batch, batchId)` once per
+    * micro-batch (a stateful `src`'s `batch` must be evaluated once —
+    * the plan behind it commits its state as it runs). Each call owns
+    * its OWN checkpoint dir and deletes it before returning, so
+    * concurrent replays never delete each other's dirs and nothing is
+    * left on disk; nothing is registered in the catalog either.
     *
     * Completion is DETERMINISTIC: `processAllAvailable()` blocks until
     * the engine declines to construct another micro-batch, and that
@@ -272,14 +271,15 @@ object StreamingQueries {
     * (The previous recentProgress-polling wait raced against the
     * no-data progress-event throttle, `noDataProgressEventInterval` =
     * 10 s, and could burn up to 15 s of fake query time — VERDICT r2.)
+    *
+    * The replay tuning below is captured when the query starts (into
+    * the stream's cloned session, which also runs the `foreachBatch`
+    * frames), so it is set around `start()` and the session's previous
+    * values are restored right after.
     */
-  private def runToMemory(s: SparkSession, streamed: DataFrame,
-                          rocksdb: Boolean = false): DataFrame = {
-    val name = s"stream_out_${runId.incrementAndGet()}"
-    val ckpt = graft.Ephemeral.dir("graft-ckpt-")
-    // Conf is captured at query start, so setting it around start()
-    // scopes it to this query; restore afterwards.
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
+  private def replay(src: DataFrame, rocksdb: Boolean = false)
+                    (onBatch: (DataFrame, Long) => Unit): Unit = {
+    val s = src.sparkSession
     // Stateful streaming pins one state-store instance per shuffle
     // partition per stateful operator for the query's lifetime, and
     // AQE cannot coalesce them — at bounded-replay scale the per-batch
@@ -302,7 +302,8 @@ object StreamingQueries {
       // instead of Hadoop FileContext + CRC shadow files. Atomic
       // rename + concurrent-writer semantics preserved — see
       // LocalNioCheckpointFileManager.
-      ckptFmKey -> ckptFmClass,
+      "spark.sql.streaming.checkpointFileManagerClass" ->
+        classOf[graft.streaming.LocalNioCheckpointFileManager].getName,
       // Bounded replays never restart mid-run: retain the minimum
       // checkpoint history instead of the 100-batch default — with the
       // multi-batch replay each query commits ~5-9 batches, and delta
@@ -317,36 +318,37 @@ object StreamingQueries {
         // provider a 100 TB deployment runs anyway). Changelog
         // checkpointing ships per-batch deltas instead of full SST
         // snapshots — the production setting, and the cheap one here.
-        provKey -> "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
        else Seq.empty)
-    val prev = tuning.map { case (k, _) => k -> s.conf.getOption(k) }
-    tuning.foreach { case (k, v) => s.conf.set(k, v) }
-    val q = try {
-      streamed.writeStream
-        .outputMode("append")
-        .queryName(name)
-        .option("checkpointLocation", ckpt.toString)
-        .format("memory")
-        .start()
-    } finally {
-      prev.foreach {
+    val ckpt = graft.Ephemeral.dir("graft-ckpt-")
+    try {
+      val prev = tuning.map { case (k, _) => k -> s.conf.getOption(k) }
+      tuning.foreach { case (k, v) => s.conf.set(k, v) }
+      val q = try {
+        src.writeStream
+          .option("checkpointLocation", ckpt.toString)
+          .foreachBatch { (batch: DataFrame, bid: Long) => onBatch(batch, bid) }
+          .start()
+      } finally prev.foreach {
         case (k, Some(v)) => s.conf.set(k, v)
         case (k, None) => s.conf.unset(k)
       }
-    }
-    try q.processAllAvailable()
-    finally q.stop()
-    deleteRecursively(ckpt)
-    s.table(name)
+      try q.processAllAvailable()
+      finally q.stop()
+    } finally deleteRecursively(ckpt)
   }
 
-  /** Drive `src` through one bounded foreachBatch replay and return
-    * the union of the per-micro-batch partials `build(batch)`, in
-    * batch-id order. Callers apply their merge law (SUM / max /
-    * distinct) to the returned frame — the partials are the observable
-    * model of per-key streaming-agg state, with the sink as the state
-    * boundary.
+  /** Drive `src` through one bounded replay and return the union of the
+    * per-micro-batch partials `build(batch)`, in batch-id order.
+    * Callers apply their merge law (SUM / max / distinct) to the
+    * returned frame — the partials are the observable model of
+    * per-key streaming-agg state, with the sink as the state boundary.
+    * A stateful `src` already emits its own rows (append mode), so
+    * `partialsOf(src)(identity)` is that stream's complete output.
+    * `rocksdb` selects the RocksDB state store (the `transformWithState`
+    * twins need it).
     *
     * Each partial is `localCheckpoint`ed inside `foreachBatch` (eager:
     * its blocks live in the block manager OUTSIDE the catalog cache,
@@ -354,8 +356,7 @@ object StreamingQueries {
     * ContextCleaner frees them once the returned frame is unreachable
     * — the [[Artifacts]] posture). They are kept in a driver-side map
     * keyed by batch id, so a re-run batch replaces its entry instead
-    * of adding a duplicate. Nothing is written outside the streaming
-    * checkpoint, which is deleted before returning.
+    * of adding a duplicate.
     *
     * The union starts from a zero-row SEED carrying the builder's
     * schema (the builder applied to an empty static frame with the
@@ -375,9 +376,9 @@ object StreamingQueries {
     * (`pcaMoments` loses only a zero cell that every real micro-batch
     * re-emits — its additive merge is unchanged.)
     */
-  private[graft] def partialsOf(src: DataFrame)
+  private[graft] def partialsOf(src: DataFrame, rocksdb: Boolean = false)
                         (build: DataFrame => DataFrame): DataFrame =
-    partialsOfIndexed(src)((batch, _) => build(batch))
+    partialsOfEach(src, rocksdb)((batch, _) => build(batch)).head
 
   /** [[partialsOf]] with the micro-batch id passed to the builder —
     * for twins whose downstream finish needs the per-worker (per
@@ -385,48 +386,27 @@ object StreamingQueries {
     * federated gradient merge over stored worker feature shards.
     */
   private[graft] def partialsOfIndexed(src: DataFrame)
-                        (build: (DataFrame, Long) => DataFrame): DataFrame = {
-    val s = src.sparkSession
-    val seed = build(s.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), src.schema), -1L)
-      .limit(0)
-    val partials = scala.collection.mutable.TreeMap[Long, DataFrame]()
-    val ckpt = graft.Ephemeral.dir("graft-ckpt-")
-    try {
-      val q = withNioCkptFm(s) {
-        src.writeStream
-          .option("checkpointLocation", ckpt.toString)
-          .foreachBatch { (batch: DataFrame, bid: Long) =>
-            val part = build(batch, bid).localCheckpoint()
-            partials.synchronized(partials(bid) = part)
-            ()
-          }
-          .start()
-      }
-      try q.processAllAvailable()
-      finally q.stop()
-    } finally deleteRecursively(ckpt)
-    partials.synchronized(partials.values.toList).foldLeft(seed)(_ unionByName _)
-  }
+                        (build: (DataFrame, Long) => DataFrame): DataFrame =
+    partialsOfEach(src)(build).head
 
-  private val ckptFmKey = "spark.sql.streaming.checkpointFileManagerClass"
-  private val ckptFmClass =
-    classOf[graft.streaming.LocalNioCheckpointFileManager].getName
-
-  /** Run `startQuery` with the java.nio local checkpoint manager set
-    * (captured at query start — the runToMemory conf-scoping pattern),
-    * restoring the previous value afterwards. r18: the bounded
-    * replays' checkpoints are ephemeral scratch, so their per-batch
-    * offset/commit-log and state-file writes skip the Hadoop
-    * FileContext + CRC code path (see LocalNioCheckpointFileManager).
+  /** [[partialsOfIndexed]] for several builders over ONE replay: one
+    * partials frame per builder, each seeded and ordered the same way.
+    * Each builder reads `batch` itself, so a stateful `src` takes one.
     */
-  private def withNioCkptFm[A](s: SparkSession)(startQuery: => A): A = {
-    val prev = s.conf.getOption(ckptFmKey)
-    s.conf.set(ckptFmKey, ckptFmClass)
-    try startQuery
-    finally prev match {
-      case Some(v) => s.conf.set(ckptFmKey, v)
-      case None => s.conf.unset(ckptFmKey)
+  private def partialsOfEach(src: DataFrame, rocksdb: Boolean = false)
+                            (builds: ((DataFrame, Long) => DataFrame)*): Seq[DataFrame] = {
+    val empty = src.sparkSession.createDataFrame(
+      new java.util.ArrayList[org.apache.spark.sql.Row](), src.schema)
+    val seeds = builds.map(build => build(empty, -1L).limit(0))
+    val partials = builds.map(_ => scala.collection.mutable.TreeMap[Long, DataFrame]())
+    replay(src, rocksdb) { (batch, bid) =>
+      builds.zip(partials).foreach { case (build, byBid) =>
+        val part = build(batch, bid).localCheckpoint()
+        byBid.synchronized(byBid(bid) = part)
+      }
+    }
+    seeds.zip(partials).map { case (seed, byBid) =>
+      byBid.synchronized(byBid.values.toList).foldLeft(seed)(_ unionByName _)
     }
   }
 
@@ -624,7 +604,7 @@ object StreamingQueries {
         .select(col("event_type"),
                 unix_millis(col("window.start")).as("window_start_ms"),
                 col("cnt"), col("sum_value"))
-      runToMemory(s, agg)
+      partialsOf(agg)(identity)
     }),
 
     // Streaming exact dedup (dropDuplicates on the full output tuple:
@@ -640,7 +620,7 @@ object StreamingQueries {
         .select(col("user_id"), col("event_type"),
                 (col("ts_ms") - col("ts_ms") % 86400000L).as("day_ms"))
         .dropDuplicates("user_id", "event_type", "day_ms")
-      runToMemory(s, dedup)
+      partialsOf(dedup)(identity)
     }),
 
     // The at-scale streaming dedup operator: dropDuplicatesWithinWatermark
@@ -660,7 +640,7 @@ object StreamingQueries {
                 (col("ts_ms") - col("ts_ms") % 86400000L).as("day_ms"), col("ts"))
         .dropDuplicatesWithinWatermark("user_id", "event_type", "day_ms")
         .select(col("user_id"), col("event_type"), col("day_ms"))
-      runToMemory(s, dedup)
+      partialsOf(dedup)(identity)
     }),
 
     // Built-in session windows (30-min gap) — the engine-managed twin
@@ -678,7 +658,7 @@ object StreamingQueries {
                 unix_millis(col("session_window.start")).as("session_start_ms"),
                 unix_millis(col("session_window.end")).as("session_end_ms"),
                 col("n_events"))
-      runToMemory(s, sessions)
+      partialsOf(sessions)(identity)
     }),
 
     // Sliding windows under streaming (2 h length, 30 min slide — the
@@ -694,7 +674,7 @@ object StreamingQueries {
         .select(col("event_type"),
                 unix_millis(col("window.start")).as("window_start_ms"),
                 col("cnt"))
-      runToMemory(s, agg)
+      partialsOf(agg)(identity)
     }),
 
     // Strict-parity stateful path: the flatMapGroupsWithState port of
@@ -710,7 +690,7 @@ object StreamingQueries {
                 col("value"), col("ts"))
         .as[PseudoWindow.Point]
       val counts = PseudoWindow.eventTime(pts, 3600000L)
-      runToMemory(s, counts.toDF())
+      partialsOf(counts.toDF())(identity)
         .select(col("key"), col("windowEndMs").as("window_end_ms"), col("cnt"))
     }),
 
@@ -738,7 +718,7 @@ object StreamingQueries {
         .select(col("event_type"),
                 unix_millis(col("window.start")).as("window_start_ms"),
                 col("cnt"), col("n_outliers"))
-      runToMemory(s, out)
+      partialsOf(out)(identity)
     }),
 
     // Stream-stream inner join with event-time range bounds: views
@@ -765,7 +745,7 @@ object StreamingQueries {
           col("p_ts") >= col("v_ts") &&
           col("p_ts") < col("v_ts") + expr("INTERVAL 1 HOUR"))
         .select(col("v_user").as("user_id"), col("view_ms"), col("purchase_ms"))
-      runToMemory(s, joined)
+      partialsOf(joined)(identity)
     }),
 
     // Stream-stream LEFT OUTER join: same attribution join, but views
@@ -794,7 +774,7 @@ object StreamingQueries {
           col("p_ts") < col("v_ts") + expr("INTERVAL 1 HOUR"),
         "left_outer")
         .select(col("v_user").as("user_id"), col("view_ms"), col("purchase_ms"))
-      runToMemory(s, joined)
+      partialsOf(joined)(identity)
     }),
 
     // STREAMING incremental dedup — dedup_incremental's ingest twin,
@@ -1156,7 +1136,7 @@ object StreamingQueries {
     // it: a per-type DECISION STATE (count, running LLR, first
     // crossing, verdict) folded forward batch by batch over the
     // time-ordered replay. A crossing is NOT mergeable from unordered
-    // partials — it needs the carry — so this is the versioned
+    // partials — it needs the carry — so this is the carried
     // sequential fold (the cdc_maintain shape), not a sum-merge:
     // each batch ranks its rows per type, adds the carried
     // (n, cum) offsets, detects the first in-batch Wald crossing,
@@ -1166,24 +1146,16 @@ object StreamingQueries {
     // (ts_ms, event_id) order is exactly the batch oracle's. State =
     // one row per type. Shares `events_sprt`'s oracle, hash-proven.
     "stream_sprt" -> ((s, dir) => {
-      val stateRoot = graft.Ephemeral.dir("graft-sprt-state-")
-      sys.addShutdownHook(deleteRecursively(stateRoot))
-      s.range(0).select(
+      var state = s.range(0).select(
           lit("").as("event_type"), lit(0L).as("n"), lit(0L).as("cum"),
           lit(null).cast("bigint").as("cross_n"),
           lit(null).cast("string").as("decision"))
-        .write.parquet(stateRoot.resolve("v0").toString)
-      val version = new AtomicInteger(0)
-      val ckpt = graft.Ephemeral.dir("graft-ckpt-")
       val B = StatTestQueries.SprtBound
-      val q = withNioCkptFm(s) { eventsStream(s, dir)
-        .filter(col("value").isNotNull)
-        .select(col("event_type"), col("event_id"), col("ts_ms"), col("value"))
-        .writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val v = version.get()
-          val cur = s.read.parquet(stateRoot.resolve(s"v$v").toString)
+      replay(eventsStream(s, dir)
+          .filter(col("value").isNotNull)
+          .select(col("event_type"), col("event_id"), col("ts_ms"), col("value"))) {
+        (batch, _) =>
+          val cur = state
             .select(col("event_type"), col("n").as("pn"), col("cum").as("pcum"),
               col("cross_n").as("pcross"), col("decision").as("pdec"))
           val traj = StatTestQueries.sprtTrajectory(batch)
@@ -1199,22 +1171,15 @@ object StreamingQueries {
                     .as("d")))).as("bc"))
             .select(col("event_type"), col("bn"), col("bsum"),
               col("bc.g").as("bcross"), col("bc.d").as("bdec"))
-          cur.join(batchPer, Seq("event_type"), "full_outer")
+          state = cur.join(batchPer, Seq("event_type"), "full_outer")
             .select(col("event_type"),
               (coalesce(col("pn"), lit(0L)) + coalesce(col("bn"), lit(0L))).as("n"),
               (coalesce(col("pcum"), lit(0L)) + coalesce(col("bsum"), lit(0L))).as("cum"),
               coalesce(col("pcross"), col("bcross")).as("cross_n"),
               coalesce(col("pdec"), col("bdec")).as("decision"))
-            .write.parquet(stateRoot.resolve(s"v${v + 1}").toString)
-          version.incrementAndGet()
-          ()
-        }
-        .start() }
-      try q.processAllAvailable()
-      finally q.stop()
-      deleteRecursively(ckpt)
-      s.read.parquet(stateRoot.resolve(s"v${version.get()}").toString)
-        .filter(col("event_type") =!= "")
+            .localCheckpoint()
+      }
+      state
         .select(col("event_type"), col("n"), col("cum").as("llr_total_micro"),
           col("cross_n"), coalesce(col("decision"), lit("continue")).as("decision"))
     }),
@@ -1724,7 +1689,7 @@ object StreamingQueries {
                 col("value"), col("ts"))
         .as[PseudoWindow.Point]
       val counts = graft.streaming.PseudoWindowTws.eventTime(pts, 3600000L)
-      runToMemory(s, counts.toDF(), rocksdb = true)
+      partialsOf(counts.toDF(), rocksdb = true)(identity)
         .select(col("key"), col("windowEndMs").as("window_end_ms"), col("cnt"))
     }),
 
@@ -1788,7 +1753,7 @@ object StreamingQueries {
                 col("ts_ms").as("tsMs"), dec(col("value")).cast("string").as("x"),
                 col("k_up").as("kUp"), col("k_dn").as("kDn"), col("h"))
         .as[CusumStream.In]
-      runToMemory(s, CusumStream.chart(in).toDF())
+      partialsOf(CusumStream.chart(in).toDF())(identity)
     }),
 
     // STREAMING FUNNEL — events_funnel's online twin. The batch chain
@@ -1836,7 +1801,7 @@ object StreamingQueries {
         .select(col("event_type").as("key"), col("event_id").as("eventId"),
                 col("ts_ms").as("tsMs"), col("value").as("x"))
         .as[EwmaStream.In]
-      runToMemory(s, EwmaStream.smooth(in).toDF())
+      partialsOf(EwmaStream.smooth(in).toDF())(identity)
     }),
 
     // STREAMING LOCF GAP-FILL — events_gapfill's streaming twin. The
@@ -1861,7 +1826,7 @@ object StreamingQueries {
         .select(col("event_type").as("key"), col("ts_ms").as("tsMs"),
                 col("value"), col("ts"))
         .as[GapFillStream.In]
-      runToMemory(s, GapFillStream.grid(in, h0).toDF())
+      partialsOf(GapFillStream.grid(in, h0).toDF())(identity)
     }),
 
     // The same LOCF grid on transformWithState (engine-managed
@@ -1879,8 +1844,8 @@ object StreamingQueries {
         .select(col("event_type").as("key"), col("ts_ms").as("tsMs"),
                 col("value"), col("ts"))
         .as[GapFillStream.In]
-      runToMemory(s, graft.streaming.GapFillStreamTws.grid(in, h0).toDF(),
-        rocksdb = true)
+      partialsOf(graft.streaming.GapFillStreamTws.grid(in, h0).toDF(),
+        rocksdb = true)(identity)
     }),
 
     // STREAMING index ingest — ann_index_append's arriving-batches
@@ -1989,8 +1954,8 @@ object StreamingQueries {
 
     // STREAMING VIEW MAINTENANCE — cdc_agg_maintain's deployed shape:
     // CDC deltas arrive as micro-batches and each batch SEQUENTIALLY
-    // folds into a VERSIONED materialized view (read view vₖ, fold
-    // the batch delta, write vₖ₊₁ — the Delta-style copy-on-write
+    // folds into the materialized view (fold the batch delta into
+    // view vₖ and checkpoint the result as vₖ₊₁ — the copy-on-write
     // cadence; unlike the merge-at-end twins, the fold here runs
     // per batch, exercising the composition law MaintenanceSpec
     // proves: sequential folds ≡ union fold ≡ recompute). Per-batch
@@ -2001,31 +1966,14 @@ object StreamingQueries {
     "stream_cdc_maintain" -> ((s, dir) => {
       val li = graft.tables.Tables.lineitem(s, dir)
         .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"))
-      val viewRoot = graft.Ephemeral.dir("graft-ivm-view-")
-      sys.addShutdownHook(deleteRecursively(viewRoot))
-      RelationalQueries.aggState(li)
+      var view = RelationalQueries.aggState(li)
         .withColumn("sq", col("sq").cast("decimal(18,4)"))
-        .write.parquet(viewRoot.resolve("v0").toString)
-      val version = new AtomicInteger(0)
-      val ckpt = graft.Ephemeral.dir("graft-ckpt-")
-      val q = withNioCkptFm(s) { cdcDeltaStream(s, dir)
-        .writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val v = version.get()
-          val cur = s.read.parquet(viewRoot.resolve(s"v$v").toString)
-          RelationalQueries.maintainedView(cur, batch.drop("l_orderkey"))
-            .write.parquet(viewRoot.resolve(s"v${v + 1}").toString)
-          version.incrementAndGet()
-          ()
-        }
-        .start() }
-      try q.processAllAvailable()
-      finally q.stop()
-      deleteRecursively(ckpt)
-      s.read.parquet(viewRoot.resolve(s"v${version.get()}").toString)
-        .select(col("l_returnflag"), col("n_rows"),
-          round(col("sq").cast("double"), 6).as("sum_qty"))
+      replay(cdcDeltaStream(s, dir)) { (batch, _) =>
+        view = RelationalQueries.maintainedView(view, batch.drop("l_orderkey"))
+          .localCheckpoint()
+      }
+      view.select(col("l_returnflag"), col("n_rows"),
+        round(col("sq").cast("double"), 6).as("sum_qty"))
     }),
 
     // STREAMING LM TRAINING — the held-out perplexity model is itself
@@ -2040,51 +1988,23 @@ object StreamingQueries {
     // oracle: merge(batch LM partials) ≡ one-pass training — the
     // "language model as a sketch" member of the merge-law suite.
     "stream_perplexity" -> ((s, dir) => {
-      val c12Dir = graft.Ephemeral.dir("graft-lm-c12-")
-      val vocDir = graft.Ephemeral.dir("graft-lm-voc-")
-      val testDir = graft.Ephemeral.dir("graft-lm-test-")
-      Seq(c12Dir, vocDir, testDir).foreach(d =>
-        sys.addShutdownHook(deleteRecursively(d)))
-      // the three per-batch partial builders, hoisted so the dirs can
-      // be schema-SEEDED with zero-row files before the stream starts
-      // (a zero-batch source would otherwise leave them uninferable —
-      // the partialsOf edge, three-dirs variant; ADVICE r10)
+      // the three per-batch partial builders over ONE replay, each
+      // schema-seeded by partialsOfEach (a zero-batch source still
+      // yields typed empty partials; ADVICE r10)
       def toksOf(batch: DataFrame) = batch.select(col("doc_id"),
         graft.text.TextOps.tokens(col("text")).as("t"))
-      def c12Of(batch: DataFrame) =
-        TextQueries.bigramsOf(toksOf(batch).filter(col("doc_id") % 2 === 0))
-          .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
-      def vocOf(batch: DataFrame) =
-        toksOf(batch).filter(col("doc_id") % 2 === 0)
-          .select(explode(col("t")).as("w")).distinct()
-      def testOf(batch: DataFrame) =
-        TextQueries.bigramsOf(toksOf(batch).filter(col("doc_id") % 2 === 1))
-      val src = documentsStream(s, dir)
-      val emptyBatch = s.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), src.schema)
-      c12Of(emptyBatch).write.mode("append").parquet(c12Dir.toString)
-      vocOf(emptyBatch).write.mode("append").parquet(vocDir.toString)
-      testOf(emptyBatch).write.mode("append").parquet(testDir.toString)
-      val ckpt = graft.Ephemeral.dir("graft-ckpt-")
-      val q = withNioCkptFm(s) { src
-        .writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          c12Of(batch).write.mode("append").parquet(c12Dir.toString)
-          vocOf(batch).write.mode("append").parquet(vocDir.toString)
-          testOf(batch).write.mode("append").parquet(testDir.toString)
-          ()
-        }
-        .start() }
-      try q.processAllAvailable()
-      finally q.stop()
-      deleteRecursively(ckpt)
-      val c12 = s.read.parquet(c12Dir.toString)
-        .groupBy(col("w1"), col("w2")).agg(sum(col("c12")).as("c12"))
-      val vocab = s.read.parquet(vocDir.toString).distinct()
-        .agg(count(lit(1)).as("v"))
-      TextQueries.perplexityFinish(c12, vocab,
-        s.read.parquet(testDir.toString))
+      val Seq(c12Parts, vocParts, testParts) = partialsOfEach(documentsStream(s, dir))(
+        (batch, _) =>
+          TextQueries.bigramsOf(toksOf(batch).filter(col("doc_id") % 2 === 0))
+            .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12")),
+        (batch, _) =>
+          toksOf(batch).filter(col("doc_id") % 2 === 0)
+            .select(explode(col("t")).as("w")).distinct(),
+        (batch, _) =>
+          TextQueries.bigramsOf(toksOf(batch).filter(col("doc_id") % 2 === 1)))
+      val c12 = c12Parts.groupBy(col("w1"), col("w2")).agg(sum(col("c12")).as("c12"))
+      val vocab = vocParts.distinct().agg(count(lit(1)).as("v"))
+      TextQueries.perplexityFinish(c12, vocab, testParts)
     }),
 
     // STREAMING PCA — the covariance is the sketch: each micro-batch

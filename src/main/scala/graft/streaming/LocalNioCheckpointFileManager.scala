@@ -15,15 +15,15 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * writes and the state-store delta files bypass the Hadoop
   * FileContext + ChecksumFileSystem code path (per-write FileContext
   * resolution, CRC shadow files, fsync plumbing) that dominates a
-  * micro-batch's fixed cost on a bounded replay (StreamProf r18:
-  * walCommit ≈ 40 ms + commitOffsets ≈ 38 ms + state commit ≈ 250 ms
-  * per batch on tmpfs, where actual I/O is memcpy — the r17 tmpfs A/B
-  * proved the cost is code-path, not disk).
+  * micro-batch's fixed cost on a bounded replay (r18 per-batch
+  * progress: walCommit ≈ 40 ms + commitOffsets ≈ 38 ms + state commit
+  * ≈ 250 ms per batch on tmpfs, where actual I/O is memcpy — the r17
+  * tmpfs A/B proved the cost is code-path, not disk).
   *
-  * Scope: the harness's bounded replay-to-memory twins, whose
-  * checkpoints are EPHEMERAL BY DESIGN (each query owns a scratch
+  * Scope: the bounded replays of the `stream_*` twins, whose
+  * checkpoints are EPHEMERAL BY DESIGN (each replay owns a scratch
   * checkpoint dir and deletes it after `processAllAvailable()` — see
-  * `StreamingQueries.runToMemory`). A deployment with durable
+  * `StreamingQueries.replay`). A deployment with durable
   * checkpoints on HDFS/S3 keeps the default manager; this class
   * refuses non-local paths loudly. Atomicity is preserved: writes go
   * to a temp file and `ATOMIC_MOVE` into place, and a losing writer

@@ -7,14 +7,16 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.{Ephemeral, SparkSpec}
+import graft.{Ephemeral, SparkEntry, SparkSpec}
 import graft.queries.StreamingQueries
 import graft.tables.Tables
 
-/** Pins `StreamingQueries.partialsOf`, the bounded foreachBatch replay
-  * ~55 streaming twins merge their state from: the zero-batch edge,
-  * cleanup of its scratch, partials that outlive the catalog cache,
-  * batch-id order, and merge(partials) ≡ batch.
+/** Pins `StreamingQueries.partialsOf` and the one bounded replay
+  * runner behind it, which every `stream_*` twin drives: the
+  * zero-batch edge, cleanup of its scratch, partials that outlive the
+  * catalog cache, batch-id order, merge(partials) ≡ batch, a stateful
+  * append stream's output ≡ its batch aggregation, the carried-state
+  * folds ≡ their batch twins, and a session left as it was found.
   */
 class PartialsOfSpec extends SparkSpec {
 
@@ -84,5 +86,76 @@ class PartialsOfSpec extends SparkSpec {
     val batch = byType(Tables.events(spark, sf))
     assert(merged.exceptAll(batch).isEmpty && batch.exceptAll(merged).isEmpty)
     assert(merged.count() > 1)
+  }
+
+  test("an append-mode windowed count with a watermark equals the batch aggregation") {
+    val windowed = StreamingQueries.eventsStream(spark, sf)
+      .withWatermark("ts", "0 seconds")
+      .groupBy(col("event_type"), window(col("ts"), "1 hour"))
+      .agg(count(lit(1)).as("cnt"))
+      .select(col("event_type"), unix_millis(col("window.start")).as("start_ms"), col("cnt"))
+    val streamed = StreamingQueries.partialsOf(windowed)(identity)
+    // append emits a window once the final watermark (max ts, 0 s
+    // delay) reaches its end
+    val ev = Tables.events(spark, sf)
+    val maxMs = ev.agg(max(col("ts_ms"))).head.getLong(0)
+    val batch = ev
+      .groupBy(col("event_type"), (col("ts_ms") - col("ts_ms") % 3600000L).as("start_ms"))
+      .agg(count(lit(1)).as("cnt"))
+      .filter(col("start_ms") + 3600000L <= maxMs)
+    assert(batch.count() > 1)
+    assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
+  }
+
+  // the replay's tuning keys, all set around start() only
+  private val tunedKeys = Seq(
+    "spark.sql.shuffle.partitions",
+    "spark.sql.streaming.checkpointFileManagerClass",
+    "spark.sql.streaming.minBatchesToRetain",
+    "spark.sql.streaming.stateStore.maintenanceInterval",
+    "spark.sql.streaming.stateStore.providerClass",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
+
+  private def tunedConf(): Seq[Option[String]] = tunedKeys.map(spark.conf.getOption)
+
+  // per-JVM split source dirs are built once and shared by every twin
+  private def perReplay(entries: Set[Path]): Set[Path] =
+    entries.filterNot(_.getFileName.toString.matches("graft-.*-splits-.*"))
+
+  /** Runs `body`, then checks that it left no scratch under
+    * `Ephemeral.base`, no `stream_out_*` view and every tuned conf key
+    * as it was. */
+  private def leavesNothing[A](body: => A): A = {
+    val (before, conf) = (scratchEntries(), tunedConf())
+    val out = body
+    val left = perReplay(scratchEntries() -- before)
+    assert(left.isEmpty, s"replay left scratch behind: $left")
+    assert(!spark.catalog.listTables().collect().exists(_.name.startsWith("stream_out_")))
+    assert(tunedConf() == conf)
+    out
+  }
+
+  test("a RocksDB replay restores the session conf and leaves no scratch") {
+    val src = rangeSource(Seq((0L, 10L), (10L, 20L)))
+    val got = leavesNothing(
+      StreamingQueries.partialsOf(stream(src), rocksdb = true)(identity).count())
+    assert(got == 20)
+  }
+
+  private def sameRows(a: DataFrame, b: DataFrame): Unit = {
+    val cols = a.columns.sorted.toSeq
+    assert(cols == b.columns.sorted.toSeq)
+    val (x, y) = (a.select(cols.map(col): _*), b.select(cols.map(col): _*))
+    assert(x.count() > 0)
+    assert(x.exceptAll(y).isEmpty && y.exceptAll(x).isEmpty)
+  }
+
+  Seq("stream_sprt" -> "events_sprt",
+      "stream_cdc_maintain" -> "cdc_agg_maintain",
+      "stream_perplexity" -> "text_perplexity_heldout").foreach { case (twin, batch) =>
+    test(s"$twin equals $batch and leaves nothing behind") {
+      val streamed = leavesNothing(SparkEntry.queries(twin)(spark, sf))
+      sameRows(streamed, SparkEntry.queries(batch)(spark, sf))
+    }
   }
 }
