@@ -6,7 +6,9 @@ Usage: python3 scripts/check_oracle.py <sfDir> <verifyOutDir>
 For each <verifyOutDir>/<name>/ parquet (written by graft.Verify),
 runs <verifyOutDir>/oracle_sql.json[name] in DuckDB with the sf tables
 registered as views, sorts columns by name, sorts rows, and compares
-values. Exit 0 iff every query matches.
+values. Exit 0 iff every query matches. A query with no output is
+reported [MISS ] with the error graft.Verify recorded for it in
+<verifyOutDir>/verify_status.json.
 """
 import json, sys, glob, os, hashlib
 import duckdb
@@ -41,11 +43,16 @@ def main(sf_dir, out_dir):
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    # {name: error} for the queries graft.Verify could not dump
+    status_path = f"{out_dir}/verify_status.json"
+    status = json.load(open(status_path)) if os.path.exists(status_path) else {}
     ok = True
     for name, sql in sorted(oracle.items()):
         spark_files = glob.glob(f"{out_dir}/{name}/*.parquet")
         if not spark_files:
-            print(f"[MISS ] {name}: no spark output")
+            err = status.get(name)
+            cause = f" ({err.splitlines()[0]})" if err else ""
+            print(f"[MISS ] {name}: no spark output{cause}")
             ok = False
             continue
         try:

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main: every SparkEntry query against
@@ -17,21 +16,14 @@ import java.nio.file.{Files, Paths}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // AQE coalescing: at bench scale (sf0.1) most shuffles carry a
-      // few MB — let runtime stats shrink the fan-out so task-schedule
-      // overhead doesn't dominate; at cluster scale the same config
-      // right-sizes reducers from real sizes. Both default-on in
-      // Spark 4; set explicitly so the bench contract is visible.
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_BENCH_QUERIES=a,b,c restricts the run for targeted
+    // re-measures under the exact Bench harness (same warm-up, same
+    // alphabetical order, cache cleared between queries). Subset runs
+    // do NOT overwrite bench_out.json — only full runs are keepers.
+    val only = Harness.only(sys.env.get("SPARK_GRAFT_BENCH_QUERIES"),
+      SparkEntry.queries.keySet)
+    val cpus = Harness.cpus(4)
+    val spark = Harness.session(cpus)
     // Warm the session before measuring: scheduler, parquet reader,
     // whole-stage codegen, window exec, and the BigDecimal path all
     // JIT/initialize on first use — without this the alphabetically
@@ -39,75 +31,38 @@ object Bench {
     // that is session startup, not query cost.
     try {
       import org.apache.spark.sql.functions._
-      SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
+      Harness.noop(SparkEntry.entry(spark))
       val v = array((0 until 64).map(i => lit(i / 64.0f)): _*)
-      spark.range(2000)
-        .select(graft.functions.VectorOps.dotDecimal(v, v).as("d"))
-        .write.format("noop").mode("overwrite").save()
+      Harness.noop(spark.range(2000)
+        .select(graft.functions.VectorOps.dotDecimal(v, v).as("d")))
       // Building the events stream materializes the shared time-ordered
       // split dir (one read-sort-write of events per JVM) — harness
       // setup, not cost of whichever stream_* query runs first.
       graft.queries.StreamingQueries.eventsStream(spark, sfDir)
       graft.queries.StreamingQueries.documentsStream(spark, sfDir)
     } catch { case _: Throwable => () }
-    // SPARK_GRAFT_BENCH_QUERIES=a,b,c restricts the run for targeted
-    // re-measures under the exact Bench harness (same warm-up, same
-    // alphabetical order, cache cleared between queries). Subset runs
-    // do NOT overwrite bench_out.json — only full runs are keepers.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // A typo'd (or since-retired) name would silently yield a
-    // zero-query run that still prints a healthy-looking total line
-    // (ADVICE r13) — fail loudly instead.
-    only.foreach { req =>
-      val unknown = req.diff(SparkEntry.queries.keySet)
-      require(unknown.isEmpty, "SPARK_GRAFT_BENCH_QUERIES names match no " +
-        s"query: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
-    // SPARK_GRAFT_BENCH_REPS=N (default 1) runs each query N times
-    // and records the PER-QUERY MEDIAN (plus [min,max] spread in
-    // bench_out.json). Three rounds of keeper forensics went to
-    // ambient-interference triage — a co-scheduled build or GC spike
-    // inflating single-shot rows on untouched code (VERDICT r12-r14);
-    // the median of 3 makes one noisy rep structurally harmless.
-    // Keeper runs use 3; the driver's default stays 1.
-    val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").map(_.toInt).getOrElse(1)
-    require(reps >= 1, "SPARK_GRAFT_BENCH_REPS must be >= 1")
-    val failed = scala.collection.mutable.ArrayBuffer[String]()
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
-      val secs = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        val sec =
-          try {
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          } catch {
-            case e: Throwable =>
-              System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-              -1.0
-          }
-        // cached frames (persist() inside query builders) must not
-        // leak into the next rep's / query's measurement
-        spark.catalog.clearCache()
-        sec
+    // Each query runs `reps` times; bench_out.json records the
+    // per-query median plus the [min,max] spread.
+    val reps = Harness.benchReps
+    val results = SparkEntry.queries.keys.toSeq.sorted
+      .filter(name => only.forall(_.contains(name)))
+      .map { name =>
+      val (med, lo, hi) = Harness.reps(reps) {
+        try Harness.runOnce(spark, name, sfDir)
+        catch {
+          case e: Throwable =>
+            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+            -1.0
+        }
       }
       // any failed rep fails the query — a crash must never hide
       // behind two healthy medianmates
-      if (secs.exists(_ < 0)) failed += name
-      val sorted = secs.sorted
-      // true median: even rep counts average the two middle elements
-      // (sorted(reps/2) alone biased every even-reps number high —
-      // ADVICE r15)
-      val median =
-        if (secs.exists(_ < 0)) -1.0
-        else if (reps % 2 == 1) sorted(reps / 2)
-        else (sorted(reps / 2 - 1) + sorted(reps / 2)) / 2.0
+      val median = if (lo < 0) -1.0 else med
       System.err.println(f"[bench] $name%-30s ${median}%9.3f s" +
-        (if (reps > 1) f"  [${sorted.head}%.3f..${sorted.last}%.3f]" else ""))
-      (name, median, sorted.head, sorted.last)
+        (if (reps > 1) f"  [${lo}%.3f..${hi}%.3f]" else ""))
+      (name, median, lo, hi)
     }
+    val failed = results.collect { case (k, v, _, _) if v < 0 => k }
     val qs = results.map { case (k, v, _, _) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.collect { case (_, v, _, _) if v >= 0 => v }.sum
@@ -130,7 +85,7 @@ object Bench {
       // comparison (VERDICT r17 item 2) — keep a per-cpus copy too.
       Files.writeString(Paths.get(s"bench_out_c$cpus.json"), fullLine + "\n")
     }
-    println(stdoutLine(total, reps, results.size, failed.toSeq, sfDir,
+    println(stdoutLine(total, reps, results.size, failed, sfDir,
       results.collect { case (k, v, _, _) if v >= 0 => (k, v) }))
     spark.stop()
   }

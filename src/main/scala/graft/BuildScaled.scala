@@ -1,8 +1,7 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption, LinkOption}
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.SparkSession
 
 /** Materialize a ScaleBench-style scaled corpus dir at a PERSISTENT
   * path so separate Bench JVMs (32-core and 8-core) can point
@@ -19,38 +18,15 @@ object BuildScaled {
     val sfDir = args(0)
     val out = Paths.get(args(1))
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE", "4").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val tmp = ScaleBench.buildScaledDir(spark, sfDir, factor)
+    val spark = Harness.session(Harness.cpus(32))
     if (Files.exists(out)) {
-      Files.walk(out).iterator().asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
+      val walk = Files.walk(out)
+      try walk.iterator().asScala.toSeq.reverse.foreach(p => Files.deleteIfExists(p))
+      finally walk.close()
     }
     Files.createDirectories(out)
-    copyTree(tmp, out)
+    ScaleBench.buildScaledDir(spark, sfDir, factor, out)
     println(s"""{"scaled_dir":"$out","factor":$factor,"src":"$sfDir"}""")
     spark.stop()
-  }
-
-  /** Copy `src` into `dst` preserving symlinks (the scaled dir links
-    * the untouched fixture tables back to the source dir).
-    */
-  private def copyTree(src: Path, dst: Path): Unit = {
-    Files.walk(src).iterator().asScala.foreach { p =>
-      val rel = src.relativize(p)
-      val target = dst.resolve(rel.toString)
-      if (Files.isSymbolicLink(p))
-        Files.createSymbolicLink(target, Files.readSymbolicLink(p))
-      else if (Files.isDirectory(p, LinkOption.NOFOLLOW_LINKS))
-        Files.createDirectories(target)
-      else
-        Files.copy(p, target, StandardCopyOption.REPLACE_EXISTING)
-    }
   }
 }

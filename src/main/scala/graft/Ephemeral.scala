@@ -37,25 +37,8 @@ object Ephemeral {
   /** Resolved once per JVM; all scratch dirs share this one root,
     * whose shutdown hook deletes everything under it.
     */
-  lazy val base: Path = {
-    val fromEnv = sys.env.get("SPARK_GRAFT_EPHEMERAL_DIR").map(Paths.get(_))
-    val shm = Paths.get("/dev/shm")
-    val chosen = fromEnv.orElse {
-      if (Files.isDirectory(shm) && Files.isWritable(shm)) Some(shm) else None
-    }.getOrElse(Paths.get(System.getProperty("java.io.tmpdir")))
-    // one per-JVM subdir keeps concurrent JVMs and leftover crash
-    // debris apart, and gives cleanup a single root
-    val root = Files.createTempDirectory(chosen, "graft-ephemeral-")
-    sys.addShutdownHook {
-      try {
-        import scala.jdk.CollectionConverters._
-        if (Files.exists(root))
-          Files.walk(root).iterator().asScala.toSeq.reverse
-            .foreach(f => try Files.deleteIfExists(f) catch { case _: Exception => () })
-      } catch { case _: Exception => () }
-    }
-    root
-  }
+  lazy val base: Path = root("graft-ephemeral-", fromEnv.orElse(
+    Some(Paths.get("/dev/shm")).filter(p => Files.isDirectory(p) && Files.isWritable(p))))
 
   /** Drop-in for `Files.createTempDirectory(prefix)` on the scratch
     * base. */
@@ -66,10 +49,19 @@ object Ephemeral {
     * scaled table copy could exhaust (ADVICE r17). Same per-JVM
     * subdir + shutdown-hook cleanup story as [[base]].
     */
-  lazy val dataBase: Path = {
-    val chosen = sys.env.get("SPARK_GRAFT_EPHEMERAL_DIR").map(Paths.get(_))
-      .getOrElse(Paths.get(System.getProperty("java.io.tmpdir")))
-    val root = Files.createTempDirectory(chosen, "graft-ephemeral-data-")
+  lazy val dataBase: Path = root("graft-ephemeral-data-", fromEnv)
+
+  private def fromEnv: Option[Path] =
+    sys.env.get("SPARK_GRAFT_EPHEMERAL_DIR").map(Paths.get(_))
+
+  /** A fresh `prefix` dir under `preferred`, else under
+    * `java.io.tmpdir`, deleted with everything under it at JVM exit.
+    * One per-JVM subdir keeps concurrent JVMs and leftover crash debris
+    * apart, and gives cleanup a single root.
+    */
+  private def root(prefix: String, preferred: Option[Path]): Path = {
+    val chosen = preferred.getOrElse(Paths.get(System.getProperty("java.io.tmpdir")))
+    val root = Files.createTempDirectory(chosen, prefix)
     sys.addShutdownHook {
       try {
         import scala.jdk.CollectionConverters._

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Amortized-index ANN benchmark (VERDICT r3 item 5): separates the
   * INDEX BUILD cost (LSH bucket column + IVF centroids/assignment +
@@ -27,50 +26,31 @@ object IndexBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE", "10").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus(32))
 
     // only embedding-derived artifacts are measured — don't pay the
     // factor-way documents/events rewrites
-    val scaled = ScaleBench.buildScaledDir(spark, sfDir, factor, Set("embeddings"))
+    val scaled = ScaleBench.buildScaledDir(spark, sfDir, factor,
+      Ephemeral.dataDir("graft-scale-"), Set("embeddings"))
 
     // Warm the session (scheduler, codegen, decimal path) AND the two
     // measured query shapes — otherwise the first measured row absorbs
     // their one-time whole-stage-codegen/JIT cost and the 1× marginal
     // reads slower than the 10× one.
     try {
-      SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-      SparkEntry.queries("ann_topk_lsh_fast")(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      SparkEntry.queries("ann_topk_ivf_fast")(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      SparkEntry.queries("ann_topk_pq")(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
+      Harness.noop(SparkEntry.entry(spark))
+      Seq("ann_topk_lsh_fast", "ann_topk_ivf_fast", "ann_topk_pq")
+        .foreach(Harness.runOnce(spark, _, sfDir))
     } catch { case _: Throwable => () }
 
-    def run(name: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def run(name: String, dir: String): Double = Harness.runOnce(spark, name, dir)
 
     val rows = Seq("x1" -> sfDir, s"x$factor" -> scaled.toString).map {
       case (tag, dir) =>
         queries.Artifacts.clear()
         spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        queries.SimilarityQueries.buildAnnIndexes(spark, dir)
-        val tBuild = (System.nanoTime() - t0) / 1e9
+        val tBuild = Harness.seconds(queries.SimilarityQueries.buildAnnIndexes(spark, dir))
         // marginal searches against the warm index artifacts
         val tLsh = run("ann_topk_lsh_fast", dir)
         val tIvf = run("ann_topk_ivf_fast", dir)
@@ -78,9 +58,7 @@ object IndexBench {
         // semantic dedup against the warm TRAINED index: the first run
         // pays the kmeans_train + assignment build, the second only the
         // within-cluster pair pass — the per-ingest-cycle marginal
-        val t1sem = System.nanoTime()
-        run("dedup_semantic_fast", dir)
-        val tSemBuild = (System.nanoTime() - t1sem) / 1e9
+        val tSemBuild = run("dedup_semantic_fast", dir)
         val tSem = run("dedup_semantic_fast", dir)
         // incremental maintenance split: base-index build (train +
         // assign the 80% base) vs the marginal APPEND (assign the 20%
@@ -88,14 +66,10 @@ object IndexBench {
         // the appended index — the daily-ingest numbers a vector-store
         // user asks for. At 100 TB the append is |batch| projections;
         // it must stay far under the build.
-        val tA0 = System.nanoTime()
-        queries.SimilarityQueries.appendBaseAssigned(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        val tAppendBuild = (System.nanoTime() - tA0) / 1e9
-        val tA1 = System.nanoTime()
-        queries.SimilarityQueries.appendedAssigned(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        val tAppend = (System.nanoTime() - tA1) / 1e9
+        val tAppendBuild = Harness.seconds(
+          Harness.noop(queries.SimilarityQueries.appendBaseAssigned(spark, dir)))
+        val tAppend = Harness.seconds(
+          Harness.noop(queries.SimilarityQueries.appendedAssigned(spark, dir)))
         val tAppendSearch = run("ann_index_append", dir)
         System.err.println(
           f"[index] $tag%-4s build ${tBuild}%6.2f s   lsh_fast ${tLsh}%6.2f s   ivf_fast ${tIvf}%6.2f s   pq ${tPq}%6.2f s   sem_build ${tSemBuild}%6.2f s   sem_marginal ${tSem}%6.2f s   append_build ${tAppendBuild}%6.2f s   append ${tAppend}%6.2f s   append_search ${tAppendSearch}%6.2f s")

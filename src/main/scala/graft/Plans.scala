@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints `.explain("formatted")` for one or all SparkEntry queries —
   * the plan-quality feedback loop: check PushedFilters reach the
   * parquet scan, dims broadcast, aggregates have partial phases, and
@@ -11,13 +9,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Plans {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(4)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val names =
       if (args.nonEmpty) args.toSeq

@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{CentroidRanks, FloatVectorCosine, VectorOps}
@@ -49,7 +49,7 @@ object RecallBench {
     * boundaries and giving PQ codes intra-cluster variation — curves
     * with actual shape.
     */
-  private val Noise = sys.env.getOrElse("SPARK_GRAFT_RECALL_NOISE", "1.0").toDouble
+  private val Noise = 1.0
 
   /** ADC shortlist size for the re-ranked IVFPQ rows. */
   private val Rerank = 50
@@ -70,18 +70,11 @@ object RecallBench {
     }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Harness.cpus(32)
+    val spark = Harness.session(cpus)
     import spark.implicits._
 
-    val emb = vectors.toDF("vec_id", "embedding").repartition(cpus.toInt).cache()
+    val emb = vectors.toDF("vec_id", "embedding").repartition(cpus).cache()
     val n = emb.count()
     val embn = emb.withColumn("nrm",
       sqrt(VectorOps.normSqDecimal(col("embedding")).cast("double")))

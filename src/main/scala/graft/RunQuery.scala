@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Runs a single SparkEntry query to the noop sink and prints its
-  * wall time — the per-query iteration loop for plan/perf work
+/** Runs a single SparkEntry query through [[Harness.runOnce]] and
+  * prints its wall time — the per-query iteration loop for plan/perf work
   * without a full Bench pass.
   *
   * Usage: graft.RunQuery <queryName> [sfDir] (default sf0.1)
@@ -12,23 +10,10 @@ object RunQuery {
   def main(args: Array[String]): Unit = {
     val name = args.head
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus(32))
     spark.range(1).count() // warm scheduler
-    val t0 = System.nanoTime()
-    val df = SparkEntry.queries(name)(spark, sfDir)
-    val tBuild = (System.nanoTime() - t0) / 1e9
-    df.write.format("noop").mode("overwrite").save()
-    val tAll = (System.nanoTime() - t0) / 1e9
-    println(f"[runquery] $name build=$tBuild%.2f s total=$tAll%.2f s")
+    val sec = Harness.runOnce(spark, name, sfDir)
+    println(f"[runquery] $name total=$sec%.2f s")
     spark.stop()
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scaling-curve benchmark (VERDICT r2 item 4): measures the dedup/ANN
@@ -30,177 +30,22 @@ import org.apache.spark.sql.functions._
   */
 object ScaleBench {
 
-  private val ScaledQueries = Seq(
-    "dedup_exact", "dedup_minhash_bands", "dedup_lsh_pairs", "dedup_lsh_keep",
-    "dedup_cc", "graph_pagerank", "graph_triangles", "graph_kcore", "graph_bfs",
-    "graph_modularity", "graph_lpa",
-    "dedup_substring", "dedup_substring_coverage", "pipeline_substring_impact",
-    "pipeline_substring_strip", "dedup_substring_incremental",
-    "dedup_incremental", "dedup_incremental_bloom", "dedup_sorted_neighborhood",
-    "dedup_jaro_winkler", "dedup_containment",
-    "dedup_semantic",
-    "dedup_semantic_fast", "dedup_semantic_scaled",
-    "dedup_semantic_hier_scaled",
-    "pipeline_source_report",
-    "ann_topk_bruteforce", "ann_topk_fast", "ann_topk_lsh",
-    "ann_topk_lsh_fast", "ann_topk_ivf", "ann_topk_filtered",
-    "kmeans_step", "kmeans_train",
-    "pq_codes", "ann_topk_pq", "ann_topk_pq_rerank", "ann_topk_ivfpq",
-    "sq_codes", "ann_topk_sq",
-    "text_redact", "text_repetition", "text_c4_filters", "text_chunk",
-    "pipeline_sample", "pipeline_sample_weighted", "pipeline_mix", "pipeline_pack",
-    "pipeline_shuffle", "pipeline_dataset_card", "pipeline_k_anonymity",
-    "pipeline_anonymize", "pipeline_dp_release",
-    "events_retention",
-    "events_gapfill", "events_gapfill_lerp", "events_drift",
-    "events_seasonality", "q_expectations", "events_paths", "events_binning",
-    "sketch_quantiles_by_type",
-    "sketch_hll_users", "sketch_cms_tokens", "sketch_quantiles",
-    "sketch_kmv", "sketch_kmv_jaccard", "sketch_join_size", "text_bpe_train",
-    "text_bpe_encode",
-    "text_bm25", "text_inverted_index", "text_keywords", "search_hybrid_rrf", "search_mmr",
-    "search_hybrid_rrf_indexed", "ann_index_append",
-    "layout_zorder", "layout_hilbert", "q_bucketed_join",
-    // events_ewma's corpus-axis row is retired to the Round14OpsSpec
-    // pin (single-series sort concentration — the theilsen precedent);
-    // the bucketed-halo formulation carries the family's corpus row,
-    // and the series axis (SeriesScaledQueries) measures events_ewma.
-    "events_regression", "events_entropy_mi", "events_ewma_bucketed",
-    "events_acf", "events_cross_corr",
-    "graph_adamic_adar", "dedup_lsh_eval", "ann_recall_ivf",
-    "events_profile", "events_profile_approx", "cdc_scd2", "cdc_snapshot",
-    "q_sql_merge",
-    "text_bigram_lm", "text_quality_auc",
-    "text_perplexity_heldout", "search_tfidf_cosine",
-    "events_theilsen_win", "events_anomaly_mad", "events_psi", "emb_pca_power",
-    "events_funnel_window", "dedup_lsh_sweep", "cdc_agg_maintain",
-    "mm_audio_pitch",
-    "events_anomaly_seasonal", "events_bootstrap_ci", "events_changepoint",
-    "events_variant_props", "pipeline_pareto", "pipeline_sample_wor",
-    "text_quality_lr", "text_quality_lr_calibration",
-    "events_stl", "events_ab_cuped", "text_quality_lr_cv",
-    "events_forecast_eval", "events_ks_test", "events_trimmed_mean",
-    "text_quality_nb",
-    // r11 coverage fill (VERDICT r10 item 5): every remaining batch
-    // query measures its 1x/10x curve — the q_* relational/SQL-idiom
-    // families ride the scaled fact tables, mm_* the self-unioned
-    // documents, pq/sq/emb_* the self-unioned embeddings. Only the
-    // four sensor_* queries stay out: their virtual-clock source is
-    // input-independent by construction (a ratio row would measure
-    // nothing).
-    "ann_topk_ivf_fast", "ann_topk_ivf_trained", "dedup_embedding_pairs",
-    "dedup_jaccard_pairs", "dedup_ngram_pairs", "dedup_simhash",
-    "dedup_substring_spans", "emb_centroid_sim", "emb_lsh_buckets",
-    "events_anomaly", "events_asof_join", "events_dedup_first",
-    "events_funnel", "events_json_props", "events_markov", "events_pivot",
-    "events_rfm", "events_sessionize", "events_sliding_window",
-    "events_top_users", "events_window_agg",
-    "mm_audio_decode", "mm_audio_features", "mm_decode_dims", "mm_features",
-    "mm_frame_sample", "mm_near_dup", "mm_near_dup_perceptual",
-    "mm_near_dup_eval", "mm_resize",
-    "pipeline_contamination", "pipeline_select", "pipeline_split",
-    "pipeline_token_stats", "pq_codebook",
-    "q1_agg", "q3_top_orders", "q5_regional_revenue", "q_anti_join",
-    "q_cube", "q_distinct_agg", "q_percentiles", "q_range_join", "q_rollup",
-    "q_salted_join", "q_scalar_funcs", "q_scan_csv", "q_scan_json",
-    "q_scan_orc", "q_semi_join", "q_set_ops", "q_set_ops_all",
-    "q_sql_delete", "q_sql_filter_agg", "q_sql_groupingsets",
-    "q_sql_ignore_nulls", "q_sql_lateral", "q_sql_native_funcs",
-    "q_sql_order_priority", "q_sql_outer_join", "q_sql_pipe", "q_sql_pivot",
-    "q_sql_recursive", "q_sql_small_quantity_revenue", "q_sql_unpivot",
-    "q_sql_update", "q_topk_orders", "q_typed_wavg", "q_window_dist",
-    "q_window_range_frame", "q_window_rank", "q_window_running",
-    "sketch_bloom", "sq_minmax",
-    "text_bpe_merge", "text_bpe_pairs", "text_bpe_tokens",
-    "text_fingerprint", "text_langid", "text_quality", "text_stats",
-    "text_token_freq", "text_zipf",
-    // r11 statistical-testing wave
-    "events_mannwhitney", "events_anova", "events_chisq", "events_sprt",
-    "events_bh_fdr", "pipeline_stratified_split", "events_survival",
-    "emb_silhouette", "search_ndcg", "events_cohort_ltv", "events_attribution",
-    "er_canonical", "events_changepoint_multi", "events_funnel_latency",
-    "emb_knn_graph", "events_lag_features", "emb_knn_accuracy",
-    "events_anomaly_iqr",
-    // r12 wave
-    "pipeline_hard_negatives", "dedup_dbscan", "text_kneser_ney",
-    "pipeline_curriculum", "pipeline_skew_probe",
-    "events_power_analysis", "events_attribution_position",
-    "dedup_dbscan_scaled", "events_did", "events_retention_triangle",
-    "emb_ood_zscore",
-    // r12 wave 4
-    "events_srm", "pipeline_mix_epochs", "text_ngram_novelty",
-    "text_bleu_pairs", "events_item_cf", "emb_ood_mahalanobis",
-    // r12 wave 5
-    "events_item_pmi", "events_uplift_segments",
-    "events_markov_stationary", "pipeline_dedup_impact",
-    "emb_triplet_eval",
-    // r12 wave 6
-    "graph_ppr", "pipeline_ccnet_buckets", "emb_pq_distortion",
-    // r12 wave 7
-    "graph_hits", "events_benford", "pipeline_importance_weights",
-    "events_ljungbox", "events_runs_test", "emb_cluster_purity",
-    "emb_cluster_nmi", "emb_cluster_ari", "q_sql_correlated",
-    "text_jsd_drift", "events_interarrival", "emb_intrinsic_dim",
-    "text_heaps_law",
-    // r13: production-posture kNN-graph family (corpus-proportional
-    // Bernoulli-gate lists — the dedup_semantic_scaled swap)
-    "emb_knn_graph_scaled", "emb_intrinsic_dim_scaled",
-    "emb_knn_accuracy_scaled", "emb_knn_graph_hier_scaled",
-    // r13 wave 2
-    "events_gini", "text_lexical_diversity", "events_page_hinkley",
-    "pipeline_pack_efficiency", "events_cum_hazard",
-    "graph_assortativity", "events_capture_recapture",
-    "events_odds_ratio", "events_hhi",
-    // r14: hier-gated finishes (VERDICT r13 item 1), the
-    // absorbing-safe markov variant, and the shared-state finishes
-    // (v-measure / Bartlett / Simpson)
-    "emb_intrinsic_dim_hier_scaled", "emb_knn_accuracy_hier_scaled",
-    "events_markov_stationary_absorbing", "emb_cluster_vmeasure",
-    "events_bartlett", "text_simpson_diversity",
-    // r14 wave 2: nonparametric/paired tests + text finishes
-    "events_kruskal_wallis", "events_brown_forsythe", "events_mcnemar",
-    "events_spearman", "text_rouge_pairs", "text_good_turing",
-    "graph_closeness_sampled", "emb_matryoshka_recall",
-    "events_tukey_hsd", "pipeline_cluster_sizes",
-    "graph_degree_distribution", "search_retrieval_eval",
-    "events_friedman", "text_quality_brier", "events_cochran_q",
-    // r14 wave 5: fourth finishes on proven grids (W1 on ksGrid,
-    // log-rank on the survival grid, V / Theil's U on chisq cells)
-    "events_wasserstein", "events_logrank", "events_cramers_v",
-    "events_theils_u",
-    // r14 wave 6: stratified 2×2 pool, grid-pair rank correlation,
-    // count-arithmetic tail index
-    "events_mantel_haenszel", "events_kendall_tau", "events_hill_tail",
-    // r14 wave 7: inequality finishes on giniCells, Chao1 on
-    // lexdivCells, Mood's median on the value grid, internal
-    // cluster validity on the trained assignment
-    "events_theil_index", "text_chao1", "events_mood_median",
-    "emb_calinski_harabasz", "emb_davies_bouldin",
-    "graph_jaccard_linkpred",
-    // r14 wave 8: Welch on anovaStats, Cliff's delta on ksGrid,
-    // rich-club on the dedup topology
-    "events_welch_anova", "events_cliffs_delta", "graph_rich_club",
-    // r14 wave 10: RMST on the survival grid, burstiness VMR
-    "events_rmst", "text_burstiness",
-    // r14 wave 11: exact paired sign test, Hopkins clusterability
-    "events_sign_test", "emb_hopkins",
-    // r14 wave 13: Gumbel block-maxima fit, shape moments, Bowley
-    "events_gumbel_maxima", "events_moments", "events_bowley_skew",
-    // r16: video frame-sequence perceptual tier, unicode repair,
-    // coverage-gated select, span audit intervals
-    "mm_video_near_dup", "mm_video_near_dup_eval", "text_normalize",
-    "pipeline_select_v2", "dedup_substring_intervals",
-    // r16: train-split decontamination vs the frozen eval gram set
-    "pipeline_decontaminate",
-    // r17: audio perceptual near-dup tier, the verified near-dup
-    // graph + release split, the many-round cadence BPE trainer
-    "mm_audio_near_dup", "mm_audio_near_dup_eval",
-    "dedup_lsh_verified", "pipeline_split_verified",
-    "text_bpe_train10")
+  /** The corpus block of the curve: every query except the streaming
+    * twins (their own block below), the four `sensor_*` queries —
+    * their virtual-clock source is input-independent by construction,
+    * so a ratio row would measure nothing — and `events_ewma`, whose
+    * corpus-axis row is retired to the Round14OpsSpec pin
+    * (single-series sort concentration — the theilsen precedent); the
+    * bucketed-halo formulation carries the family's corpus row, and
+    * the series axis ([[SeriesScaledQueries]]) measures events_ewma.
+    */
+  private[graft] def ScaledQueries: Seq[String] =
+    SparkEntry.queries.keys.toSeq.sorted.filterNot(n =>
+      n.startsWith("sensor_") || n.startsWith("stream_") || n == "events_ewma")
 
-  /** Streaming block of the curve (VERDICT r3 item 6): the scaled dir
-    * replays `factor`× events (self-union with disjoint ts offsets —
-    * `factor`× history). Caveat on what this measures: the replay
+  /** Streaming block of the curve (VERDICT r3 item 6): every `stream_*`
+    * twin. The scaled dir replays `factor`× events (self-union with
+    * disjoint ts offsets — `factor`× history). Caveat on what this measures: the replay
     * always cuts history into the same [[graft.queries.StreamingQueries]]
     * 3 quantile files, so at `factor`× each micro-batch SPANS
     * `factor`× more event-time and legitimately holds more in-horizon
@@ -213,49 +58,8 @@ object ScaleBench {
     * batch spans (trigger interval), where state is strictly
     * O(keys-in-horizon).
     */
-  private val StreamScaledQueries = Seq(
-    "stream_window_agg", "stream_dedup_within_wm", "stream_stream_join",
-    "stream_static_join", "stream_drift", "stream_seasonality",
-    "stream_gapfill", "stream_gapfill_tws", "stream_ann_index_append",
-    "stream_topk", "stream_ewma",
-    "stream_regression", "stream_entropy_mi", "stream_retention",
-    "stream_rfm", "stream_acf", "stream_funnel", "stream_funnel_window",
-    "stream_psi", "stream_theilsen", "stream_cdc_maintain",
-    "stream_pca", "stream_perplexity",
-    "stream_bootstrap", "stream_sample_wor", "stream_quality_lr",
-    "stream_ks_test", "stream_trimmed_mean",
-    // r11 coverage fill: the remaining streaming twins
-    "stream_bloom", "stream_cms_tokens", "stream_changepoint",
-    "stream_dedup", "stream_hll_users", "stream_incremental_dedup",
-    "stream_kmv", "stream_outer_join", "stream_pseudo_window",
-    "stream_pseudo_window_tws", "stream_quantiles",
-    "stream_session_window", "stream_sliding_window", "stream_stl",
-    "stream_mannwhitney", "stream_chisq", "stream_survival",
-    "stream_anova", "stream_bh_fdr", "stream_sprt", "stream_forecast_eval",
-    "stream_silhouette", "stream_cohort_ltv", "stream_funnel_latency",
-    "stream_skew_probe", "stream_kneser_ney", "stream_power_analysis",
-    "stream_did", "stream_mix_epochs", "stream_uplift", "stream_benford",
-    "stream_importance", "stream_ljungbox", "stream_runs_test",
-    "stream_jsd_drift",
-    // r13 twins
-    "stream_cluster_nmi", "stream_cluster_purity", "stream_cluster_ari",
-    "stream_cluster_vmeasure", "stream_item_cf", "stream_item_pmi",
-    "stream_ngram_novelty", "stream_gini", "stream_lexical_diversity",
-    "stream_cum_hazard", "stream_capture_recapture",
-    "stream_odds_ratio", "stream_hhi",
-    // r14 twins
-    "stream_kruskal_wallis", "stream_tukey_hsd", "stream_brown_forsythe",
-    "stream_calinski_harabasz", "stream_davies_bouldin",
-    // r14 wave 9
-    "stream_theil_index", "stream_welch_anova", "stream_cliffs_delta",
-    "stream_mood_median", "stream_chao1",
-    // r14 wave 12
-    "stream_rmst", "stream_mantel_haenszel", "stream_kendall_tau",
-    "stream_hill_tail", "stream_sign_test", "stream_burstiness",
-    // r14 wave 13
-    "stream_gumbel_maxima", "stream_moments",
-    // r16: the span-ingest gate's twin, the decontamination gate's twin
-    "stream_substring_incremental", "stream_decontaminate")
+  private[graft] def StreamScaledQueries: Seq[String] =
+    SparkEntry.queries.keys.toSeq.sorted.filter(_.startsWith("stream_"))
 
   /** The series-mode panel (`SPARK_GRAFT_SCALE_MODE=series`, VERDICT r7
     * item 5): three of the five (`events_drift`, `events_binning`,
@@ -269,14 +73,13 @@ object ScaleBench {
     * independent window partitions / groups that distribute. The series
     * mode measures that axis directly.
     */
-  private val SeriesScaledQueries = Seq(
+  private[graft] val SeriesScaledQueries = Seq(
     "events_drift", "events_binning", "sketch_quantiles_by_type",
     "events_seasonality", "events_anomaly", "events_ewma",
     "events_acf", "events_cross_corr")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE", "10").toInt
     // "corpus" (default): self-union adversary — same keys/types, N×
     // denser buckets / longer series. "series": events self-unioned
@@ -286,66 +89,43 @@ object ScaleBench {
     val mode = sys.env.getOrElse("SPARK_GRAFT_SCALE_MODE", "corpus")
     require(mode == "corpus" || mode == "series",
       s"SPARK_GRAFT_SCALE_MODE='$mode' — accepted values: corpus, series")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus(32))
+
+    // Semantic dedup's production control: nlist ∝ corpus holds
+    // cluster size constant, so total pair work grows linearly — the
+    // contrast rows to dedup_semantic_fast's fixed-nlist quadratic
+    // (run when selected, or by default with the full corpus suite).
+    val nlistRows = Seq[(String, (String, Int) => DataFrame)](
+      // flat assignment: pair work linear, assignment O(n·nlist) —
+      // quadratic again when nlist ∝ n (the measured trap)
+      "dedup_semantic_scaled_nlist" ->
+        (graft.queries.SimilarityQueries.semanticDedupScaledNlist(spark, _, _)),
+      // hierarchical assignment: O(n·(√nlist + nlist/√nlist)·dim) —
+      // the production control that keeps the TOTAL linear
+      "dedup_semantic_hier_nlist" -> { (dir, nlist) =>
+        val ncoarse = math.max(4, math.sqrt(nlist.toDouble).round.toInt)
+        graft.queries.SimilarityQueries
+          .semanticDedupHierarchicalNlist(spark, dir, nlist, ncoarse)
+      })
+
+    // SPARK_GRAFT_SCALE_QUERIES=a,b,c restricts the run (targeted 100×
+    // rows without paying for the full suite at that factor).
+    val only = Harness.only(sys.env.get("SPARK_GRAFT_SCALE_QUERIES"),
+      SparkEntry.queries.keySet ++ nlistRows.map(_._1))
+
+    // SPARK_GRAFT_BENCH_REPS: every (query, dir) cell is the per-rep
+    // median plus [min, max] spread — the scale ratios are the rows
+    // the 100 TB story rests on and BENCH_NOTES documents a 2.1-7.8×
+    // same-code spread on single-run stream rows (VERDICT r15 item 2).
+    val reps = Harness.benchReps
 
     val scaled =
       if (mode == "series") buildSeriesScaledDir(spark, sfDir, factor)
-      else buildScaledDir(spark, sfDir, factor)
+      else buildScaledDir(spark, sfDir, factor, graft.Ephemeral.dataDir("graft-scale-"))
 
     // Warm the session (scheduler, codegen, decimal path) so the first
     // measured query doesn't absorb one-time session cost.
-    try {
-      SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    } catch { case _: Throwable => () }
-
-    // SPARK_GRAFT_BENCH_REPS=N (default 1): run each (query, dir)
-    // timing N times and record the PER-CELL MEDIAN plus [min, max]
-    // spread — the same discipline Bench.scala adopted in r15,
-    // extended here because the scale ratios are the rows the 100 TB
-    // story rests on and BENCH_NOTES documents a 2.1-7.8× same-code
-    // spread on single-run stream rows (VERDICT r15 item 2). Keeper
-    // runs use 3; subset re-measures may use more.
-    val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").map(_.toInt).getOrElse(1)
-    require(reps >= 1, "SPARK_GRAFT_BENCH_REPS must be >= 1")
-    def medianOf(secs: Seq[Double]): Double = {
-      // ADVICE r16: index by the sequence's own length, not the
-      // captured env `reps`, so the helper stays correct if reused
-      // with a differently sized sample.
-      val sorted = secs.sorted
-      val n = sorted.length
-      if (n % 2 == 1) sorted(n / 2)
-      else (sorted(n / 2 - 1) + sorted(n / 2)) / 2.0
-    }
-
-    def timeOnce(name: String, dir: String): Double = {
-      // Full per-query cost: the curve measures each query standalone,
-      // so drop cross-query materialized artifacts (the shared-artifact
-      // posture is measured separately — Bench end-to-end, IndexBench
-      // build-vs-marginal). Cleared per REP: every rep pays the full
-      // build, so the median is a median of like-for-like timings.
-      graft.queries.Artifacts.clear()
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      sec
-    }
-
-    // (median, min, max) over reps
-    def time(name: String, dir: String): (Double, Double, Double) = {
-      val secs = (1 to reps).map(_ => timeOnce(name, dir))
-      (medianOf(secs), secs.min, secs.max)
-    }
+    try Harness.noop(SparkEntry.entry(spark)) catch { case _: Throwable => () }
 
     // Build both split source dirs BEFORE timing: the one-time
     // read-sort-write of the events fixture is harness setup (Bench
@@ -358,76 +138,42 @@ object ScaleBench {
         // store init, sink codegen): without this the first streaming
         // row of a subset run absorbs ~15-30 s of one-time engine
         // cost that the full suite hides in its 70 earlier queries.
-        val warmDir = graft.Ephemeral.dir("graft-stream-warm-")
-        val ckpt = graft.Ephemeral.dir("graft-ckpt-")
-        Files.writeString(warmDir.resolve("w.txt"), "warm")
-        val wq = spark.readStream.textFile(warmDir.toString)
-          .writeStream.option("checkpointLocation", ckpt.toString)
-          .foreachBatch((_: org.apache.spark.sql.Dataset[String], _: Long) => ())
-          .start()
-        wq.processAllAvailable(); wq.stop()
+        Harness.runOnce(spark, "stream_window_agg", sfDir)
       } catch { case _: Throwable => () }
     }
 
-    // SPARK_GRAFT_SCALE_QUERIES=a,b,c restricts the run (targeted 100×
-    // rows without paying for the full suite at that factor).
-    val only = sys.env.get("SPARK_GRAFT_SCALE_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val baseQueries =
-      if (mode == "series") SeriesScaledQueries
-      else ScaledQueries ++ StreamScaledQueries
-    val selected = baseQueries.filter(q => only.forall(_.contains(q)))
-    val rows = selected.map { name =>
-      val (t1, lo1, hi1) = time(name, sfDir)
-      val (tN, loN, hiN) = time(name, scaled.toString)
+    // One row: `cell(dir, nlist)` timed at 1× and `factor`×. Full
+    // per-query cost: the curve measures each query standalone, so
+    // cross-query materialized artifacts are dropped before every rep
+    // (the shared-artifact posture is measured separately — Bench
+    // end-to-end, IndexBench build-vs-marginal), and every rep pays
+    // the full build, so the median is a median of like-for-like
+    // timings.
+    def row(name: String)(cell: (String, Int) => Double) = {
+      def time(dir: String, nlist: Int) =
+        Harness.reps(reps) { graft.queries.Artifacts.clear(); cell(dir, nlist) }
+      val (t1, lo1, hi1) = time(sfDir, 10)
+      val (tN, loN, hiN) = time(scaled.toString, 10 * factor)
       System.err.println(f"[scale] $name%-22s 1x ${t1}%7.2f s   ${factor}x ${tN}%7.2f s   ratio ${tN / t1}%5.2f" +
         (if (reps > 1) f"   [${lo1}%.2f..${hi1}%.2f / ${loN}%.2f..${hiN}%.2f]" else ""))
       (name, t1, tN, (lo1, hi1, loN, hiN))
     }
 
-    // Semantic dedup's production control: nlist ∝ corpus holds
-    // cluster size constant, so total pair work grows linearly — the
-    // contrast row to dedup_semantic_fast's fixed-nlist quadratic
-    // (run when selected, or by default with the full suite).
-    def customRow(name: String)(run: (String, Int) => Unit)
-        : Seq[(String, Double, Double, (Double, Double, Double, Double))] =
-      if (mode != "series" && only.forall(_.contains(name))) {
-        def timeIt(dir: String, nlist: Int): Double = {
-          graft.queries.Artifacts.clear()
-          spark.catalog.clearCache()
-          val t0 = System.nanoTime()
-          run(dir, nlist)
-          val sec = (System.nanoTime() - t0) / 1e9
-          spark.catalog.clearCache()
-          sec
-        }
-        def timeReps(dir: String, nlist: Int): (Double, Double, Double) = {
-          val secs = (1 to reps).map(_ => timeIt(dir, nlist))
-          (medianOf(secs), secs.min, secs.max)
-        }
-        val (t1, lo1, hi1) = timeReps(sfDir, 10)
-        val (tN, loN, hiN) = timeReps(scaled.toString, 10 * factor)
-        System.err.println(f"[scale] $name%-28s 1x ${t1}%7.2f s   ${factor}x ${tN}%7.2f s   ratio ${tN / t1}%5.2f")
-        Seq((name, t1, tN, (lo1, hi1, loN, hiN)))
-      } else Seq.empty
-
-    val scaledNlistRows =
-      // flat assignment: pair work linear, assignment O(n·nlist) —
-      // quadratic again when nlist ∝ n (the measured trap)
-      customRow("dedup_semantic_scaled_nlist") { (dir, nlist) =>
-        graft.queries.SimilarityQueries.semanticDedupScaledNlist(spark, dir, nlist)
-          .write.format("noop").mode("overwrite").save()
-      } ++
-      // hierarchical assignment: O(n·(√nlist + nlist/√nlist)·dim) —
-      // the production control that keeps the TOTAL linear
-      customRow("dedup_semantic_hier_nlist") { (dir, nlist) =>
-        val ncoarse = math.max(4, math.sqrt(nlist.toDouble).round.toInt)
-        graft.queries.SimilarityQueries
-          .semanticDedupHierarchicalNlist(spark, dir, nlist, ncoarse)
-          .write.format("noop").mode("overwrite").save()
+    val baseQueries =
+      if (mode == "series") SeriesScaledQueries
+      else ScaledQueries ++ StreamScaledQueries
+    val rows = baseQueries.filter(q => only.forall(_.contains(q))).map { name =>
+      row(name)((dir, _) => Harness.runOnce(spark, name, dir))
+    }
+    val customRows =
+      if (mode == "series") Nil
+      else nlistRows.filter(r => only.forall(_.contains(r._1))).map { case (name, run) =>
+        row(name)((dir, nlist) =>
+          try Harness.seconds(Harness.noop(run(dir, nlist)))
+          finally spark.catalog.clearCache())
       }
 
-    val qs = (rows ++ scaledNlistRows).map { case (n, t1, tN, (lo1, hi1, loN, hiN)) =>
+    val qs = (rows ++ customRows).map { case (n, t1, tN, (lo1, hi1, loN, hiN)) =>
       val spread =
         if (reps > 1)
           f""","x1_spread":[$lo1%.3f,$hi1%.3f],"x$factor%d_spread":[$loN%.3f,$hiN%.3f]"""
@@ -440,8 +186,9 @@ object ScaleBench {
 
   /** Symlinks every entry of `sfDir` whose name `skip` rejects into
     * `tmp`, by ABSOLUTE target — a relative `sfDir` would otherwise
-    * give links that resolve against `tmp` and dangle. `tmp` is a
-    * [[graft.Ephemeral.dataDir]], deleted by that root's hook.
+    * give links that resolve against `tmp` and dangle. Registers no
+    * cleanup: an [[graft.Ephemeral.dataDir]] `tmp` goes with that
+    * root's hook.
     */
   private def linkFixtures(sfDir: String, tmp: Path, skip: String => Boolean): Unit = {
     val listing = Files.list(Paths.get(sfDir))
@@ -451,17 +198,18 @@ object ScaleBench {
     finally listing.close()
   }
 
-  /** A temp table dir: every fixture table symlinked except documents /
+  /** Fills the empty dir `tmp` (ScaleBench's and IndexBench's
+    * [[graft.Ephemeral.dataDir]], or BuildScaled's persistent output)
+    * and returns it: every fixture table symlinked except documents /
     * embeddings (written as `factor`-way self-unions with id offsets —
     * labels and content preserved → N× denser LSH buckets) and events
     * (self-union with DISJOINT ts offsets: `factor`× replay history
     * with an hour's gap between copies, so the watermark advances
     * monotonically through the longer stream).
     */
-  private[graft] def buildScaledDir(spark: SparkSession, sfDir: String, factor: Int,
+  private[graft] def buildScaledDir(spark: SparkSession, sfDir: String, factor: Int, tmp: Path,
                                     tables: Set[String] = Set("documents", "embeddings", "events",
                                       "orders", "lineitem", "customer")): Path = {
-    val tmp = graft.Ephemeral.dataDir("graft-scale-")
     linkFixtures(sfDir, tmp, name => tables.exists(name.startsWith))
 
     if (tables("events")) {

@@ -82,17 +82,9 @@ object SkewBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Harness.cpus(32)
     val rows = sys.env.getOrElse("SPARK_GRAFT_SKEW_ROWS", "20000000").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(cpus)
     // force the shuffle join + make the skew thresholds bite at bench
     // scale (defaults target 256 MB partitions; the hot partition here
     // is ~150 MB of longs — same shape, smaller constant)
@@ -108,9 +100,7 @@ object SkewBench {
 
     def measure(name: String, aqeSkew: Boolean)(mk: => DataFrame) = {
       spark.conf.set("spark.sql.adaptive.skewJoin.enabled", aqeSkew.toString)
-      val (sec, parts, splits, plan) = runJoin(mk)
-      if (sys.env.contains("SPARK_GRAFT_SKEW_DEBUG"))
-        System.err.println(s"=== $name final plan ===\n" + plan.take(4000))
+      val (sec, parts, splits, _) = runJoin(mk)
       System.err.println(
         f"[skew] $name%-8s ${sec}%7.2f s   skewedPartitions=$parts%3d  skewSplits=$splits%3d")
       (name, sec, parts, splits)
@@ -121,7 +111,7 @@ object SkewBench {
       measure("aqe", aqeSkew = true)(fact.join(dim, "k")),
       measure("salted", aqeSkew = false)(
         graft.operators.Salting.saltedJoin(fact, dim, "k", "k",
-          col("payload"), cpus.toInt)))
+          col("payload"), cpus)))
 
     val qs = results.map { case (n, sec, parts, splits) =>
       f""""$n":{"sec":$sec%.3f,"skewedPartitions":$parts,"skewSplits":$splits}"""

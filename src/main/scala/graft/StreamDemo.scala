@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.streaming.{PseudoWindow, SensorStream, StateInspect}
@@ -20,18 +18,12 @@ import graft.streaming.{PseudoWindow, SensorStream, StateInspect}
 object StreamDemo {
   def main(args: Array[String]): Unit = {
     val runSeconds = args.headOption.map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(4)
 
-    val outDir = Files.createTempDirectory("graft-demo-out-").toString
-    val ckptRaw = Files.createTempDirectory("graft-demo-ckpt-raw-").toString
-    val ckptWin = Files.createTempDirectory("graft-demo-ckpt-win-").toString
-    val ckptProc = Files.createTempDirectory("graft-demo-ckpt-proc-").toString
+    val outDir = Ephemeral.dir("graft-demo-out-").toString
+    val ckptRaw = Ephemeral.dir("graft-demo-ckpt-raw-").toString
+    val ckptWin = Ephemeral.dir("graft-demo-ckpt-win-").toString
+    val ckptProc = Ephemeral.dir("graft-demo-ckpt-proc-").toString
     println(s"[demo] sinks: $outDir  checkpoints: $ckptRaw | $ckptWin")
 
     val points = SensorStream.sensorPointsStream(spark, rowsPerBatch = 10)

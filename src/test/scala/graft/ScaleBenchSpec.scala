@@ -10,7 +10,8 @@ class ScaleBenchSpec extends SparkSpec {
   test("a relative sf dir gives links that all resolve") {
     val rel = Paths.get("").toAbsolutePath.relativize(Paths.get(sf).toAbsolutePath)
     assert(!rel.isAbsolute)
-    val tmp = ScaleBench.buildScaledDir(spark, rel.toString, 2, tables = Set.empty)
+    val tmp = ScaleBench.buildScaledDir(spark, rel.toString, 2,
+      Ephemeral.dataDir("graft-scale-"), tables = Set.empty)
     val listing = Files.list(tmp)
     val links = try listing.iterator().asScala.toList finally listing.close()
     assert(links.nonEmpty)
