@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
 
 /** Materialize a ScaleBench-style scaled corpus dir at a PERSISTENT
   * path so separate Bench JVMs (32-core and 8-core) can point
@@ -19,11 +18,7 @@ object BuildScaled {
     val out = Paths.get(args(1))
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE", "4").toInt
     val spark = Harness.session(Harness.cpus(32))
-    if (Files.exists(out)) {
-      val walk = Files.walk(out)
-      try walk.iterator().asScala.toSeq.reverse.foreach(p => Files.deleteIfExists(p))
-      finally walk.close()
-    }
+    Ephemeral.deleteTree(out)
     Files.createDirectories(out)
     ScaleBench.buildScaledDir(spark, sfDir, factor, out)
     println(s"""{"scaled_dir":"$out","factor":$factor,"src":"$sfDir"}""")

@@ -1,6 +1,8 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.io.IOException
+import java.nio.file.{FileVisitResult, Files, NoSuchFileException, Path, Paths, SimpleFileVisitor}
+import java.nio.file.attribute.BasicFileAttributes
 
 /** Scratch-space router for the harness's EPHEMERAL directories —
   * streaming checkpoints, replay split files, bucketed-table scratch.
@@ -63,12 +65,7 @@ object Ephemeral {
     val chosen = preferred.getOrElse(Paths.get(System.getProperty("java.io.tmpdir")))
     val root = Files.createTempDirectory(chosen, prefix)
     sys.addShutdownHook {
-      try {
-        import scala.jdk.CollectionConverters._
-        if (Files.exists(root))
-          Files.walk(root).iterator().asScala.toSeq.reverse
-            .foreach(f => try Files.deleteIfExists(f) catch { case _: Exception => () })
-      } catch { case _: Exception => () }
+      try deleteTree(root) catch { case _: Exception => () }
     }
     root
   }
@@ -77,4 +74,25 @@ object Ephemeral {
     * document materializations) — disk-backed, not tmpfs.
     */
   def dataDir(prefix: String): Path = Files.createTempDirectory(dataBase, prefix)
+
+  /** Deletes `p` and everything under it, children first. A path that
+    * is already gone — `p` itself, or an entry deleted concurrently
+    * during the walk — counts as deleted; any other I/O error is thrown.
+    */
+  def deleteTree(p: Path): Unit =
+    Files.walkFileTree(p, new SimpleFileVisitor[Path] {
+      private def gone(e: IOException) =
+        if (e == null || e.isInstanceOf[NoSuchFileException]) FileVisitResult.CONTINUE
+        else throw e
+      override def visitFile(f: Path, a: BasicFileAttributes): FileVisitResult = {
+        Files.deleteIfExists(f)
+        FileVisitResult.CONTINUE
+      }
+      override def visitFileFailed(f: Path, e: IOException): FileVisitResult = gone(e)
+      override def postVisitDirectory(d: Path, e: IOException): FileVisitResult = {
+        gone(e)
+        Files.deleteIfExists(d)
+        FileVisitResult.CONTINUE
+      }
+    })
 }

@@ -33,7 +33,7 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2 (+ §2.9
     * extensions), grouped by domain. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     SensorQueries.queries ++
     RelationalQueries.queries ++
     EventQueries.queries ++
@@ -46,7 +46,7 @@ object SparkEntry {
     StatTestQueries.queries
 
   /** DuckDB-equivalent SQL for every oracle-checkable query. */
-  def oracleSql: Map[String, String] =
+  lazy val oracleSql: Map[String, String] =
     SensorQueries.oracleSql ++
     RelationalQueries.oracleSql ++
     EventQueries.oracleSql ++

@@ -34,15 +34,6 @@ object MultimodalOps {
   // Never spill decode scratch to disk files on executors.
   ImageIO.setUseCache(false)
 
-  /** media table schema: payload + typed metadata. */
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("kind", StringType, nullable = false),   // image|audio|video
-    StructField("bytes", BinaryType, nullable = false),
-    StructField("meta", StructType(Seq(
-      StructField("source", StringType),
-      StructField("n_frames", LongType))))))
-
   private val P = 2147483647L
 
   private def h31(c: Column): Column =

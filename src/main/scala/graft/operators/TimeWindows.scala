@@ -36,12 +36,4 @@ object TimeWindows {
         col(keyCol),
         endOfWindowMs(col(tsMsCol), durationMs).as("window_end_ms"))
       .agg(count(lit(1)).as("cnt"))
-
-  /** Generic tumbling aggregation over arbitrary aggregate columns. */
-  def tumblingAgg(df: DataFrame, keyCol: String, tsMsCol: String,
-                  durationMs: Long, aggs: Seq[Column]): DataFrame =
-    df.groupBy(
-        col(keyCol),
-        endOfWindowMs(col(tsMsCol), durationMs).as("window_end_ms"))
-      .agg(aggs.head, aggs.tail: _*)
 }

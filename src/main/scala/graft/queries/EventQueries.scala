@@ -226,17 +226,6 @@ object EventQueries {
     mergedLong.groupBy(col("event_type")).agg(aggCols.head, aggCols.tail: _*)
   }
 
-  /** Sum-merge of bootstrap partial rows (the streaming twin's merge
-    * law: every column is additive).
-    */
-  private[graft] def bootstrapMerge(parts: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val aggCols =
-      ((0 until BootstrapReps).flatMap { r =>
-        Seq(sum(col(s"wv_$r")).as(s"wv_$r"), sum(col(s"wn_$r")).as(s"wn_$r"))
-      } :+ sum(col("sv")).as("sv")) :+ sum(col("n")).as("n")
-    parts.groupBy(col("event_type")).agg(aggCols.head, aggCols.tail: _*)
-  }
-
   /** Replicate means + rank-selected 80% CI off the aggregated frame. */
   private[graft] def bootstrapFinish(agg: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val repArr = array((0 until BootstrapReps).map(r =>

@@ -644,7 +644,6 @@ object RelationalQueries {
     */
   private val bktDbNames =
     scala.collection.mutable.HashMap[(org.apache.spark.sql.SparkSession, String), String]()
-  private val bktDbSeq = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Bucketed orders/lineitem catalog tables (8 buckets, sorted on
     * the join key), written once per (session, dir) into a temp-dir

@@ -3,18 +3,6 @@ package graft.sensor
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Typed model ≙ the reference's point types
-  * (/root/reference/src/main/java/com/ververica/data/DataPoint.java:20-23,
-  * KeyedDataPoint.java:20-22) as immutable case classes.
-  */
-case class DataPoint[T](tsMs: Long, value: T) {
-  def withNewValue[U](v: U): DataPoint[U] = DataPoint(tsMs, v)
-  def withKey(key: String): KeyedDataPoint[T] = KeyedDataPoint(key, tsMs, value)
-}
-case class KeyedDataPoint[T](key: String, tsMs: Long, value: T) {
-  def withNewValue[U](v: U): KeyedDataPoint[U] = KeyedDataPoint(key, tsMs, v)
-}
-
 /** Deterministic sensor-stream generator — the batch twin of the
   * reference's generator pipeline
   * (/root/reference/src/main/java/com/ververica/jobs/TimingExplorer.java:109-152).

@@ -141,16 +141,4 @@ object LineProtocolSink {
       .option("checkpointLocation", checkpointDir)
       .foreach(new LineProtocolWriter(measurement, outDir))
       .start()
-
-  /** Same stream, HTTP transport — point `endpoint` at an InfluxDB
-    * `http://host:8086`.
-    */
-  def writeHttp(points: DataFrame, measurement: String, endpoint: String,
-                checkpointDir: String, db: String = "sineWave") =
-    points.selectExpr("key", "ts_ms", "value")
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreach(new HttpLineProtocolWriter(measurement, endpoint, db))
-      .start()
 }

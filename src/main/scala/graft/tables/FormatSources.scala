@@ -1,9 +1,7 @@
 package graft.tables
 
-import java.nio.file.{Files, Path}
-import scala.jdk.CollectionConverters._
+import java.nio.file.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types._
 
 /** Multi-format SOURCE coverage: the fixture `documents` table
   * re-materialized once per (session, dir, format) as CSV / JSON
@@ -20,27 +18,16 @@ import org.apache.spark.sql.types._
   */
 object FormatSources {
 
-  // keyed by (dir, fmt) like the streaming split-source caches: the
+  // keyed by (dir, fmt) like the streaming split memo: the
   // materialized data depends only on those, so suites/sessions share
   // one copy and no stopped SparkSession is pinned by the map
   private val cache =
     scala.collection.mutable.HashMap[(String, String), Path]()
 
-  private val docSchema = StructType(Seq(
-    StructField("doc_id", LongType), StructField("text", StringType),
-    StructField("lang", StringType), StructField("source", StringType),
-    StructField("n_chars", LongType)))
-
   private def materialized(s: SparkSession, dir: String, fmt: String): Path =
     cache.synchronized {
       cache.getOrElseUpdate((dir, fmt), {
         val out = graft.Ephemeral.dataDir(s"graft-docs-$fmt-")
-        sys.addShutdownHook {
-          if (Files.exists(out)) {
-            Files.walk(out).iterator().asScala.toSeq.reverse
-              .foreach(p => try Files.deleteIfExists(p) catch { case _: Exception => () })
-          }
-        }
         val w = Tables.documents(s, dir).write.mode("overwrite")
         fmt match {
           // header + explicit quoting: text contains spaces (and the
@@ -58,6 +45,7 @@ object FormatSources {
   /** `documents` read back through the `fmt` reader. */
   def documentsVia(s: SparkSession, dir: String, fmt: String): DataFrame = {
     val p = materialized(s, dir, fmt).toString
+    val docSchema = Tables.documents(s, dir).schema
     fmt match {
       case "csv" => s.read.schema(docSchema).option("header", "true").csv(p)
       case "json" => s.read.schema(docSchema).json(p)

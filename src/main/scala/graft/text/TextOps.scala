@@ -47,9 +47,6 @@ object TextOps {
     * fixed priority ties (en > es > de). A real n-gram model would
     * slot into the same shape (per-language score columns + greatest).
     */
-  def langScores(toks: Column): (Column, Column, Column) =
-    (tokenCount(toks, "the"), tokenCount(toks, "a"), tokenCount(toks, "data"))
-
   def langPredict(cntEn: Column, cntEs: Column, cntDe: Column): Column =
     when(cntEn >= cntEs && cntEn >= cntDe, "en")
       .when(cntEs >= cntDe, "es")

@@ -25,7 +25,7 @@ class MultiBatchReplaySpec extends SparkSpec {
       .select(col("event_type"),
               unix_millis(col("window.start")).as("window_start_ms"),
               col("cnt"))
-    val ckpt = Files.createTempDirectory("graft-mbr-ckpt-")
+    val ckpt = graft.Ephemeral.dir("graft-mbr-ckpt-")
     val q = windowed.writeStream
       .outputMode("append")
       .queryName("mbr_out")
@@ -70,7 +70,7 @@ class MultiBatchReplaySpec extends SparkSpec {
     // a nanos-quantile cut could straddle two same-ms events (sf0.1
     // has sub-ms-distinct pairs). The split cuts on ms to guarantee
     // this; pin it here.
-    val srcDir = StreamingQueries.splitSourceDir(spark, sf)
+    val (srcDir, _) = StreamingQueries.split(spark, sf, "events")
     val files = Files.list(srcDir).iterator()
     val ranges = new scala.collection.mutable.ArrayBuffer[(String, Long, Long)]
     while (files.hasNext) {

@@ -72,7 +72,7 @@ class StreamStateSizeSpec extends SparkSpec {
     */
   private def maxStateRows(streamed: DataFrame): Long = {
     val name = s"state_size_${System.nanoTime()}"
-    val ckpt = Files.createTempDirectory("graft-ckpt-")
+    val ckpt = graft.Ephemeral.dir("graft-ckpt-")
     val q = streamed.writeStream
       .outputMode("append")
       .queryName(name)

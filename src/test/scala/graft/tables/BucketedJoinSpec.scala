@@ -1,6 +1,5 @@
 package graft.tables
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -21,7 +20,7 @@ class BucketedJoinSpec extends SparkSpec {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
     // external tables via option("path") — warehouse.dir is static conf
-    val wh = Files.createTempDirectory("graft-warehouse-").toString
+    val wh = graft.Ephemeral.dataDir("graft-warehouse-").toString
     spark.sql("DROP TABLE IF EXISTS li_bucketed")
     spark.sql("DROP TABLE IF EXISTS ord_bucketed")
 
