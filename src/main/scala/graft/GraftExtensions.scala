@@ -4,16 +4,17 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import graft.functions.{CentroidRanks, DecimalDotProduct, FloatVectorCosine,
-  JaroWinkler, MinHashSig, PqCodes, ShingleHashes, SimHash32}
+  JaroWinkler, MinHashSig, NfcNormalize, PqCodes, ShingleHashes, SimHash32}
 
 /** Session-extension entry point: registers the library's native
   * expressions at session build time —
   *
   *   spark.sql.extensions=graft.GraftExtensions
   *
-  * (or `.withExtensions(new GraftExtensions)` on the builder), the
-  * deployment-grade alternative to the per-session `register`
-  * temp-function calls on each expression's companion.
+  * (or `.withExtensions(new GraftExtensions)` on the builder). The
+  * same [[GraftExtensions.functions]] list is the one SQL registration
+  * route for an existing session too (`SqlQueries` installs it into
+  * the session's function registry).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit =
@@ -49,5 +50,8 @@ object GraftExtensions {
      (exprs: Seq[Expression]) => PqCodes(exprs.head, exprs(1))),
     (FunctionIdentifier("jaro_winkler"),
      new ExpressionInfo(classOf[JaroWinkler].getName, "jaro_winkler"),
-     (exprs: Seq[Expression]) => JaroWinkler(exprs.head, exprs(1))))
+     (exprs: Seq[Expression]) => JaroWinkler(exprs.head, exprs(1))),
+    (FunctionIdentifier("nfc_normalize"),
+     new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
+     (exprs: Seq[Expression]) => NfcNormalize(exprs.head)))
 }

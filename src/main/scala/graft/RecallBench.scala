@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{CentroidRanks, FloatVectorCosine, VectorOps}
 import graft.queries.SimilarityQueries
@@ -76,20 +75,23 @@ object RecallBench {
 
     val emb = vectors.toDF("vec_id", "embedding").repartition(cpus).cache()
     val n = emb.count()
-    val embn = emb.withColumn("nrm",
-      sqrt(VectorOps.normSqDecimal(col("embedding")).cast("double")))
+    val embn = SimilarityQueries.withNorm(emb, "embedding")
 
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
     val qdf = emb.filter(col("vec_id") < NQ)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
 
+    // the (q_id, vec_id) pairs of each query's top-TopK by `score`
+    def topkPairs(scored: DataFrame, score: String): Array[(Long, Long)] =
+      SimilarityQueries.topK(scored, score, "vec_id", TopK, "rank")
+        .select(col("q_id"), col("vec_id")).collect()
+        .map(r => (r.getLong(0), r.getLong(1)))
+
     // ground truth: exhaustive float-kernel top-10
-    val truth: Map[Long, Set[Long]] = emb.crossJoin(broadcast(qdf))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos", FloatVectorCosine.cosineFast(col("q_emb"), col("embedding")))
-      .withColumn("rank", row_number().over(w)).filter(col("rank") <= TopK)
-      .select(col("q_id"), col("vec_id")).collect()
-      .groupBy(_.getLong(0)).map { case (k, rs) => k -> rs.map(_.getLong(1)).toSet }
+    val truth: Map[Long, Set[Long]] = topkPairs(emb.crossJoin(broadcast(qdf))
+        .filter(col("vec_id") =!= col("q_id"))
+        .withColumn("cos", FloatVectorCosine.cosineFast(col("q_emb"), col("embedding"))),
+        "cos")
+      .groupBy(_._1).map { case (k, ps) => k -> ps.map(_._2).toSet }
 
     def recallOf(pairs: Array[(Long, Long)]): Double = {
       val got = pairs.groupBy(_._1).map { case (k, ps) => k -> ps.map(_._2).toSet }
@@ -116,19 +118,14 @@ object RecallBench {
         explode(slice(CentroidRanks(col("embedding"), col("nrm"), col("cents")),
           1, nprobe)).as("list_id"))
 
-    def topkPairs(scored: DataFrame): Array[(Long, Long)] = scored
-      .withColumn("rank", row_number().over(w)).filter(col("rank") <= TopK)
-      .select(col("q_id"), col("vec_id")).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-
     case class Row2(family: String, probe: Int, cand: Long, sec: Double, recall: Double)
 
     def measure(family: String, probe: Int)(mk: => DataFrame): Row2 = {
       val joined = mk
       val cand = joined.count()
-      topkPairs(joined) // warm the exact plan (codegen + broadcast)
+      topkPairs(joined, "cos") // warm the exact plan (codegen + broadcast)
       val t0 = System.nanoTime()
-      val pairs = topkPairs(joined)
+      val pairs = topkPairs(joined, "cos")
       val sec = (System.nanoTime() - t0) / 1e9
       val r = Row2(family, probe, cand / NQ, sec, recallOf(pairs))
       System.err.println(f"[recall] ${r.family}%-6s probe=${r.probe}%3d  cand/q=${r.cand}%6d (${100.0 * r.cand / n}%5.1f%%)  ${r.sec}%6.2f s  recall@10=${r.recall}%.3f")
@@ -160,12 +157,6 @@ object RecallBench {
               slice(col("embedding"), m * Dsub + 1, lit(Dsub)),
               c.getField("centroid")).cast("decimal(18,14)")))).as("lut"))
 
-    val wScore = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("vec_id"))
-    def topkPairsByScore(scored: DataFrame): Array[(Long, Long)] = scored
-      .withColumn("rank", row_number().over(wScore)).filter(col("rank") <= TopK)
-      .select(col("q_id"), col("vec_id")).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-
     val ivfpqRows = Seq(1, 2, 4, 8).map { np =>
       val qpl = qprobe(np).select(col("q_id"), col("list_id")).join(qlut, Seq("q_id"))
       val joined = enc.join(broadcast(qpl), Seq("list_id"))
@@ -177,9 +168,9 @@ object RecallBench {
               (m * K + element_at(col("codes"), m + 1) + 1).cast("int")))
               .cast("decimal(22,14)")))
       val cand = joined.count()
-      topkPairsByScore(joined)
+      topkPairs(joined, "score")
       val t0 = System.nanoTime()
-      val pairs = topkPairsByScore(joined)
+      val pairs = topkPairs(joined, "score")
       val sec = (System.nanoTime() - t0) / 1e9
       val r = Row2("ivfpq", np, cand / NQ, sec, recallOf(pairs))
       System.err.println(f"[recall] ${r.family}%-6s probe=${r.probe}%3d  cand/q=${r.cand}%6d (${100.0 * r.cand / n}%5.1f%%)  ${r.sec}%6.2f s  recall@10=${r.recall}%.3f")
@@ -201,14 +192,13 @@ object RecallBench {
               (m * K + element_at(col("codes"), m + 1) + 1).cast("int")))
               .cast("decimal(22,14)")))
       val cand = adc.count()
-      def rr = adc.withColumn("rank", row_number().over(wScore))
-        .filter(col("rank") <= Rerank)
+      def rr = SimilarityQueries.topK(adc, "score", "vec_id", Rerank, "rank")
         .select(col("q_id"), col("vec_id"))
         .join(emb, Seq("vec_id")).join(broadcast(qdf), Seq("q_id"))
         .withColumn("cos", FloatVectorCosine.cosineFast(col("q_emb"), col("embedding")))
-      topkPairs(rr)
+      topkPairs(rr, "cos")
       val t0 = System.nanoTime()
-      val pairs = topkPairs(rr)
+      val pairs = topkPairs(rr, "cos")
       val sec = (System.nanoTime() - t0) / 1e9
       val r = Row2("ivfpq_rr", np, cand / NQ, sec, recallOf(pairs))
       System.err.println(f"[recall] ${r.family}%-8s probe=${r.probe}%3d  cand/q=${r.cand}%6d (${100.0 * r.cand / n}%5.1f%%)  ${r.sec}%6.2f s  recall@10=${r.recall}%.3f")

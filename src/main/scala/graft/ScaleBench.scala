@@ -221,11 +221,11 @@ object ScaleBench {
       val loaded = spark.read.parquet(s"$sfDir/events.parquet")
       val ev = loaded.withColumn("__ms", graft.tables.Tables.tsMsExpr(loaded.schema("ts").dataType))
       val (tsMin, tsMax) = {
-        val r = ev.agg(min("__ms"), max("__ms")).head
+        val r = ev.agg(min("__ms"), max("__ms")).head()
         (r.getLong(0), r.getLong(1))
       }
       val span = tsMax - tsMin + 3600L * 1000L
-      val eOff = ev.agg(max("event_id")).head.getLong(0) + 1
+      val eOff = ev.agg(max("event_id")).head().getLong(0) + 1
       (0 until factor)
         .map(i => ev.withColumn("event_id", col("event_id") + lit(i * eOff))
                     .withColumn("ts", timestamp_millis(col("__ms") + lit(i * span)))
@@ -236,7 +236,7 @@ object ScaleBench {
 
     if (tables("documents")) {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      val dOff = docs.agg(max("doc_id")).head.getLong(0) + 1
+      val dOff = docs.agg(max("doc_id")).head().getLong(0) + 1
       (0 until factor)
         .map(i => docs.withColumn("doc_id", col("doc_id") + lit(i * dOff)))
         .reduce(_.unionAll(_))
@@ -245,7 +245,7 @@ object ScaleBench {
 
     if (tables("embeddings")) {
       val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      val vOff = emb.agg(max("vec_id")).head.getLong(0) + 1
+      val vOff = emb.agg(max("vec_id")).head().getLong(0) + 1
       (0 until factor)
         .map(i => emb.withColumn("vec_id", col("vec_id") + lit(i * vOff)))
         .reduce(_.unionAll(_))
@@ -258,7 +258,7 @@ object ScaleBench {
     // has)
     if (tables("orders") || tables("lineitem")) {
       val ord = spark.read.parquet(s"$sfDir/orders.parquet")
-      val oOff = ord.agg(max("o_orderkey")).head.getLong(0) + 1
+      val oOff = ord.agg(max("o_orderkey")).head().getLong(0) + 1
       (0 until factor)
         .map(i => ord.withColumn("o_orderkey", col("o_orderkey") + lit(i * oOff)))
         .reduce(_.unionAll(_))
@@ -272,7 +272,7 @@ object ScaleBench {
 
     if (tables("customer")) {
       val cust = spark.read.parquet(s"$sfDir/customer.parquet")
-      val cOff = cust.agg(max("c_custkey")).head.getLong(0) + 1
+      val cOff = cust.agg(max("c_custkey")).head().getLong(0) + 1
       (0 until factor)
         .map(i => cust.withColumn("c_custkey", col("c_custkey") + lit(i * cOff)))
         .reduce(_.unionAll(_))
@@ -298,7 +298,7 @@ object ScaleBench {
     linkFixtures(sfDir, tmp, _.startsWith("events"))
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val ev = spark.read.parquet(s"$sfDir/events.parquet")
-    val eOff = ev.agg(max("event_id")).head.getLong(0) + 1
+    val eOff = ev.agg(max("event_id")).head().getLong(0) + 1
     // concat_ws, not concat: a NULL event_type must still fan out into
     // per-copy distinct series instead of collapsing every copy's null
     // rows into one factor×-longer null series.

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -192,9 +191,4 @@ object DecimalDotProduct {
   def dot(a: Column, b: Column): Column =
     ColumnBridge.column(DecimalDotProduct(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  /** SQL registration: `SELECT vec_dot_decimal(a, b) ...`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot_decimal", exprs => DecimalDotProduct(exprs(0), exprs(1)), "scala_udf")
 }

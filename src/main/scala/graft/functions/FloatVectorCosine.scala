@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -101,9 +100,4 @@ object FloatVectorCosine {
   def cosineFast(a: Column, b: Column): Column =
     ColumnBridge.column(FloatVectorCosine(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  /** SQL registration: `SELECT vec_cosine(embedding, other) ...`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_cosine", exprs => FloatVectorCosine(exprs(0), exprs(1)), "scala_udf")
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -57,11 +56,6 @@ object JaroWinkler {
   /** Column-API entry point. */
   def apply(a: Column, b: Column): Column =
     ColumnBridge.column(JaroWinkler(ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  /** SQL registration: `SELECT jaro_winkler(a, b) ...`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaro_winkler", exprs => JaroWinkler(exprs(0), exprs(1)), "scala_udf")
 
   /** Static kernel shared by eval and codegen. */
   def compute(ua: UTF8String, ub: UTF8String): Double = {

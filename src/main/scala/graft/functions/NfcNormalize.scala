@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -64,9 +63,4 @@ object NfcNormalize {
   /** Column-API entry point. */
   def apply(text: Column): Column =
     ColumnBridge.column(NfcNormalize(ColumnBridge.expression(text)))
-
-  /** SQL registration: `SELECT nfc_normalize(text) ...`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize", exprs => NfcNormalize(exprs(0)), "scala_udf")
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -108,9 +107,4 @@ object SimHash32 {
   /** Column-API entry point over a token-hash array. */
   def apply(hashes: Column): Column =
     ColumnBridge.column(SimHash32(ColumnBridge.expression(hashes)))
-
-  /** SQL registration: `SELECT simhash32(hashes) ...`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash32", exprs => SimHash32(exprs(0)), "scala_udf")
 }

@@ -35,7 +35,7 @@ object Bfs {
     def state(df: DataFrame): (Long, java.math.BigDecimal) = {
       val r = df.agg(count(lit(1)),
         coalesce(sum(col("dist").cast("decimal(38,0)")),
-                 lit(0).cast("decimal(38,0)"))).head
+                 lit(0).cast("decimal(38,0)"))).head()
       (r.getLong(0), r.getDecimal(1))
     }
     var dist = seeds.select(col("v"), lit(0L).as("dist")).localCheckpoint()
@@ -81,7 +81,7 @@ object Bfs {
     def state(df: DataFrame): (Long, java.math.BigDecimal) = {
       val r = df.agg(count(lit(1)),
         coalesce(sum(col("dist").cast("decimal(38,0)")),
-                 lit(0).cast("decimal(38,0)"))).head
+                 lit(0).cast("decimal(38,0)"))).head()
       (r.getLong(0), r.getDecimal(1))
     }
     var dist = seeds.select(col("s"), col("s").as("v"), lit(0L).as("dist"))

@@ -43,7 +43,7 @@ object ConnectedComponents {
     // frame NPEs at compareTo, so the operator would not be total
     def labelSum(df: DataFrame): java.math.BigDecimal =
       df.agg(coalesce(sum(col("lbl").cast("decimal(38,0)")),
-                      lit(0).cast("decimal(38,0)"))).head.getDecimal(0)
+                      lit(0).cast("decimal(38,0)"))).head().getDecimal(0)
     var labels = verts.select(col("v"), col("v").as("lbl")).localCheckpoint()
     var prevSum = labelSum(labels)
     var it = 0

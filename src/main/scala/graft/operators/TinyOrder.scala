@@ -99,7 +99,7 @@ object TinyOrder {
     // tiebreak), so position order ≡ strict-key order and the values
     // are unchanged (oracle re-verified across the full suite).
     val k = key(sortCols)
-    val rowStruct = struct(df.columns.map(col): _*)
+    val rowStruct = struct(df.columns.toSeq.map(col): _*)
     val packed = df.agg(array_sort(collect_list(
       struct(k.as("__to_k"), rowStruct.as("__to_r"), value.as("__to_v"))))
       .as("__to_arr"))

@@ -630,7 +630,6 @@ object DedupQueries {
     // dominate each other, so all of them stay (the staircase's ===
     // gmax / > strictmax comparisons encode exactly that).
     "pipeline_pareto" -> ((s, dir) => {
-      val W = org.apache.spark.sql.expressions.Window
       // the group staircase and the final join both read the scored
       // frame — persist so documents is scanned once
       val d = Tables.documents(s, dir)

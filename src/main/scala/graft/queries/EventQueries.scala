@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.operators.TimeWindows
 import graft.tables.Tables
+import StatTestQueries.tieSafe
 
 /** Query surface over the `events` stream-history table — the batch
   * twins of the streaming operators (windowed aggregation ≙
@@ -2110,7 +2111,6 @@ object EventQueries {
     // pattern — no per-user sort survives to serving) and the mean
     // from exact integer delay·count sums.
     "events_funnel_latency" -> ((s, dir) => {
-      val W = org.apache.spark.sql.expressions.Window
       val ev = Tables.events(s, dir)
         .select(col("user_id"), col("event_type"), col("ts_ms"))
       val v = ev.filter(col("event_type") === "view")
@@ -2904,8 +2904,6 @@ object EventQueries {
     * the two quotients go through the tie-safe rounding chain.
     */
   private[graft] def hhiFinish(u: org.apache.spark.sql.DataFrame) = {
-    def tieSafe(c: org.apache.spark.sql.Column, dp: Int) =
-      round(round(c, 12).cast("decimal(24,12)"), dp).cast("double")
     val xq = col("x").cast("decimal(18,4)")
     u.agg(count(lit(1)).as("n_users"),
         sum(xq).as("sx"),
@@ -2952,8 +2950,6 @@ object EventQueries {
     * (Theil's standard positive-support restriction).
     */
   private[graft] def inequalityFinish(u: org.apache.spark.sql.DataFrame) = {
-    def tieSafe(c: org.apache.spark.sql.Column, dp: Int) =
-      round(round(c, 12).cast("decimal(24,12)"), dp).cast("double")
     // decimal(24,4) (the signFinish width), not (18,4): on overflow
     // Spark's downcast silently NULLs the row (dropping the user)
     // while DuckDB's CAST raises — widened on both engines so an

@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.multimodal.MultimodalOps
-import graft.tables.Tables
 
 /** Multimodal extension queries (SURVEY.md §2.9) over a media fixture
   * of REAL PNG payloads: `MultimodalOps.mediaTable` encodes one

@@ -553,7 +553,7 @@ object RelationalQueries {
   private def insertKeyOffset(s: org.apache.spark.sql.SparkSession,
                               dir: String): Long =
     Artifacts.scalar(s, dir, "cdc_insert_key_offset") {
-      Tables.customer(s, dir).agg(max(col("c_custkey"))).head.getLong(0) + 1L
+      Tables.customer(s, dir).agg(max(col("c_custkey"))).head().getLong(0) + 1L
     }
 
   /** Run the SCD2 merge ONCE per (session, dir) through the real

@@ -1,10 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.VectorOps
 import graft.tables.Tables
+import StatTestQueries.tieSafe
 
 /** Similarity-search extension operators over `embeddings`
   * (SURVEY.md §2.9): brute-force cosine top-k (the correctness
@@ -16,6 +17,21 @@ import graft.tables.Tables
   * the corpus streams through one narrow stage, so the plan is
   * BroadcastNestedLoopJoin → partial TopK per partition → final TopK;
   * no corpus shuffle. LSH bucketing is a pure projection.
+  *
+  * The search chain: every vector search here is built from the same
+  * three parts, each defined once.
+  *  - The query side, [[querySide]]: `q_id`, `q_emb` and `q_nrm` (the
+  *    exact norm from [[withNorm]]); [[probeSide]] adds one `list_id`
+  *    row per probed IVF list.
+  *  - The score: [[exactCos]], the decimal-exact dot product over the
+  *    two norms ([[queryCos]] for a query-side × candidate pair), or
+  *    the fused float `cosineFast`.
+  *  - The cut, [[topK]]: per `q_id`, `row_number()` ordered by score
+  *    desc then id asc, kept where ≤ k, the rank cast to long. It is
+  *    the clause every search oracle spells
+  *    `CAST(row_number() OVER (PARTITION BY q_id ORDER BY cos DESC,
+  *    vec_id) AS BIGINT) AS rank … WHERE rank <= k`, so equal scores
+  *    rank by the smaller id on both engines.
   */
 object SimilarityQueries {
 
@@ -121,9 +137,53 @@ object SimilarityQueries {
                               na: Column, nb: Column, tau: Double): Column = {
     val cf = graft.functions.FloatVectorCosine.cosineFast(ea, eb)
     (cf >= lit(tau - FloatCosMargin)) &&
-      ((cf >= lit(tau + FloatCosMargin)) ||
-        VectorOps.dotDecimal(ea, eb).cast("double") / (na * nb) >= lit(tau))
+      ((cf >= lit(tau + FloatCosMargin)) || exactCos(ea, eb, na, nb) >= lit(tau))
   }
+
+  // ---- the search chain (see the object doc) ----
+
+  /** `df` with the exact L2 norm of its `emb` array as `nrm`. */
+  private[graft] def withNorm(df: DataFrame, emb: String): DataFrame =
+    df.withColumn("nrm", sqrt(VectorOps.normSqDecimal(col(emb)).cast("double")))
+
+  /** The query side of a search over `df` (`vec_id`, `emb`, `nrm`):
+    * `q_id`, `q_emb`, `q_nrm`, then `extra`.
+    */
+  private def querySide(df: DataFrame, emb: String, extra: Column*): DataFrame =
+    df.select(Seq(col("vec_id").as("q_id"), col(emb).as("q_emb"),
+      col("nrm").as("q_nrm")) ++ extra: _*)
+
+  /** The IVF query side: [[querySide]] once per probed list `list_id`,
+    * the [[NProbe]] nearest centroids of the one-row `centArr`.
+    */
+  private def probeSide(df: DataFrame, centArr: DataFrame): DataFrame =
+    querySide(df.crossJoin(broadcast(centArr)), "embedding",
+      explode(slice(rankedListIds(col("embedding"), col("nrm")), 1, NProbe))
+        .as("list_id"))
+
+  /** The exact cosine: decimal-exact dot product, double division by
+    * the precomputed norms (engine-identical bits; the fused float
+    * route is [[graft.functions.FloatVectorCosine.cosineFast]]).
+    */
+  private[graft] def exactCos(a: Column, b: Column, na: Column, nb: Column): Column =
+    VectorOps.dotDecimal(a, b).cast("double") / (na * nb)
+
+  /** [[exactCos]] of a query-side row against its candidate's `emb`. */
+  private def queryCos(emb: String): Column =
+    exactCos(col("q_emb"), col(emb), col("q_nrm"), col("nrm"))
+
+  /** The top-K cut: per `q_id`, the `k` rows of highest `score`, equal
+    * scores to the smaller `id`, numbered 1..k in a long `rank`
+    * column. A query with fewer than `k` candidates keeps them all.
+    * The `rank ≤ k` filter over `row_number()` plans as a map-side
+    * WindowGroupLimit.
+    */
+  private[graft] def topK(df: DataFrame, score: String, id: String, k: Int,
+                          rank: String): DataFrame =
+    df.withColumn(rank, row_number().over(
+        Window.partitionBy(col("q_id")).orderBy(col(score).desc, col(id))))
+      .filter(col(rank) <= k)
+      .withColumn(rank, col(rank).cast("long"))
 
   /** Shortlist depth `search_mmr` re-ranks (the pq_rerank operating
     * point: a 20-candidate exact shortlist feeding a TopK selection).
@@ -172,16 +232,12 @@ object SimilarityQueries {
     // is unchanged. Exactness: cosines are decimal-exact reductions;
     // the margin comparisons are single IEEE ops on identical doubles.
     "pipeline_hard_negatives" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-        .withColumn("nrm", sqrt(VectorOps.normSqDecimal(col("embedding")).cast("double")))
-      val q = emb.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-                col("nrm").as("q_nrm"), col("label").as("q_label"))
+      val emb = embWithNorm(s, dir)
+      val q = querySide(emb.filter(col("vec_id") < NQueries), "embedding",
+        col("label").as("q_label"))
       val pairs = emb.crossJoin(broadcast(q))
         .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("cos",
-          VectorOps.dotDecimal(col("q_emb"), col("embedding")).cast("double") /
-            (col("q_nrm") * col("nrm")))
+        .withColumn("cos", queryCos("embedding"))
         .select(col("q_id"), col("q_label"), col("vec_id"), col("label"),
                 col("cos"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -189,15 +245,12 @@ object SimilarityQueries {
         .groupBy(col("q_id"))
         .agg(max(when(col("label") === col("q_label"), col("cos"))).as("pmax"))
         .filter(col("pmax").isNotNull)
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("cos").desc, col("vec_id"))
-      pairs.join(broadcast(pmax), "q_id")
-        .filter(col("label") =!= col("q_label") &&
-                col("cos") < col("pmax") &&
-                col("cos") > col("pmax") - lit(HardNegMargin))
-        .withColumn("neg_rank", row_number().over(w))
-        .filter(col("neg_rank") <= TopK)
-        .select(col("q_id"), col("neg_rank").cast("long").as("neg_rank"),
+      topK(pairs.join(broadcast(pmax), "q_id")
+          .filter(col("label") =!= col("q_label") &&
+                  col("cos") < col("pmax") &&
+                  col("cos") > col("pmax") - lit(HardNegMargin)),
+          "cos", "vec_id", TopK, "neg_rank")
+        .select(col("q_id"), col("neg_rank"),
                 col("vec_id"), round(col("cos"), 6).as("cos_r"),
                 round(col("pmax"), 6).as("pmax_r"))
     }),
@@ -216,8 +269,7 @@ object SimilarityQueries {
     // pointer-jumping over the core subgraph (rounds ≈ log diameter),
     // and one broadcast-scale min-agg for borders.
     "dedup_dbscan" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-        .withColumn("nrm", sqrt(VectorOps.normSqDecimal(col("embedding")).cast("double")))
+      val emb = embWithNorm(s, dir)
       val a = emb.select(col("vec_id").as("va"), col("embedding").as("ea"),
                          col("nrm").as("na"))
       val b = emb.select(col("vec_id").as("vb"), col("embedding").as("eb"),
@@ -262,21 +314,12 @@ object SimilarityQueries {
       // side broadcasts; the corpus streams through one narrow stage
       // (partial top-k per partition, final top-k after the window
       // shuffle on q_id).
-      val emb = Tables.embeddings(s, dir)
-        .withColumn("nrm", sqrt(VectorOps.normSqDecimal(col("embedding")).cast("double")))
-      val q = emb.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-                col("nrm").as("q_nrm"))
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("cos").desc, col("vec_id"))
-      emb.crossJoin(broadcast(q))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("cos",
-          VectorOps.dotDecimal(col("q_emb"), col("embedding")).cast("double") /
-            (col("q_nrm") * col("nrm")))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= TopK)
-        .select(col("q_id"), col("rank").cast("long").as("rank"),
+      val emb = embWithNorm(s, dir)
+      val q = querySide(emb.filter(col("vec_id") < NQueries), "embedding")
+      topK(emb.crossJoin(broadcast(q))
+          .filter(col("vec_id") =!= col("q_id"))
+          .withColumn("cos", queryCos("embedding")), "cos", "vec_id", TopK, "rank")
+        .select(col("q_id"), col("rank"),
                 col("vec_id"), round(col("cos"), 6).as("cos_r"))
     }),
 
@@ -317,17 +360,13 @@ object SimilarityQueries {
     // 100 TB hot path a fully hash-checked query.
     "ann_topk_fast" -> ((s, dir) => {
       import graft.functions.FloatVectorCosine.cosineFast
-      val emb = Tables.embeddings(s, dir)
-      val q = emb.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("cos").desc, col("vec_id"))
-      emb.crossJoin(broadcast(q))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("cos", cosineFast(col("q_emb"), col("embedding")))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= TopK)
-        .select(col("q_id"), col("rank").cast("long").as("rank"), col("vec_id"))
+      val emb = embWithNorm(s, dir)
+      val q = querySide(emb.filter(col("vec_id") < NQueries), "embedding")
+      topK(emb.crossJoin(broadcast(q))
+          .filter(col("vec_id") =!= col("q_id"))
+          .withColumn("cos", cosineFast(col("q_emb"), col("embedding"))),
+          "cos", "vec_id", TopK, "rank")
+        .select(col("q_id"), col("rank"), col("vec_id"))
     }),
 
     // FILTERED ANN — vector search under a metadata predicate (the
@@ -343,18 +382,14 @@ object SimilarityQueries {
     // ann_topk_fast.
     "ann_topk_filtered" -> ((s, dir) => {
       import graft.functions.FloatVectorCosine.cosineFast
-      val emb = Tables.embeddings(s, dir)
-      val q = emb.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-                col("label").as("q_label"))
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("cos").desc, col("vec_id"))
-      emb.join(broadcast(q), col("label") === col("q_label") &&
-                             col("vec_id") =!= col("q_id"))
-        .withColumn("cos", cosineFast(col("q_emb"), col("embedding")))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= TopK)
-        .select(col("q_id"), col("rank").cast("long").as("rank"), col("vec_id"))
+      val emb = embWithNorm(s, dir)
+      val q = querySide(emb.filter(col("vec_id") < NQueries), "embedding",
+        col("label").as("q_label"))
+      topK(emb.join(broadcast(q), col("label") === col("q_label") &&
+                                  col("vec_id") =!= col("q_id"))
+          .withColumn("cos", cosineFast(col("q_emb"), col("embedding"))),
+          "cos", "vec_id", TopK, "rank")
+        .select(col("q_id"), col("rank"), col("vec_id"))
     }),
 
     // LSH bucketing (sign random projection, 8 deterministic
@@ -376,22 +411,10 @@ object SimilarityQueries {
     // (NQueries × (NPlanes+1) rows) broadcasts.
     "ann_topk_lsh" -> ((s, dir) => {
       val emb = lshIndexed(s, dir)
-      val q = emb.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-                col("nrm").as("q_nrm"),
-                explode(array(
-                  col("bucket") +: (0 until NPlanes).map(j =>
-                    col("bucket").bitwiseXOR(lit(1L << j))): _*)).as("bucket"))
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("cos").desc, col("vec_id"))
-      emb.join(broadcast(q), Seq("bucket"))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("cos",
-          VectorOps.dotDecimal(col("q_emb"), col("embedding")).cast("double") /
-            (col("q_nrm") * col("nrm")))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= TopK)
-        .select(col("q_id"), col("rank").cast("long").as("rank"),
+      topK(emb.join(broadcast(lshProbeSide(emb)), Seq("bucket"))
+          .filter(col("vec_id") =!= col("q_id"))
+          .withColumn("cos", queryCos("embedding")), "cos", "vec_id", TopK, "rank")
+        .select(col("q_id"), col("rank"),
                 col("vec_id"), round(col("cos"), 6).as("cos_r"))
     }),
 
@@ -406,19 +429,11 @@ object SimilarityQueries {
     "ann_topk_lsh_fast" -> ((s, dir) => {
       import graft.functions.FloatVectorCosine.cosineFast
       val emb = lshIndexed(s, dir)
-      val q = emb.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-                explode(array(
-                  col("bucket") +: (0 until NPlanes).map(j =>
-                    col("bucket").bitwiseXOR(lit(1L << j))): _*)).as("bucket"))
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("cos").desc, col("vec_id"))
-      emb.join(broadcast(q), Seq("bucket"))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("cos", cosineFast(col("q_emb"), col("embedding")))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= TopK)
-        .select(col("q_id"), col("rank").cast("long").as("rank"), col("vec_id"))
+      topK(emb.join(broadcast(lshProbeSide(emb)), Seq("bucket"))
+          .filter(col("vec_id") =!= col("q_id"))
+          .withColumn("cos", cosineFast(col("q_emb"), col("embedding"))),
+          "cos", "vec_id", TopK, "rank")
+        .select(col("q_id"), col("rank"), col("vec_id"))
     }),
 
     // Embedding-cosine near-dup (the fifth dedup flavor, SURVEY.md
@@ -441,8 +456,7 @@ object SimilarityQueries {
         .filter(graft.functions.FloatVectorCosine.cosineFast(
           col("emb_a"), col("emb_b")) >= lit(NearDupCos - FloatCosMargin))
         .withColumn("cos",
-          VectorOps.dotDecimal(col("emb_a"), col("emb_b")).cast("double") /
-            (col("nrm_a") * col("nrm_b")))
+          exactCos(col("emb_a"), col("emb_b"), col("nrm_a"), col("nrm_b")))
         .filter(col("cos") >= NearDupCos)
         .select(col("vec_a"), col("vec_b"), round(col("cos"), 6).as("cos_r"))
     }),
@@ -454,28 +468,8 @@ object SimilarityQueries {
     // no window, so assignment scales linearly at 100 TB). Queries
     // probe their nprobe=2 nearest lists; the search join is keyed on
     // list_id with the tiny probe side broadcast.
-    "ann_topk_ivf" -> ((s, dir) => {
-      val emb = embWithNorm(s, dir)
-      val centArr = ivfCentArr(s, dir)
-      val assigned = ivfAssigned(s, dir)
-      val qprobe = emb.filter(col("vec_id") < NQueries)
-        .crossJoin(broadcast(centArr))
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-                col("nrm").as("q_nrm"),
-                explode(slice(rankedListIds(col("embedding"), col("nrm")),
-                  1, NProbe)).as("list_id"))
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("cos").desc, col("vec_id"))
-      assigned.join(broadcast(qprobe), Seq("list_id"))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("cos",
-          VectorOps.dotDecimal(col("q_emb"), col("embedding")).cast("double") /
-            (col("q_nrm") * col("nrm")))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= TopK)
-        .select(col("q_id"), col("rank").cast("long").as("rank"),
-                col("vec_id"), round(col("cos"), 6).as("cos_r"))
-    }),
+    "ann_topk_ivf" -> ((s, dir) =>
+      ivfSearchOver(s, dir)(ivfCentArr(s, dir), ivfAssigned(s, dir))),
 
     // RECALL@k AS A QUERY — the acceptance metric for the IVF index,
     // promoted from spec/bench evidence (AnnRecallSpec,
@@ -507,22 +501,13 @@ object SimilarityQueries {
     // composition for IVF search, rank-hashed like ann_topk_fast.
     "ann_topk_ivf_fast" -> ((s, dir) => {
       import graft.functions.FloatVectorCosine.cosineFast
-      val emb = embWithNorm(s, dir)
-      val centArr = ivfCentArr(s, dir)
-      val assigned = ivfAssigned(s, dir)
-      val qprobe = emb.filter(col("vec_id") < NQueries)
-        .crossJoin(broadcast(centArr))
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-                explode(slice(rankedListIds(col("embedding"), col("nrm")),
-                  1, NProbe)).as("list_id"))
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("cos").desc, col("vec_id"))
-      assigned.join(broadcast(qprobe), Seq("list_id"))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("cos", cosineFast(col("q_emb"), col("embedding")))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= TopK)
-        .select(col("q_id"), col("rank").cast("long").as("rank"), col("vec_id"))
+      val qprobe = probeSide(embWithNorm(s, dir).filter(col("vec_id") < NQueries),
+        ivfCentArr(s, dir))
+      topK(ivfAssigned(s, dir).join(broadcast(qprobe), Seq("list_id"))
+          .filter(col("vec_id") =!= col("q_id"))
+          .withColumn("cos", cosineFast(col("q_emb"), col("embedding"))),
+          "cos", "vec_id", TopK, "rank")
+        .select(col("q_id"), col("rank"), col("vec_id"))
     }),
 
     // One Lloyd iteration of k-means (the iterative primitive of
@@ -570,26 +555,8 @@ object SimilarityQueries {
     // dedup_semantic_scaled: nlist ∝ corpus keeps list size constant,
     // so pair work stays linear. Top-5 per vector is a map-side
     // WindowGroupLimit shape on q_id.
-    "emb_knn_graph" -> ((s, dir) => {
-      val assigned = ivfAssigned(s, dir)
-      val probes = embWithNorm(s, dir)
-        .crossJoin(broadcast(ivfCentArr(s, dir)))
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-          col("nrm").as("q_nrm"),
-          explode(slice(rankedListIds(col("embedding"), col("nrm")),
-            1, NProbe)).as("list_id"))
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("cos").desc, col("vec_id"))
-      assigned.join(probes, Seq("list_id"))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("cos",
-          VectorOps.dotDecimal(col("q_emb"), col("embedding")).cast("double") /
-            (col("q_nrm") * col("nrm")))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= TopK)
-        .select(col("q_id").as("src"), col("rank").cast("long").as("rank"),
-          col("vec_id").as("dst"), round(col("cos"), 6).as("cos_r"))
-    }),
+    "emb_knn_graph" -> ((s, dir) =>
+      knnGraphOver(s, dir)(ivfCentArr(s, dir), ivfAssigned(s, dir))),
 
     // INTRINSIC DIMENSION (two-NN MLE, Facco et al. 2017) — how many
     // degrees of freedom the embedding manifold actually uses (an
@@ -602,39 +569,8 @@ object SimilarityQueries {
     // N/Σ ln μ with the ln terms 12-dp-quantized before the decimal
     // sum. Exact-duplicate neighbors (d₁ = 0) are excluded — counted
     // in n_pts vs n_used. One probe join + one per-vector 2-row agg.
-    "emb_intrinsic_dim" -> ((s, dir) => {
-      val assigned = ivfAssigned(s, dir)
-      val probes = embWithNorm(s, dir)
-        .crossJoin(broadcast(ivfCentArr(s, dir)))
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-          col("nrm").as("q_nrm"),
-          explode(slice(rankedListIds(col("embedding"), col("nrm")),
-            1, NProbe)).as("list_id"))
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("cos").desc, col("vec_id"))
-      val rr = assigned.join(probes, Seq("list_id"))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("cos",
-          VectorOps.dotDecimal(col("q_emb"), col("embedding")).cast("double") /
-            (col("q_nrm") * col("nrm")))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 2)
-        .groupBy(col("q_id"))
-        .agg(max(when(col("rank") === 1, round(col("cos"), 6))).as("c1"),
-             max(when(col("rank") === 2, round(col("cos"), 6))).as("c2"))
-        .filter(col("c2").isNotNull)
-        .select(col("q_id"), (lit(1.0) - col("c1")).as("d1"),
-          (lit(1.0) - col("c2")).as("d2"))
-      val ag = rr.filter(col("d1") > 0.0)
-        .select(round(log(col("d2") / col("d1")), 12)
-          .cast("decimal(28,12)").as("t"))
-        .agg(count(lit(1)).as("n_used"), sum(col("t")).as("lsum"))
-      ag.crossJoin(broadcast(rr.agg(count(lit(1)).as("n_pts"))))
-        .select(col("n_pts"), col("n_used"),
-          round(when(asDouble(col("lsum")) > 0.0,
-            col("n_used").cast("double") / asDouble(col("lsum"))), 6)
-            .as("id_r"))
-    }),
+    "emb_intrinsic_dim" -> ((s, dir) =>
+      intrinsicDimOf(knnGraphOver(s, dir)(ivfCentArr(s, dir), ivfAssigned(s, dir)))),
 
     // K-NN CLASSIFICATION ACCURACY — the embedding-quality eval the
     // k-NN graph enables: each vector's label predicted by the
@@ -667,7 +603,8 @@ object SimilarityQueries {
     // posture, oracle-checked end to end (gate → assign → probe →
     // rank), sharing the scaled_assigned artifact with
     // dedup_semantic_scaled.
-    "emb_knn_graph_scaled" -> ((s, dir) => knnGraphScaled(s, dir)),
+    "emb_knn_graph_scaled" -> ((s, dir) =>
+      knnGraphOver(s, dir)(scaledCentArr(s, dir), scaledAssigned(s, dir))),
 
     // Two-NN intrinsic dimension over the SCALED graph chain — the
     // production twin of emb_intrinsic_dim, riding
@@ -675,7 +612,7 @@ object SimilarityQueries {
     // shared 6-dp-rounded cosine, so the μ = d₂/d₁ ratios start from
     // hash-proven-identical doubles).
     "emb_intrinsic_dim_scaled" -> ((s, dir) =>
-      intrinsicDimOf(knnGraphScaled(s, dir))),
+      intrinsicDimOf(queries("emb_knn_graph_scaled")(s, dir))),
 
     // k-NN label-vote accuracy over the SCALED graph — the production
     // twin of emb_knn_accuracy (same majority-vote finish, same
@@ -683,7 +620,7 @@ object SimilarityQueries {
     // embeddings).
     "emb_knn_accuracy_scaled" -> ((s, dir) =>
       knnAccuracyOf(
-        knnGraphScaled(s, dir).select(col("src"), col("dst")),
+        queries("emb_knn_graph_scaled")(s, dir).select(col("src"), col("dst")),
         Tables.embeddings(s, dir)
           .select(col("vec_id"), col("label").cast("bigint").as("label")))),
 
@@ -698,24 +635,10 @@ object SimilarityQueries {
     // NProbe CHILD lists within the winning coarse cell; candidates
     // confined to those lists. Oracle-checked end to end through the
     // identical two-level decimal argmin chain.
-    "emb_knn_graph_hier_scaled" -> ((s, dir) => {
-      val assigned = hierScaledAssigned(s, dir)
-      val probes = hierScaledRanked(s, dir)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-          col("nrm").as("q_nrm"),
-          explode(slice(col("ranks"), 1, NProbe)).as("list_id"))
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("cos").desc, col("vec_id"))
-      assigned.join(probes, Seq("list_id"))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("cos",
-          VectorOps.dotDecimal(col("q_emb"), col("embedding")).cast("double") /
-            (col("q_nrm") * col("nrm")))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= TopK)
-        .select(col("q_id").as("src"), col("rank").cast("long").as("rank"),
-          col("vec_id").as("dst"), round(col("cos"), 6).as("cos_r"))
-    }),
+    "emb_knn_graph_hier_scaled" -> ((s, dir) =>
+      knnEdges(hierScaledAssigned(s, dir),
+        querySide(hierScaledRanked(s, dir), "embedding",
+          explode(slice(col("ranks"), 1, NProbe)).as("list_id")))),
 
     // Two-NN intrinsic dimension over the HIER-GATED graph chain
     // (VERDICT r13 item 1): the flat emb_intrinsic_dim_scaled still
@@ -749,9 +672,7 @@ object SimilarityQueries {
     // pattern. Closes the train → serve → EVALUATE loop next to
     // kmeans_train and ann_recall_ivf.
     "emb_silhouette" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-        .withColumn("nrm", sqrt(VectorOps.normSqDecimal(col("embedding")).cast("double")))
-      silhouetteOf(emb, trainedCentsFrame(s, dir))
+      silhouetteOf(embWithNorm(s, dir), trainedCentsFrame(s, dir))
     }),
 
     // CLUSTER PURITY — the external-validity complement of
@@ -880,8 +801,7 @@ object SimilarityQueries {
     // pins nlist to its 10 labels only because the trained-index oracle
     // chain initializes from label means.
     "dedup_semantic" -> ((s, dir) =>
-      semanticDedup(s, dir)((ea, eb, na, nb) =>
-        VectorOps.dotDecimal(ea, eb).cast("double") / (na * nb))),
+      semanticDedup(s, dir)(exactCos)),
 
     // The production hot path of semantic dedup: identical candidate
     // confinement and keep rule, but the per-pair score — the Σ|c|²
@@ -909,8 +829,7 @@ object SimilarityQueries {
     // nlist dedup_semantic stays as the trained-index decimal anchor;
     // this entry is the scale-safe posture, oracle-checked.)
     "dedup_semantic_scaled" -> ((s, dir) =>
-      semanticDedupOver(scaledAssigned(s, dir))((ea, eb, na, nb) =>
-        VectorOps.dotDecimal(ea, eb).cast("double") / (na * nb))),
+      semanticDedupOver(scaledAssigned(s, dir))(exactCos)),
 
     // The two scale controls COMPOSED, oracle-checked: Bernoulli-gate
     // child seeds (nlist ∝ n, E[|cell|] ≈ SeedMod — bounds the pair
@@ -926,8 +845,7 @@ object SimilarityQueries {
     // posture whose cost ScaleBench's fixed-seed hier harness can
     // only approximate (VERDICT r8 item 6).
     "dedup_semantic_hier_scaled" -> ((s, dir) =>
-      semanticDedupOver(hierScaledAssigned(s, dir))((ea, eb, na, nb) =>
-        VectorOps.dotDecimal(ea, eb).cast("double") / (na * nb))),
+      semanticDedupOver(hierScaledAssigned(s, dir))(exactCos)),
 
     // PRODUCT QUANTIZATION codebook (public recipe: Jégou et al. 2011)
     // — the third leg of the ANN triad next to LSH (hash pruning) and
@@ -980,13 +898,8 @@ object SimilarityQueries {
     // the probed lists' codes. All three inputs are shared artifacts
     // (IVF assignment, PQ codebook, code column).
     "ann_topk_ivfpq" -> ((s, dir) => {
-      val emb = embWithNorm(s, dir)
-      val centArr = ivfCentArr(s, dir)
-      val qprobe = emb.filter(col("vec_id") < NQueries)
-        .crossJoin(broadcast(centArr))
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-                explode(slice(rankedListIds(col("embedding"), col("nrm")),
-                  1, NProbe)).as("list_id"))
+      val qprobe = probeSide(embWithNorm(s, dir).filter(col("vec_id") < NQueries),
+          ivfCentArr(s, dir))
         .crossJoin(broadcast(pqCentArr(s, dir)))
         .select(col("q_id"), col("list_id"),
           flatten(transform(sequence(lit(0), lit(PqM - 1)), m =>
@@ -996,19 +909,16 @@ object SimilarityQueries {
                 c.getField("centroid")).cast("decimal(18,14)")))).as("lut"))
       val cand = ivfAssigned(s, dir).select(col("vec_id"), col("list_id"))
         .join(pqEncoded(s, dir), "vec_id")
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("score").desc, col("vec_id"))
-      cand.join(broadcast(qprobe), Seq("list_id"))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("score",
-          aggregate(sequence(lit(0), lit(PqM - 1)),
-            lit(0).cast("decimal(22,14)"),
-            (acc, m) => (acc + element_at(col("lut"),
-              (m * PqK + element_at(col("codes"), m + 1) + 1).cast("int")))
-              .cast("decimal(22,14)")))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= TopK)
-        .select(col("q_id"), col("rank").cast("long").as("rank"),
+      topK(cand.join(broadcast(qprobe), Seq("list_id"))
+          .filter(col("vec_id") =!= col("q_id"))
+          .withColumn("score",
+            aggregate(sequence(lit(0), lit(PqM - 1)),
+              lit(0).cast("decimal(22,14)"),
+              (acc, m) => (acc + element_at(col("lut"),
+                (m * PqK + element_at(col("codes"), m + 1) + 1).cast("int")))
+                .cast("decimal(22,14)"))),
+          "score", "vec_id", TopK, "rank")
+        .select(col("q_id"), col("rank"),
                 col("vec_id"), round(col("score").cast("double"), 6).as("score_r"))
     }),
 
@@ -1023,18 +933,10 @@ object SimilarityQueries {
       val cand = adcRanked(s, dir).filter(col("rank") <= PqRerank)
         .select(col("q_id"), col("vec_id"))
       val emb = embWithNorm(s, dir)
-      val qe = emb.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-                col("nrm").as("q_nrm"))
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("cos").desc, col("vec_id"))
-      cand.join(emb, "vec_id").join(broadcast(qe), "q_id")
-        .withColumn("cos",
-          VectorOps.dotDecimal(col("q_emb"), col("embedding")).cast("double") /
-            (col("q_nrm") * col("nrm")))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= TopK)
-        .select(col("q_id"), col("rank").cast("long").as("rank"),
+      val qe = querySide(emb.filter(col("vec_id") < NQueries), "embedding")
+      topK(cand.join(emb, "vec_id").join(broadcast(qe), "q_id")
+          .withColumn("cos", queryCos("embedding")), "cos", "vec_id", TopK, "rank")
+        .select(col("q_id"), col("rank"),
                 col("vec_id"), round(col("cos"), 6).as("cos_r"))
     }),
 
@@ -1071,31 +973,28 @@ object SimilarityQueries {
     // ADC paths: tiny broadcast query side, one narrow corpus pass,
     // partial top-k per partition, final window on q_id.
     "ann_topk_sq" -> ((s, dir) => {
-      val q = Tables.embeddings(s, dir).filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("score").desc, col("vec_id"))
-      sqEncoded(s, dir)
-        .crossJoin(broadcast(sqArrs(s, dir)))
-        .crossJoin(broadcast(q))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("score",
-          aggregate(sequence(lit(0), lit(Dim - 1)),
-            lit(0).cast("decimal(23,14)"),
-            (acc, d) => {
-              val i = (d + 1).cast("int")
-              val mn = element_at(col("mn_arr"), i)
-              val rng = element_at(col("rng_arr"), i)
-              val xhat = when(rng === 0.0, mn)
-                .otherwise(mn +
-                  (element_at(col("codes"), i).cast("double") + lit(0.5)) *
-                    rng / lit(255.0))
-              (acc + (element_at(col("q_emb"), i).cast("double") * xhat)
-                .cast("decimal(28,14)")).cast("decimal(23,14)")
-            }))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= TopK)
-        .select(col("q_id"), col("rank").cast("long").as("rank"),
+      val q = querySide(embWithNorm(s, dir).filter(col("vec_id") < NQueries),
+        "embedding")
+      topK(sqEncoded(s, dir)
+          .crossJoin(broadcast(sqArrs(s, dir)))
+          .crossJoin(broadcast(q))
+          .filter(col("vec_id") =!= col("q_id"))
+          .withColumn("score",
+            aggregate(sequence(lit(0), lit(Dim - 1)),
+              lit(0).cast("decimal(23,14)"),
+              (acc, d) => {
+                val i = (d + 1).cast("int")
+                val mn = element_at(col("mn_arr"), i)
+                val rng = element_at(col("rng_arr"), i)
+                val xhat = when(rng === 0.0, mn)
+                  .otherwise(mn +
+                    (element_at(col("codes"), i).cast("double") + lit(0.5)) *
+                      rng / lit(255.0))
+                (acc + (element_at(col("q_emb"), i).cast("double") * xhat)
+                  .cast("decimal(28,14)")).cast("decimal(23,14)")
+              })),
+          "score", "vec_id", TopK, "rank")
+        .select(col("q_id"), col("rank"),
                 col("vec_id"), round(col("score").cast("double"), 6).as("score_r"))
     }),
 
@@ -1163,20 +1062,12 @@ object SimilarityQueries {
         // corpus — the recall anchor (every candidate scored). The
         // production posture is search_hybrid_rrf_indexed below.
         val emb = embWithNorm(s, dir)
-        val q = emb.filter(col("vec_id") < NQueries)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-                  col("nrm").as("q_nrm"))
-        val wSem = Window.partitionBy(col("q_id"))
-          .orderBy(col("cos").desc, col("vec_id"))
-        emb.crossJoin(broadcast(q))
-          .filter(col("vec_id") =!= col("q_id"))
-          .withColumn("cos",
-            VectorOps.dotDecimal(col("q_emb"), col("embedding")).cast("double") /
-              (col("q_nrm") * col("nrm")))
-          .withColumn("rank_sem", row_number().over(wSem))
-          .filter(col("rank_sem") <= HybridShortlist)
-          .select(col("q_id"), col("vec_id").as("doc_id"),
-                  col("rank_sem").cast("long").as("rank_sem"))
+        val q = querySide(emb.filter(col("vec_id") < NQueries), "embedding")
+        topK(emb.crossJoin(broadcast(q))
+            .filter(col("vec_id") =!= col("q_id"))
+            .withColumn("cos", queryCos("embedding")),
+            "cos", "vec_id", HybridShortlist, "rank_sem")
+          .select(col("q_id"), col("vec_id").as("doc_id"), col("rank_sem"))
       })),
 
     // INDEX-BACKED hybrid retrieval — the 100 TB posture of
@@ -1192,28 +1083,11 @@ object SimilarityQueries {
     // scoring + the unrolled Lloyd oracle chain keep the whole
     // build → probe → fuse composition hash-checked end to end.
     "search_hybrid_rrf_indexed" -> ((s, dir) =>
-      rrfFuse(lexShortlist(s, dir), {
-        val emb = embWithNorm(s, dir)
-        val centArr = centsFrameOf(trainedCentLong(s, dir))
-        val assigned = trainedAssigned(s, dir)
-        val qprobe = emb.filter(col("vec_id") < NQueries)
-          .crossJoin(broadcast(centArr))
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-                  col("nrm").as("q_nrm"),
-                  explode(slice(rankedListIds(col("embedding"), col("nrm")),
-                    1, NProbe)).as("list_id"))
-        val wSem = Window.partitionBy(col("q_id"))
-          .orderBy(col("cos").desc, col("vec_id"))
-        assigned.join(broadcast(qprobe), Seq("list_id"))
-          .filter(col("vec_id") =!= col("q_id"))
-          .withColumn("cos",
-            VectorOps.dotDecimal(col("q_emb"), col("embedding")).cast("double") /
-              (col("q_nrm") * col("nrm")))
-          .withColumn("rank_sem", row_number().over(wSem))
-          .filter(col("rank_sem") <= HybridShortlist)
-          .select(col("q_id"), col("vec_id").as("doc_id"),
-                  col("rank_sem").cast("long").as("rank_sem"))
-      })),
+      rrfFuse(lexShortlist(s, dir),
+        topK(ivfScored(s, dir)(centsFrameOf(trainedCentLong(s, dir)),
+              trainedAssigned(s, dir)),
+            "cos", "vec_id", HybridShortlist, "rank_sem")
+          .select(col("q_id"), col("vec_id").as("doc_id"), col("rank_sem")))),
 
     // MMR re-rank (maximal marginal relevance, Carbonell & Goldstein
     // 1998) — the diversity-aware selection step a production RAG /
@@ -1229,18 +1103,11 @@ object SimilarityQueries {
     // and the DuckDB twin unrolls the identical rounds.
     "search_mmr" -> ((s, dir) => {
       val emb = embWithNorm(s, dir)
-      val q = emb.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-                col("nrm").as("q_nrm"))
-      val wRel = Window.partitionBy(col("q_id"))
-        .orderBy(col("rel").desc, col("vec_id"))
-      val cands = emb.crossJoin(broadcast(q))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("rel",
-          VectorOps.dotDecimal(col("q_emb"), col("embedding")).cast("double") /
-            (col("q_nrm") * col("nrm")))
-        .withColumn("rank_rel", row_number().over(wRel))
-        .filter(col("rank_rel") <= MmrShortlist)
+      val q = querySide(emb.filter(col("vec_id") < NQueries), "embedding")
+      val cands = topK(emb.crossJoin(broadcast(q))
+          .filter(col("vec_id") =!= col("q_id"))
+          .withColumn("rel", queryCos("embedding")),
+          "rel", "vec_id", MmrShortlist, "rank_rel")
         .select(col("q_id"), col("vec_id"), col("embedding"), col("nrm"), col("rel"))
         .localCheckpoint()
       val sa = cands.select(col("q_id"), col("vec_id").as("a"),
@@ -1248,14 +1115,13 @@ object SimilarityQueries {
       val sb = cands.select(col("q_id"), col("vec_id").as("b"),
         col("embedding").as("eb"), col("nrm").as("nb"))
       val sims = sa.join(sb, Seq("q_id")).filter(col("a") =!= col("b"))
-        .withColumn("sim",
-          VectorOps.dotDecimal(col("ea"), col("eb")).cast("double") /
-            (col("na") * col("nb")))
+        .withColumn("sim", exactCos(col("ea"), col("eb"), col("na"), col("nb")))
         .select(col("q_id"), col("a"), col("b"), col("sim"))
         .localCheckpoint()
       val slim = cands.select(col("q_id"), col("vec_id"), col("rel"))
       var selected = slim
-        .withColumn("rk", row_number().over(wRel))
+        .withColumn("rk", row_number().over(Window.partitionBy(col("q_id"))
+          .orderBy(col("rel").desc, col("vec_id"))))
         .filter(col("rk") === 1)
         .select(col("q_id"), col("vec_id"), lit(1L).as("mmr_rank"),
                 col("rel").as("score"))
@@ -1686,25 +1552,11 @@ object SimilarityQueries {
       .filter(col("doc_id") =!= col("q_id"))
       .join(dl, "doc_id").join(broadcast(df), "token")
       .crossJoin(broadcast(stats))
-      .withColumn("avgdl", col("sum_dl").cast("double") / col("n_docs"))
-      .withColumn("idf", log(lit(1.0) +
-        ((col("n_docs") - col("df")).cast("double") + lit(0.5)) /
-        (col("df").cast("double") + lit(0.5))))
-      .withColumn("tfn",
-        col("tf").cast("double") * lit(2.2) /
-          (col("tf").cast("double") + lit(1.2) *
-            (lit(1.0) - lit(0.75) +
-             lit(0.75) * (col("dl").cast("double") / col("avgdl")))))
-      .withColumn("contrib_q",
-        round(col("idf") * col("tfn"), 9).cast("decimal(28,9)"))
+      .withColumn("contrib_q", TextQueries.bm25Weight)
       .groupBy(col("q_id"), col("doc_id"))
       .agg(sum(col("contrib_q")).as("score_lex"))
-    val wLex = Window.partitionBy(col("q_id"))
-      .orderBy(col("score_lex").desc, col("doc_id"))
-    lex.withColumn("rank_lex", row_number().over(wLex))
-      .filter(col("rank_lex") <= HybridShortlist)
-      .select(col("q_id"), col("doc_id"),
-              col("rank_lex").cast("long").as("rank_lex"))
+    topK(lex, "score_lex", "doc_id", HybridShortlist, "rank_lex")
+      .select(col("q_id"), col("doc_id"), col("rank_lex"))
   }
 
   /** RRF fusion over the shortlist union (Σ 1/(60 + rank), IEEE-exact)
@@ -1713,17 +1565,14 @@ object SimilarityQueries {
     */
   private def rrfFuse(lexTop: org.apache.spark.sql.DataFrame,
                       semTop: org.apache.spark.sql.DataFrame) = {
-    val wF = Window.partitionBy(col("q_id"))
-      .orderBy(col("rrf").desc, col("doc_id"))
-    lexTop.join(semTop, Seq("q_id", "doc_id"), "full_outer")
-      .withColumn("rrf",
-        coalesce(lit(1.0) / (lit(60.0) + col("rank_lex").cast("double")),
-                 lit(0.0)) +
-        coalesce(lit(1.0) / (lit(60.0) + col("rank_sem").cast("double")),
-                 lit(0.0)))
-      .withColumn("rank", row_number().over(wF))
-      .filter(col("rank") <= TopK)
-      .select(col("q_id"), col("rank").cast("long").as("rank"),
+    topK(lexTop.join(semTop, Seq("q_id", "doc_id"), "full_outer")
+        .withColumn("rrf",
+          coalesce(lit(1.0) / (lit(60.0) + col("rank_lex").cast("double")),
+                   lit(0.0)) +
+          coalesce(lit(1.0) / (lit(60.0) + col("rank_sem").cast("double")),
+                   lit(0.0))),
+        "rrf", "doc_id", TopK, "rank")
+      .select(col("q_id"), col("rank"),
               col("doc_id"), col("rank_lex"), col("rank_sem"),
               round(col("rrf"), 9).as("rrf_r"))
   }
@@ -1788,8 +1637,7 @@ object SimilarityQueries {
   // ---- IVF building blocks (shared by ann_topk_ivf / kmeans_step) ----
 
   private def embWithNorm(s: org.apache.spark.sql.SparkSession, dir: String) =
-    Tables.embeddings(s, dir)
-      .withColumn("nrm", sqrt(VectorOps.normSqDecimal(col("embedding")).cast("double")))
+    withNorm(Tables.embeddings(s, dir), "embedding")
 
   /** The LSH "index": every vector with its bucket id and norm —
     * materialized once per (session, dir) via [[Artifacts]] and shared
@@ -1800,10 +1648,19 @@ object SimilarityQueries {
     */
   private def lshIndexed(s: org.apache.spark.sql.SparkSession, dir: String) =
     Artifacts.materialized(s, dir, "emb_lsh_index") {
-      Tables.embeddings(s, dir)
-        .withColumn("bucket", VectorOps.lshBucket(col("embedding"), Dim, NPlanes))
-        .withColumn("nrm", sqrt(VectorOps.normSqDecimal(col("embedding")).cast("double")))
+      withNorm(Tables.embeddings(s, dir)
+        .withColumn("bucket", VectorOps.lshBucket(col("embedding"), Dim, NPlanes)),
+        "embedding")
     }
+
+  /** The LSH multi-probe query side: [[querySide]] of the first
+    * [[NQueries]] indexed vectors once per probed bucket — their own
+    * and the [[NPlanes]] buckets at Hamming distance 1.
+    */
+  private def lshProbeSide(indexed: DataFrame): DataFrame =
+    querySide(indexed.filter(col("vec_id") < NQueries), "embedding",
+      explode(array(col("bucket") +: (0 until NPlanes).map(j =>
+        col("bucket").bitwiseXOR(lit(1L << j))): _*)).as("bucket"))
 
   /** One-row frame holding every centroid (exact-decimal label means)
     * as a sorted struct array, with per-centroid norms precomputed —
@@ -1850,23 +1707,12 @@ object SimilarityQueries {
     */
   private def truncTopk(emb: org.apache.spark.sql.DataFrame,
                         d: Int): org.apache.spark.sql.DataFrame = {
-    val e = emb
-      .withColumn("te",
-        if (d == 64) col("embedding") else slice(col("embedding"), 1, d))
-      .withColumn("nrm",
-        sqrt(VectorOps.normSqDecimal(col("te")).cast("double")))
-    val q = e.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("te").as("q_emb"),
-        col("nrm").as("q_nrm"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    e.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos",
-        VectorOps.dotDecimal(col("q_emb"), col("te")).cast("double")
-          / (col("q_nrm") * col("nrm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
+    val e = withNorm(emb.withColumn("te",
+      if (d == 64) col("embedding") else slice(col("embedding"), 1, d)), "te")
+    val q = querySide(e.filter(col("vec_id") < NQueries), "te")
+    topK(e.crossJoin(broadcast(q))
+        .filter(col("vec_id") =!= col("q_id"))
+        .withColumn("cos", queryCos("te")), "cos", "vec_id", TopK, "rank")
       .select(col("q_id"), col("vec_id"))
   }
 
@@ -1922,8 +1768,7 @@ object SimilarityQueries {
                                  cents: org.apache.spark.sql.DataFrame) = {
     val ranked = emb.crossJoin(broadcast(cents))
       .withColumn("ccos",
-        VectorOps.dotDecimal(col("embedding"), col("centroid")).cast("double")
-          / (col("nrm") * col("cnorm")))
+        exactCos(col("embedding"), col("centroid"), col("nrm"), col("cnorm")))
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("vec_id"))
           .orderBy(col("ccos").desc, col("list_id"))))
@@ -2228,8 +2073,6 @@ object SimilarityQueries {
     */
   private[graft] def calinskiFinish(dims: org.apache.spark.sql.DataFrame,
                                     wss: org.apache.spark.sql.DataFrame) = {
-    def tieSafe(c: org.apache.spark.sql.Column, dp: Int) =
-      round(round(c, 12).cast("decimal(24,12)"), dp).cast("double")
     val g = dims.groupBy(col("i"))
       .agg(sum(col("sx")).as("gx"), sum(col("nk")).as("n"))
       .select(col("i"), round(col("gx").cast("double") / col("n"), 9).as("g"))
@@ -2264,8 +2107,6 @@ object SimilarityQueries {
     */
   private[graft] def daviesBouldinFinish(dims: org.apache.spark.sql.DataFrame,
                                          wss: org.apache.spark.sql.DataFrame) = {
-    def tieSafe(c: org.apache.spark.sql.Column, dp: Int) =
-      round(round(c, 12).cast("decimal(24,12)"), dp).cast("double")
     val sk = wss.withColumn("s_k", sqrt(col("w_k") / col("n_k")))
     val mx = dims.select(col("list_id").as("li"), col("i"), col("m"))
     val my = dims.select(col("list_id").as("lj"), col("i"), col("m").as("mj"))
@@ -2311,8 +2152,6 @@ object SimilarityQueries {
     */
   private[graft] def hopkinsStat(s: org.apache.spark.sql.SparkSession,
                                  dir: String) = {
-    def tieSafe(c: org.apache.spark.sql.Column, dp: Int) =
-      round(round(c, 12).cast("decimal(24,12)"), dp).cast("double")
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
     val box = emb.select(posexplode(col("embedding")).as(Seq("i", "x")))
       .groupBy(col("i"))
@@ -2359,34 +2198,31 @@ object SimilarityQueries {
             / (col("su") + col("sw")).cast("double"), 6)).as("hopkins_r"))
   }
 
-  /** IVF probe search (the `ann_topk_ivf` plan shape: broadcast probe
-    * join keyed on list_id) against an arbitrary (centroids, assigned
-    * lists) index pair — shared by `ann_topk_ivf_trained` and the
-    * append path `ann_index_append`, and by IvfAppendSpec's
-    * append-≡-rebuild identity proof.
+  /** IVF probe search (broadcast probe join keyed on list_id, top-
+    * [[TopK]] by exact cosine) against an arbitrary (centroids,
+    * assigned lists) index pair — `ann_topk_ivf` over the label-mean
+    * index, `ann_topk_ivf_trained`, the append path `ann_index_append`
+    * and its stream twin, and IvfAppendSpec's append-≡-rebuild
+    * identity proof.
     */
   private[graft] def ivfSearchOver(s: org.apache.spark.sql.SparkSession, dir: String)(
       centArr: org.apache.spark.sql.DataFrame,
-      assigned: org.apache.spark.sql.DataFrame) = {
-    val emb = embWithNorm(s, dir)
-    val qprobe = emb.filter(col("vec_id") < NQueries)
-      .crossJoin(broadcast(centArr))
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-              col("nrm").as("q_nrm"),
-              explode(slice(rankedListIds(col("embedding"), col("nrm")),
-                1, NProbe)).as("list_id"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    assigned.join(broadcast(qprobe), Seq("list_id"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos",
-        VectorOps.dotDecimal(col("q_emb"), col("embedding")).cast("double") /
-          (col("q_nrm") * col("nrm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
-      .select(col("q_id"), col("rank").cast("long").as("rank"),
+      assigned: org.apache.spark.sql.DataFrame) =
+    topK(ivfScored(s, dir)(centArr, assigned), "cos", "vec_id", TopK, "rank")
+      .select(col("q_id"), col("rank"),
               col("vec_id"), round(col("cos"), 6).as("cos_r"))
-  }
+
+  /** Every probed (query, candidate) pair of an IVF index with its
+    * exact `cos`, self excluded — the candidates [[ivfSearchOver]] and
+    * `search_hybrid_rrf_indexed` cut at their own depth.
+    */
+  private def ivfScored(s: org.apache.spark.sql.SparkSession, dir: String)(
+      centArr: DataFrame, assigned: DataFrame): DataFrame =
+    assigned.join(broadcast(
+        probeSide(embWithNorm(s, dir).filter(col("vec_id") < NQueries), centArr)),
+        Seq("list_id"))
+      .filter(col("vec_id") =!= col("q_id"))
+      .withColumn("cos", queryCos("embedding"))
 
   /** Ingest split for the index-append path: `vec_id % AppendMod ∈
     * {8, 9}` is "today's batch" (~20% of the corpus); the rest is the
@@ -2505,33 +2341,26 @@ object SimilarityQueries {
       centsFrameOf(scaledSeedsLong(embWithNorm(s, dir)))
     }
 
-  /** The corpus-proportional kNN graph: every vector's top-[[TopK]]
-    * neighbors via the probe join against the Bernoulli-gated lists
-    * (`emb_knn_graph`'s chain with [[scaledAssigned]] /
-    * [[scaledCentArr]] swapped in for the trained index). Exposed so
-    * the accuracy / intrinsic-dimension finishes ride ONE chain.
+  /** The kNN graph over an IVF index: every vector's top-[[TopK]]
+    * neighbours among the lists its [[NProbe]] nearest centroids of
+    * `centArr` hold (`emb_knn_graph`, and `emb_knn_graph_scaled` with
+    * the Bernoulli-gated lists). Exposed so the accuracy /
+    * intrinsic-dimension finishes ride ONE chain.
     */
-  private[graft] def knnGraphScaled(s: org.apache.spark.sql.SparkSession,
-                                    dir: String) = {
-    val assigned = scaledAssigned(s, dir)
-    val probes = embWithNorm(s, dir)
-      .crossJoin(broadcast(scaledCentArr(s, dir)))
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"),
-        explode(slice(rankedListIds(col("embedding"), col("nrm")),
-          1, NProbe)).as("list_id"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    assigned.join(probes, Seq("list_id"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos",
-        VectorOps.dotDecimal(col("q_emb"), col("embedding")).cast("double") /
-          (col("q_nrm") * col("nrm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
-      .select(col("q_id").as("src"), col("rank").cast("long").as("rank"),
+  private[graft] def knnGraphOver(s: org.apache.spark.sql.SparkSession, dir: String)(
+      centArr: DataFrame, assigned: DataFrame): DataFrame =
+    knnEdges(assigned, probeSide(embWithNorm(s, dir), centArr))
+
+  /** kNN edges (src, rank, dst, cos_r) from a corpus-sized probe side
+    * joined to the `assigned` lists on `list_id` — both sides are
+    * corpus-sized, so neither broadcasts.
+    */
+  private def knnEdges(assigned: DataFrame, probes: DataFrame): DataFrame =
+    topK(assigned.join(probes, Seq("list_id"))
+        .filter(col("vec_id") =!= col("q_id"))
+        .withColumn("cos", queryCos("embedding")), "cos", "vec_id", TopK, "rank")
+      .select(col("q_id").as("src"), col("rank"),
         col("vec_id").as("dst"), round(col("cos"), 6).as("cos_r"))
-  }
 
   /** Two-NN MLE intrinsic dimension (Facco et al. 2017) as a FINISH
     * over a (src, rank, cos_r) kNN-graph frame — `emb_intrinsic_dim`'s
@@ -2662,8 +2491,7 @@ object SimilarityQueries {
     */
   private[graft] def semanticHierAnchor(s: org.apache.spark.sql.SparkSession,
                                         dir: String) =
-    semanticDedupOver(hierAssigned(s, dir))((ea, eb, na, nb) =>
-      VectorOps.dotDecimal(ea, eb).cast("double") / (na * nb))
+    semanticDedupOver(hierAssigned(s, dir))(exactCos)
 
   /** The anchor's two-level assignment, exposed for the spec. */
   private[graft] def hierAssignedAnchor(s: org.apache.spark.sql.SparkSession,

@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.tables.Tables
 
 /** SQL-string surface: the engine's tables registered as temp views +

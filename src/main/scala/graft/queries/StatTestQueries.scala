@@ -1395,7 +1395,6 @@ object StatTestQueries {
     * (the anova convention).
     */
   private[graft] def friedmanFinish(e: DataFrame): DataFrame = {
-    val s = e.sparkSession
     // per-(user, type) mean response, 6-dp-quantized identically
     val cell = e.groupBy(col("user_id"), col("event_type"))
       .agg(round(asDouble(sum(dec(col("value"))))

@@ -194,6 +194,9 @@ object StreamingQueries {
       .unionByName(stage("3_purchase", col("t_purchase")))
   }
 
+  /** Guards the session conf while one replay sets its tuning. */
+  private val replayConfLock = new Object
+
   /** The one bounded-replay runner: drive `src` to completion through
     * `foreachBatch`, calling `onBatch(batch, batchId)` once per
     * micro-batch (a stateful `src`'s `batch` must be evaluated once —
@@ -213,7 +216,11 @@ object StreamingQueries {
     * The replay tuning below is captured when the query starts (into
     * the stream's cloned session, which also runs the `foreachBatch`
     * frames), so it is set around `start()` and the session's previous
-    * values are restored right after.
+    * values are restored right after. [[replayConfLock]] holds across
+    * set → `start()` → restore, so a replay starting at the same time
+    * on another thread cannot record this one's tuning as the
+    * session's previous values; `processAllAvailable` runs outside it,
+    * so replays still run in parallel.
     */
   private def replay(src: DataFrame, rocksdb: Boolean = false)
                     (onBatch: (DataFrame, Long) => Unit): Unit = {
@@ -262,16 +269,18 @@ object StreamingQueries {
        else Seq.empty)
     val ckpt = graft.Ephemeral.dir("graft-ckpt-")
     try {
-      val prev = tuning.map { case (k, _) => k -> s.conf.getOption(k) }
-      tuning.foreach { case (k, v) => s.conf.set(k, v) }
-      val q = try {
-        src.writeStream
-          .option("checkpointLocation", ckpt.toString)
-          .foreachBatch { (batch: DataFrame, bid: Long) => onBatch(batch, bid) }
-          .start()
-      } finally prev.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
+      val q = replayConfLock.synchronized {
+        val prev = tuning.map { case (k, _) => k -> s.conf.getOption(k) }
+        tuning.foreach { case (k, v) => s.conf.set(k, v) }
+        try {
+          src.writeStream
+            .option("checkpointLocation", ckpt.toString)
+            .foreachBatch { (batch: DataFrame, bid: Long) => onBatch(batch, bid) }
+            .start()
+        } finally prev.foreach {
+          case (k, Some(v)) => s.conf.set(k, v)
+          case (k, None) => s.conf.unset(k)
+        }
       }
       try q.processAllAvailable()
       finally q.stop()
@@ -375,7 +384,7 @@ object StreamingQueries {
     Artifacts.materialized(s, dir, "stream_cluster_cells") {
       val cents = SimilarityQueries.trainedCentArr(s, dir)
       partialsOf(embeddingsStream(s, dir, appendOnly = false)) { batch =>
-        SimilarityQueries.assignTo(withNorm(batch), cents)
+        SimilarityQueries.assignTo(SimilarityQueries.withNorm(batch, "embedding"), cents)
           .select(col("vec_id"), col("list_id"))
           .join(batch.select(col("vec_id"), col("label")), "vec_id")
           .groupBy(col("list_id"), col("label"))
@@ -523,13 +532,6 @@ object StreamingQueries {
       .select(col("v_user").as("user_id"), col("view_ms"), col("purchase_ms"))
   }
 
-  /** `batch` with each vector's norm `nrm` — the input shape of the
-    * frozen-centroid assignment and the silhouette partials.
-    */
-  private def withNorm(batch: DataFrame): DataFrame =
-    batch.withColumn("nrm",
-      sqrt(graft.functions.VectorOps.normSqDecimal(col("embedding")).cast("double")))
-
   /** The sum-merged (type, hour, count, decimal Σvalue) cells — one
     * state table, seven finishes over its 9-dp hourly mean series: ACF,
     * Ljung-Box, runs test, windowed Theil-Sen, STL, forecast evaluation,
@@ -557,7 +559,8 @@ object StreamingQueries {
     val st = Artifacts.materialized(s, dir, "stream_cluster_geom") {
       val cents = SimilarityQueries.trainedCentArr(s, dir)
       partialsOf(embeddingsStream(s, dir, appendOnly = false)) { batch =>
-        val assigned = SimilarityQueries.assignTo(withNorm(batch), cents)
+        val assigned =
+          SimilarityQueries.assignTo(SimilarityQueries.withNorm(batch, "embedding"), cents)
         val dimsP = assigned
           .select(col("list_id"), posexplode(col("embedding")).as(Seq("i", "x")))
           .groupBy(col("list_id"), col("i"))
@@ -1923,7 +1926,7 @@ object StreamingQueries {
       cents.count() // freeze the yardstick before the stream starts
       SimilarityQueries.silFinishOf(
         partialsOf(embeddingsStream(s, dir, appendOnly = false)) { batch =>
-          SimilarityQueries.silPartials(withNorm(batch), cents)
+          SimilarityQueries.silPartials(SimilarityQueries.withNorm(batch, "embedding"), cents)
         }
           .groupBy(col("list_id"))
           .agg(sum(col("n")).as("n"), sum(col("ssq")).as("ssq")))
@@ -1945,7 +1948,7 @@ object StreamingQueries {
       val centArr = SimilarityQueries.appendCentArr(s, dir)
       val streamed = partialsOf(
           embeddingsStream(s, dir, appendOnly = true)) { batch =>
-          SimilarityQueries.assignTo(withNorm(batch), centArr)
+          SimilarityQueries.assignTo(SimilarityQueries.withNorm(batch, "embedding"), centArr)
         }
       val appended = SimilarityQueries.appendBaseAssigned(s, dir)
         .unionByName(streamed)

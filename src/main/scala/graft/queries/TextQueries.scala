@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.tables.Tables
+import StatTestQueries.tieSafe
 import graft.text.TextOps
 import graft.operators.GlobalOrder
 
@@ -1684,7 +1685,6 @@ object TextQueries {
     // identical on both engines.
     "pipeline_curriculum" -> ((s, dir) => {
       import graft.operators.GlobalOrder
-      import org.apache.spark.sql.expressions.Window
       val q = qualityOf(Tables.documents(s, dir))
         .join(Tables.documents(s, dir).select(col("doc_id"), col("lang")),
               "doc_id")
@@ -1948,6 +1948,23 @@ object TextQueries {
       .limit(20)
   }
 
+  /** The BM25 weight of one (doc, term) row — idf times the
+    * length-normalized tf with k1 = 1.2 and b = 0.75 — from its `tf`,
+    * `dl`, `df` and the corpus `n_docs` / `sum_dl`, 9-dp-quantized to a
+    * decimal so per-doc sums are exact. Shared by the BM25 chain below
+    * and the hybrid search's lexical shortlist.
+    */
+  private[graft] def bm25Weight: org.apache.spark.sql.Column = {
+    val avgdl = col("sum_dl").cast("double") / col("n_docs")
+    val idf = log(lit(1.0) +
+      ((col("n_docs") - col("df")).cast("double") + lit(0.5)) /
+      (col("df").cast("double") + lit(0.5)))
+    val tfn = col("tf").cast("double") * lit(2.2) /
+      (col("tf").cast("double") + lit(1.2) *
+        (lit(1.0) - lit(0.75) + lit(0.75) * (col("dl").cast("double") / avgdl)))
+    round(idf * tfn, 9).cast("decimal(28,9)")
+  }
+
   /** BM25-scored per-doc aggregate (doc_id, n_terms_hit, score_d) for
     * the fixed query terms — the chain text_bm25 ranks and search_ndcg
     * evaluates.
@@ -1965,17 +1982,7 @@ object TextQueries {
       .join(dl, "doc_id")
       .join(broadcast(df), "token")
       .crossJoin(broadcast(stats))
-      .withColumn("avgdl", col("sum_dl").cast("double") / col("n_docs"))
-      .withColumn("idf", log(lit(1.0) +
-        ((col("n_docs") - col("df")).cast("double") + lit(0.5)) /
-        (col("df").cast("double") + lit(0.5))))
-      .withColumn("tfn",
-        col("tf").cast("double") * lit(2.2) /
-          (col("tf").cast("double") + lit(1.2) *
-            (lit(1.0) - lit(0.75) +
-             lit(0.75) * (col("dl").cast("double") / col("avgdl")))))
-      .withColumn("contrib_q",
-        round(col("idf") * col("tfn"), 9).cast("decimal(28,9)"))
+      .withColumn("contrib_q", bm25Weight)
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_terms_hit"), sum(col("contrib_q")).as("score_d"))
   }
@@ -2224,8 +2231,6 @@ object TextQueries {
     */
   private[graft] def chao1Finish(cells: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    def tieSafe(c: org.apache.spark.sql.Column, dp: Int) =
-      round(round(c, 12).cast("decimal(24,12)"), dp).cast("double")
     cells.groupBy(col("source"))
       .agg(count(lit(1)).as("vocab"),
         sum(when(col("cnt") === 1, 1L).otherwise(0L)).as("f1"),
@@ -2259,8 +2264,6 @@ object TextQueries {
   private[graft] def burstinessFinish(docTok: org.apache.spark.sql.DataFrame,
                                       nDocs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    def tieSafe(c: org.apache.spark.sql.Column, dp: Int) =
-      round(round(c, 12).cast("decimal(24,12)"), dp).cast("double")
     docTok.groupBy(col("tok"))
       .agg(count(lit(1)).as("df"), sum(col("c")).as("tf"),
         sum(col("c").cast("decimal(38,0)") * col("c")).as("sc2"))

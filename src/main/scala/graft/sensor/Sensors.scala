@@ -32,12 +32,6 @@ object Sensors {
   val NumSteps: Int = 10      // sawtooth steps (TimingExplorer.java:131)
   val TwoPi: Double = 2.0 * math.Pi
 
-  /** Raw ticks ≙ DataPoint<Long> stream: (i, ts_ms). */
-  def ticks(spark: SparkSession, n: Long): DataFrame =
-    spark.range(n).select(
-      col("id").as("i"),
-      (lit(T0Ms) + col("id") * PeriodMs).as("ts_ms"))
-
   /** Sawtooth phase column ≙ SawtoothFunction. */
   def sawtoothPhase(i: Column, numSteps: Int = NumSteps): Column =
     (i % numSteps).cast("double") / numSteps
@@ -45,18 +39,30 @@ object Sensors {
   /** Sine transform ≙ SineWaveFunction. */
   def sineWave(phase: Column): Column = sin(phase * TwoPi)
 
-  /** The two keyed series + union, ≙ the full generateSensorData DAG.
-    * Output schema: key string, ts_ms long, ts timestamp(ms), value double.
+  /** The generator's column algebra on any tick frame whose long
+    * `value` is the tick index (the rate sources' shape) ≙ the full
+    * generateSensorData DAG: event time a pure function of the tick
+    * index, the sawtooth and sine keyed series, and their union.
+    * Output schema: key string, ts_ms long, value double, ts
+    * timestamp(ms).
     */
-  def sensorPoints(spark: SparkSession, n: Long): DataFrame = {
-    val base = ticks(spark, n)
+  def pointsOf(ticks: DataFrame): DataFrame = {
+    val base = ticks
+      .select(col("value").as("i"),
+              (lit(T0Ms) + col("value") * PeriodMs).as("ts_ms"))
       .withColumn("phase", sawtoothPhase(col("i")))
-    val temp = base.select(
-      lit("temp").as("key"), col("ts_ms"), col("phase").as("value"))
-    val pressure = base.select(
-      lit("pressure").as("key"), col("ts_ms"), sineWave(col("phase")).as("value"))
+    val temp = base.select(lit("temp").as("key"), col("ts_ms"), col("phase").as("value"))
+    val pressure = base.select(lit("pressure").as("key"), col("ts_ms"),
+      sineWave(col("phase")).as("value"))
     temp.unionByName(pressure)
       .withColumn("ts", timestamp_millis(col("ts_ms")))
-      .select(col("key"), col("ts"), col("ts_ms"), col("value"))
   }
+
+  /** The batch twin over ticks 0 until n: [[pointsOf]] of
+    * `spark.range(n)`. Output schema: key string, ts timestamp(ms),
+    * ts_ms long, value double.
+    */
+  def sensorPoints(spark: SparkSession, n: Long): DataFrame =
+    pointsOf(spark.range(n).select(col("id").as("value")))
+      .select(col("key"), col("ts"), col("ts_ms"), col("value"))
 }

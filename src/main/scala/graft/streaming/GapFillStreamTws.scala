@@ -70,7 +70,7 @@ class GapFillProcessor(gridOriginMs: Long, bucketMs: Long)
   override def handleExpiredTimer(key: String, timers: TimerValues,
                                   expired: ExpiredTimerInfo): Iterator[Out] = {
     val wm = timers.getCurrentWatermarkInMs()
-    var cur = cursor.get()
+    val cur = cursor.get()
     val out = Seq.newBuilder[Out]
     var next = cur.next
     var hasCarry = cur.hasCarry

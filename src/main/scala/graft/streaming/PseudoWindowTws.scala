@@ -50,7 +50,7 @@ class PseudoWindowProcessor(durationMs: Long)
 
   override def handleExpiredTimer(key: String, timers: TimerValues,
                                   expired: ExpiredTimerInfo): Iterator[WindowCount] = {
-    val end = expired.getExpiryTimeInMs
+    val end = expired.getExpiryTimeInMs()
     if (counts.containsKey(end)) {
       val cnt = counts.getValue(end)
       counts.removeKey(end)

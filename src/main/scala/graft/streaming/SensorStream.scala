@@ -22,33 +22,17 @@ import graft.sensor.Sensors
   */
 object SensorStream {
 
-  /** The generator pipeline on a streaming source: [[pointsOf]] driven
-    * by the rate-micro-batch offset.
+  /** The generator pipeline on a streaming source:
+    * [[graft.sensor.Sensors.pointsOf]] driven by the rate-micro-batch
+    * offset — the batch twin's algebra, verbatim.
     */
   def sensorPointsStream(spark: SparkSession, rowsPerBatch: Int = 10): DataFrame =
-    pointsOf(spark.readStream
+    Sensors.pointsOf(spark.readStream
       .format("rate-micro-batch")
       .option("rowsPerBatch", rowsPerBatch)
       .option("startTimestamp", Sensors.T0Ms)
       .option("advanceMillisPerBatch", rowsPerBatch * Sensors.PeriodMs)
       .load())
-
-  /** The generator's column algebra on any tick stream whose long
-    * `value` is the tick index (the rate sources' shape): identical to
-    * the batch twin (Sensors.sensorPoints — same sawtooth, sine, keys,
-    * union), with event time a pure function of the tick index.
-    */
-  def pointsOf(ticks: DataFrame): DataFrame = {
-    val base = ticks
-      .select(col("value").as("i"),
-              (lit(Sensors.T0Ms) + col("value") * Sensors.PeriodMs).as("ts_ms"))
-      .withColumn("phase", Sensors.sawtoothPhase(col("i")))
-    val temp = base.select(lit("temp").as("key"), col("ts_ms"), col("phase").as("value"))
-    val pressure = base.select(lit("pressure").as("key"), col("ts_ms"),
-      Sensors.sineWave(col("phase")).as("value"))
-    temp.unionByName(pressure)
-      .withColumn("ts", timestamp_millis(col("ts_ms")))
-  }
 
   /** Event-time 1 s tumbling count ≙ PseudoWindow(eventTime=true)
     * (SURVEY.md §2 #8): watermark-gated append-mode emission is the

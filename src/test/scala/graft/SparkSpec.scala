@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for specs — one JVM-wide SparkSession (local[4],
-  * UTC, small shuffle fan-out) like the driver harness uses.
+/** Shared session for specs — one JVM-wide SparkSession, the mains'
+  * own `Harness.session(4)`.
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
@@ -13,16 +13,10 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // short-lived streaming tests never upload snapshots; silence the
-      // per-second coordinator lag warnings
-      .config("spark.sql.streaming.stateStore.coordinatorReportSnapshotUploadLag", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = Harness.session(4)
+    // short-lived streaming tests never upload snapshots; silence the
+    // per-second coordinator lag warnings
+    s.conf.set("spark.sql.streaming.stateStore.coordinatorReportSnapshotUploadLag", "false")
     s
   }
 }

@@ -104,7 +104,9 @@ class DecimalDotProductSpec extends SparkSpec {
   }
 
   test("registers as a SQL function") {
-    DecimalDotProduct.register(spark)
+    graft.GraftExtensions.functions.foreach { case (id, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
+    }
     emb.limit(5).createOrReplaceTempView("ddp_test")
     val rows = spark.sql(
       "SELECT vec_dot_decimal(embedding, embedding) AS d FROM ddp_test").collect()

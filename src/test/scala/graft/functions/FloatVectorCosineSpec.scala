@@ -25,7 +25,9 @@ class FloatVectorCosineSpec extends SparkSpec {
   }
 
   test("registers as a SQL function") {
-    FloatVectorCosine.register(spark)
+    graft.GraftExtensions.functions.foreach { case (id, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
+    }
     emb.limit(5).createOrReplaceTempView("fvc_test")
     val self = spark.sql(
       "SELECT vec_cosine(embedding, embedding) AS c FROM fvc_test")

@@ -16,7 +16,8 @@ import graft.tables.Tables
   * zero-batch edge, cleanup of its scratch, partials that outlive the
   * catalog cache, batch-id order, merge(partials) ≡ batch, a stateful
   * append stream's output ≡ its batch aggregation, the carried-state
-  * folds ≡ their batch twins, and a session left as it was found.
+  * folds ≡ their batch twins, and a session left as it was found —
+  * also when two replays start at once on two threads.
   */
 class PartialsOfSpec extends SparkSpec {
 
@@ -78,7 +79,9 @@ class PartialsOfSpec extends SparkSpec {
     assert(got == Seq((0L, 0L, 9L), (1L, 10L, 19L), (2L, 20L, 29L)))
   }
 
-  test("a sum-merged builder equals its batch computation") {
+  /** Replays the events stream through a sum-merged per-type builder
+    * and checks the merge against the batch computation. */
+  private def checkSumMerged(): Unit = {
     val byType = (b: DataFrame) => b.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("event_id")).as("s"))
     val merged = StreamingQueries.partialsOf(StreamingQueries.eventsStream(spark, sf))(byType)
@@ -88,23 +91,34 @@ class PartialsOfSpec extends SparkSpec {
     assert(merged.count() > 1)
   }
 
-  test("an append-mode windowed count with a watermark equals the batch aggregation") {
+  /** Replays an append-mode windowed count (stateful, on the state
+    * store `rocksdb` picks) and checks it against the batch
+    * aggregation. */
+  private def checkWindowed(rocksdb: Boolean): Unit = {
     val windowed = StreamingQueries.eventsStream(spark, sf)
       .withWatermark("ts", "0 seconds")
       .groupBy(col("event_type"), window(col("ts"), "1 hour"))
       .agg(count(lit(1)).as("cnt"))
       .select(col("event_type"), unix_millis(col("window.start")).as("start_ms"), col("cnt"))
-    val streamed = StreamingQueries.partialsOf(windowed)(identity)
+    val streamed = StreamingQueries.partialsOf(windowed, rocksdb)(identity)
     // append emits a window once the final watermark (max ts, 0 s
     // delay) reaches its end
     val ev = Tables.events(spark, sf)
-    val maxMs = ev.agg(max(col("ts_ms"))).head.getLong(0)
+    val maxMs = ev.agg(max(col("ts_ms"))).head().getLong(0)
     val batch = ev
       .groupBy(col("event_type"), (col("ts_ms") - col("ts_ms") % 3600000L).as("start_ms"))
       .agg(count(lit(1)).as("cnt"))
       .filter(col("start_ms") + 3600000L <= maxMs)
     assert(batch.count() > 1)
     assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
+  }
+
+  test("a sum-merged builder equals its batch computation") {
+    checkSumMerged()
+  }
+
+  test("an append-mode windowed count with a watermark equals the batch aggregation") {
+    checkWindowed(rocksdb = false)
   }
 
   // the replay's tuning keys, all set around start() only
@@ -140,6 +154,28 @@ class PartialsOfSpec extends SparkSpec {
     val got = leavesNothing(
       StreamingQueries.partialsOf(stream(src), rocksdb = true)(identity).count())
     assert(got == 20)
+  }
+
+  test("two replays started at once on two threads keep their results and the session conf") {
+    val conf = tunedConf()
+    // each round lines both replays up at one barrier and holds the
+    // second back a little longer, so across rounds its start lands
+    // inside the first one's set → start() → restore window
+    Seq(0L, 5L, 10L, 20L, 40L, 80L).foreach { lagMs =>
+      val gate = new java.util.concurrent.CyclicBarrier(2)
+      val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      val threads = Seq[(Long, () => Unit)](
+        0L -> (() => checkSumMerged()),
+        lagMs -> (() => checkWindowed(rocksdb = true))
+      ).map { case (wait, body) => new Thread(() =>
+        try { gate.await(); Thread.sleep(wait); body() }
+        catch { case t: Throwable => errors.add(t) })
+      }
+      threads.foreach(_.start())
+      threads.foreach(_.join())
+      errors.asScala.headOption.foreach(t => throw t)
+      assert(tunedConf() == conf, s"a ${lagMs} ms lag left the replay tuning set")
+    }
   }
 
   private def sameRows(a: DataFrame, b: DataFrame): Unit = {

@@ -56,7 +56,7 @@ class StateInspectSpec extends SparkSpec {
       .map { case (ident, _, builder) => ident.funcName -> builder }.toMap
     assert(byName.keySet == Set("vec_cosine", "vec_dot_decimal", "simhash32",
       "minhash_sig", "shingle_hashes", "centroid_ranks", "pq_encode",
-      "jaro_winkler"))
+      "jaro_winkler", "nfc_normalize"))
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.types._
     val vec = Literal.create(Seq(1f, 0f), ArrayType(FloatType))
