@@ -3,7 +3,7 @@ package graft.queries
 import java.nio.file.{Files, Path}
 import java.nio.file.attribute.FileTime
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.streaming.{CusumStream, EwmaStream, FunnelStream, GapFillStream, PseudoWindow}
@@ -293,9 +293,10 @@ object StreamingQueries {
 
   /** Drive `src` through one bounded replay and return the union of the
     * per-micro-batch partials `build(batch)`, in batch-id order.
-    * Callers apply their merge law (SUM / max / distinct) to the
-    * returned frame — the partials are the observable model of
-    * per-key streaming-agg state, with the sink as the state boundary.
+    * Callers apply their merge law to the returned frame — [[merged]]
+    * for the per-column SUM / max laws, `distinct` for set union — the
+    * partials are the observable model of per-key streaming-agg state,
+    * with the sink as the state boundary.
     * A stateful `src` already emits its own rows (append mode), so
     * `partialsOf(src)(identity)` is that stream's complete output.
     * `rocksdb` selects the RocksDB state store (the `transformWithState`
@@ -331,20 +332,13 @@ object StreamingQueries {
                         (build: DataFrame => DataFrame): DataFrame =
     partialsOfEach(src, rocksdb)((batch, _) => build(batch)).head
 
-  /** [[partialsOf]] with the micro-batch id passed to the builder —
-    * for twins whose downstream finish needs the per-worker (per
-    * micro-batch) shard identity, e.g. `stream_quality_lr`'s
-    * federated gradient merge over stored worker feature shards.
+  /** [[partialsOf]] for several builders over ONE replay, each passed
+    * the micro-batch id too (`stream_quality_lr` tags its worker
+    * shards with it): one partials frame per builder, each seeded and
+    * ordered the same way. Each builder reads `batch` itself, so a
+    * stateful `src` takes one.
     */
-  private[graft] def partialsOfIndexed(src: DataFrame)
-                        (build: (DataFrame, Long) => DataFrame): DataFrame =
-    partialsOfEach(src)(build).head
-
-  /** [[partialsOfIndexed]] for several builders over ONE replay: one
-    * partials frame per builder, each seeded and ordered the same way.
-    * Each builder reads `batch` itself, so a stateful `src` takes one.
-    */
-  private def partialsOfEach(src: DataFrame, rocksdb: Boolean = false)
+  private[graft] def partialsOfEach(src: DataFrame, rocksdb: Boolean = false)
                             (builds: ((DataFrame, Long) => DataFrame)*): Seq[DataFrame] = {
     val empty = src.sparkSession.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](), src.schema)
@@ -361,6 +355,24 @@ object StreamingQueries {
     }
   }
 
+  /** The one per-column merge law over replay partials: `parts`
+    * grouped by `keys`, every other column folded by `law` (`sum` for
+    * additive state, `max` for flags, registers and block maxima) under
+    * its own name, in `parts`' schema order. Applied through
+    * `Dataset.transform`; a merge that mixes laws or casts its result
+    * spells its `agg` out instead.
+    */
+  private[graft] def merged(law: Column => Column, keys: String*)
+                           (parts: DataFrame): DataFrame = {
+    val values = parts.columns.filterNot(keys.contains).toSeq
+    require(keys.distinct.size == keys.size && keys.forall(parts.columns.contains) &&
+      values.nonEmpty,
+      s"merge keys ${keys.mkString("(", ", ", ")")} must be distinct columns of " +
+        s"${parts.columns.mkString("(", ", ", ")")} that leave a value column")
+    val folds = values.map(c => law(col(c)).as(c))
+    parts.groupBy(keys.map(col): _*).agg(folds.head, folds.tail: _*)
+  }
+
   /* Shared state tables. Where a FAMILY of twins maintains the
    * IDENTICAL state table (same source, same per-batch builder, same
    * merge law) and differs only in its serving finish, the merged state
@@ -370,7 +382,9 @@ object StreamingQueries {
    * consumer replays the state through the full NumSplits micro-batch
    * ingest, and every twin's oracle still checks its complete finish
    * end-to-end. Each `streamed*` function below is one family; its
-   * `Artifacts.materialized` key names it.
+   * `Artifacts.materialized` key names it. A sum- or max-merged table
+   * merges through [[merged]]; only the mixed-law (survival spans) and
+   * re-cast (cluster geometry) tables spell their `agg` out.
    */
 
   /** The SUM-MERGED streamed (list_id, label, nij) contingency cells
@@ -390,8 +404,7 @@ object StreamingQueries {
           .groupBy(col("list_id"), col("label"))
           .agg(count(lit(1)).as("nij"))
       }
-        .groupBy(col("list_id"), col("label"))
-        .agg(sum(col("nij")).as("nij"))
+        .transform(merged(sum, "list_id", "label"))
     }
 
   /** The sum-merged streamed (type, value, cr, cc) half-count grid
@@ -412,8 +425,7 @@ object StreamingQueries {
           .select(col("event_type"), col("event_id"), col("ts_ms"), col("value"))) {
         batch => EventQueries.ksGrid(EventQueries.psiHalved(batch, split))
       }
-        .groupBy(col("event_type"), col("value"))
-        .agg(sum(col("cr")).as("cr"), sum(col("cc")).as("cc"))
+        .transform(merged(sum, "event_type", "value"))
     }
 
   /** The merged (min first_ts, max last_ts) per-(type, user) span
@@ -441,9 +453,7 @@ object StreamingQueries {
         eventsStream(s, dir)
           .filter(col("value").isNotNull)
           .select(col("event_type"), dec(col("value")).as("v")))(StatTestQueries.anovaStats)
-        .groupBy(col("event_type"))
-        .agg(sum(col("n")).as("n"), sum(col("sv")).as("sv"),
-          sum(col("qv")).as("qv"))
+        .transform(merged(sum, "event_type"))
     }
 
   /** The sum-merged (type, value, c_tv) count grid — one state table,
@@ -454,8 +464,7 @@ object StreamingQueries {
       partialsOf(
         eventsStream(s, dir).filter(col("value").isNotNull)
           .select(col("event_type"), col("value")))(StatTestQueries.kwCells)
-        .groupBy(col("event_type"), col("value"))
-        .agg(sum(col("c_tv")).as("c_tv"))
+        .transform(merged(sum, "event_type", "value"))
     }
 
   /** The union-merged distinct (user, item) exposure state — one
@@ -476,8 +485,7 @@ object StreamingQueries {
     Artifacts.materialized(s, dir, "stream_user_totals") {
       partialsOf(
         eventsStream(s, dir).select(col("user_id"), col("value")))(EventQueries.giniCells)
-        .groupBy(col("user_id"))
-        .agg(sum(col("x")).as("x"))
+        .transform(merged(sum, "user_id"))
     }
 
   /** The sum-merged (source, token, cnt) vocabulary cells — one state
@@ -486,8 +494,7 @@ object StreamingQueries {
   private def streamedLexdivCells(s: SparkSession, dir: String): DataFrame =
     Artifacts.materialized(s, dir, "stream_lexdiv_cells") {
       partialsOf(documentsStream(s, dir))(TextQueries.lexdivCells)
-        .groupBy(col("source"), col("tok"))
-        .agg(sum(col("cnt")).as("cnt"))
+        .transform(merged(sum, "source", "tok"))
     }
 
   /** Events as (key = type, tsMs, value, ts) points under a 0 s
@@ -542,8 +549,7 @@ object StreamingQueries {
       partialsOf(
         eventsStream(s, dir)
           .select(col("event_type"), col("ts_ms"), col("value")))(EventQueries.hourlyCells)
-        .groupBy(col("event_type"), col("hour_ms"))
-        .agg(sum(col("nh")).as("nh"), sum(col("s_dec")).as("s_dec"))
+        .transform(merged(sum, "event_type", "hour_ms"))
     }
 
   /** The SUM-MERGED streamed geometric sufficient statistics against
@@ -876,13 +882,13 @@ object StreamingQueries {
     // the merged registers are the sketch state a streaming agg holds
     // per-key; the per-batch partials model it observably.
     "stream_hll_users" -> ((s, dir) => {
-      val merged = partialsOf(
+      val state = partialsOf(
           eventsStream(s, dir).select(col("user_id"))) {
           batch => EventQueries.hllRegisters(batch)
             .groupBy(col("reg")).agg(max(col("rho")).as("mj"))
         }
-        .groupBy(col("reg")).agg(max(col("mj")).as("mj"))
-      EventQueries.hllFinish(merged,
+        .transform(merged(max, "reg"))
+      EventQueries.hllFinish(state,
         Tables.events(s, dir)
           .agg(countDistinct(col("user_id")).as("true_distinct")))
     }),
@@ -896,16 +902,15 @@ object StreamingQueries {
     // audit against the exact top-10 shares sketch_cms_tokens' oracle
     // — merge(partials) ≡ batch sketch, hash-proven.
     "stream_cms_tokens" -> ((s, dir) => {
-      val merged = partialsOf(
+      val state = partialsOf(
           documentsStream(s, dir)
             .select(explode(graft.text.TextOps.tokens(col("text"))).as("token"))) {
           batch => TextQueries.cmsBuckets(batch)
             .groupBy(col("r"), col("bucket"))
             .agg(count(lit(1)).as("counter"))
         }
-        .groupBy(col("r"), col("bucket"))
-        .agg(sum(col("counter")).as("counter"))
-      TextQueries.cmsAudit(merged,
+        .transform(merged(sum, "r", "bucket"))
+      TextQueries.cmsAudit(state,
         Tables.documents(s, dir)
           .select(explode(graft.text.TextOps.tokens(col("text"))).as("token")))
     }),
@@ -944,17 +949,11 @@ object StreamingQueries {
     // — and compacting it to one row per series is itself just the
     // merge. Shares `events_regression`'s oracle: the hash match
     // proves online moment accumulation ≡ one-pass batch training.
-    "stream_regression" -> ((s, dir) => {
-      val merged = partialsOf(
+    "stream_regression" -> ((s, dir) =>
+      EventQueries.regressionFinish(EventQueries.momentsAsDoubles(partialsOf(
           eventsStream(s, dir)
             .select(col("event_type"), col("ts_ms"), col("value")))(EventQueries.regressionMoments)
-        .groupBy(col("event_type"))
-        .agg(sum(col("n")).as("n"),
-             sum(col("sx_d")).as("sx_d"), sum(col("sy_d")).as("sy_d"),
-             sum(col("sxy_d")).as("sxy_d"), sum(col("sxx_d")).as("sxx_d"),
-             sum(col("syy_d")).as("syy_d"))
-      EventQueries.regressionFinish(EventQueries.momentsAsDoubles(merged))
-    }),
+        .transform(merged(sum, "event_type"))))),
 
     // STREAMING BOOTSTRAP — resampling-based uncertainty as a sketch:
     // every (event, replicate) Poisson weight is a pure row function,
@@ -1052,8 +1051,7 @@ object StreamingQueries {
       StatTestQueries.chisqFinish(
         partialsOf(
           eventsStream(s, dir).filter(col("value").isNotNull))(StatTestQueries.chisqCells)
-          .groupBy(col("event_type"), col("bucket"))
-          .agg(sum(col("o")).as("o")))
+          .transform(merged(sum, "event_type", "bucket")))
     }),
 
     // STREAMING IMPORTANCE WEIGHTS — per-batch per-lang doc counts
@@ -1064,8 +1062,7 @@ object StreamingQueries {
     "stream_importance" -> ((s, dir) => {
       DedupQueries.importanceFinish(
         partialsOf(documentsStream(s, dir).select(col("lang")))(DedupQueries.langCells)
-          .groupBy(col("lang"))
-          .agg(sum(col("n_docs")).as("n_docs")))
+          .transform(merged(sum, "lang")))
     }),
 
     // STREAMING JSD DRIFT — per-batch per-token half-split counts
@@ -1076,8 +1073,7 @@ object StreamingQueries {
       TextQueries.jsdFinish(
         partialsOf(documentsStream(s, dir)
             .select(col("doc_id"), col("text")))(TextQueries.jsdCells)
-          .groupBy(col("tok"))
-          .agg(sum(col("ca")).as("ca"), sum(col("cb")).as("cb")))
+          .transform(merged(sum, "tok")))
     }),
 
     // STREAMING BENFORD — per-batch (type, first-digit) integer-math
@@ -1089,8 +1085,7 @@ object StreamingQueries {
       StatTestQueries.benfordFinish(
         partialsOf(
           eventsStream(s, dir).filter(col("value").isNotNull))(StatTestQueries.benfordCells)
-          .groupBy(col("event_type"), col("digit"))
-          .agg(sum(col("cnt")).as("cnt")))
+          .transform(merged(sum, "event_type", "digit")))
     }),
 
     // STREAMING SPRT — the sequential test run the way Wald designed
@@ -1170,8 +1165,7 @@ object StreamingQueries {
         partialsOf(
           eventsStream(s, dir)
             .select(col("user_id"), col("ts_ms"), col("value")))(EventQueries.ltvUserDays)
-          .groupBy(col("user_id"), col("day_ms"))
-          .agg(sum(col("rev")).as("rev")))
+          .transform(merged(sum, "user_id", "day_ms")))
     }),
 
     // STREAMING KAPLAN-MEIER — survival under ingest: per-batch
@@ -1219,8 +1213,7 @@ object StreamingQueries {
           batch => StatTestQueries.mhCells(
             EventQueries.psiHalved(batch, split))
         }
-          .groupBy(col("half"), col("variant"), col("user_id"))
-          .agg(max(col("conv")).as("conv")))
+          .transform(merged(max, "half", "variant", "user_id")))
     }),
 
     // STREAMING KENDALL τ-b — the contingency grid is additive (the
@@ -1232,8 +1225,7 @@ object StreamingQueries {
           eventsStream(s, dir)
             .filter(col("value").isNotNull)
             .select(col("event_type"), col("ts_ms"), col("value")))(StatTestQueries.kendallCells)
-          .groupBy(col("event_type"), col("vb"), col("hb"))
-          .agg(sum(col("o")).as("o")))),
+          .transform(merged(sum, "event_type", "vb", "hb")))),
 
     // STREAMING HILL TAIL INDEX — per-(type, user) activity counts
     // are sum-merge state; the frequency re-grid and the top-k count
@@ -1247,8 +1239,7 @@ object StreamingQueries {
           batch.groupBy(col("event_type"), col("user_id"))
             .agg(count(lit(1)).as("x"))
         }
-          .groupBy(col("event_type"), col("user_id"))
-          .agg(sum(col("x")).as("x"))
+          .transform(merged(sum, "event_type", "user_id"))
           .groupBy(col("event_type"), col("x"))
           .agg(count(lit(1)).as("cnt")))),
 
@@ -1261,10 +1252,7 @@ object StreamingQueries {
         partialsOf(
           eventsStream(s, dir)
             .select(col("event_type"), col("value")))(StatTestQueries.momentCells)
-          .groupBy(col("event_type"))
-          .agg(sum(col("n")).as("n"), sum(col("s1")).as("s1"),
-            sum(col("q2")).as("q2"), sum(col("q3")).as("q3"),
-            sum(col("q4")).as("q4")))),
+          .transform(merged(sum, "event_type")))),
 
     // STREAMING GUMBEL FIT — daily block maxima are MAX-merge state
     // (the stream_dedup/odds-ratio max law on decimals); the MoM
@@ -1275,8 +1263,7 @@ object StreamingQueries {
         partialsOf(
           eventsStream(s, dir)
             .select(col("event_type"), col("ts_ms"), col("value")))(StatTestQueries.gumbelCells)
-          .groupBy(col("event_type"), col("day"))
-          .agg(max(col("mx")).as("mx")))),
+          .transform(merged(max, "event_type", "day")))),
 
     // STREAMING SIGN TEST — the (type, hod, half) sum/count cells
     // are additive against the frozen split; the exact cross-product
@@ -1297,8 +1284,7 @@ object StreamingQueries {
           batch => StatTestQueries.signCells(
             EventQueries.psiHalved(batch, split))
         }
-          .groupBy(col("event_type"), col("hod"), col("half"))
-          .agg(sum(col("sv")).as("sv"), sum(col("cnt")).as("cnt")))
+          .transform(merged(sum, "event_type", "hod", "half")))
     }),
 
     // STREAMING BURSTINESS — per-(token, doc) counts are sum-merge
@@ -1316,8 +1302,7 @@ object StreamingQueries {
             .groupBy(col("tok"), col("doc_id"))
             .agg(count(lit(1)).as("c"))
         }
-          .groupBy(col("tok"), col("doc_id"))
-          .agg(sum(col("c")).as("c")),
+          .transform(merged(sum, "tok", "doc_id")),
         nDocs)
     }),
 
@@ -1340,8 +1325,7 @@ object StreamingQueries {
           batch => batch.groupBy(col("event_type"), col("v"))
             .agg(count(lit(1)).as("cnt"))
         }
-          .groupBy(col("event_type"), col("v"))
-          .agg(sum(col("cnt")).as("cnt")))
+          .transform(merged(sum, "event_type", "v")))
     }),
 
     // STREAMING CLASSIFIER TRAINING — the data-parallel /
@@ -1371,27 +1355,19 @@ object StreamingQueries {
       // Values bit-identical (decimal sums associative; oracle-pinned
       // at 3 SFs).
       val feats = Artifacts.materialized(s, dir, "stream_lr_worker_feats") {
-        partialsOfIndexed(documentsStream(s, dir)) {
+        partialsOfEach(documentsStream(s, dir)) {
           (batch, bid) =>
             TextQueries.lrFeaturesOf(batch).withColumn("worker", lit(bid))
-        }
+        }.head
       }
       val beta0 = s.range(1).select(
         lit(0.0).as("b0"), lit(0.0).as("b1"), lit(0.0).as("b2"))
       val betaF = (1 to 2).foldLeft(beta0) { (b, _) =>
-        val merged = TextQueries.lrPartialsBy(feats, b, col("worker"))
-          .groupBy(col("b0"), col("b1"), col("b2"))
-          .agg(sum(col("g0")).as("g0"), sum(col("g1")).as("g1"),
-               sum(col("g2")).as("g2"), sum(col("h00")).as("h00"),
-               sum(col("h01")).as("h01"), sum(col("h02")).as("h02"),
-               sum(col("h11")).as("h11"), sum(col("h12")).as("h12"),
-               sum(col("h22")).as("h22"))
-        TextQueries.lrSolve(merged)
+        TextQueries.lrSolve(TextQueries.lrPartialsBy(feats, b, col("worker"))
+          .drop("worker").transform(merged(sum, "b0", "b1", "b2")))
       }
       val sc = TextQueries.lrScorePartialsBy(feats, betaF, col("worker"))
-        .groupBy(col("b0"), col("b1"), col("b2"))
-        .agg(sum(col("n_c")).as("n_c"), sum(col("np")).as("np"),
-             sum(col("lls")).as("lls"), sum(col("accs")).as("accs"))
+        .drop("worker").transform(merged(sum, "b0", "b1", "b2"))
       TextQueries.lrScoreFinish(sc)
     }),
 
@@ -1402,13 +1378,10 @@ object StreamingQueries {
     // `events_entropy_mi`'s oracle — merge(partials) ≡ batch count
     // agg, hash-proven, extending the mergeability suite from
     // frequency (CMS) and cardinality (HLL) to information measures.
-    "stream_entropy_mi" -> ((s, dir) => {
-      val merged = partialsOf(
+    "stream_entropy_mi" -> ((s, dir) =>
+      EventQueries.entropyFinish(partialsOf(
           eventsStream(s, dir).select(col("event_type"), col("ts_ms")))(EventQueries.entropyCells)
-        .groupBy(col("event_type"), col("hour"))
-        .agg(sum(col("nij")).as("nij"))
-      EventQueries.entropyFinish(merged)
-    }),
+        .transform(merged(sum, "event_type", "hour")))),
 
     // Streaming cohort RETENTION — two merge laws at once: per batch,
     // the DISTINCT (user, active-day) pairs are appended (idempotent
@@ -1457,55 +1430,41 @@ object StreamingQueries {
     // Streaming DiD — the 2×2 cell moments are additive state;
     // merge(partials) ≡ batch cells, so the quasi-experimental
     // estimate hash-matches the batch oracle while metrics ingest.
-    "stream_did" -> ((s, dir) => {
-      val merged = partialsOf(
+    "stream_did" -> ((s, dir) =>
+      EventQueries.didFinish(partialsOf(
           eventsStream(s, dir)
             .select(col("user_id"), col("ts_ms"), col("value")))(EventQueries.didCells)
-        .groupBy(col("variant"), col("period"))
-        .agg(sum(col("n")).as("n"), sum(col("s")).as("s"),
-             sum(col("s2")).as("s2"))
-      EventQueries.didFinish(merged)
-    }),
+        .transform(merged(sum, "variant", "period")))),
 
     // Streaming power analysis — per-type exact decimal moments
     // (n, Σv, Σv²) are the canonical additive state; merge(partials) ≡
     // the batch moments, so the sample-size plan hash-matches the
     // batch oracle. This is the deployment that keeps the experiment
     // design current while metrics ingest.
-    "stream_power_analysis" -> ((s, dir) => {
-      val merged = partialsOf(
+    "stream_power_analysis" -> ((s, dir) =>
+      EventQueries.powerFinish(partialsOf(
           eventsStream(s, dir).select(col("event_type"), col("value")))(EventQueries.powerMoments)
-        .groupBy(col("event_type"))
-        .agg(sum(col("n")).as("n"), sum(col("s")).as("s"),
-             sum(col("s2")).as("s2"))
-      EventQueries.powerFinish(merged)
-    }),
+        .transform(merged(sum, "event_type")))),
 
     // Streaming Kneser-Ney — the bigram count table is the ONLY state
     // (additive per (w1,w2)); c1 and all three continuation counts
     // derive from the merged table, so the countDistinct-shaped
     // inputs never stream. Merge(partials) ≡ batch counts → the full
     // smoothed-probability report hash-matches the batch oracle.
-    "stream_kneser_ney" -> ((s, dir) => {
-      val merged = partialsOf(
+    "stream_kneser_ney" -> ((s, dir) =>
+      TextQueries.knFinish(partialsOf(
           documentsStream(s, dir).select(col("text")))(TextQueries.knBigramCounts)
-        .groupBy(col("w1"), col("w2"))
-        .agg(sum(col("c12")).as("c12"))
-      TextQueries.knFinish(merged)
-    }),
+        .transform(merged(sum, "w1", "w2")))),
 
     // Streaming skew probe — per-key counts are the canonical additive
     // state (one long per key); per-batch partials re-summed per key ≡
     // the batch count, so the Gini/top-share/salt diagnostics off the
     // merged frame hash-match events' batch probe exactly. This is the
     // deployment that watches a key's skew drift WHILE it ingests.
-    "stream_skew_probe" -> ((s, dir) => {
-      val merged = partialsOf(
+    "stream_skew_probe" -> ((s, dir) =>
+      EventQueries.skewFinish(partialsOf(
           eventsStream(s, dir).select(col("user_id")))(EventQueries.skewKeyCounts)
-        .groupBy(col("user_id"))
-        .agg(sum(col("cnt")).as("cnt"))
-      EventQueries.skewFinish(merged)
-    }),
+        .transform(merged(sum, "user_id")))),
 
     // Streaming segment uplift — the (type, variant) decimal moment
     // partials are ADDITIVE, so the merged cells equal the batch
@@ -1514,15 +1473,11 @@ object StreamingQueries {
     // proof). Deployment shape: the experiment dashboard keeps 2×k
     // moment rows in state and re-reads uplift per segment on every
     // trigger.
-    "stream_uplift" -> ((s, dir) => {
-      val merged = partialsOf(
+    "stream_uplift" -> ((s, dir) =>
+      EventQueries.upliftFinish(partialsOf(
           eventsStream(s, dir).select(col("event_type"), col("user_id"),
             col("value")))(EventQueries.upliftCells)
-        .groupBy(col("event_type"), col("variant"))
-        .agg(sum(col("n")).as("n"), sum(col("s")).as("s"),
-             sum(col("s2")).as("s2"))
-      EventQueries.upliftFinish(merged)
-    }),
+        .transform(merged(sum, "event_type", "variant")))),
 
     // Streaming epoch planner — per-source token-count partials are
     // ADDITIVE (one sum per source per micro-batch), so the merged
@@ -1531,13 +1486,10 @@ object StreamingQueries {
     // bit-for-bit (shared oracle = the hash proof). Deployment shape:
     // a mixture dashboard keeps per-source running token totals in
     // state and re-plans epochs on every trigger.
-    "stream_mix_epochs" -> ((s, dir) => {
-      val merged = partialsOf(
+    "stream_mix_epochs" -> ((s, dir) =>
+      DedupQueries.mixEpochsFinish(partialsOf(
           documentsStream(s, dir).select(col("source"), col("text")))(DedupQueries.sourceTokens)
-        .groupBy(col("source"))
-        .agg(sum(col("t_source")).as("t_source"))
-      DedupQueries.mixEpochsFinish(merged)
-    }),
+        .transform(merged(sum, "source")))),
 
     // Streaming ACF — the hourly contingency cells are the mergeable
     // state (count + exact decimal sum per (series, hour), both
@@ -1588,14 +1540,14 @@ object StreamingQueries {
     // oracle exactly. The audit's exact order statistic reads the
     // batch table (the stream replays the same totality).
     "stream_quantiles" -> ((s, dir) => {
-      val merged = partialsOf(
+      val state = partialsOf(
           eventsStream(s, dir)
             .filter(col("value").isNotNull).select(col("value"))) {
           batch => EventQueries.quantileBuckets(batch)
             .groupBy(col("bucket")).agg(count(lit(1)).as("cnt"))
         }
-        .groupBy(col("bucket")).agg(sum(col("cnt")).as("cnt"))
-      EventQueries.quantileFinish(merged,
+        .transform(merged(sum, "bucket"))
+      EventQueries.quantileFinish(state,
         Tables.events(s, dir)
           .filter(col("value").isNotNull).select(col("value")))
     }),
@@ -1640,16 +1592,15 @@ object StreamingQueries {
     // regardless of history. Shares the batch oracle — sum-merge ≡
     // batch, hash-proven.
     "stream_seasonality" -> ((s, dir) => {
-      val merged = partialsOf(
+      val state = partialsOf(
           eventsStream(s, dir)
             .select(col("event_type"),
                     (col("ts_ms") - col("ts_ms") % 3600000L).as("hour_ms"))) {
           batch => batch.groupBy(col("event_type"), col("hour_ms"))
             .agg(count(lit(1)).as("cnt"))
         }
-        .groupBy(col("event_type"), col("hour_ms"))
-        .agg(sum(col("cnt")).as("cnt"))
-      val withHod = merged
+        .transform(merged(sum, "event_type", "hour_ms"))
+      val withHod = state
         .withColumn("hod", expr("(hour_ms % 86400000) div 3600000"))
       val base = withHod.groupBy(col("event_type"), col("hod"))
         .agg(round(sum(col("cnt")).cast("double") / count(lit(1)), 6)
@@ -1793,16 +1744,15 @@ object StreamingQueries {
         EventQueries.psiHalved(e, split).filter(col("half") === "ref"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       edges.count() // freeze the artifact before the stream starts
-      val merged = partialsOf(
+      val state = partialsOf(
           eventsStream(s, dir)
             .filter(col("value").isNotNull)
             .select(col("event_type"), col("event_id"), col("ts_ms"), col("value"))) {
           batch => EventQueries.psiBinCounts(
             EventQueries.psiHalved(batch, split), edges)
         }
-        .groupBy(col("event_type"), col("half"), col("bin"))
-        .agg(sum(col("cnt")).as("cnt"))
-      EventQueries.psiFinish(s, merged)
+        .transform(merged(sum, "event_type", "half", "bin"))
+      EventQueries.psiFinish(s, state)
     }),
 
     // STREAMING WINDOWED THEIL-SEN — the robust trend monitor online:
@@ -1893,7 +1843,7 @@ object StreamingQueries {
             .select(explode(col("t")).as("w")).distinct(),
         (batch, _) =>
           TextQueries.bigramsOf(toksOf(batch).filter(col("doc_id") % 2 === 1)))
-      val c12 = c12Parts.groupBy(col("w1"), col("w2")).agg(sum(col("c12")).as("c12"))
+      val c12 = c12Parts.transform(merged(sum, "w1", "w2"))
       val vocab = vocParts.distinct().agg(count(lit(1)).as("v"))
       TextQueries.perplexityFinish(c12, vocab, testParts)
     }),
@@ -1928,8 +1878,7 @@ object StreamingQueries {
         partialsOf(embeddingsStream(s, dir, appendOnly = false)) { batch =>
           SimilarityQueries.silPartials(SimilarityQueries.withNorm(batch, "embedding"), cents)
         }
-          .groupBy(col("list_id"))
-          .agg(sum(col("n")).as("n"), sum(col("ssq")).as("ssq")))
+          .transform(merged(sum, "list_id")))
     }),
 
     // STREAMING index ingest — ann_index_append's arriving-batches
@@ -2049,8 +1998,7 @@ object StreamingQueries {
       EventQueries.orFinish(
         partialsOf(
             eventsStream(s, dir).select(col("user_id"), col("event_type")))(EventQueries.orCells)
-          .groupBy(col("variant"), col("user_id"))
-          .agg(max(col("conv")).as("conv")))),
+          .transform(merged(max, "variant", "user_id")))),
 
     // STREAMING HHI — the squared-share concentration reading over
     // the SAME sum-merged per-user totals as stream_gini (one state
@@ -2100,8 +2048,7 @@ object StreamingQueries {
         partialsOf(
           eventsStream(s, dir)
             .select(col("event_type"), col("value")))(StatTestQueries.moodGrid)
-          .groupBy(col("event_type"), col("value"))
-          .agg(sum(col("cnt")).as("cnt")))),
+          .transform(merged(sum, "event_type", "value")))),
 
     // STREAMING LEXICAL DIVERSITY — vocabulary health maintained as
     // documents ingest: per-batch (source, token) counts are additive

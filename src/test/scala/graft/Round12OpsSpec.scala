@@ -107,7 +107,7 @@ class Round12OpsSpec extends SparkSpec {
     // continuation distribution sums to 1 over the vocabulary
     val nAll = c12.count().toDouble
     val contSum = c12.groupBy(col("w2")).agg(count(lit(1)).as("n1b"))
-      .agg(sum(col("n1b"))).head.getLong(0).toDouble / nAll
+      .agg(sum(col("n1b"))).head().getLong(0).toDouble / nAll
     assert(math.abs(contSum - 1.0) < 1e-12)
     // and the shipped query agrees with a directly recomputed P_KN on
     // its own top row
@@ -164,11 +164,11 @@ class Round12OpsSpec extends SparkSpec {
     val out = q("events_attribution_position")
     // total weighted revenue across channels == total conversion value
     // (each conversion distributes exactly weight 1, organic included)
-    val totalAttr = out.agg(sum(col("wrev_r"))).head.getDouble(0)
+    val totalAttr = out.agg(sum(col("wrev_r"))).head().getDouble(0)
     val totalConv = graft.tables.Tables.events(spark, sf)
       .filter(col("event_type") === "purchase")
       .agg(sum(col("value").cast("decimal(18,4)")).cast("double"))
-      .head.getDouble(0)
+      .head().getDouble(0)
     // per-pair weights are 9-dp-rounded and contributions 6-dp-rounded,
     // so allow rounding slack proportional to touch count
     assert(math.abs(totalAttr - totalConv) < 0.01,
@@ -243,7 +243,7 @@ class Round12OpsSpec extends SparkSpec {
     // and 6-dp z rounding leave only tiny residue)
     val worst = out.filter(col("z_r").isNotNull)
       .groupBy(col("label")).agg(avg(col("z_r")).as("mz"))
-      .agg(max(abs(col("mz")))).head.getDouble(0)
+      .agg(max(abs(col("mz")))).head().getDouble(0)
     assert(worst < 1e-3, s"label mean z drifted: $worst")
     out.unpersist()
   }

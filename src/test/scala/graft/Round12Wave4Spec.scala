@@ -67,7 +67,7 @@ class Round12Wave4Spec extends SparkSpec {
     assert(m2("tiny").getAs[Long]("planned_tokens") == 4L)
     // full query: weights sum to 1 (up to 9-dp rounding residue)
     val wsum = q("pipeline_mix_epochs").agg(sum(col("weight_r")))
-      .head.getDouble(0)
+      .head().getDouble(0)
     assert(math.abs(wsum - 1.0) < 1e-6, s"weights sum to $wsum")
   }
 
@@ -216,7 +216,7 @@ class Round12Wave4Spec extends SparkSpec {
     val worst = got.map { case (v, m) => math.abs(m - expect(v)) }.max
     assert(worst < 1e-6, s"max divergence $worst")
     // and in-distribution mass sits near the χ²(64) mean
-    val meanMd2 = out.agg(avg(col("md2_r"))).head.getDouble(0)
+    val meanMd2 = out.agg(avg(col("md2_r"))).head().getDouble(0)
     assert(meanMd2 > 40.0 && meanMd2 < 90.0, s"mean md² = $meanMd2")
     out.unpersist()
   }

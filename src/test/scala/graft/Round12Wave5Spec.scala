@@ -127,7 +127,7 @@ class Round12Wave5Spec extends SparkSpec {
     assert(j.filter(col("n_docs") - col("n_kept") =!= col("n_neardup"))
       .count() == 0L)
     // dedup genuinely removes something on the fixture
-    assert(impact.agg(sum(col("n_docs") - col("n_kept"))).head.getLong(0) > 0L)
+    assert(impact.agg(sum(col("n_docs") - col("n_kept"))).head().getLong(0) > 0L)
     impact.unpersist()
   }
 

@@ -63,7 +63,7 @@ class Round12Wave6Spec extends SparkSpec {
     // middle doc, every middle ≥ every tail (ties may straddle cuts,
     // hence ≥)
     def stat(b: String, f: org.apache.spark.sql.Column) =
-      out.filter(col("bucket") === b).agg(f).head.getDouble(0)
+      out.filter(col("bucket") === b).agg(f).head().getDouble(0)
     assert(stat("head", min(col("avg_logprob_r"))) >=
       stat("middle", max(col("avg_logprob_r"))) - 1e-12)
     assert(stat("middle", min(col("avg_logprob_r"))) >=

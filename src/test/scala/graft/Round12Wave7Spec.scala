@@ -55,7 +55,7 @@ class Round12Wave7Spec extends SparkSpec {
   test("hits: max-normalized scores, zero off the edge support") {
     val out = q("graph_hits").cache()
     val stats = out.agg(max(col("hub")).as("mh"), max(col("auth")).as("ma"),
-      min(col("hub")).as("nh"), min(col("auth")).as("na")).head
+      min(col("hub")).as("nh"), min(col("auth")).as("na")).head()
     assert(stats.getDouble(0) == 1.0 && stats.getDouble(1) == 1.0,
       "some hub and some authority must sit at the normalization cap")
     assert(stats.getDouble(2) >= 0.0 && stats.getDouble(3) >= 0.0)
@@ -380,11 +380,11 @@ class Round12Wave7Spec extends SparkSpec {
     }
     val totalVocab = graft.tables.Tables.documents(spark, sf)
       .select(explode(split(col("text"), " ")).as("t"))
-      .agg(countDistinct(col("t"))).head.getLong(0)
+      .agg(countDistinct(col("t"))).head().getLong(0)
     assert(out.last._4 == totalVocab) // final checkpoint sees the corpus
     def r9(d: Double) = BD.valueOf(d).setScale(9, RM.HALF_UP).doubleValue
-    val xs = out.map(p => r9(math.log(p._3.toDouble)))
-    val ys = out.map(p => r9(math.log(p._4.toDouble)))
+    val xs = out.toSeq.map(p => r9(math.log(p._3.toDouble)))
+    val ys = out.toSeq.map(p => r9(math.log(p._4.toDouble)))
     def dsum(vs: Seq[Double], sc: Int) = vs.map(BD.valueOf(_)
       .setScale(sc, RM.HALF_UP)).reduce(_.add(_)).doubleValue
     val np = 10.0

@@ -34,8 +34,8 @@ class DriftSpec extends SparkSpec {
       }
     rows.groupBy(_.getString(0)).foreach { case (t, rs) =>
       val (mu, sd) = limits(t)
-      val kUp = BigDecimal((mu + 0.5 * sd).formatted("%.6f"))
-      val kDn = BigDecimal((mu - 0.5 * sd).formatted("%.6f"))
+      val kUp = BigDecimal("%.6f".format(mu + 0.5 * sd))
+      val kDn = BigDecimal("%.6f".format(mu - 0.5 * sd))
       val got = rs.sortBy(r => (r.getLong(2), r.getLong(1)))
       var sUp = BigDecimal(0); var sDn = BigDecimal(0)
       values(t).zip(got).foreach { case (v, r) =>
@@ -64,7 +64,7 @@ class DriftSpec extends SparkSpec {
   test("is_drift is exactly the 5σ exceedance predicate") {
     rows.foreach { r =>
       val (_, sd) = limits(r.getString(0))
-      val h = BigDecimal((5.0 * sd).formatted("%.6f")).toDouble
+      val h = BigDecimal("%.6f".format(5.0 * sd)).toDouble
       val expect = r.getDouble(3) > h + 1e-9 || r.getDouble(4) < -h - 1e-9
       val expectLoose = r.getDouble(3) > h - 1e-9 || r.getDouble(4) < -h + 1e-9
       // tolerate only the exact-boundary ambiguity of the double echo

@@ -20,7 +20,7 @@ class MadAnomalySpec extends SparkSpec {
     val rows = Tables.events(spark, sf)
       .filter(col("value").isNotNull)
       .select(col("event_id"), col("event_type"), col("value")).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
+      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq
     val byType = rows.groupBy(_._2)
     val med = byType.view.mapValues(v => rankMedian(v.map(_._3))).toMap
     val mad = byType.map { case (t, v) =>

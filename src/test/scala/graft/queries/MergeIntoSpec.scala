@@ -43,7 +43,7 @@ class MergeIntoSpec extends SparkSpec {
       s"""EXPLAIN EXTENDED MERGE INTO $tbl t USING merge_spec_src s ON t.k = s.k
          |WHEN MATCHED THEN UPDATE SET v = s.v
          |WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)""".stripMargin)
-      .head.getString(0)
+      .head().getString(0)
     assert(plan.contains("ReplaceData"), plan.take(2000))
     assert(plan.contains("MergeRows"), plan.take(2000))
   }

@@ -13,7 +13,7 @@ class PsiSpec extends SparkSpec {
   private lazy val rows = Tables.events(spark, sf)
     .filter(col("value").isNotNull)
     .select(col("event_type"), col("event_id"), col("ts_ms"), col("value"))
-    .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+    .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
 
   /** The full scalar chain for one series against an externally
     * frozen split (the query splits on the GLOBAL min/max midpoint,

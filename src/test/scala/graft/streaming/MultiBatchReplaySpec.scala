@@ -55,7 +55,7 @@ class MultiBatchReplaySpec extends SparkSpec {
         col("ts_ms") - col("ts_ms") % 3600000L)
       .groupBy(col("event_type"), col("window_start_ms"))
       .agg(count(lit(1)).as("cnt"))
-    val maxTs = Tables.events(spark, sf).agg(max(col("ts_ms"))).head.getLong(0)
+    val maxTs = Tables.events(spark, sf).agg(max(col("ts_ms"))).head().getLong(0)
     val expected = batch.filter(col("window_start_ms") + 3600000L <= maxTs)
     assert(streamed.count() === expected.count())
     assert(streamed.exceptAll(expected).isEmpty && expected.exceptAll(streamed).isEmpty,
@@ -78,7 +78,7 @@ class MultiBatchReplaySpec extends SparkSpec {
       if (f.getFileName.toString.endsWith(".parquet")) {
         val r = spark.read.parquet(f.toString)
           .select(col("ts_ms").as("ms"))
-          .agg(min(col("ms")), max(col("ms"))).head
+          .agg(min(col("ms")), max(col("ms"))).head()
         ranges += ((f.getFileName.toString, r.getLong(0), r.getLong(1)))
       }
     }

@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 
 import graft.{Ephemeral, SparkEntry, SparkSpec}
 import graft.queries.StreamingQueries
@@ -14,7 +15,9 @@ import graft.tables.Tables
 /** Pins `StreamingQueries.partialsOf` and the one bounded replay
   * runner behind it, which every `stream_*` twin drives: the
   * zero-batch edge, cleanup of its scratch, partials that outlive the
-  * catalog cache, batch-id order, merge(partials) ≡ batch, a stateful
+  * catalog cache, batch-id order, the one sum/max merge law
+  * (`merged`: typed like a hand-written `sum`, max ≡ batch max, a
+  * malformed key list fails) and merge(partials) ≡ batch, a stateful
   * append stream's output ≡ its batch aggregation, the carried-state
   * folds ≡ their batch twins, and a session left as it was found —
   * also when two replays start at once on two threads.
@@ -22,10 +25,11 @@ import graft.tables.Tables
 class PartialsOfSpec extends SparkSpec {
 
   /** A parquet source dir holding one file per range, replayed one
-    * file per trigger in range order. */
+    * file per trigger in range order; it lives under the ephemeral
+    * scratch base, which is deleted at JVM exit. */
   private def rangeSource(ranges: Seq[(Long, Long)]): Path = {
-    val src = Files.createTempDirectory("partials-spec-src-")
-    val scratch = Files.createTempDirectory("partials-spec-work-")
+    val src = Ephemeral.dir("graft-partials-spec-src-")
+    val scratch = Ephemeral.dir("graft-partials-spec-work-")
     ranges.zipWithIndex.foreach { case ((lo, hi), i) =>
       val work = scratch.resolve(s"w$i")
       spark.range(lo, hi).toDF("v").coalesce(1).write.parquet(work.toString)
@@ -37,6 +41,7 @@ class PartialsOfSpec extends SparkSpec {
       Files.move(part, dest)
       Files.setLastModifiedTime(dest, FileTime.fromMillis(1000000L + i * 1000L))
     }
+    Ephemeral.deleteTree(scratch)
     src
   }
 
@@ -70,9 +75,9 @@ class PartialsOfSpec extends SparkSpec {
 
   test("partials survive clearCache and keep batch-id order") {
     val src = rangeSource(Seq((0L, 10L), (10L, 20L), (20L, 30L)))
-    val partials = StreamingQueries.partialsOfIndexed(stream(src)) { (b, bid) =>
+    val partials = StreamingQueries.partialsOfEach(stream(src)) { (b, bid) =>
       b.agg(lit(bid).as("bid"), min(col("v")).as("lo"), max(col("v")).as("hi"))
-    }
+    }.head
     spark.catalog.clearCache()
     System.gc()
     val got = partials.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
@@ -85,7 +90,7 @@ class PartialsOfSpec extends SparkSpec {
     val byType = (b: DataFrame) => b.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("event_id")).as("s"))
     val merged = StreamingQueries.partialsOf(StreamingQueries.eventsStream(spark, sf))(byType)
-      .groupBy(col("event_type")).agg(sum(col("n")).as("n"), sum(col("s")).as("s"))
+      .transform(StreamingQueries.merged(sum, "event_type"))
     val batch = byType(Tables.events(spark, sf))
     assert(merged.exceptAll(batch).isEmpty && batch.exceptAll(merged).isEmpty)
     assert(merged.count() > 1)
@@ -115,6 +120,43 @@ class PartialsOfSpec extends SparkSpec {
 
   test("a sum-merged builder equals its batch computation") {
     checkSumMerged()
+  }
+
+  private def typed(df: DataFrame) = df.schema.map(f => (f.name, f.dataType))
+
+  test("a sum merge of a zero-file source is typed like the hand-written sum") {
+    val decCells = (b: DataFrame) => b.groupBy((col("v") % 3).as("k"))
+      .agg(count(lit(1)).as("n"), sum(col("v").cast("decimal(10,2)")).as("sd"))
+    val partials = StreamingQueries.partialsOf(stream(rangeSource(Nil)))(decCells)
+    val got = partials.transform(StreamingQueries.merged(sum, "k"))
+    val byHand = partials.groupBy(col("k"))
+      .agg(sum(col("n")).as("n"), sum(col("sd")).as("sd"))
+    assert(got.count() == 0)
+    assert(typed(got) == typed(byHand))
+    // sum widens decimal(p, s) to decimal(p + 10, s) once per merge level
+    assert(got.schema("sd").dataType == DecimalType(30, 2))
+  }
+
+  test("a max merge over three files equals the batch max") {
+    // the largest values arrive first, so neither a last-batch-wins
+    // nor a summing merge can pass
+    val src = rangeSource(Seq((20L, 30L), (0L, 10L), (10L, 20L)))
+    val tops = (b: DataFrame) => b.groupBy((col("v") % 4).as("k")).agg(max(col("v")).as("hi"))
+    val got = StreamingQueries.partialsOf(stream(src))(tops)
+      .transform(StreamingQueries.merged(max, "k"))
+    val batch = tops(spark.range(0, 30).toDF("v"))
+    assert(got.count() == 4)
+    assert(got.exceptAll(batch).isEmpty && batch.exceptAll(got).isEmpty)
+  }
+
+  test("a merge with no value column, or a missing key, fails naming its keys") {
+    val keysOnly = spark.range(3).select(col("id").as("a"), (col("id") % 2).as("b"))
+    val noValue = intercept[IllegalArgumentException](
+      keysOnly.transform(StreamingQueries.merged(sum, "a", "b")))
+    assert(noValue.getMessage.contains("(a, b)"))
+    val missing = intercept[IllegalArgumentException](
+      keysOnly.transform(StreamingQueries.merged(sum, "a", "c")))
+    assert(missing.getMessage.contains("(a, c)"))
   }
 
   test("an append-mode windowed count with a watermark equals the batch aggregation") {

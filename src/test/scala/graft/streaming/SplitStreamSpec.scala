@@ -23,7 +23,7 @@ class SplitStreamSpec extends SparkSpec {
       .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity")))
     Seq(
       "events" -> (StreamingQueries.eventsStream(spark, sf),
-        events.select((events.columns.filter(_ != "ts") :+ "ts").map(col): _*)),
+        events.select((events.columns.filter(_ != "ts") :+ "ts").toSeq.map(col): _*)),
       "documents" -> (StreamingQueries.documentsStream(spark, sf), Tables.documents(spark, sf)),
       "embeddings" -> (StreamingQueries.embeddingsStream(spark, sf, appendOnly = false),
         Tables.embeddings(spark, sf)),

@@ -40,7 +40,7 @@ class FixtureCanarySpec extends SparkSpec {
     val ev = Tables.events(spark, sf)
     assert(ev.schema("ts_ms").dataType == LongType, hint("events"))
     assert(ev.schema("ts").dataType.isInstanceOf[TimestampType], hint("events"))
-    val r = ev.selectExpr("min(ts_ms)", "max(ts_ms)", "count(*)").head
+    val r = ev.selectExpr("min(ts_ms)", "max(ts_ms)", "count(*)").head()
     val (lo, hi, n) = (r.getLong(0), r.getLong(1), r.getLong(2))
     assert(n > 0, s"events is empty — ${hint("events")}")
     // epoch-ms plausibility window (2000-01-01 .. 2100-01-01): catches a

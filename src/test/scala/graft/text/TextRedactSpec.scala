@@ -14,7 +14,7 @@ class TextRedactSpec extends SparkSpec {
     val r = spark.range(1).select(lit(text).as("text"))
       .select(e.as("e"), p.as("p"), i.as("i"),
               TextOps.redact(col("text")).as("red"))
-      .head
+      .head()
     (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))
   }
 
