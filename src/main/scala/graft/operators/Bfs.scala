@@ -28,36 +28,8 @@ object Bfs {
     * @return (v, dist): min hop count from any seed, for vertices
     *         within `maxRounds` hops
     */
-  def distances(seeds: DataFrame, pairs: DataFrame, maxRounds: Int): DataFrame = {
-    val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(pairs.select(col("b").as("src"), col("a").as("dst")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    def state(df: DataFrame): (Long, java.math.BigDecimal) = {
-      val r = df.agg(count(lit(1)),
-        coalesce(sum(col("dist").cast("decimal(38,0)")),
-                 lit(0).cast("decimal(38,0)"))).head()
-      (r.getLong(0), r.getDecimal(1))
-    }
-    var dist = seeds.select(col("v"), lit(0L).as("dist")).localCheckpoint()
-    var prev = state(dist)
-    var it = 0
-    var done = false
-    while (!done && it < maxRounds) {
-      val prop = edges
-        .join(dist.select(col("v").as("src"), col("dist")), "src")
-        .select(col("dst").as("v"), (col("dist") + 1L).as("dist"))
-      val next = dist.unionAll(prop)
-        .groupBy(col("v")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint()
-      val nextState = state(next)
-      dist = next
-      done = nextState == prev
-      prev = nextState
-      it += 1
-    }
-    edges.unpersist()
-    dist
-  }
+  def distances(seeds: DataFrame, pairs: DataFrame, maxRounds: Int): DataFrame =
+    rounds(seeds.select(col("v"), lit(0L).as("dist")), Nil, pairs, maxRounds)
 
   /** Per-seed BFS — the SAME bounded-round join/min shape with the
     * frontier keyed (seed, vertex) instead of vertex alone, so each
@@ -74,27 +46,34 @@ object Bfs {
     *         within `maxRounds` hops of it
     */
   def labeledDistances(seeds: DataFrame, pairs: DataFrame,
-                       maxRounds: Int): DataFrame = {
-    val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(pairs.select(col("b").as("src"), col("a").as("dst")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+                       maxRounds: Int): DataFrame =
+    rounds(seeds.select(col("s"), col("s").as("v"), lit(0L).as("dist")),
+      Seq("s"), pairs, maxRounds)
+
+  /** The round loop behind both entry points: `start` is the distance-0
+    * frame (keys…, v, dist), and every round propagates `dist + 1`
+    * along the mirrored edges and keeps the min per (keys…, v).
+    */
+  private def rounds(start: DataFrame, keys: Seq[String], pairs: DataFrame,
+                     maxRounds: Int): DataFrame = {
+    val edges = Graph.mirror(pairs).persist(StorageLevel.MEMORY_AND_DISK)
     def state(df: DataFrame): (Long, java.math.BigDecimal) = {
       val r = df.agg(count(lit(1)),
         coalesce(sum(col("dist").cast("decimal(38,0)")),
                  lit(0).cast("decimal(38,0)"))).head()
       (r.getLong(0), r.getDecimal(1))
     }
-    var dist = seeds.select(col("s"), col("s").as("v"), lit(0L).as("dist"))
-      .localCheckpoint()
+    val k = keys.map(col)
+    var dist = start.localCheckpoint()
     var prev = state(dist)
     var it = 0
     var done = false
     while (!done && it < maxRounds) {
       val prop = edges
-        .join(dist.select(col("s"), col("v").as("src"), col("dist")), "src")
-        .select(col("s"), col("dst").as("v"), (col("dist") + 1L).as("dist"))
+        .join(dist.select(k ++ Seq(col("v").as("src"), col("dist")): _*), "src")
+        .select(k ++ Seq(col("dst").as("v"), (col("dist") + 1L).as("dist")): _*)
       val next = dist.unionAll(prop)
-        .groupBy(col("s"), col("v")).agg(min(col("dist")).as("dist"))
+        .groupBy(k :+ col("v"): _*).agg(min(col("dist")).as("dist"))
         .localCheckpoint()
       val nextState = state(next)
       dist = next

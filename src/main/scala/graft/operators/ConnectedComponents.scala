@@ -36,9 +36,7 @@ object ConnectedComponents {
     *         v's connected component
     */
   def labels(verts: DataFrame, pairs: DataFrame, maxRounds: Int = 30): DataFrame = {
-    val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(pairs.select(col("b").as("src"), col("a").as("dst")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val edges = Graph.mirror(pairs).persist(StorageLevel.MEMORY_AND_DISK)
     // coalesce: sum over zero rows is NULL — without it an empty verts
     // frame NPEs at compareTo, so the operator would not be total
     def labelSum(df: DataFrame): java.math.BigDecimal =

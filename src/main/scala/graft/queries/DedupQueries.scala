@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.operators.Dedup
+import graft.operators.{Dedup, Graph}
 import graft.tables.Tables
 import graft.text.TextOps
 
@@ -190,50 +190,20 @@ object DedupQueries {
     // components (dedup_cc): rank(v) = (1−d)/N + d·Σ_{u→v} rank(u)/
     // deg(u) iterated PrRounds times from the uniform init over the
     // symmetrized LSH star edges (the shared artifact — the graph is
-    // a table here too). Each round is one shuffle join
-    // (rank ⋈ edges) + one partial-aggregable sum — the CC round
-    // shape — with contributions decimal-routed (order-independent
-    // sums) and ranks QUANTIZED to 9 dp at the round boundary, the
-    // Lloyd-round convention that keeps N chained rounds
-    // engine-identical. Isolated docs hold the teleport floor;
+    // a table here too), one [[Graph.rankRound]] per round: ranks
+    // QUANTIZED to 9 dp at the round boundary, the Lloyd-round
+    // convention that keeps N chained rounds engine-identical.
+    // Isolated docs hold the teleport floor;
     // dangling mass is not redistributed (the per-node recurrence is
     // the oracle contract, exactly unrolled in DuckDB). At 100 TB:
     // O(rounds · |E|), per-round localCheckpoint, same posture as CC.
     "graph_pagerank" -> ((s, dir) => {
       val verts = Tables.documents(s, dir).select(col("doc_id").as("v"))
-      // persist the symmetrized edges + degrees ONCE outside the loop
-      // (the ConnectedComponents.labels posture) — each eager round
-      // would otherwise rescan the edge artifact twice and re-run the
-      // deg shuffle
-      val edges = lshEdges(s, dir)
-        .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .unionByName(lshEdges(s, dir)
-          .select(col("doc_b").as("src"), col("doc_a").as("dst")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // corpus size via the shared scalar memo — a warehouse catalog
       // statistic, counted once per (session, dir), not per invocation
       val n = Artifacts.scalar(s, dir, "documents_n")(verts.count())
-      var rank = verts.select(col("v"),
-        round(lit(1.0) / n, 9).as("pr")).localCheckpoint()
-      (1 to PrRounds).foreach { _ =>
-        val contrib = rank.join(edges, col("v") === col("src"))
-          .join(deg, "src")
-          .select(col("dst"),
-            (col("pr") / col("deg")).cast("decimal(28,14)").as("c"))
-          .groupBy(col("dst")).agg(sum(col("c")).cast("double").as("in_sum"))
-        rank = verts.join(contrib, col("v") === col("dst"), "left")
-          .select(col("v"),
-            round(lit(0.15) / n +
-              lit(0.85) * coalesce(col("in_sum"), lit(0.0)), 9).as("pr"))
-          .localCheckpoint()
-      }
-      // harness clearCache() releases these after the query; unpersist
-      // eagerly anyway so back-to-back spec runs don't stack copies
-      edges.unpersist()
-      deg.unpersist()
-      rank.select(col("v").as("doc_id"), col("pr"))
+      pageRank(s, dir, verts, round(lit(1.0) / n, 9), lit(0.15) / n)
+        .select(col("v").as("doc_id"), col("pr"))
     }),
 
     // PERSONALIZED PAGERANK — graph_pagerank's teleport vector swapped
@@ -241,41 +211,16 @@ object DedupQueries {
     // the graph, deterministic): pr ← 0.15·e_seed + 0.85·A pr, the
     // random-walk-with-restart proximity that turns the dedup graph
     // into a RELATED-DOCUMENTS retrieval index (rank neighbors-of-
-    // neighbors a plain edge list can't see). Same per-round shape as
-    // pagerank — one edges join + one DECIMAL(28,14)-quantized
-    // contribution agg per round, 9-dp requantized π between rounds —
-    // and the top-20 serve path is a distributed
+    // neighbors a plain edge list can't see). The rounds are
+    // pagerank's; the top-20 serve path is a distributed
     // TakeOrderedAndProject + TinyOrder rank, never a global window.
     "graph_ppr" -> ((s, dir) => {
-      val verts = Tables.documents(s, dir).select(col("doc_id").as("v"))
-      val edges = lshEdges(s, dir)
-        .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .unionByName(lshEdges(s, dir)
-          .select(col("doc_b").as("src"), col("doc_a").as("dst")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val seed = broadcast(lshEdges(s, dir).agg(min(col("doc_a")).as("seed")))
-      var rank = verts.crossJoin(seed)
-        .select(col("v"),
-          when(col("v") === col("seed"), lit(1.0)).otherwise(lit(0.0))
-            .as("pr"))
-        .localCheckpoint()
-      (1 to PrRounds).foreach { _ =>
-        val contrib = rank.join(edges, col("v") === col("src"))
-          .join(deg, "src")
-          .select(col("dst"),
-            (col("pr") / col("deg")).cast("decimal(28,14)").as("c"))
-          .groupBy(col("dst")).agg(sum(col("c")).cast("double").as("in_sum"))
-        rank = verts.crossJoin(seed)
-          .join(contrib, col("v") === col("dst"), "left")
-          .select(col("v"),
-            round(when(col("v") === col("seed"), lit(0.15))
-                .otherwise(lit(0.0)) +
-              lit(0.85) * coalesce(col("in_sum"), lit(0.0)), 9).as("pr"))
-          .localCheckpoint()
-      }
-      edges.unpersist(); deg.unpersist()
+      val isSeed = col("v") === col("seed")
+      val rank = pageRank(s, dir,
+        Tables.documents(s, dir).select(col("doc_id").as("v")).crossJoin(seed),
+        when(isSeed, lit(1.0)).otherwise(lit(0.0)),
+        when(isSeed, lit(0.15)).otherwise(lit(0.0)))
       val top = rank.filter(col("pr") > 0.0)
         .orderBy(col("pr").desc, col("v")).limit(PprTopK)
       graft.operators.TinyOrder.rank(top, "rnk",
@@ -345,17 +290,14 @@ object DedupQueries {
     // its unique apex. Output also carries Σd(d−1)/2 (wedge capacity)
     // and the global clustering coefficient in exact ppm integer math.
     "graph_triangles" -> ((s, dir) => {
-      val edges = lshEdges(s, dir)
-        .select(col("doc_a").as("a"), col("doc_b").as("b"))
-      val deg = edges.select(col("a").as("v"))
-        .unionByName(edges.select(col("b").as("v")))
-        .groupBy(col("v")).agg(count(lit(1)).as("d"))
+      val edges = lshPairs(s, dir)
+      val deg = Graph.degrees(Graph.mirror(edges))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val aFirst = col("da") < col("db") ||
         (col("da") === col("db") && col("a") < col("b"))
       val oriented = edges
-        .join(deg.select(col("v").as("a"), col("d").as("da")), Seq("a"))
-        .join(deg.select(col("v").as("b"), col("d").as("db")), Seq("b"))
+        .join(deg.select(col("src").as("a"), col("deg").as("da")), Seq("a"))
+        .join(deg.select(col("src").as("b"), col("deg").as("db")), Seq("b"))
         .select(when(aFirst, col("a")).otherwise(col("b")).as("u"),
                 when(aFirst, col("b")).otherwise(col("a")).as("t"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -367,7 +309,7 @@ object DedupQueries {
       val nt = wedges.join(closing, Seq("t1", "t2"), "left_semi")
         .agg(count(lit(1)).as("n_triangles"))
       deg.agg(count(lit(1)).as("n_vertices"),
-              sum(expr("d * (d - 1) div 2")).as("n_wedges"))
+              sum(expr("deg * (deg - 1) div 2")).as("n_wedges"))
         .crossJoin(edges.agg(count(lit(1)).as("n_edges")))
         .crossJoin(nt)
         .select(col("n_vertices"), col("n_edges"), col("n_wedges"),
@@ -386,12 +328,11 @@ object DedupQueries {
     // Σd_a·d_b, Σd_a² per side — integer until the finish), then
     // Pearson r in one fixed double order. O(|E|), no windows.
     "graph_assortativity" -> ((s, dir) => {
-      val e = lshEdges(s, dir).select(col("doc_a").as("a"), col("doc_b").as("b"))
-      val sym = e.unionAll(e.select(col("b").as("a"), col("a").as("b")))
-      val deg = sym.groupBy(col("a").as("v")).agg(count(lit(1)).as("d"))
+      val sym = Graph.mirror(lshPairs(s, dir))
+      val deg = Graph.degrees(sym)
       val m = sym
-        .join(deg.select(col("v").as("a"), col("d").as("dx")), "a")
-        .join(deg.select(col("v").as("b"), col("d").as("dy")), "b")
+        .join(deg.select(col("src"), col("deg").as("dx")), "src")
+        .join(deg.select(col("src").as("dst"), col("deg").as("dy")), "dst")
         .agg(count(lit(1)).as("m"),
           sum(col("dx").cast("decimal(38,0)")).as("sx"),
           sum(col("dy").cast("decimal(38,0)")).as("sy"),
@@ -1259,10 +1200,7 @@ object DedupQueries {
     "graph_lpa" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val verts = Tables.documents(s, dir).select(col("doc_id").as("v"))
-      val edges = lshEdges(s, dir)
-        .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .unionByName(lshEdges(s, dir)
-          .select(col("doc_b").as("src"), col("doc_a").as("dst")))
+      val edges = Graph.mirror(lshPairs(s, dir))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       var lbl = verts.select(col("v"), col("v").as("lbl")).localCheckpoint()
       (1 to LpaRounds).foreach { _ =>
@@ -1306,12 +1244,8 @@ object DedupQueries {
         .filter(col("la") === col("lb"))
         .groupBy(col("la").as("component_id"))
         .agg(count(lit(1)).as("e_in"))
-      // degree sums per component (each undirected edge adds 1 to
-      // both endpoints' degrees)
-      val deg = e.select(col("doc_a").as("v"))
-        .unionAll(e.select(col("doc_b").as("v")))
-        .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-      val dc = labels.join(deg, "v")
+      val dc = labels
+        .join(Graph.degrees(Graph.mirror(lshPairs(s, dir))), col("v") === col("src"))
         .groupBy(col("lbl").as("component_id"))
         .agg(sum(col("deg")).as("d_sum"))
       val per = dc.join(ec, Seq("component_id"), "left")
@@ -1347,21 +1281,8 @@ object DedupQueries {
     // integers; the three ratios are scalar double math rounded at
     // 6 dp.
     "dedup_lsh_eval" -> ((s, dir) => {
-      val sample = Tables.documents(s, dir)
-        .select(col("doc_id"),
-          graft.functions.ShingleHashes(TextOps.tokens(col("text")), 1)
-            .as("tokset"),
-          conv(substring(md5(col("doc_id").cast("string")), 1, 14),
-            16, 10).cast("long").as("skey"))
-        .orderBy(col("skey"), col("doc_id"))
-        .limit(EvalSampleN)
-        .select(col("doc_id"), col("tokset"))
+      val sample = evalSample(s, dir)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val a = sample.select(col("doc_id").as("doc_a"), col("tokset").as("set_a"))
-      val b = sample.select(col("doc_id").as("doc_b"), col("tokset").as("set_b"))
-      val truth = a.join(broadcast(b), col("doc_a") < col("doc_b"))
-        .filter(Dedup.jaccard(col("set_a"), col("set_b")) >= 0.2)
-        .select(col("doc_a"), col("doc_b"), lit(1).as("t"))
       val slabels = sample.select(col("doc_id"))
         .join(ccLabels(s, dir), col("doc_id") === col("v"))
         .select(col("doc_id"), col("lbl"))
@@ -1369,25 +1290,15 @@ object DedupQueries {
         .join(slabels.select(col("doc_id").as("doc_b"), col("lbl")), "lbl")
         .filter(col("doc_a") < col("doc_b"))
         .select(col("doc_a"), col("doc_b"), lit(1).as("p"))
-      val conf = truth.join(pred, Seq("doc_a", "doc_b"), "full_outer")
-        .agg(
-          sum(when(col("t").isNotNull && col("p").isNotNull, 1L).otherwise(0L))
-            .as("tp"),
-          sum(when(col("t").isNotNull && col("p").isNull, 1L).otherwise(0L))
-            .as("fn"),
-          sum(when(col("t").isNull && col("p").isNotNull, 1L).otherwise(0L))
-            .as("fp"))
       val nSample = sample.agg(count(lit(1)).as("n_sample"))
-      val prec = col("tp").cast("double") / (col("tp") + col("fp"))
-      val rec  = col("tp").cast("double") / (col("tp") + col("fn"))
-      conf.crossJoin(broadcast(nSample)).select(
+      confusion(evalTruth(sample), pred).crossJoin(broadcast(nSample)).select(
         col("n_sample"),
         (col("tp") + col("fn")).as("n_truth"),
         (col("tp") + col("fp")).as("n_pred"),
         col("tp"), col("fp"), col("fn"),
-        round(prec, 6).as("precision"),
-        round(rec, 6).as("recall"),
-        round(lit(2.0) * prec * rec / (prec + rec), 6).as("f1"))
+        round(Precision, 6).as("precision"),
+        round(Recall, 6).as("recall"),
+        round(lit(2.0) * Precision * Recall / (Precision + Recall), 6).as("f1"))
     }),
 
     // LSH BANDING SWEEP — the index-tuning curve behind the eval
@@ -1403,23 +1314,11 @@ object DedupQueries {
     // measured monotonicity: recall falls and precision rises from
     // (8,2) → (2,8) (LshSweepSpec pins it).
     "dedup_lsh_sweep" -> ((s, dir) => {
-      val sample = Tables.documents(s, dir)
-        .select(col("doc_id"),
-          graft.functions.ShingleHashes(TextOps.tokens(col("text")), 1)
-            .as("tokset"),
+      val sample = evalSample(s, dir,
           Dedup.minhashSignature(array_distinct(TextOps.tokens(col("text"))))
-            .as("sig"),
-          conv(substring(md5(col("doc_id").cast("string")), 1, 14),
-            16, 10).cast("long").as("skey"))
-        .orderBy(col("skey"), col("doc_id"))
-        .limit(EvalSampleN)
-        .select(col("doc_id"), col("tokset"), col("sig"))
+            .as("sig"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val a = sample.select(col("doc_id").as("doc_a"), col("tokset").as("set_a"))
-      val b = sample.select(col("doc_id").as("doc_b"), col("tokset").as("set_b"))
-      val truth = a.join(broadcast(b), col("doc_a") < col("doc_b"))
-        .filter(Dedup.jaccard(col("set_a"), col("set_b")) >= 0.2)
-        .select(col("doc_a"), col("doc_b"), lit(1).as("t"))
+      val truth = evalTruth(sample)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       LshSweepConfigs.map { case (nb, rp) =>
         val bands = sample.select(col("doc_id"),
@@ -1433,22 +1332,13 @@ object DedupQueries {
           .filter(col("doc_a") < col("doc_b"))
           .select(col("doc_a"), col("doc_b")).distinct()
           .withColumn("p", lit(1))
-        val prec = col("tp").cast("double") / (col("tp") + col("fp"))
-        val rec  = col("tp").cast("double") / (col("tp") + col("fn"))
-        truth.join(pred, Seq("doc_a", "doc_b"), "full_outer")
-          .agg(
-            sum(when(col("t").isNotNull && col("p").isNotNull, 1L).otherwise(0L))
-              .as("tp"),
-            sum(when(col("t").isNotNull && col("p").isNull, 1L).otherwise(0L))
-              .as("fn"),
-            sum(when(col("t").isNull && col("p").isNotNull, 1L).otherwise(0L))
-              .as("fp"))
+        confusion(truth, pred)
           .select(lit(nb.toLong).as("bands"), lit(rp.toLong).as("rows_per_band"),
             col("tp"), col("fp"), col("fn"),
-            round(when(col("tp") + col("fp") > 0, prec), 6).as("precision"),
-            round(rec, 6).as("recall"),
+            round(when(col("tp") + col("fp") > 0, Precision), 6).as("precision"),
+            round(Recall, 6).as("recall"),
             round(when(col("tp") > 0,
-              lit(2.0) * prec * rec / (prec + rec)), 6).as("f1"))
+              lit(2.0) * Precision * Recall / (Precision + Recall)), 6).as("f1"))
       }.reduce(_.unionByName(_))
     }),
 
@@ -1456,38 +1346,25 @@ object DedupQueries {
     // Σ_z 1/ln(deg(z)) over their common neighbors z (the canonical
     // similarity-completion operator: "these two docs share rare
     // neighbors, the LSH bands probably just missed the edge").
-    // Wedge enumeration is a self-join of the symmetrized star edges
-    // on the middle vertex — the triangle-count shape — bounded by the
-    // hub cap (Σ deg(z)² ≤ cap·|E|, see AaHubCap), then one
-    // partial-aggregable sum per candidate pair, an anti-join against
-    // the existing edges (predictions only), and a top-k cut under a
-    // total order. deg(z) ≥ 2 for any wedge middle, so ln is never 0.
+    // Hub-capped wedges ([[Graph.wedges]], see AaHubCap), one
+    // partial-aggregable sum per candidate pair, non-edges only
+    // (predictions), and a top-k cut under a total order. deg(z) ≥ 2
+    // for any wedge middle, so ln is never 0.
     // 1/ln terms are 12-dp-quantized and decimal-summed (order-free,
     // engine-identical); score rounded once at 6 dp.
     "graph_adamic_adar" -> ((s, dir) => {
-      val e = lshEdges(s, dir)
-      val edges = e.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .unionByName(e.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      val mid = edges.join(deg.filter(col("deg") <= AaHubCap), "src")
-      val left  = mid.select(col("src").as("z"), col("dst").as("u"), col("deg"))
-      val right = mid.select(col("src").as("z"), col("dst").as("w"))
-      val scores = left.join(right, "z").filter(col("u") < col("w"))
+      val edges = Graph.mirror(lshPairs(s, dir))
+      val scores = Graph.wedges(edges, Graph.degrees(edges), AaHubCap)
         .groupBy(col("u"), col("w"))
         .agg(count(lit(1)).as("common_neighbors"),
              sum(round(lit(1.0) / log(col("deg")), 12).cast("decimal(28,12)"))
                .as("aa"))
-      val predicted = scores.join(
-        edges.select(col("src").as("u"), col("dst").as("w")),
-        Seq("u", "w"), "left_anti")
-      val out = predicted.select(col("u").as("doc_a"), col("w").as("doc_b"),
+      Graph.nonEdges(scores, edges)
+        .select(col("u").as("doc_a"), col("w").as("doc_b"),
           col("common_neighbors"),
           round(asDouble(col("aa")), 6).as("aa_score"))
         .orderBy(col("aa_score").desc, col("doc_a"), col("doc_b"))
         .limit(AaTopK)
-      edges.unpersist()
-      out
     }),
 
     // JACCARD LINK PREDICTION — the set-overlap reading on the SAME
@@ -1498,21 +1375,12 @@ object DedupQueries {
     // The score is a small-integer rational (1/128 sits exactly ON a
     // 6-dp half), so the final round rides the tie-safe chain.
     "graph_jaccard_linkpred" -> ((s, dir) => {
-      val e = lshEdges(s, dir)
-      val edges = e.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .unionByName(e.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      val mid = edges.join(deg.filter(col("deg") <= AaHubCap), "src")
-      val left  = mid.select(col("src").as("z"), col("dst").as("u"))
-      val right = mid.select(col("src").as("z"), col("dst").as("w"))
-      val commons = left.join(right, "z").filter(col("u") < col("w"))
+      val edges = Graph.mirror(lshPairs(s, dir))
+      val deg = Graph.degrees(edges)
+      val commons = Graph.wedges(edges, deg, AaHubCap)
         .groupBy(col("u"), col("w"))
         .agg(count(lit(1)).as("common_neighbors"))
-      val predicted = commons.join(
-        edges.select(col("src").as("u"), col("dst").as("w")),
-        Seq("u", "w"), "left_anti")
-      val out = predicted
+      Graph.nonEdges(commons, edges)
         .join(deg.select(col("src").as("u"), col("deg").as("deg_u")), "u")
         .join(deg.select(col("src").as("w"), col("deg").as("deg_w")), "w")
         .select(col("u").as("doc_a"), col("w").as("doc_b"),
@@ -1523,8 +1391,6 @@ object DedupQueries {
             .as("jaccard_r"))
         .orderBy(col("jaccard_r").desc, col("doc_a"), col("doc_b"))
         .limit(AaTopK)
-      edges.unpersist()
-      out
     }),
 
     // RICH-CLUB COEFFICIENT — do the high-degree docs (the heavy
@@ -1537,9 +1403,7 @@ object DedupQueries {
     // rational, so the final rides the tie-safe chain.
     "graph_rich_club" -> ((s, dir) => {
       val e = lshEdges(s, dir)
-      val und = e.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .unionByName(e.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      val deg = und.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+      val deg = Graph.degrees(Graph.mirror(lshPairs(s, dir)))
       val kgrid = s.range(1).select(explode(array(
         lit(1L), lit(2L), lit(4L), lit(8L), lit(16L))).as("k"))
       val nk = deg.crossJoin(broadcast(kgrid))
@@ -1575,9 +1439,7 @@ object DedupQueries {
     // in the unrolled oracle recursion.
     "graph_bfs" -> ((s, dir) => {
       val seeds = ccLabels(s, dir).select(col("lbl").as("v")).distinct()
-      val pairs = lshEdges(s, dir)
-        .select(col("doc_a").as("a"), col("doc_b").as("b"))
-      graft.operators.Bfs.distances(seeds, pairs, BfsRounds)
+      graft.operators.Bfs.distances(seeds, lshPairs(s, dir), BfsRounds)
         .select(col("v").as("doc_id"), col("dist").as("hop_dist"))
     }),
 
@@ -1610,12 +1472,9 @@ object DedupQueries {
     // via the TinyOrder triangular join — value-domain-sized, never
     // an unpartitioned data window.
     "graph_degree_distribution" -> ((s, dir) => {
-      val sym = lshEdges(s, dir)
-        .select(col("doc_a").as("v"), col("doc_b").as("w"))
-        .unionAll(lshEdges(s, dir)
-          .select(col("doc_b").as("v"), col("doc_a").as("w")))
       val deg = Tables.documents(s, dir).select(col("doc_id").as("v"))
-        .join(sym.groupBy(col("v")).agg(count(lit(1)).as("d")), Seq("v"), "left")
+        .join(Graph.degrees(Graph.mirror(lshPairs(s, dir)))
+          .select(col("src").as("v"), col("deg").as("d")), Seq("v"), "left")
         .withColumn("d", coalesce(col("d"), lit(0L)))
       val hist = deg.groupBy(col("d").as("degree"))
         .agg(count(lit(1)).as("n_nodes"))
@@ -1643,9 +1502,7 @@ object DedupQueries {
       val seeds = ccLabels(s, dir).select(col("lbl")).distinct()
         .orderBy(col("lbl")).limit(ClosenessSeeds)
         .select(col("lbl").as("s"))
-      val pairs = lshEdges(s, dir)
-        .select(col("doc_a").as("a"), col("doc_b").as("b"))
-      graft.operators.Bfs.labeledDistances(seeds, pairs, BfsRounds)
+      graft.operators.Bfs.labeledDistances(seeds, lshPairs(s, dir), BfsRounds)
         .groupBy(col("s"))
         .agg(count(lit(1)).as("n_reached"),
           sum(col("dist")).as("dist_sum"),
@@ -1992,6 +1849,52 @@ object DedupQueries {
     */
   private val LshSweepConfigs = Seq((8, 2), (4, 4), (2, 8))
 
+  /** The fixed-size sample of `dedup_lsh_eval` / `dedup_lsh_sweep`:
+    * the EvalSampleN docs with the smallest md5 keys, as (doc_id,
+    * tokset, extra…) with the distinct 31-bit token-hash set.
+    */
+  private def evalSample(s: org.apache.spark.sql.SparkSession, dir: String,
+                         extra: org.apache.spark.sql.Column*) =
+    Tables.documents(s, dir)
+      .select(Seq(col("doc_id"),
+          graft.functions.ShingleHashes(TextOps.tokens(col("text")), 1)
+            .as("tokset")) ++ extra :+
+        conv(substring(md5(col("doc_id").cast("string")), 1, 14),
+          16, 10).cast("long").as("skey"): _*)
+      .orderBy(col("skey"), col("doc_id"))
+      .limit(EvalSampleN)
+      .drop("skey")
+
+  /** The exact all-pairs truth on an [[evalSample]]: (doc_a, doc_b,
+    * t = 1) for every pair with token-set Jaccard ≥ 0.2 (the
+    * `dedup_lsh_pairs` threshold).
+    */
+  private def evalTruth(sample: org.apache.spark.sql.DataFrame) = {
+    val a = sample.select(col("doc_id").as("doc_a"), col("tokset").as("set_a"))
+    val b = sample.select(col("doc_id").as("doc_b"), col("tokset").as("set_b"))
+    a.join(broadcast(b), col("doc_a") < col("doc_b"))
+      .filter(Dedup.jaccard(col("set_a"), col("set_b")) >= 0.2)
+      .select(col("doc_a"), col("doc_b"), lit(1).as("t"))
+  }
+
+  /** One row of tp / fn / fp: predicted pairs (doc_a, doc_b, p)
+    * against an [[evalTruth]] (doc_a, doc_b, t).
+    */
+  private def confusion(truth: org.apache.spark.sql.DataFrame,
+                        pred: org.apache.spark.sql.DataFrame) =
+    truth.join(pred, Seq("doc_a", "doc_b"), "full_outer")
+      .agg(
+        sum(when(col("t").isNotNull && col("p").isNotNull, 1L).otherwise(0L))
+          .as("tp"),
+        sum(when(col("t").isNotNull && col("p").isNull, 1L).otherwise(0L))
+          .as("fn"),
+        sum(when(col("t").isNull && col("p").isNotNull, 1L).otherwise(0L))
+          .as("fp"))
+
+  /** Precision and recall over a [[confusion]] row. */
+  private val Precision = col("tp").cast("double") / (col("tp") + col("fp"))
+  private val Recall = col("tp").cast("double") / (col("tp") + col("fn"))
+
   /** Peel-round budget per k for `graph_kcore` (bounded like the
     * Lloyd/CC/PageRank loops; fixpoint-on-fixture proven by
     * KCoreSpec). private[graft]: the spec re-runs with KcRounds + 1
@@ -2008,11 +1911,7 @@ object DedupQueries {
     */
   private[graft] def kcoreness(s: org.apache.spark.sql.SparkSession,
                                dir: String, rounds: Int) = {
-    val sym = lshEdges(s, dir)
-      .select(col("doc_a").as("u"), col("doc_b").as("v"))
-      .unionByName(lshEdges(s, dir)
-        .select(col("doc_b").as("u"), col("doc_a").as("v")))
-      .localCheckpoint()
+    val sym = Graph.mirror(lshPairs(s, dir)).localCheckpoint()
     // Early exit is SOUND and oracle-invisible: e_r ⊆ e_{r-1}, so an
     // unchanged edge count means e_r = e_{r-1} (the fixpoint) and
     // every remaining round is the identity — the bounded DuckDB
@@ -2024,11 +1923,10 @@ object DedupQueries {
       var converged = false
       (1 to rounds).foreach { _ =>
         if (!converged) {
-          val surv = e.groupBy(col("u")).agg(count(lit(1)).as("d"))
-            .filter(col("d") >= k).select(col("u"))
-          e = e.join(surv, Seq("u"), "left_semi")
-            .join(surv.select(col("u").as("v")), Seq("v"), "left_semi")
-            .select(col("u"), col("v"))
+          val surv = Graph.degrees(e).filter(col("deg") >= k).select(col("src"))
+          e = e.join(surv, Seq("src"), "left_semi")
+            .join(surv.select(col("src").as("dst")), Seq("dst"), "left_semi")
+            .select(col("src"), col("dst"))
             .localCheckpoint()
           val c = e.count()
           converged = c == prevCount
@@ -2040,7 +1938,7 @@ object DedupQueries {
     val e2 = peel(sym, 2)
     val e3 = peel(e2, 3)
     def members(e: org.apache.spark.sql.DataFrame, flag: String) =
-      e.select(col("u").as("doc_id")).distinct().withColumn(flag, lit(1L))
+      e.select(col("src").as("doc_id")).distinct().withColumn(flag, lit(1L))
     Tables.documents(s, dir).select(col("doc_id"))
       .join(members(sym, "k1"), Seq("doc_id"), "left")
       .join(members(e2, "k2"), Seq("doc_id"), "left")
@@ -2259,11 +2157,42 @@ object DedupQueries {
     */
   private def ccLabels(s: org.apache.spark.sql.SparkSession, dir: String) =
     Artifacts.materialized(s, dir, "cc_labels") {
-      val star = lshEdges(s, dir)
-        .select(col("doc_a").as("a"), col("doc_b").as("b"))
       val verts = Tables.documents(s, dir).select(col("doc_id").as("v"))
-      graft.operators.ConnectedComponents.labels(verts, star)
+      graft.operators.ConnectedComponents.labels(verts, lshPairs(s, dir))
     }
+
+  /** The star edges as the undirected (a, b) pair frame the
+    * [[graft.operators.Graph]] steps, connected components and BFS
+    * take — each edge once, a < b.
+    */
+  private[graft] def lshPairs(s: org.apache.spark.sql.SparkSession, dir: String) =
+    lshEdges(s, dir).select(col("doc_a").as("a"), col("doc_b").as("b"))
+
+  /** `graph_pagerank` / `graph_ppr`: PrRounds [[Graph.rankRound]]s over
+    * the mirrored star edges, from `init` over `base`'s vertices. The
+    * edges and degrees are persisted ONCE outside the loop (the
+    * ConnectedComponents.labels posture) — each eager round would
+    * otherwise rescan the edge artifact twice and re-run the degree
+    * shuffle.
+    */
+  private def pageRank(s: org.apache.spark.sql.SparkSession, dir: String,
+                       base: org.apache.spark.sql.DataFrame,
+                       init: org.apache.spark.sql.Column,
+                       teleport: org.apache.spark.sql.Column) = {
+    val edges = Graph.mirror(lshPairs(s, dir))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val deg = Graph.degrees(edges)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    var rank = base.select(col("v"), init.as("pr")).localCheckpoint()
+    (1 to PrRounds).foreach { _ =>
+      rank = Graph.rankRound(rank, edges, deg, base, teleport).localCheckpoint()
+    }
+    // harness clearCache() releases these after the query; unpersist
+    // eagerly anyway so back-to-back spec runs don't stack copies
+    edges.unpersist()
+    deg.unpersist()
+    rank
+  }
 
   // ---- DuckDB twins ---------------------------------------------------
 

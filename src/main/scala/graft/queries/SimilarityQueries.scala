@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.VectorOps
+import graft.operators.Graph
 import graft.tables.Tables
 import StatTestQueries.tieSafe
 
@@ -71,9 +72,9 @@ object SimilarityQueries {
                          verts: org.apache.spark.sql.DataFrame) = {
     val nbr = nbrIn
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val deg = nbr.select(col("va").as("v")).unionAll(nbr.select(col("vb").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-    val core = deg.filter(col("deg") >= DbscanMinPts).select(col("v"))
+    val core = Graph.degrees(
+        Graph.mirror(nbr.select(col("va").as("a"), col("vb").as("b"))))
+      .filter(col("deg") >= DbscanMinPts).select(col("src").as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val coreEdges = nbr
       .join(core.select(col("v").as("va")), "va")
@@ -1011,13 +1012,13 @@ object SimilarityQueries {
     // the legs are the proven posting-pruned BM25 and banded-LSH
     // plans.
     "search_retrieval_eval" -> ((s, dir) => {
-      val e = DedupQueries.lshEdges(s, dir)
-      val rel = e.select(col("doc_a").as("q_id"), col("doc_b").as("doc_id"))
-        .unionAll(e.select(col("doc_b").as("q_id"), col("doc_a").as("doc_id")))
-        .filter(col("q_id") < NQueries).distinct()
-      val nr = rel.groupBy(col("q_id")).agg(count(lit(1)).as("n_rel"))
+      val rel = Graph.mirror(DedupQueries.lshPairs(s, dir))
+        .filter(col("src") < NQueries).distinct()
+      val nr = Graph.degrees(rel)
+        .select(col("src").as("q_id"), col("deg").as("n_rel"))
       val m = lexShortlist(s, dir)
-        .join(rel.withColumn("is_rel", lit(1L)), Seq("q_id", "doc_id"), "left")
+        .join(rel.select(col("src").as("q_id"), col("dst").as("doc_id"),
+          lit(1L).as("is_rel")), Seq("q_id", "doc_id"), "left")
         .withColumn("is_rel", coalesce(col("is_rel"), lit(0L)))
         .groupBy(col("q_id"))
         .agg(min(when(col("is_rel") === 1, col("rank_lex"))).as("first_rel"),

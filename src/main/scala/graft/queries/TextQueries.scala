@@ -707,30 +707,13 @@ object TextQueries {
     // pair agg. Transcendental BP and the √ geometric mean are each
     // 9-dp-quantized BEFORE their product (1-ulp libm/JDK guard).
     "text_bleu_pairs" -> ((s, dir) => {
-      val toks = Tables.documents(s, dir)
-        .select(col("doc_id"), TextOps.tokens(col("text")).as("t"))
+      val toks = pairTokens(s, dir)
       val uni = toks.select(col("doc_id"), explode(col("t")).as("g"))
         .groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("c"))
-      val big = toks.filter(size(col("t")) >= 2)
-        .select(col("doc_id"), explode(expr(
-          "transform(sequence(0, size(t) - 2), " +
-          "i -> concat(element_at(t, i + 1), ' ', element_at(t, i + 2)))"))
-          .as("g"))
-        .groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("c"))
-      val lens = toks.select(col("doc_id"), size(col("t")).cast("long").as("n"))
-      val edges = DedupQueries.lshEdges(s, dir)
-      def clipped(grams: org.apache.spark.sql.DataFrame,
-                  mCol: String, tCol: String) =
-        edges
-          .join(grams.select(col("doc_id").as("doc_a"), col("g"),
-            col("c").as("ca")), "doc_a")
-          .join(grams.select(col("doc_id").as("doc_b"), col("g"),
-            col("c").as("cb")), Seq("doc_b", "g"), "left")
-          .groupBy(col("doc_a"), col("doc_b"))
-          .agg(sum(least(col("ca"), coalesce(col("cb"), lit(0L)))).as(mCol),
-               sum(col("ca")).as(tCol))
-      clipped(uni, "m1", "t1")
-        .join(clipped(big, "m2", "t2"), Seq("doc_a", "doc_b"), "left")
+      val lens = tokenLens(toks)
+      clipped(s, dir, uni, "m1", "t1")
+        .join(clipped(s, dir, bigramCounts(toks), "m2", "t2"),
+          Seq("doc_a", "doc_b"), "left")
         .join(lens.select(col("doc_id").as("doc_a"), col("n").as("len_a")),
           "doc_a")
         .join(lens.select(col("doc_id").as("doc_b"), col("n").as("len_b")),
@@ -757,30 +740,13 @@ object TextQueries {
     // the candidate is in the reference", ROUGE asks the reverse —
     // summarization/dedup triage wants both): on the same LSH
     // blocking edges, recall = Σ_g min(c_a, c_b)/(len_b − 1),
-    // precision ≡ BLEU's p2, F1 = their harmonic mean. The clipped
-    // numerator and Σc_a denominator are the identical two-join
-    // chain; the only new column is the reference length. Work stays
+    // precision ≡ BLEU's p2, F1 = their harmonic mean. Work stays
     // bounded by |edges|·doc-length (the banding guarantee).
     "text_rouge_pairs" -> ((s, dir) => {
-      val toks = Tables.documents(s, dir)
-        .select(col("doc_id"), TextOps.tokens(col("text")).as("t"))
-      val big = toks.filter(size(col("t")) >= 2)
-        .select(col("doc_id"), explode(expr(
-          "transform(sequence(0, size(t) - 2), " +
-          "i -> concat(element_at(t, i + 1), ' ', element_at(t, i + 2)))"))
-          .as("g"))
-        .groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("c"))
-      val lens = toks.select(col("doc_id"), size(col("t")).cast("long").as("n"))
-      DedupQueries.lshEdges(s, dir)
-        .join(big.select(col("doc_id").as("doc_a"), col("g"),
-          col("c").as("ca")), "doc_a")
-        .join(big.select(col("doc_id").as("doc_b"), col("g"),
-          col("c").as("cb")), Seq("doc_b", "g"), "left")
-        .groupBy(col("doc_a"), col("doc_b"))
-        .agg(sum(least(col("ca"), coalesce(col("cb"), lit(0L)))).as("m2"),
-             sum(col("ca")).as("t2"))
-        .join(lens.select(col("doc_id").as("doc_b"), col("n").as("len_b")),
-          "doc_b")
+      val toks = pairTokens(s, dir)
+      clipped(s, dir, bigramCounts(toks), "m2", "t2")
+        .join(tokenLens(toks).select(col("doc_id").as("doc_b"),
+          col("n").as("len_b")), "doc_b")
         .withColumn("prec_d", when(col("t2") > 0,
           asDouble(col("m2")) / asDouble(col("t2"))).otherwise(lit(0.0)))
         .withColumn("rec_d", when(col("len_b") > 1,
@@ -1787,6 +1753,40 @@ object TextQueries {
                 col("t.n_words").as("n_words"),
                 col("t.bpe_per_word").as("bpe_per_word")))
   )
+
+  /** The chain `text_bleu_pairs` and `text_rouge_pairs` share: per-doc
+    * tokens (doc_id, t), their bigram counts (doc_id, g, c), their
+    * lengths (doc_id, n), and the clipped counts over the LSH blocking
+    * edges — per (doc_a, doc_b), `mCol` = Σ_g min(c_a(g), c_b(g)) and
+    * `tCol` = Σ_g c_a(g), two shuffle joins keyed (doc, gram) and one
+    * partial-aggregable pair agg.
+    */
+  private def pairTokens(s: org.apache.spark.sql.SparkSession, dir: String) =
+    Tables.documents(s, dir)
+      .select(col("doc_id"), TextOps.tokens(col("text")).as("t"))
+
+  private def bigramCounts(toks: org.apache.spark.sql.DataFrame) =
+    toks.filter(size(col("t")) >= 2)
+      .select(col("doc_id"), explode(expr(
+        "transform(sequence(0, size(t) - 2), " +
+        "i -> concat(element_at(t, i + 1), ' ', element_at(t, i + 2)))"))
+        .as("g"))
+      .groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("c"))
+
+  private def tokenLens(toks: org.apache.spark.sql.DataFrame) =
+    toks.select(col("doc_id"), size(col("t")).cast("long").as("n"))
+
+  private def clipped(s: org.apache.spark.sql.SparkSession, dir: String,
+                      grams: org.apache.spark.sql.DataFrame,
+                      mCol: String, tCol: String) =
+    DedupQueries.lshEdges(s, dir)
+      .join(grams.select(col("doc_id").as("doc_a"), col("g"),
+        col("c").as("ca")), "doc_a")
+      .join(grams.select(col("doc_id").as("doc_b"), col("g"),
+        col("c").as("cb")), Seq("doc_b", "g"), "left")
+      .groupBy(col("doc_a"), col("doc_b"))
+      .agg(sum(least(col("ca"), coalesce(col("cb"), lit(0L)))).as(mCol),
+           sum(col("ca")).as(tCol))
 
   /** Per-occurrence CMS bucket projection: (r, bucket) for each of the
     * d=4 hash rows — the mergeable half of the sketch (counters merge

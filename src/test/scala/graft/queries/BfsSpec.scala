@@ -66,4 +66,19 @@ class BfsSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(more == dists)
   }
+
+  test("distances equal the per-vertex minimum of labeledDistances") {
+    val seeds = reps.toSeq.sorted
+    val pairs = DedupQueries.lshPairs(spark, sf)
+    val plain = graft.operators.Bfs.distances(
+        spark.createDataFrame(seeds.map(Tuple1(_))).toDF("v"), pairs,
+        DedupQueries.BfsRounds)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val perSeed = graft.operators.Bfs.labeledDistances(
+        spark.createDataFrame(seeds.map(Tuple1(_))).toDF("s"), pairs,
+        DedupQueries.BfsRounds)
+      .collect().map(r => r.getLong(1) -> r.getLong(2))
+      .groupMapReduce(_._1)(_._2)(math.min)
+    assert(plain == perSeed)
+  }
 }

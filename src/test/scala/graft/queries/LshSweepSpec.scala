@@ -38,5 +38,10 @@ class LshSweepSpec extends SparkSpec {
       assert(r._3 >= 0 && r._4 >= 0 && r._5 >= 0)
       assert(r._3 + r._4 <= maxPairs)
     }
+    // dedup_lsh_eval reads the same sample and truth
+    val eval = DedupQueries.queries("dedup_lsh_eval")(spark, sf).collect()
+    assert(eval.length === 1)
+    assert(eval(0).getAs[Long]("n_sample") === 128L)
+    assert(eval(0).getAs[Long]("n_truth") === truthSizes.head)
   }
 }
