@@ -8,11 +8,18 @@ runs <verifyOutDir>/oracle_sql.json[name] in DuckDB with the sf tables
 registered as views, sorts columns by name, sorts rows, and compares
 values. Exit 0 iff every query matches. A query with no output is
 reported [MISS ] with the error graft.Verify recorded for it in
-<verifyOutDir>/verify_status.json.
+<verifyOutDir>/verify_status.json. A query whose reads take longer
+than TIMEOUT_S seconds is interrupted and reported [TIMEOUT]; it
+fails the run, and the queries after it still run.
 """
-import json, sys, glob, os, hashlib
+import json, sys, glob, os, hashlib, threading
 import duckdb
 import pyarrow.parquet as pq
+
+# Seconds one query's two reads may take. The slowest sf0.01 oracle
+# (dedup_dbscan) takes well under a fifth of it; at sf0.1 that one
+# does not finish, and the limit keeps it from stalling the rest.
+TIMEOUT_S = 900
 
 TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
@@ -36,6 +43,20 @@ def strict_hash(df):
     return hashlib.md5("\n".join(rows).encode()).hexdigest()
 
 
+def timed(con, limit, body):
+    """body(cursor) on a fresh cursor of con, interrupted after limit
+    seconds (duckdb.InterruptException). A cursor per query keeps a
+    late timer from interrupting the next query."""
+    cur = con.cursor()
+    timer = threading.Timer(limit, cur.interrupt)
+    timer.start()
+    try:
+        return body(cur)
+    finally:
+        timer.cancel()
+        cur.close()
+
+
 def main(sf_dir, out_dir):
     con = duckdb.connect()
     for t in TABLES:
@@ -56,9 +77,14 @@ def main(sf_dir, out_dir):
             ok = False
             continue
         try:
-            got = canon(con.execute(
-                f"SELECT * FROM read_parquet({spark_files!r})").df())
-            want = canon(con.execute(sql).df())
+            got, want = timed(con, TIMEOUT_S, lambda cur: (
+                canon(cur.execute(
+                    f"SELECT * FROM read_parquet({spark_files!r})").df()),
+                canon(cur.execute(sql).df())))
+        except duckdb.InterruptException:
+            print(f"[TIMEOUT] {name}: over {TIMEOUT_S} s")
+            ok = False
+            continue
         except Exception as e:
             print(f"[ERR  ] {name}: {e}")
             ok = False

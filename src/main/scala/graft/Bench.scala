@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Benchmark main: every SparkEntry query against
   * `SPARK_GRAFT_SF_DIR`, fully materialized through the `noop` sink
@@ -8,6 +9,9 @@ import java.nio.file.{Files, Paths}
   * to `bench_out.json`; stdout carries one compact JSON line
   * ([[stdoutLine]]) — sbt log prefixes made a log-mixed stdout line
   * unparseable for the round-1 reader.
+  *
+  * `bench_out.json` also records `stream_queries`, the number of
+  * streaming queries the run started.
   *
   * Failures are NOT swallowed into a fake timing: a failed query
   * reports -1 and lands in `"failed"` so a broken query can never
@@ -24,6 +28,15 @@ object Bench {
       SparkEntry.queries.keySet)
     val cpus = Harness.cpus(4)
     val spark = Harness.session(cpus)
+    // streaming queries the run starts (every bounded replay is one);
+    // onQueryStarted runs synchronously inside start()
+    val streamQueries = new java.util.concurrent.atomic.AtomicInteger()
+    spark.streams.addListener(new StreamingQueryListener {
+      def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        streamQueries.incrementAndGet()
+      def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    })
     // Warm the session before measuring: scheduler, parquet reader,
     // whole-stage codegen, window exec, and the BigDecimal path all
     // JIT/initialize on first use — without this the alphabetically
@@ -35,11 +48,10 @@ object Bench {
       val v = array((0 until 64).map(i => lit(i / 64.0f)): _*)
       Harness.noop(spark.range(2000)
         .select(graft.functions.VectorOps.dotDecimal(v, v).as("d")))
-      // Building the events stream materializes the shared time-ordered
-      // split dir (one read-sort-write of events per JVM) — harness
-      // setup, not cost of whichever stream_* query runs first.
-      graft.queries.StreamingQueries.eventsStream(spark, sfDir)
-      graft.queries.StreamingQueries.documentsStream(spark, sfDir)
+      // The shared key-ordered split dirs of events and documents (one
+      // read-sort-write each per JVM) are harness setup, not cost of
+      // whichever stream_* query runs first.
+      Seq("events", "documents").foreach(graft.queries.StreamingQueries.split(spark, sfDir, _))
     } catch { case _: Throwable => () }
     // Each query runs `reps` times; bench_out.json records the
     // per-query median plus the [min,max] spread.
@@ -77,7 +89,7 @@ object Bench {
           }.mkString(""","spread":{""", ",", "}")
       else ""
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"queries":$qs$spread,"sf":"$sfDir","failed":$fj}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"queries":$qs$spread,"sf":"$sfDir","failed":$fj,"stream_queries":${streamQueries.get}}"""
     if (only.isEmpty) {
       Files.writeString(Paths.get("bench_out.json"), fullLine + "\n")
       // The driver benches at TWO core counts and the second run used

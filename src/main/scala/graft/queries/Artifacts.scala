@@ -30,13 +30,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Artifacts {
 
   private val cache =
-    scala.collection.mutable.HashMap[(SparkSession, String, String), DataFrame]()
+    scala.collection.mutable.HashMap[(SparkSession, String, String), AnyRef]()
 
   /** Test-only: when true, [[materialized]] returns the raw build —
-    * no memo, no localCheckpoint — so plan-shape assertions sweep the
-    * FULL inline build (a checkpointed artifact shows up as an opaque
-    * LogicalRDD scan and would blind Exchange/hint sweeps to
-    * regressions inside the build). Never set outside tests.
+    * no memo, no localCheckpoint — and [[memoized]] builds on every
+    * call (each stream twin replays its own ingest), so plan-shape
+    * assertions sweep the FULL inline build (a checkpointed artifact
+    * shows up as an opaque LogicalRDD scan and would blind
+    * Exchange/hint sweeps to regressions inside the build). Never set
+    * outside tests.
     */
   @volatile private[graft] var passthrough = false
 
@@ -52,14 +54,24 @@ object Artifacts {
     * it per timing.
     */
   def materialized(s: SparkSession, dir: String, key: String)(
-      build: => DataFrame): DataFrame = {
+      build: => DataFrame): DataFrame =
+    if (passthrough) build else memoized(s, dir, key)(build.localCheckpoint())
+
+  /** The memoized value `key` for (s, dir), built on first request —
+    * the one memo behind [[materialized]] and the streaming ingest
+    * (`StreamingQueries.ingest`), with the same keying, race posture
+    * and [[clear]] lifecycle. Under [[passthrough]] nothing is
+    * memoized: every request builds.
+    */
+  private[queries] def memoized[A <: AnyRef](s: SparkSession, dir: String, key: String)(
+      build: => A): A = {
     if (passthrough) return build
     val k = (s, dir, key)
     cache.synchronized(cache.get(k)) match {
-      case Some(df) => df
+      case Some(v) => v.asInstanceOf[A]
       case None =>
-        val built = build.localCheckpoint()
-        cache.synchronized(cache.getOrElseUpdate(k, built))
+        val built = build
+        cache.synchronized(cache.getOrElseUpdate(k, built)).asInstanceOf[A]
     }
   }
 

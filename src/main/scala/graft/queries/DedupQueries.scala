@@ -291,8 +291,10 @@ object DedupQueries {
     // and the global clustering coefficient in exact ppm integer math.
     "graph_triangles" -> ((s, dir) => {
       val edges = lshPairs(s, dir)
-      val deg = Graph.degrees(Graph.mirror(edges))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // localCheckpoint, not persist: a catalog-cached degree table
+      // would be read by every later `Graph.degrees` over these edges
+      // built in the session; checkpoint blocks go with the ContextCleaner
+      val deg = Graph.degrees(Graph.mirror(edges)).localCheckpoint()
       val aFirst = col("da") < col("db") ||
         (col("da") === col("db") && col("a") < col("b"))
       val oriented = edges
@@ -300,7 +302,7 @@ object DedupQueries {
         .join(deg.select(col("src").as("b"), col("deg").as("db")), Seq("b"))
         .select(when(aFirst, col("a")).otherwise(col("b")).as("u"),
                 when(aFirst, col("b")).otherwise(col("a")).as("t"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint()
       val wedges = oriented.select(col("u"), col("t").as("t1"))
         .join(oriented.select(col("u"), col("t").as("t2")), Seq("u"))
         .filter(col("t1") < col("t2"))

@@ -10,15 +10,41 @@ import graft.streaming.{CusumStream, EwmaStream, FunnelStream, GapFillStream, Ps
 import graft.tables.Tables
 
 /** Streaming operators run end-to-end as bounded MULTI-BATCH queries:
-  * the events table is split into [[NumSplits]] time-ordered files and
-  * replayed through a file streaming source with `maxFilesPerTrigger=1`
-  * → watermark → stateful operator → [[replay]], compared against the
-  * same computation in DuckDB. Every stateful operator therefore
-  * accumulates state across ≥4 data-carrying micro-batches with the
-  * watermark advancing between them — the oracle hash-match IS the
-  * proof that incremental execution ≡ batch semantics (the property a
-  * real deployment relies on; the reference replays continuously with a
-  * 1 s checkpoint cadence, TimingExplorer.java:73-77).
+  * each replayable fixture is split into [[NumSplits]] key-ordered
+  * files and replayed through a file streaming source with
+  * `maxFilesPerTrigger=1` into [[replay]], the one `foreachBatch`
+  * runner, and compared against the same computation in DuckDB.
+  *
+  * ONE INGEST PER SOURCE. Like the reference's one source feeding
+  * three sinks (TimingExplorer.java:83-103), each split source is
+  * replayed once per (session, data dir) by [[ingest]], which keeps
+  * every delivered raw micro-batch (`localCheckpoint`ed, by batch id)
+  * under the [[Artifacts]] lifecycle. Every STATELESS family — a sketch,
+  * moment, count-grid or per-doc twin whose per-batch partial is a pure
+  * function of the batch — builds its partials from those batches
+  * (`ingest(s, dir, source).partials(family)(build)`) and merges them
+  * with its own law; its projection or filter of the source runs inside
+  * its builder. The merged state is still built from all [[NumSplits]]
+  * delivered micro-batches, so merge(partials) ≡ batch stays proven by
+  * the oracle hash-match.
+  *
+  * OWN REPLAYS. A twin whose proof IS the engine's accumulated state
+  * runs its own replay through the same runner ([[partialsOf]] with
+  * `identity`, or [[replay]] directly), because a replay of the raw
+  * batches could not exercise that state:
+  *   - watermarked windows, sliding and session windows, dedup (plain
+  *     and within-watermark) and the stream-static join;
+  *   - the stream-stream inner and outer attribution joins;
+  *   - flatMapGroupsWithState / transformWithState folds (PseudoWindow,
+  *     gap-fill, CUSUM, EWMA, FunnelStream);
+  *   - the carried sequential folds `stream_sprt` and
+  *     `stream_cdc_maintain`, whose state advances batch by batch.
+  * Every stateful operator therefore accumulates state across the
+  * data-carrying micro-batches with the watermark advancing between
+  * them — the oracle hash-match IS the proof that incremental
+  * execution ≡ batch semantics (the property a real deployment relies
+  * on; the reference replays continuously with a 1 s checkpoint
+  * cadence, TimingExplorer.java:73-77).
   *
   * Append-mode emission is watermark-gated, so the oracle carries the
   * same cutoff: only windows whose end ≤ max(ts) (the final watermark
@@ -88,13 +114,17 @@ object StreamingQueries {
       })
     }
 
-  /** `source` replayed one key-ordered split file per trigger. The file
-    * source reads every field of the split schema as nullable. */
-  private def splitStream(s: SparkSession, dir: String, source: String): DataFrame = {
+  /** `source` replayed one key-ordered split file per trigger, with its
+    * batch table's columns: `events` gets `ts` back from `ts_ms`, last,
+    * like `Tables.events`. The file source reads every field of the
+    * split schema as nullable. */
+  private[graft] def splitStream(s: SparkSession, dir: String, source: String): DataFrame = {
     val (srcDir, schema) = split(s, dir, source)
-    s.readStream.schema(schema)
+    val stream = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(srcDir.toString)
+    if (source == "events") stream.withColumn("ts", timestamp_millis(col("ts_ms")))
+    else stream
   }
 
   /** Range-cuts `raw` on the long column `keyCol` at its exact
@@ -138,22 +168,7 @@ object StreamingQueries {
     * trigger.
     */
   private[graft] def eventsStream(s: SparkSession, dir: String): DataFrame =
-    splitStream(s, dir, "events").withColumn("ts", timestamp_millis(col("ts_ms")))
-
-  /** Vectors as a streaming DataFrame, one id-ordered file per
-    * trigger: the append batch only (the index-ingest fixture) or the
-    * full corpus (`appendOnly = false`, the streaming-statistics
-    * fixture).
-    */
-  private[graft] def embeddingsStream(s: SparkSession, dir: String,
-                                      appendOnly: Boolean): DataFrame =
-    splitStream(s, dir, if (appendOnly) "embeddings_append" else "embeddings")
-
-  /** documents as a streaming DataFrame, replayed one id-ordered file
-    * per trigger — the "daily ingest" fixture.
-    */
-  private[graft] def documentsStream(s: SparkSession, dir: String): DataFrame =
-    splitStream(s, dir, "documents")
+    splitStream(s, dir, "events")
 
   /** CDC delta rows (the `cdc_agg_maintain` synthetic batch) as a
     * streaming DataFrame, replayed one l_orderkey-ordered file per
@@ -291,24 +306,31 @@ object StreamingQueries {
     }
   }
 
-  /** Drive `src` through one bounded replay and return the union of the
-    * per-micro-batch partials `build(batch)`, in batch-id order.
+  /** The partials of a stream that must run its OWN replay: drive
+    * `src` through one bounded [[replay]] and return the union of the
+    * per-micro-batch partials `build(batch)`, in batch-id order. This
+    * is the path of every stateful twin, whose `src` already emits its
+    * own rows (append mode), so `partialsOf(src)(identity)` is that
+    * stream's complete output and its accumulated state is the
+    * incremental ≡ batch proof. A stateless family reads the shared
+    * [[ingest]] of its split source instead (`ingest(…).partials`),
+    * which builds the same seeded union from the delivered batches.
+    * `rocksdb` selects the RocksDB state store (the `transformWithState`
+    * twins need it).
+    *
     * Callers apply their merge law to the returned frame — [[merged]]
     * for the per-column SUM / max laws, `distinct` for set union — the
     * partials are the observable model of per-key streaming-agg state,
     * with the sink as the state boundary.
-    * A stateful `src` already emits its own rows (append mode), so
-    * `partialsOf(src)(identity)` is that stream's complete output.
-    * `rocksdb` selects the RocksDB state store (the `transformWithState`
-    * twins need it).
     *
-    * Each partial is `localCheckpoint`ed inside `foreachBatch` (eager:
-    * its blocks live in the block manager OUTSIDE the catalog cache,
-    * so `spark.catalog.clearCache()` does not evict them, and the
+    * Each raw micro-batch is `localCheckpoint`ed inside `foreachBatch`
+    * by [[replayed]] (eager: a stateful `src`'s batch is evaluated
+    * once, and its blocks live in the block manager OUTSIDE the catalog
+    * cache, so `spark.catalog.clearCache()` does not evict them; the
     * ContextCleaner frees them once the returned frame is unreachable
-    * — the [[Artifacts]] posture). They are kept in a driver-side map
-    * keyed by batch id, so a re-run batch replaces its entry instead
-    * of adding a duplicate.
+    * — the [[Artifacts]] posture). `build` runs over those batches
+    * after the replay, through [[seededUnion]], the same union the
+    * [[ingest]] path builds.
     *
     * The union starts from a zero-row SEED carrying the builder's
     * schema (the builder applied to an empty static frame with the
@@ -326,34 +348,98 @@ object StreamingQueries {
     * the schema seed") drives a deliberately global max-merge builder
     * through this path and fails if the seed row ever escapes again.
     * (`pcaMoments` loses only a zero cell that every real micro-batch
-    * re-emits — its additive merge is unchanged.)
+    * re-emits — its additive merge is unchanged.) The ingest path
+    * seeds the same way.
     */
   private[graft] def partialsOf(src: DataFrame, rocksdb: Boolean = false)
                         (build: DataFrame => DataFrame): DataFrame =
     partialsOfEach(src, rocksdb)((batch, _) => build(batch)).head
 
   /** [[partialsOf]] for several builders over ONE replay, each passed
-    * the micro-batch id too (`stream_quality_lr` tags its worker
-    * shards with it): one partials frame per builder, each seeded and
-    * ordered the same way. Each builder reads `batch` itself, so a
-    * stateful `src` takes one.
+    * the micro-batch id too: one partials frame per builder, each
+    * seeded and ordered the same way, all read from the one set of
+    * checkpointed batches.
     */
   private[graft] def partialsOfEach(src: DataFrame, rocksdb: Boolean = false)
                             (builds: ((DataFrame, Long) => DataFrame)*): Seq[DataFrame] = {
-    val empty = src.sparkSession.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), src.schema)
-    val seeds = builds.map(build => build(empty, -1L).limit(0))
-    val partials = builds.map(_ => scala.collection.mutable.TreeMap[Long, DataFrame]())
-    replay(src, rocksdb) { (batch, bid) =>
-      builds.zip(partials).foreach { case (build, byBid) =>
-        val part = build(batch, bid).localCheckpoint()
-        byBid.synchronized(byBid(bid) = part)
-      }
-    }
-    seeds.zip(partials).map { case (seed, byBid) =>
-      byBid.synchronized(byBid.values.toList).foldLeft(seed)(_ unionByName _)
-    }
+    val batches = replayed(src, rocksdb)
+    builds.map(seededUnion(src.sparkSession, src.schema, batches))
   }
+
+  /** `build` over each of `batches` in batch-id order, unioned onto its
+    * zero-row seed: the builder over an empty static frame of `schema`
+    * (batch id -1), truncated to zero rows. The one union behind
+    * [[partialsOfEach]] and [[Ingest]]. */
+  private def seededUnion(s: SparkSession, schema: StructType, batches: Seq[(Long, DataFrame)])
+                         (build: (DataFrame, Long) => DataFrame): DataFrame = {
+    val seed = build(s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+      schema), -1L).limit(0)
+    batches.map { case (bid, batch) => build(batch, bid) }.foldLeft(seed)(_ unionByName _)
+  }
+
+  /** Drives `src` through one [[replay]] and returns each raw
+    * micro-batch `localCheckpoint`ed, with its batch id, in batch-id
+    * order. They are kept in a driver-side map keyed by batch id, so a
+    * re-run batch replaces its entry instead of adding a duplicate. */
+  private def replayed(src: DataFrame, rocksdb: Boolean = false): Seq[(Long, DataFrame)] = {
+    val byBid = scala.collection.mutable.TreeMap[Long, DataFrame]()
+    replay(src, rocksdb) { (batch, bid) =>
+      val part = batch.localCheckpoint()
+      byBid.synchronized(byBid(bid) = part)
+    }
+    byBid.synchronized(byBid.toList)
+  }
+
+  /** One split source's delivered micro-batches: the stream's schema
+    * and each raw batch `localCheckpoint`ed, with its batch id, in
+    * batch-id order. Every stateless family of the source builds its
+    * partials from these instead of replaying the source again.
+    */
+  private[graft] final class Ingest(s: SparkSession, source: String, schema: StructType,
+                                    batches: Seq[(Long, DataFrame)]) {
+
+    /** `family`'s partials: `build` over each delivered batch in
+      * batch-id order, unioned onto the builder's zero-row seed (the
+      * [[partialsOf]] contract) and `localCheckpoint`ed as one frame.
+      * The family's own projection or filter of the source runs inside
+      * `build`. */
+    def partials(family: String)(build: DataFrame => DataFrame): DataFrame =
+      partialsEach(family)((batch, _) => build(batch)).head
+
+    /** [[partials]] for several builders, each passed the batch id too
+      * (`stream_quality_lr` tags its worker shards with it). A builder
+      * that throws, while its plan is built or while it runs, fails
+      * with `family` and the source in the message. */
+    def partialsEach(family: String)
+                    (builds: ((DataFrame, Long) => DataFrame)*): Seq[DataFrame] =
+      builds.map { build =>
+        try seededUnion(s, schema, batches)(build).localCheckpoint()
+        catch {
+          case scala.util.control.NonFatal(e) => throw new IllegalStateException(
+            s"partials of $family over the $source ingest failed: ${e.getMessage}", e)
+        }
+      }
+  }
+
+  /** The one ingest of `source` (a [[split]] source name) for (s, dir):
+    * its split stream replayed ONCE, each raw micro-batch
+    * `localCheckpoint`ed (one job, no shuffle) and kept by batch id.
+    * It lives in the [[Artifacts]] memo, so `Artifacts.clear()` drops
+    * it and the next family to ask replays again, inside its own timed
+    * region; under `Artifacts.passthrough` every call replays.
+    *
+    * Only stateless families read it: their per-batch builders are pure
+    * functions of the batch, so one replay's delivered batches serve
+    * them all. A stateful stream (watermark, window, dedup,
+    * session, join, flatMapGroupsWithState / transformWithState) and a
+    * carried fold (`stream_sprt`, `stream_cdc_maintain`) keep their own
+    * replay, because their accumulated state is what the twin proves.
+    */
+  private[graft] def ingest(s: SparkSession, dir: String, source: String): Ingest =
+    Artifacts.memoized(s, dir, s"ingest/$source") {
+      val src = splitStream(s, dir, source)
+      new Ingest(s, source, src.schema, replayed(src))
+    }
 
   /** The one per-column merge law over replay partials: `parts`
     * grouped by `keys`, every other column folded by `law` (`sum` for
@@ -379,10 +465,11 @@ object StreamingQueries {
    * is materialized ONCE per (session, dir) through the Artifacts memo —
    * the posture a deployment runs: one state table, N readings. The
    * cross-batch merge proof is not weakened: the family's first
-   * consumer replays the state through the full NumSplits micro-batch
-   * ingest, and every twin's oracle still checks its complete finish
-   * end-to-end. Each `streamed*` function below is one family; its
-   * `Artifacts.materialized` key names it. A sum- or max-merged table
+   * consumer builds the state from all NumSplits micro-batches of its
+   * source's [[ingest]], and every twin's oracle still checks its
+   * complete finish end-to-end. Each `streamed*` function below is one
+   * family; its `Artifacts.materialized` key names it, and names it in
+   * the ingest's failure messages too. A sum- or max-merged table
    * merges through [[merged]]; only the mixed-law (survival spans) and
    * re-cast (cluster geometry) tables spell their `agg` out.
    */
@@ -397,7 +484,7 @@ object StreamingQueries {
   private def streamedClusterCells(s: SparkSession, dir: String): DataFrame =
     Artifacts.materialized(s, dir, "stream_cluster_cells") {
       val cents = SimilarityQueries.trainedCentArr(s, dir)
-      partialsOf(embeddingsStream(s, dir, appendOnly = false)) { batch =>
+      ingest(s, dir, "embeddings").partials("stream_cluster_cells") { batch =>
         SimilarityQueries.assignTo(SimilarityQueries.withNorm(batch, "embedding"), cents)
           .select(col("vec_id"), col("list_id"))
           .join(batch.select(col("vec_id"), col("label")), "vec_id")
@@ -419,11 +506,10 @@ object StreamingQueries {
       val split = EventQueries.psiSplit(base)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       split.count() // freeze the yardstick before the stream starts
-      partialsOf(
-        eventsStream(s, dir)
+      ingest(s, dir, "events").partials("stream_ks_grid") { batch =>
+        EventQueries.ksGrid(EventQueries.psiHalved(batch
           .filter(col("value").isNotNull)
-          .select(col("event_type"), col("event_id"), col("ts_ms"), col("value"))) {
-        batch => EventQueries.ksGrid(EventQueries.psiHalved(batch, split))
+          .select(col("event_type"), col("event_id"), col("ts_ms"), col("value")), split))
       }
         .transform(merged(sum, "event_type", "value"))
     }
@@ -435,9 +521,8 @@ object StreamingQueries {
   private def streamedSurvivalGrid(s: SparkSession, dir: String): DataFrame =
     Artifacts.materialized(s, dir, "stream_survival_grid") {
       StatTestQueries.survivalGrid(
-        partialsOf(
-          eventsStream(s, dir)
-            .select(col("event_type"), col("user_id"), col("ts_ms")))(StatTestQueries.userSpans)
+        ingest(s, dir, "events").partials("stream_survival_grid")(batch =>
+          StatTestQueries.userSpans(batch.select(col("event_type"), col("user_id"), col("ts_ms"))))
           .groupBy(col("event_type"), col("user_id"))
           .agg(min(col("first_ts")).as("first_ts"),
             max(col("last_ts")).as("last_ts")))
@@ -449,10 +534,10 @@ object StreamingQueries {
     */
   private def streamedAnovaStats(s: SparkSession, dir: String): DataFrame =
     Artifacts.materialized(s, dir, "stream_anova_stats") {
-      partialsOf(
-        eventsStream(s, dir)
+      ingest(s, dir, "events").partials("stream_anova_stats")(batch =>
+        StatTestQueries.anovaStats(batch
           .filter(col("value").isNotNull)
-          .select(col("event_type"), dec(col("value")).as("v")))(StatTestQueries.anovaStats)
+          .select(col("event_type"), dec(col("value")).as("v"))))
         .transform(merged(sum, "event_type"))
     }
 
@@ -461,9 +546,9 @@ object StreamingQueries {
     */
   private def streamedKwCells(s: SparkSession, dir: String): DataFrame =
     Artifacts.materialized(s, dir, "stream_kw_cells") {
-      partialsOf(
-        eventsStream(s, dir).filter(col("value").isNotNull)
-          .select(col("event_type"), col("value")))(StatTestQueries.kwCells)
+      ingest(s, dir, "events").partials("stream_kw_cells")(batch =>
+        StatTestQueries.kwCells(batch.filter(col("value").isNotNull)
+          .select(col("event_type"), col("value"))))
         .transform(merged(sum, "event_type", "value"))
     }
 
@@ -472,8 +557,8 @@ object StreamingQueries {
     */
   private def streamedCfExposures(s: SparkSession, dir: String): DataFrame =
     Artifacts.materialized(s, dir, "stream_cf_exposures") {
-      partialsOf(
-        eventsStream(s, dir).select(col("user_id"), col("props")))(EventQueries.cfExposures)
+      ingest(s, dir, "events").partials("stream_cf_exposures")(batch =>
+        EventQueries.cfExposures(batch.select(col("user_id"), col("props"))))
         .distinct()
     }
 
@@ -483,8 +568,8 @@ object StreamingQueries {
     */
   private def streamedUserTotals(s: SparkSession, dir: String): DataFrame =
     Artifacts.materialized(s, dir, "stream_user_totals") {
-      partialsOf(
-        eventsStream(s, dir).select(col("user_id"), col("value")))(EventQueries.giniCells)
+      ingest(s, dir, "events").partials("stream_user_totals")(batch =>
+        EventQueries.giniCells(batch.select(col("user_id"), col("value"))))
         .transform(merged(sum, "user_id"))
     }
 
@@ -493,7 +578,7 @@ object StreamingQueries {
     */
   private def streamedLexdivCells(s: SparkSession, dir: String): DataFrame =
     Artifacts.materialized(s, dir, "stream_lexdiv_cells") {
-      partialsOf(documentsStream(s, dir))(TextQueries.lexdivCells)
+      ingest(s, dir, "documents").partials("stream_lexdiv_cells")(TextQueries.lexdivCells)
         .transform(merged(sum, "source", "tok"))
     }
 
@@ -546,9 +631,8 @@ object StreamingQueries {
     */
   private def streamedHourlyCells(s: SparkSession, dir: String): DataFrame =
     Artifacts.materialized(s, dir, "stream_hourly_cells") {
-      partialsOf(
-        eventsStream(s, dir)
-          .select(col("event_type"), col("ts_ms"), col("value")))(EventQueries.hourlyCells)
+      ingest(s, dir, "events").partials("stream_hourly_cells")(batch =>
+        EventQueries.hourlyCells(batch.select(col("event_type"), col("ts_ms"), col("value"))))
         .transform(merged(sum, "event_type", "hour_ms"))
     }
 
@@ -564,7 +648,7 @@ object StreamingQueries {
   private def streamedClusterGeom(s: SparkSession, dir: String) = {
     val st = Artifacts.materialized(s, dir, "stream_cluster_geom") {
       val cents = SimilarityQueries.trainedCentArr(s, dir)
-      partialsOf(embeddingsStream(s, dir, appendOnly = false)) { batch =>
+      ingest(s, dir, "embeddings").partials("stream_cluster_geom") { batch =>
         val assigned =
           SimilarityQueries.assignTo(SimilarityQueries.withNorm(batch, "embedding"), cents)
         val dimsP = assigned
@@ -748,12 +832,12 @@ object StreamingQueries {
     // STREAMING incremental dedup — dedup_incremental's ingest twin,
     // and the production shape of "dedup the daily crawl against the
     // corpus": new documents ARRIVE as micro-batches (3 id-ordered
-    // files) and each batch runs the incremental check inside
-    // foreachBatch against the STATIC base-corpus artifacts (exact-
-    // fingerprint mins + LSH band-bucket mins, persisted once before
-    // the stream starts — at 100 TB these are the corpus's index
-    // tables, appended per ingest cycle). foreachBatch is the
-    // batch-incremental hybrid Spark idiom: per batch it is a plain
+    // files) and each delivered batch runs the incremental check
+    // against the STATIC base-corpus artifacts (exact-fingerprint
+    // mins + LSH band-bucket mins, built once before the check — at
+    // 100 TB these are the corpus's index tables, appended per ingest
+    // cycle). The per-batch builder is the batch-incremental hybrid
+    // idiom: per batch it is a plain
     // stream-static join + per-doc agg (stateless across batches —
     // doc-range splits mean a doc's rows never straddle batches), so
     // the accumulated output over all batches is EXACTLY the batch
@@ -770,8 +854,8 @@ object StreamingQueries {
         .groupBy(DedupQueries.bandKeys.map(col): _*)
         .agg(min(col("doc_id")).as("base_rep"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val checked = partialsOf(
-          documentsStream(s, dir).filter(isNew)) { batch =>
+      val checked = ingest(s, dir, "documents").partials("stream_incremental_dedup") { docs =>
+          val batch = docs.filter(isNew)
           val fp = batch.select(col("doc_id"),
             Dedup.exactFingerprint(col("text")).as("fp"))
           val nearMin = DedupQueries.bandsOf(batch)
@@ -809,9 +893,9 @@ object StreamingQueries {
         .filter(!isNew)
         .select(col("gram_h")).distinct()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val covered = partialsOf(
-          documentsStream(s, dir).filter(isNew)) { batch =>
-          val docs = batch.select(col("doc_id"), col("text"))
+      val covered =
+        ingest(s, dir, "documents").partials("stream_substring_incremental") { batch =>
+          val docs = batch.filter(isNew).select(col("doc_id"), col("text"))
           Dedup.coverageOver(docs,
             Dedup.gramTable(docs, DedupQueries.SpanTokens)
               .join(baseGrams, "gram_h"),
@@ -851,8 +935,7 @@ object StreamingQueries {
           DedupQueries.SpanTokens)
         .select(col("gram_h")).distinct()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val decided = partialsOf(
-          documentsStream(s, dir)) { batch =>
+      val decided = ingest(s, dir, "documents").partials("stream_decontaminate") { batch =>
           val docs = batch.join(trainIds, "doc_id")
             .select(col("doc_id"), plant)
           Dedup.coverageOver(docs,
@@ -882,9 +965,8 @@ object StreamingQueries {
     // the merged registers are the sketch state a streaming agg holds
     // per-key; the per-batch partials model it observably.
     "stream_hll_users" -> ((s, dir) => {
-      val state = partialsOf(
-          eventsStream(s, dir).select(col("user_id"))) {
-          batch => EventQueries.hllRegisters(batch)
+      val state = ingest(s, dir, "events").partials("stream_hll_users") {
+          batch => EventQueries.hllRegisters(batch.select(col("user_id")))
             .groupBy(col("reg")).agg(max(col("rho")).as("mj"))
         }
         .transform(merged(max, "reg"))
@@ -902,10 +984,9 @@ object StreamingQueries {
     // audit against the exact top-10 shares sketch_cms_tokens' oracle
     // — merge(partials) ≡ batch sketch, hash-proven.
     "stream_cms_tokens" -> ((s, dir) => {
-      val state = partialsOf(
-          documentsStream(s, dir)
-            .select(explode(graft.text.TextOps.tokens(col("text"))).as("token"))) {
-          batch => TextQueries.cmsBuckets(batch)
+      val state = ingest(s, dir, "documents").partials("stream_cms_tokens") {
+          batch => TextQueries.cmsBuckets(
+              batch.select(explode(graft.text.TextOps.tokens(col("text"))).as("token")))
             .groupBy(col("r"), col("bucket"))
             .agg(count(lit(1)).as("counter"))
         }
@@ -926,9 +1007,8 @@ object StreamingQueries {
     // aggregation exactly: hash-proven by sharing events_top_users'
     // oracle.
     "stream_topk" -> ((s, dir) => {
-      partialsOf(
-          eventsStream(s, dir).select(col("user_id"), col("value"))) {
-          batch => batch.groupBy(col("user_id"))
+      ingest(s, dir, "events").partials("stream_topk") {
+          batch => batch.select(col("user_id"), col("value")).groupBy(col("user_id"))
             .agg(count(lit(1)).as("n_events"),
                  sum(dec(col("value"))).as("sum_dec"))
         }
@@ -950,9 +1030,10 @@ object StreamingQueries {
     // merge. Shares `events_regression`'s oracle: the hash match
     // proves online moment accumulation ≡ one-pass batch training.
     "stream_regression" -> ((s, dir) =>
-      EventQueries.regressionFinish(EventQueries.momentsAsDoubles(partialsOf(
-          eventsStream(s, dir)
-            .select(col("event_type"), col("ts_ms"), col("value")))(EventQueries.regressionMoments)
+      EventQueries.regressionFinish(EventQueries.momentsAsDoubles(
+        ingest(s, dir, "events").partials("stream_regression")(batch =>
+          EventQueries.regressionMoments(
+            batch.select(col("event_type"), col("ts_ms"), col("value"))))
         .transform(merged(sum, "event_type"))))),
 
     // STREAMING BOOTSTRAP — resampling-based uncertainty as a sketch:
@@ -967,10 +1048,9 @@ object StreamingQueries {
     // — merge(partials) ≡ batch, hash-proven.
     "stream_bootstrap" -> ((s, dir) => {
       EventQueries.bootstrapFinish(EventQueries.bootstrapWideOf(
-        partialsOf(
-          eventsStream(s, dir)
-            .select(col("event_id"), col("event_type"), col("value")))(
-          EventQueries.bootstrapPartialsLong)
+        ingest(s, dir, "events").partials("stream_bootstrap")(batch =>
+          EventQueries.bootstrapPartialsLong(
+            batch.select(col("event_id"), col("event_type"), col("value"))))
           .groupBy(col("event_type"), col("r"))
           .agg(sum(col("wv")).cast("decimal(38,4)").as("wv"),
                sum(col("wn")).as("wn"))))
@@ -986,7 +1066,7 @@ object StreamingQueries {
     // `pipeline_sample_wor`'s oracle). State is K rows per batch, not
     // |docs|.
     "stream_sample_wor" -> ((s, dir) => {
-      DedupQueries.worTopK(partialsOf(documentsStream(s, dir)) {
+      DedupQueries.worTopK(ingest(s, dir, "documents").partials("stream_sample_wor") {
         batch => DedupQueries.worTopK(DedupQueries.worKeys(batch)).drop("rn")
       })
     }),
@@ -1049,8 +1129,8 @@ object StreamingQueries {
     // time over the cell frame. Shares `events_chisq`'s oracle.
     "stream_chisq" -> ((s, dir) => {
       StatTestQueries.chisqFinish(
-        partialsOf(
-          eventsStream(s, dir).filter(col("value").isNotNull))(StatTestQueries.chisqCells)
+        ingest(s, dir, "events").partials("stream_chisq")(batch =>
+          StatTestQueries.chisqCells(batch.filter(col("value").isNotNull)))
           .transform(merged(sum, "event_type", "bucket")))
     }),
 
@@ -1061,7 +1141,8 @@ object StreamingQueries {
     // `pipeline_importance_weights`' oracle, hash-proven.
     "stream_importance" -> ((s, dir) => {
       DedupQueries.importanceFinish(
-        partialsOf(documentsStream(s, dir).select(col("lang")))(DedupQueries.langCells)
+        ingest(s, dir, "documents").partials("stream_importance")(batch =>
+          DedupQueries.langCells(batch.select(col("lang"))))
           .transform(merged(sum, "lang")))
     }),
 
@@ -1071,8 +1152,8 @@ object StreamingQueries {
     // Shares `text_jsd_drift`'s oracle, hash-proven.
     "stream_jsd_drift" -> ((s, dir) => {
       TextQueries.jsdFinish(
-        partialsOf(documentsStream(s, dir)
-            .select(col("doc_id"), col("text")))(TextQueries.jsdCells)
+        ingest(s, dir, "documents").partials("stream_jsd_drift")(batch =>
+          TextQueries.jsdCells(batch.select(col("doc_id"), col("text"))))
           .transform(merged(sum, "tok")))
     }),
 
@@ -1083,8 +1164,8 @@ object StreamingQueries {
     // cell frame. Shares `events_benford`'s oracle, hash-proven.
     "stream_benford" -> ((s, dir) => {
       StatTestQueries.benfordFinish(
-        partialsOf(
-          eventsStream(s, dir).filter(col("value").isNotNull))(StatTestQueries.benfordCells)
+        ingest(s, dir, "events").partials("stream_benford")(batch =>
+          StatTestQueries.benfordCells(batch.filter(col("value").isNotNull)))
           .transform(merged(sum, "event_type", "digit")))
     }),
 
@@ -1162,9 +1243,8 @@ object StreamingQueries {
     // finish runs at serving. Shares `events_cohort_ltv`'s oracle.
     "stream_cohort_ltv" -> ((s, dir) => {
       EventQueries.ltvFinish(
-        partialsOf(
-          eventsStream(s, dir)
-            .select(col("user_id"), col("ts_ms"), col("value")))(EventQueries.ltvUserDays)
+        ingest(s, dir, "events").partials("stream_cohort_ltv")(batch =>
+          EventQueries.ltvUserDays(batch.select(col("user_id"), col("ts_ms"), col("value"))))
           .transform(merged(sum, "user_id", "day_ms")))
     }),
 
@@ -1206,12 +1286,10 @@ object StreamingQueries {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       split.count() // freeze the yardstick before the stream starts
       StatTestQueries.mhFinish(
-        partialsOf(
-          eventsStream(s, dir)
-            .select(col("event_type"), col("user_id"), col("ts_ms"),
-              col("value"))) {
-          batch => StatTestQueries.mhCells(
-            EventQueries.psiHalved(batch, split))
+        ingest(s, dir, "events").partials("stream_mantel_haenszel") {
+          batch => StatTestQueries.mhCells(EventQueries.psiHalved(
+            batch.select(col("event_type"), col("user_id"), col("ts_ms"), col("value")),
+            split))
         }
           .transform(merged(max, "half", "variant", "user_id")))
     }),
@@ -1221,10 +1299,10 @@ object StreamingQueries {
     // serving. Shares events_kendall_tau's oracle, hash-proven.
     "stream_kendall_tau" -> ((s, dir) =>
       StatTestQueries.kendallFinish(
-        partialsOf(
-          eventsStream(s, dir)
+        ingest(s, dir, "events").partials("stream_kendall_tau")(batch =>
+          StatTestQueries.kendallCells(batch
             .filter(col("value").isNotNull)
-            .select(col("event_type"), col("ts_ms"), col("value")))(StatTestQueries.kendallCells)
+            .select(col("event_type"), col("ts_ms"), col("value"))))
           .transform(merged(sum, "event_type", "vb", "hb")))),
 
     // STREAMING HILL TAIL INDEX — per-(type, user) activity counts
@@ -1233,9 +1311,7 @@ object StreamingQueries {
     // hash-proven.
     "stream_hill_tail" -> ((s, dir) =>
       StatTestQueries.hillFinish(
-        partialsOf(
-          eventsStream(s, dir)
-            .select(col("event_type"), col("user_id"))) { batch =>
+        ingest(s, dir, "events").partials("stream_hill_tail") { batch =>
           batch.groupBy(col("event_type"), col("user_id"))
             .agg(count(lit(1)).as("x"))
         }
@@ -1249,9 +1325,8 @@ object StreamingQueries {
     // Shares events_moments' oracle, hash-proven.
     "stream_moments" -> ((s, dir) =>
       StatTestQueries.momentsFinish(
-        partialsOf(
-          eventsStream(s, dir)
-            .select(col("event_type"), col("value")))(StatTestQueries.momentCells)
+        ingest(s, dir, "events").partials("stream_moments")(batch =>
+          StatTestQueries.momentCells(batch.select(col("event_type"), col("value"))))
           .transform(merged(sum, "event_type")))),
 
     // STREAMING GUMBEL FIT — daily block maxima are MAX-merge state
@@ -1260,9 +1335,8 @@ object StreamingQueries {
     // events_gumbel_maxima's oracle, hash-proven.
     "stream_gumbel_maxima" -> ((s, dir) =>
       StatTestQueries.gumbelFinish(
-        partialsOf(
-          eventsStream(s, dir)
-            .select(col("event_type"), col("ts_ms"), col("value")))(StatTestQueries.gumbelCells)
+        ingest(s, dir, "events").partials("stream_gumbel_maxima")(batch =>
+          StatTestQueries.gumbelCells(batch.select(col("event_type"), col("ts_ms"), col("value"))))
           .transform(merged(max, "event_type", "day")))),
 
     // STREAMING SIGN TEST — the (type, hod, half) sum/count cells
@@ -1277,12 +1351,10 @@ object StreamingQueries {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       split.count() // freeze the yardstick before the stream starts
       StatTestQueries.signFinish(
-        partialsOf(
-          eventsStream(s, dir)
+        ingest(s, dir, "events").partials("stream_sign_test") {
+          batch => StatTestQueries.signCells(EventQueries.psiHalved(batch
             .filter(col("value").isNotNull)
-            .select(col("event_type"), col("ts_ms"), col("value"))) {
-          batch => StatTestQueries.signCells(
-            EventQueries.psiHalved(batch, split))
+            .select(col("event_type"), col("ts_ms"), col("value")), split))
         }
           .transform(merged(sum, "event_type", "hod", "half")))
     }),
@@ -1296,7 +1368,7 @@ object StreamingQueries {
       val nDocs = Tables.documents(s, dir)
         .agg(count(lit(1)).as("n_docs"))
       TextQueries.burstinessFinish(
-        partialsOf(documentsStream(s, dir)) { batch =>
+        ingest(s, dir, "documents").partials("stream_burstiness") { batch =>
           batch.select(col("doc_id"),
               explode(graft.text.TextOps.tokens(col("text"))).as("tok"))
             .groupBy(col("tok"), col("doc_id"))
@@ -1318,24 +1390,23 @@ object StreamingQueries {
     // the rank CUT is not mergeable, but the grid it cuts is.
     "stream_trimmed_mean" -> ((s, dir) => {
       EventQueries.trimmedFromGrid(
-        partialsOf(
-          eventsStream(s, dir)
-            .filter(col("value").isNotNull)
-            .select(col("event_type"), dec(col("value")).as("v"))) {
-          batch => batch.groupBy(col("event_type"), col("v"))
+        ingest(s, dir, "events").partials("stream_trimmed_mean") {
+          batch => batch.filter(col("value").isNotNull)
+            .select(col("event_type"), dec(col("value")).as("v"))
+            .groupBy(col("event_type"), col("v"))
             .agg(count(lit(1)).as("cnt"))
         }
           .transform(merged(sum, "event_type", "v")))
     }),
 
     // STREAMING CLASSIFIER TRAINING — the data-parallel /
-    // parameter-server shape made literal: each Newton round replays
-    // the ingest log, every micro-batch computes its OWN 9-sum
-    // gradient/Hessian partial against the frozen β (these rows ARE
-    // the worker gradients), the merge is per-column decimal SUM, and
-    // the 3×3 solve advances β between epochs. The scoring pass is a
-    // third replay of additive partials (n, n_pos, log-loss decimal
-    // sum, correct-count) at the final β. Shares `text_quality_lr`'s
+    // parameter-server shape made literal: in each Newton round every
+    // worker (one micro-batch of the documents ingest) computes its OWN
+    // 9-sum gradient/Hessian partial against the frozen β (these rows
+    // ARE the worker gradients), the merge is per-column decimal SUM,
+    // and the 3×3 solve advances β between epochs. The scoring pass is
+    // a third round of additive worker partials (n, n_pos, log-loss
+    // decimal sum, correct-count) at the final β. Shares `text_quality_lr`'s
     // oracle — federated-sum training ≡ one-pass batch training,
     // hash-proven; the sequential part (β between rounds) is exactly
     // the part that cannot merge, which is why it is the epoch
@@ -1343,8 +1414,8 @@ object StreamingQueries {
     "stream_quality_lr" -> ((s, dir) => {
       // r18 (VERDICT r17 item 1 — "batch the federated replays that
       // still rebuild per epoch"): the per-doc FEATURES are
-      // β-independent, so the ingest replay runs ONCE, materializing
-      // each micro-batch's feature shard tagged with its worker id
+      // β-independent, so each delivered micro-batch of the documents
+      // ingest gives ONE feature shard tagged with its worker id
       // (= batch id); the Newton epochs and the scoring pass then run
       // over the STORED worker shards — each epoch computes one 9-sum
       // gradient/Hessian partial PER WORKER at the frozen β (these
@@ -1355,7 +1426,7 @@ object StreamingQueries {
       // Values bit-identical (decimal sums associative; oracle-pinned
       // at 3 SFs).
       val feats = Artifacts.materialized(s, dir, "stream_lr_worker_feats") {
-        partialsOfEach(documentsStream(s, dir)) {
+        ingest(s, dir, "documents").partialsEach("stream_lr_worker_feats") {
           (batch, bid) =>
             TextQueries.lrFeaturesOf(batch).withColumn("worker", lit(bid))
         }.head
@@ -1379,8 +1450,9 @@ object StreamingQueries {
     // agg, hash-proven, extending the mergeability suite from
     // frequency (CMS) and cardinality (HLL) to information measures.
     "stream_entropy_mi" -> ((s, dir) =>
-      EventQueries.entropyFinish(partialsOf(
-          eventsStream(s, dir).select(col("event_type"), col("ts_ms")))(EventQueries.entropyCells)
+      EventQueries.entropyFinish(
+        ingest(s, dir, "events").partials("stream_entropy_mi")(batch =>
+          EventQueries.entropyCells(batch.select(col("event_type"), col("ts_ms"))))
         .transform(merged(sum, "event_type", "hour")))),
 
     // Streaming cohort RETENTION — two merge laws at once: per batch,
@@ -1394,10 +1466,9 @@ object StreamingQueries {
     // state IS the batch plan; shares events_retention's oracle,
     // hash-proven.
     "stream_retention" -> ((s, dir) => {
-      val pairs = partialsOf(
-          eventsStream(s, dir)
-            .select(col("user_id"),
-                    (col("ts_ms") - col("ts_ms") % 86400000L).as("day_ms")))(_.distinct())
+      val pairs = ingest(s, dir, "events").partials("stream_retention")(batch =>
+          batch.select(col("user_id"),
+                       (col("ts_ms") - col("ts_ms") % 86400000L).as("day_ms")).distinct())
         .distinct()
       val cohort = pairs.groupBy(col("user_id"))
         .agg(min(col("day_ms")).as("cohort_day_ms"))
@@ -1417,9 +1488,8 @@ object StreamingQueries {
     // argument as stream_topk). State is one row per user per batch,
     // compacted by the merge. Shares events_rfm's oracle, hash-proven.
     "stream_rfm" -> ((s, dir) => {
-      val merged = partialsOf(
-          eventsStream(s, dir)
-            .select(col("user_id"), col("ts_ms"), col("value")))(EventQueries.rfmPerUser)
+      val merged = ingest(s, dir, "events").partials("stream_rfm")(batch =>
+          EventQueries.rfmPerUser(batch.select(col("user_id"), col("ts_ms"), col("value"))))
         .groupBy(col("user_id"))
         .agg(max(col("last_ms")).as("last_ms"),
              sum(col("freq")).as("freq"),
@@ -1431,9 +1501,9 @@ object StreamingQueries {
     // merge(partials) ≡ batch cells, so the quasi-experimental
     // estimate hash-matches the batch oracle while metrics ingest.
     "stream_did" -> ((s, dir) =>
-      EventQueries.didFinish(partialsOf(
-          eventsStream(s, dir)
-            .select(col("user_id"), col("ts_ms"), col("value")))(EventQueries.didCells)
+      EventQueries.didFinish(
+        ingest(s, dir, "events").partials("stream_did")(batch =>
+          EventQueries.didCells(batch.select(col("user_id"), col("ts_ms"), col("value"))))
         .transform(merged(sum, "variant", "period")))),
 
     // Streaming power analysis — per-type exact decimal moments
@@ -1442,8 +1512,9 @@ object StreamingQueries {
     // batch oracle. This is the deployment that keeps the experiment
     // design current while metrics ingest.
     "stream_power_analysis" -> ((s, dir) =>
-      EventQueries.powerFinish(partialsOf(
-          eventsStream(s, dir).select(col("event_type"), col("value")))(EventQueries.powerMoments)
+      EventQueries.powerFinish(
+        ingest(s, dir, "events").partials("stream_power_analysis")(batch =>
+          EventQueries.powerMoments(batch.select(col("event_type"), col("value"))))
         .transform(merged(sum, "event_type")))),
 
     // Streaming Kneser-Ney — the bigram count table is the ONLY state
@@ -1452,8 +1523,9 @@ object StreamingQueries {
     // inputs never stream. Merge(partials) ≡ batch counts → the full
     // smoothed-probability report hash-matches the batch oracle.
     "stream_kneser_ney" -> ((s, dir) =>
-      TextQueries.knFinish(partialsOf(
-          documentsStream(s, dir).select(col("text")))(TextQueries.knBigramCounts)
+      TextQueries.knFinish(
+        ingest(s, dir, "documents").partials("stream_kneser_ney")(batch =>
+          TextQueries.knBigramCounts(batch.select(col("text"))))
         .transform(merged(sum, "w1", "w2")))),
 
     // Streaming skew probe — per-key counts are the canonical additive
@@ -1462,8 +1534,9 @@ object StreamingQueries {
     // merged frame hash-match events' batch probe exactly. This is the
     // deployment that watches a key's skew drift WHILE it ingests.
     "stream_skew_probe" -> ((s, dir) =>
-      EventQueries.skewFinish(partialsOf(
-          eventsStream(s, dir).select(col("user_id")))(EventQueries.skewKeyCounts)
+      EventQueries.skewFinish(
+        ingest(s, dir, "events").partials("stream_skew_probe")(batch =>
+          EventQueries.skewKeyCounts(batch.select(col("user_id"))))
         .transform(merged(sum, "user_id")))),
 
     // Streaming segment uplift — the (type, variant) decimal moment
@@ -1474,9 +1547,9 @@ object StreamingQueries {
     // moment rows in state and re-reads uplift per segment on every
     // trigger.
     "stream_uplift" -> ((s, dir) =>
-      EventQueries.upliftFinish(partialsOf(
-          eventsStream(s, dir).select(col("event_type"), col("user_id"),
-            col("value")))(EventQueries.upliftCells)
+      EventQueries.upliftFinish(
+        ingest(s, dir, "events").partials("stream_uplift")(batch =>
+          EventQueries.upliftCells(batch.select(col("event_type"), col("user_id"), col("value"))))
         .transform(merged(sum, "event_type", "variant")))),
 
     // Streaming epoch planner — per-source token-count partials are
@@ -1487,8 +1560,9 @@ object StreamingQueries {
     // a mixture dashboard keeps per-source running token totals in
     // state and re-plans epochs on every trigger.
     "stream_mix_epochs" -> ((s, dir) =>
-      DedupQueries.mixEpochsFinish(partialsOf(
-          documentsStream(s, dir).select(col("source"), col("text")))(DedupQueries.sourceTokens)
+      DedupQueries.mixEpochsFinish(
+        ingest(s, dir, "documents").partials("stream_mix_epochs")(batch =>
+          DedupQueries.sourceTokens(batch.select(col("source"), col("text"))))
         .transform(merged(sum, "source")))),
 
     // Streaming ACF — the hourly contingency cells are the mergeable
@@ -1520,10 +1594,8 @@ object StreamingQueries {
     // positions: the third mergeability law (max/sum/OR) the sketch
     // suite relies on, hash-proven against sketch_bloom's oracle.
     "stream_bloom" -> ((s, dir) => {
-      val merged = partialsOf(
-          eventsStream(s, dir)
-            .select(col("user_id").cast("string").as("key"))) {
-          b => EventQueries.bloomBits(b.distinct())
+      val merged = ingest(s, dir, "events").partials("stream_bloom") {
+          b => EventQueries.bloomBits(b.select(col("user_id").cast("string").as("key")).distinct())
         }
         .distinct()
       val base = Tables.events(s, dir)
@@ -1540,10 +1612,9 @@ object StreamingQueries {
     // oracle exactly. The audit's exact order statistic reads the
     // batch table (the stream replays the same totality).
     "stream_quantiles" -> ((s, dir) => {
-      val state = partialsOf(
-          eventsStream(s, dir)
-            .filter(col("value").isNotNull).select(col("value"))) {
-          batch => EventQueries.quantileBuckets(batch)
+      val state = ingest(s, dir, "events").partials("stream_quantiles") {
+          batch => EventQueries.quantileBuckets(
+              batch.filter(col("value").isNotNull).select(col("value")))
             .groupBy(col("bucket")).agg(count(lit(1)).as("cnt"))
         }
         .transform(merged(sum, "bucket"))
@@ -1563,8 +1634,9 @@ object StreamingQueries {
     // bounded regardless of history.
     "stream_kmv" -> ((s, dir) => {
       val merged = EventQueries.kmvKMin(
-        partialsOf(eventsStream(s, dir).select(col("event_type"), col("user_id"))) {
-          batch => EventQueries.kmvKMin(EventQueries.kmvHashes(batch), "event_type")
+        ingest(s, dir, "events").partials("stream_kmv") { batch =>
+          EventQueries.kmvKMin(
+            EventQueries.kmvHashes(batch.select(col("event_type"), col("user_id"))), "event_type")
         }.distinct(), "event_type")
       EventQueries.kmvEstimate(merged,
         Tables.events(s, dir).groupBy(col("event_type"))
@@ -1592,11 +1664,10 @@ object StreamingQueries {
     // regardless of history. Shares the batch oracle — sum-merge ≡
     // batch, hash-proven.
     "stream_seasonality" -> ((s, dir) => {
-      val state = partialsOf(
-          eventsStream(s, dir)
-            .select(col("event_type"),
-                    (col("ts_ms") - col("ts_ms") % 3600000L).as("hour_ms"))) {
-          batch => batch.groupBy(col("event_type"), col("hour_ms"))
+      val state = ingest(s, dir, "events").partials("stream_seasonality") {
+          batch => batch
+            .select(col("event_type"), (col("ts_ms") - col("ts_ms") % 3600000L).as("hour_ms"))
+            .groupBy(col("event_type"), col("hour_ms"))
             .agg(count(lit(1)).as("cnt"))
         }
         .transform(merged(sum, "event_type", "hour_ms"))
@@ -1744,12 +1815,11 @@ object StreamingQueries {
         EventQueries.psiHalved(e, split).filter(col("half") === "ref"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       edges.count() // freeze the artifact before the stream starts
-      val state = partialsOf(
-          eventsStream(s, dir)
+      val state = ingest(s, dir, "events").partials("stream_psi") {
+          batch => EventQueries.psiBinCounts(EventQueries.psiHalved(batch
             .filter(col("value").isNotNull)
-            .select(col("event_type"), col("event_id"), col("ts_ms"), col("value"))) {
-          batch => EventQueries.psiBinCounts(
-            EventQueries.psiHalved(batch, split), edges)
+            .select(col("event_type"), col("event_id"), col("ts_ms"), col("value")), split),
+            edges)
         }
         .transform(merged(sum, "event_type", "half", "bin"))
       EventQueries.psiFinish(s, state)
@@ -1829,12 +1899,13 @@ object StreamingQueries {
     // oracle: merge(batch LM partials) ≡ one-pass training — the
     // "language model as a sketch" member of the merge-law suite.
     "stream_perplexity" -> ((s, dir) => {
-      // the three per-batch partial builders over ONE replay, each
-      // schema-seeded by partialsOfEach (a zero-batch source still
-      // yields typed empty partials; ADVICE r10)
+      // the three per-batch partial builders over the documents
+      // ingest, each schema-seeded (a zero-batch source still yields
+      // typed empty partials; ADVICE r10)
       def toksOf(batch: DataFrame) = batch.select(col("doc_id"),
         graft.text.TextOps.tokens(col("text")).as("t"))
-      val Seq(c12Parts, vocParts, testParts) = partialsOfEach(documentsStream(s, dir))(
+      val Seq(c12Parts, vocParts, testParts) =
+        ingest(s, dir, "documents").partialsEach("stream_perplexity")(
         (batch, _) =>
           TextQueries.bigramsOf(toksOf(batch).filter(col("doc_id") % 2 === 0))
             .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12")),
@@ -1860,8 +1931,8 @@ object StreamingQueries {
     // online index-side statistics reproduce the batch principal
     // axis bit-for-bit.
     "stream_pca" -> ((s, dir) => {
-      SimilarityQueries.pcaFinish(partialsOf(
-        embeddingsStream(s, dir, appendOnly = false))(SimilarityQueries.pcaMoments))
+      SimilarityQueries.pcaFinish(
+        ingest(s, dir, "embeddings").partials("stream_pca")(SimilarityQueries.pcaMoments))
     }),
 
     // STREAMING SILHOUETTE — clustering quality maintained as vectors
@@ -1875,7 +1946,7 @@ object StreamingQueries {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       cents.count() // freeze the yardstick before the stream starts
       SimilarityQueries.silFinishOf(
-        partialsOf(embeddingsStream(s, dir, appendOnly = false)) { batch =>
+        ingest(s, dir, "embeddings").partials("stream_silhouette") { batch =>
           SimilarityQueries.silPartials(SimilarityQueries.withNorm(batch, "embedding"), cents)
         }
           .transform(merged(sum, "list_id")))
@@ -1884,10 +1955,10 @@ object StreamingQueries {
     // STREAMING index ingest — ann_index_append's arriving-batches
     // twin (the stream_incremental_dedup pattern applied to the
     // vector index): the append batch's vectors arrive as 3
-    // id-ordered micro-batches; foreachBatch assigns each batch to
+    // id-ordered micro-batches; each delivered batch is assigned to
     // the FROZEN base centroids (a pure broadcast projection — the
     // same marginal cost a vector store pays per ingest tick) and
-    // appends the assignments to the persisted lists. The search then
+    // its assignments are appended to the persisted lists. The search then
     // runs over base lists ∪ streamed assignments. Assignment is a
     // pure per-row function of the frozen centroids, so
     // ingest-incremental ≡ batch append ≡ full rebuild row-for-row —
@@ -1895,8 +1966,8 @@ object StreamingQueries {
     // IS the proof.
     "stream_ann_index_append" -> ((s, dir) => {
       val centArr = SimilarityQueries.appendCentArr(s, dir)
-      val streamed = partialsOf(
-          embeddingsStream(s, dir, appendOnly = true)) { batch =>
+      val streamed =
+        ingest(s, dir, "embeddings_append").partials("stream_ann_index_append") { batch =>
           SimilarityQueries.assignTo(SimilarityQueries.withNorm(batch, "embedding"), centArr)
         }
       val appended = SimilarityQueries.appendBaseAssigned(s, dir)
@@ -1984,9 +2055,8 @@ object StreamingQueries {
     // events_capture_recapture's oracle, hash-proven.
     "stream_capture_recapture" -> ((s, dir) =>
       EventQueries.crFinish(
-        partialsOf(
-            eventsStream(s, dir)
-              .select(col("event_type"), col("user_id"), col("event_id")))(EventQueries.crCells)
+        ingest(s, dir, "events").partials("stream_capture_recapture")(batch =>
+          EventQueries.crCells(batch.select(col("event_type"), col("user_id"), col("event_id"))))
           .distinct())),
 
     // STREAMING ODDS RATIO — the 2×2 effect size maintained online:
@@ -1996,8 +2066,8 @@ object StreamingQueries {
     // events_odds_ratio's oracle, hash-proven.
     "stream_odds_ratio" -> ((s, dir) =>
       EventQueries.orFinish(
-        partialsOf(
-            eventsStream(s, dir).select(col("user_id"), col("event_type")))(EventQueries.orCells)
+        ingest(s, dir, "events").partials("stream_odds_ratio")(batch =>
+          EventQueries.orCells(batch.select(col("user_id"), col("event_type"))))
           .transform(merged(max, "variant", "user_id")))),
 
     // STREAMING HHI — the squared-share concentration reading over
@@ -2045,9 +2115,8 @@ object StreamingQueries {
     // oracle, hash-proven.
     "stream_mood_median" -> ((s, dir) =>
       StatTestQueries.moodFinish(
-        partialsOf(
-          eventsStream(s, dir)
-            .select(col("event_type"), col("value")))(StatTestQueries.moodGrid)
+        ingest(s, dir, "events").partials("stream_mood_median")(batch =>
+          StatTestQueries.moodGrid(batch.select(col("event_type"), col("value"))))
           .transform(merged(sum, "event_type", "value")))),
 
     // STREAMING LEXICAL DIVERSITY — vocabulary health maintained as
@@ -2073,7 +2142,7 @@ object StreamingQueries {
     // time. Shares its oracle, hash-proven.
     "stream_ngram_novelty" -> ((s, dir) =>
       TextQueries.novelFinish(
-        partialsOf(documentsStream(s, dir))(b =>
+        ingest(s, dir, "documents").partials("stream_ngram_novelty")(b =>
             TextQueries.novelBigrams(b).distinct())
           .distinct()))
   )

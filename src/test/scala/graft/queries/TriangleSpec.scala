@@ -33,4 +33,15 @@ class TriangleSpec extends SparkSpec {
     assert(row.getAs[Long]("n_triangles") * 3 <= row.getAs[Long]("n_wedges") ||
            row.getAs[Long]("clustering_ppm") <= 1000000L)
   }
+
+  test("a graph query built after graph_triangles in the same session reads no cache of it") {
+    spark.catalog.clearCache()
+    assert(DedupQueries.queries("graph_triangles")(spark, sf).collect().nonEmpty)
+    // no clearCache in between: a degree table graph_triangles left in
+    // the catalog cache would replace this query's own degree count
+    val next = DedupQueries.queries("graph_assortativity")(spark, sf)
+    val plan = next.queryExecution.executedPlan.toString
+    assert(!plan.contains("InMemoryTableScan"), plan)
+    assert(next.collect().nonEmpty)
+  }
 }

@@ -24,10 +24,11 @@ class SplitStreamSpec extends SparkSpec {
     Seq(
       "events" -> (StreamingQueries.eventsStream(spark, sf),
         events.select((events.columns.filter(_ != "ts") :+ "ts").toSeq.map(col): _*)),
-      "documents" -> (StreamingQueries.documentsStream(spark, sf), Tables.documents(spark, sf)),
-      "embeddings" -> (StreamingQueries.embeddingsStream(spark, sf, appendOnly = false),
+      "documents" -> (StreamingQueries.splitStream(spark, sf, "documents"),
+        Tables.documents(spark, sf)),
+      "embeddings" -> (StreamingQueries.splitStream(spark, sf, "embeddings"),
         Tables.embeddings(spark, sf)),
-      "embeddings_append" -> (StreamingQueries.embeddingsStream(spark, sf, appendOnly = true),
+      "embeddings_append" -> (StreamingQueries.splitStream(spark, sf, "embeddings_append"),
         Tables.embeddings(spark, sf)),
       "cdc" -> (StreamingQueries.cdcDeltaStream(spark, sf), cdc)
     ).foreach { case (source, (stream, batch)) =>
